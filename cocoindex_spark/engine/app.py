@@ -45,6 +45,7 @@ from cocoindex_spark.engine.context import (
 )
 from cocoindex_spark.engine.reconcile import reconcile, tracking_updates
 from cocoindex_spark.fingerprint import fp_col, fp_logic, fp_value
+from cocoindex_spark.session import local_frame
 from cocoindex_spark.sinks.table import TableTarget
 from cocoindex_spark.state.store import StateStore
 
@@ -418,12 +419,13 @@ class App:
             # keyed materialization via need_load, desired via
             # cheap_replay) — three metadata joins per sync — which is
             # exactly why pipe_edit_cheap lost to pipe_edit on constant
-            # overhead. When nothing needs loading we substitute a
-            # LITERAL empty frame below: merely executing load()'s plan
-            # over an empty input would still scan its right side (a
-            # content join scans the content table even when the probe
-            # side is empty), which is the O(data) warm cost this path
-            # exists to eliminate.
+            # overhead. When nothing needs loading we substitute an empty
+            # LocalRelation below, which the optimizer prunes
+            # (PropagateEmptyRelation) out of every plan it feeds:
+            # merely executing load()'s plan over an empty input would
+            # still scan its right side (a content join scans the content
+            # table even when the probe side is empty), which is the
+            # O(data) warm cost this path exists to eliminate.
             cheap_probe = (
                 cheap_listing.join(sfp, ["__component_path", "__cheap_fp"], "left")
                 .join(
@@ -470,7 +472,7 @@ class App:
             _phase("cheap_level")
             loaded = load(need_load) if load is not None else need_load
             if n_need == 0:
-                loaded = spark.createDataFrame([], loaded.schema)
+                loaded = local_frame(spark, [], loaded.schema)
             # The content fingerprint (and the transform's view) excludes
             # the volatile cheap columns: a touched mtime with identical
             # content must memo-hit, not recompute (component.rs:97-101 —
@@ -902,8 +904,8 @@ class App:
                         .join(needed, "__args_fp", "left_semi")
                     )
                 else:
-                    payload_rows = spark.createDataFrame(
-                        [], "__args_fp STRING, result_json STRING"
+                    payload_rows = local_frame(
+                        spark, [], "__args_fp STRING, result_json STRING"
                     )
                 replay_payload = (
                     payload_rows.select(
@@ -1178,8 +1180,8 @@ class App:
         else:
             key_tree = [list(args), kwargs]
         args_fp, state_fns = fp_value_with_states(key_tree)
-        key = self.spark.createDataFrame(
-            [(logic_fp, args_fp)], "logic_fp STRING, args_fp STRING"
+        key = local_frame(
+            self.spark, [(logic_fp, args_fp)], "logic_fp STRING, args_fp STRING"
         )
         bks = self.state.memo.touched_buckets(key)
         hit = (
@@ -1243,7 +1245,8 @@ class App:
                 payload["ctx"] = ctx_fps
             if new_states is not None:
                 payload["states"] = new_states
-            row = self.spark.createDataFrame(
+            row = local_frame(
+                self.spark,
                 [(logic_fp, args_fp, _json.dumps(payload), None, 0)],
                 self.state.memo.schema,
             )
@@ -1284,7 +1287,8 @@ class App:
         """Remember that ``base_fp`` has synced under context snapshot
         ``folded_fp`` — the breadcrumb gc_memo needs to find (and
         sweep) the memo generations stranded by context rotation."""
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [(self._CTX_HIST_PREFIX + base_fp, folded_fp, None, None, 0)],
             self.state.memo.schema,
         )
@@ -1460,7 +1464,8 @@ class App:
         serde for persisted values (serde.py)."""
         import json
 
-        row = self.spark.createDataFrame(
+        row = local_frame(
+            self.spark,
             [(component_path, state_key, json.dumps(value), int(time.time() * 1000))],
             self.state.user_state.schema,
         )

@@ -35,6 +35,7 @@ from cocoindex_spark.operators.vector_ops import (
     dot_fixed_arrow,
     sign_bucket_arrow,
 )
+from cocoindex_spark.session import local_frame
 
 
 def candidate_pairs(
@@ -159,7 +160,7 @@ def connected_components(
         schema = StructType(
             [StructField("id", id_type), StructField("__comp", id_type)]
         )
-        map_df = spark.createDataFrame(mapping, schema)
+        map_df = local_frame(spark, mapping, schema)
         # Broadcast join: the node set stays distributed; unmapped
         # nodes (singletons or ids the edges never referenced) label
         # themselves. Edge endpoints outside `nodes` drop out here.

@@ -8,13 +8,26 @@ code scales to a 1000-executor cluster against ~100 TB:
 - Broadcast threshold raised: all TPC-H-ish dimension tables broadcast.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
   real cluster AQE coalescing makes the initial number mostly irrelevant.
+
+Frames the driver builds from its own rows (probe keys, memo and state
+rows, change batches, empty frames) go through :func:`local_frame`, not
+``spark.createDataFrame(<python list>)``. On classic PySpark the list
+path runs ``parallelize`` + ``applySchemaToPythonRDD``: the frame is an
+RDD scan, so every job that reads it starts Python workers, and even a
+driver-sized probe costs Spark jobs. An Arrow table instead becomes a
+``LocalRelation``: the optimizer folds projections over it into a
+``LocalTableScan`` that collects on the driver with no job, and prunes
+an empty one outright (PropagateEmptyRelation). The Arrow path does not
+read ``spark.sql.execution.arrow.pyspark.enabled``, so it behaves the
+same on a vanilla session.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
@@ -55,6 +68,34 @@ def get_spark(app_name: str = "cocoindex-spark", cpus: int | None = None) -> Spa
     if not os.environ.get("SPARK_GRAFT_REMOTE"):
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """A driver-side frame over ``rows`` (tuples, dicts or Rows) as an
+    Arrow-backed ``LocalRelation``. ``schema`` is a StructType, a DDL
+    string, or ``None``/a list of column names, in which case column
+    types are inferred exactly as ``createDataFrame`` infers them (an
+    empty ``rows`` cannot be inferred and raises, as it does there)."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if not isinstance(schema, StructType):
+        inferred = spark._inferSchemaFromList(rows, names=schema)
+        schema = StructType(
+            [
+                StructField(name, f.dataType, f.nullable)
+                for name, f in zip(schema or inferred.names, inferred.fields)
+            ]
+        )
+    large = spark._jconf.arrowUseLargeVarTypes()
+    if rows:
+        table = LocalDataToArrowConversion.convert(rows, schema, large)
+    else:
+        table = to_arrow_schema(schema, prefers_large_types=large).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict:

@@ -42,6 +42,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from cocoindex_spark.session import local_frame
+
 
 class UnsupportedOperationError(RuntimeError):
     pass
@@ -256,10 +258,8 @@ class IggyHttpSource:
                     return out
                 off = out[-1][1] + 1
 
-        seed = spark.createDataFrame(parts, "partition_id INT, offset LONG")
+        seed = local_frame(spark, parts, "partition_id INT, offset LONG")
         rdd = seed.repartition(self.partitions_count, "partition_id").rdd.flatMap(
             drain
         )
-        return spark.createDataFrame(
-            rdd, "partition_id INT, offset LONG, id LONG, payload BINARY"
-        )
+        return rdd.toDF("partition_id INT, offset LONG, id LONG, payload BINARY")

@@ -32,6 +32,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cocoindex_spark.session import local_frame
+
 # PostgreSQL's wire protocol caps bind parameters per statement at
 # int16 (32767); the reference chunks to the same limit.
 BIND_LIMIT = 32767
@@ -265,7 +267,7 @@ class SqlTableTarget:
             data = cur.fetchall()
         finally:
             con.close()
-        return spark.createDataFrame([tuple(r) for r in data], self.schema)
+        return local_frame(spark, [tuple(r) for r in data], self.schema)
 
     def truncate(self) -> None:
         con = self._connect()

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cocoindex_spark.session import local_frame
 from cocoindex_spark.state.store import ManagedTable
 
 
@@ -47,19 +48,21 @@ class TableTarget:
         return self._table.probe_expr(list(cols))
 
     def probe_partitions(self, spark: SparkSession, values) -> list[int]:
-        """Probe-partition ids for a bounded list of index-key values
-        (one tiny local job) — feed them to
-        ``read_indexed(...).filter(F.col('__probe').isin(ids))`` for a
-        statically partition-pruned probe scan."""
+        """Probe-partition ids for a bounded list of index-key values —
+        feed them to ``read_indexed(...).filter(F.col('__probe').isin(ids))``
+        for a statically partition-pruned probe scan. The values become
+        a local frame, so Spark folds the hash into a ``LocalTableScan``
+        and routing runs on the driver with no Spark job. Value types
+        are inferred as ``createDataFrame`` infers them, which fixes the
+        string the hash sees. An empty list routes nowhere and touches
+        no Spark."""
         from pyspark.sql import functions as F
 
-        df = spark.createDataFrame([(v,) for v in values], ["__pv"])
-        return sorted(
-            r[0]
-            for r in df.select(self._table.probe_expr([F.col("__pv")]).alias("p"))
-            .distinct()
-            .collect()
-        )
+        if not values:
+            return []
+        df = local_frame(spark, [(v,) for v in values], ["__pv"])
+        rows = df.select(self._table.probe_expr([F.col("__pv")]).alias("p")).collect()
+        return sorted({r[0] for r in rows})
 
     def upsert(self, rows: DataFrame) -> None:
         self._table.merge_upsert(rows.select(*[f.name for f in self.schema.fields]))
@@ -93,7 +96,7 @@ class TableTarget:
     def truncate(self) -> None:
         """Destructive recreate (pk change): drop all rows."""
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        self._table.overwrite(spark.createDataFrame([], self.schema))
+        self._table.overwrite(local_frame(spark, [], self.schema))
 
     # -- index metadata (declare_vector_index / declare_fts_index analog)
     def declare_index(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cocoindex_spark.session import local_frame
+
 # Offsets are (batch_seq << _BATCH_SHIFT) + per-key ordinal: the stride
 # is far larger than any realistic per-key row count in one batch, so
 # batch ordering can never interleave with within-batch ordinals (the
@@ -114,8 +116,8 @@ class TopicTarget:
         try:
             return spark.read.parquet(self.path)
         except Exception:
-            return spark.createDataFrame(
-                [], "offset long, key string, value string, tombstone boolean"
+            return local_frame(
+                spark, [], "offset long, key string, value string, tombstone boolean"
             )
 
     def read_compacted(self, spark: SparkSession) -> DataFrame:

@@ -28,6 +28,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cocoindex_spark.session import local_frame
+
 FOLDER_MIME = "application/vnd.google-apps.folder"
 
 # Google-Docs native types are downloaded via export (reference
@@ -122,7 +124,7 @@ class GoogleDriveSource:
                         f.get("md5Checksum", ""),
                     )
                 )
-        return spark.createDataFrame(rows, LISTING_SCHEMA)
+        return local_frame(spark, rows, LISTING_SCHEMA)
 
     def load(self, df: DataFrame) -> DataFrame:
         """Attach ``content`` bytes to listing rows — executor-side,

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cocoindex_spark.session import local_frame
+
 
 @dataclass
 class JdbcTableSource:
@@ -137,9 +139,9 @@ class PartitionedSqlSource:
         never touches a row."""
         stmts = self.partition_sql()
         db_path = self.db_path
-        seeds = spark.createDataFrame(
-            [(s,) for s in stmts], "sql STRING"
-        ).repartition(len(stmts), "sql")
+        seeds = local_frame(spark, [(s,) for s in stmts], "sql STRING").repartition(
+            len(stmts), "sql"
+        )
 
         def run_partition(batches):
             import sqlite3

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from cocoindex_spark.session import local_frame
+
 _POINTER = "_CURRENT"
 _KEEP_UNREFERENCED = 2
 _BUCKET_COL = "__bucket"
@@ -181,7 +183,7 @@ class ManagedTable:
         n, mapping, probe = self._meta3()
         paths = self._bucket_paths(mapping, buckets)
         if not paths:
-            df = spark.createDataFrame([], self.schema)
+            df = local_frame(spark, [], self.schema)
             return df.withColumn(_PROBE_COL, F.lit(0)) if keep_probe else df
         if probe is None:
             df = spark.read.schema(self.schema).parquet(*paths)
@@ -589,10 +591,6 @@ class StateStore:
         from cocoindex_spark.state.fs import fs_for
 
         fs_for(self.root).rmtree(self.root)
-
-
-def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
 
 
 def with_version(df: DataFrame, version: int) -> DataFrame:

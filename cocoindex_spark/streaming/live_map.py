@@ -38,6 +38,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from cocoindex_spark.session import local_frame
+
 _MISSING = object()
 
 
@@ -140,7 +142,7 @@ class LiveMap:
         ]
         cols = list(self.pk) + self._value_cols
         out_schema = StructType([self.schema[c] for c in cols])
-        return spark.createDataFrame(rows, out_schema)
+        return local_frame(spark, rows, out_schema)
 
     def watch(self, subscriber: LiveMapSubscriber) -> _Watch:
         """Arm the queue, deliver the initial snapshot, mark ready, and

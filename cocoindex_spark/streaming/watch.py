@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from cocoindex_spark.engine.app import App, SyncStats
+from cocoindex_spark.session import local_frame
 from cocoindex_spark.sinks.table import TableTarget
 
 CREATED, MODIFIED, DELETED = "created", "modified", "deleted"
@@ -148,15 +149,20 @@ def events_to_batch(
 ) -> DataFrame:
     """(path, content, tombstone) rows for a partial sync: deleted
     paths carry tombstone=True and NULL content; created/modified paths
-    read their bytes (only the changed files are ever opened)."""
+    read their bytes (only the changed files are ever opened). A file
+    deleted between the event and this read is gone, so it becomes a
+    tombstone too: deleting its rows is what the next event would do."""
     rows = []
     for e in events:
-        if e.kind == DELETED:
-            rows.append((e.path, None, True))
-        else:
-            with open(os.path.join(root, e.path), "rb") as f:
-                rows.append((e.path, f.read(), False))
-    return spark.createDataFrame(rows, "path STRING, content BINARY, tombstone BOOLEAN")
+        content = None
+        if e.kind != DELETED:
+            try:
+                with open(os.path.join(root, e.path), "rb") as f:
+                    content = f.read()
+            except FileNotFoundError:
+                pass
+        rows.append((e.path, content, content is None))
+    return local_frame(spark, rows, "path STRING, content BINARY, tombstone BOOLEAN")
 
 
 def watch_sync(

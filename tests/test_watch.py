@@ -18,6 +18,7 @@ from cocoindex_spark.streaming.watch import (
     FileEvent,
     FileWatcher,
     diff_snapshots,
+    events_to_batch,
     watch_sync,
     watchdog_available,
 )
@@ -84,6 +85,36 @@ def test_watch_sync_blast_radius(spark, tmp_state):
     os.remove(os.path.join(root, "sub/b.txt"))
     s3 = watch_sync(app, watcher, _enrich, target, spark=spark)
     assert len(s3) == 1 and s3[0].deletes == 1 and s3[0].memo_misses == 0
+    assert {r["k"] for r in target.read(spark).collect()} == {"a.txt"}
+    app.drop()
+
+
+def test_file_gone_before_batch_read_becomes_tombstone(spark, tmp_state):
+    """A created or modified file deleted before the batch reads it is
+    a tombstone, not a FileNotFoundError, and the partial sync deletes
+    its rows."""
+    root = os.path.join(tmp_state, "tree")
+    os.makedirs(root)
+    _write(root, "a.txt", "hello")
+    _write(root, "b.txt", "world")
+
+    app = App("watch_gone", state_dir=tmp_state, spark=spark)
+    target = app.target(f"{tmp_state}/out", ["k"], "k STRING, v STRING")
+    watcher = FileWatcher(root, backend="snapshot")
+    watcher._snapshot = {}
+    watch_sync(app, watcher, _enrich, target, spark=spark)
+
+    _write(root, "b.txt", "world, edited")
+    _write(root, "c.txt", "new")
+    events = watcher.poll()
+    assert events == [FileEvent("b.txt", MODIFIED), FileEvent("c.txt", CREATED)]
+    os.remove(os.path.join(root, "b.txt"))
+    os.remove(os.path.join(root, "c.txt"))
+
+    batch = events_to_batch(spark, root, events)
+    assert sorted(batch.collect()) == [("b.txt", None, True), ("c.txt", None, True)]
+    stats = app.sync_table(batch, ["path"], _enrich, target, tombstone_col="tombstone")
+    assert stats.deletes == 1
     assert {r["k"] for r in target.read(spark).collect()} == {"a.txt"}
     app.drop()
 
