@@ -244,7 +244,6 @@ class App:
         key_cols: list[str],
         transform: Callable[[DataFrame], DataFrame],
         target: TableTarget,
-        memo: bool = True,
         full_reprocess: bool = False,
         partial: bool = False,
         tombstone_col: str | None = None,
@@ -263,7 +262,8 @@ class App:
         present in this batch are reconciled (absent keys untouched —
         live_mode.mdx:56-64); a row whose ``tombstone_col`` is true
         declares key deletion (kafka topic_as_map null-payload
-        semantics, live_mode.mdx:124-144).
+        semantics, live_mode.mdx:124-144). A ``tombstone_col`` implies
+        ``partial=True``.
 
         ``validate_unique=True`` rejects two components declaring the
         same target state in one run (the reference always errors on
@@ -284,8 +284,7 @@ class App:
         input columns) — at 100 TB the warm path then reads zero content
         bytes. Without ``load``, content columns may sit in ``source``
         itself; column pruning keeps them out of the cheap-hit branch's
-        scan. Requires ``memo=True`` (without memoized results there is
-        nothing to replay); ignored under ``full_reprocess``.
+        scan. Ignored under ``full_reprocess``.
 
         ``error_col`` opts into **failure isolation** (the reference's
         rule: a failed component is logged and skipped, siblings
@@ -320,18 +319,16 @@ class App:
         stats.extra["schema_evolution"] = self._ensure_target_contract(
             target, component_prefix
         )
+        partial = partial or tombstone_col is not None
         scope_paths = None
-        if tombstone_col is not None:
+        if partial:
             scope_paths = source.select(
                 self._path_col(component_prefix, key_cols).alias("component_path")
             ).distinct()
+        if tombstone_col is not None:
             source = source.filter(
                 ~F.coalesce(F.col(tombstone_col), F.lit(False))
             ).drop(tombstone_col)
-        elif partial:
-            scope_paths = source.select(
-                self._path_col(component_prefix, key_cols).alias("component_path")
-            ).distinct()
         # Fold change-detected context reads into the memo identity:
         # memo rows written under a context snapshot carry its combined
         # fingerprint in logic_fp, so re-providing a different value
@@ -364,7 +361,7 @@ class App:
         )
         memo_keys = memo_df.select(F.col("args_fp").alias("__args_fp"))
 
-        use_cheap = bool(cheap_fp_cols) and memo and not full_reprocess
+        use_cheap = bool(cheap_fp_cols) and not full_reprocess
         cheap_listing = None
         cheap_probe = None
         cheap_replay = None
@@ -532,7 +529,7 @@ class App:
         )
 
         # ---- memo lookup join (§3.2: anti-join against _state/memo) ----
-        if memo and not full_reprocess and not cold_start:
+        if not full_reprocess and not cold_start:
             hits_keys = keyed.join(
                 memo_df.select(
                     F.col("args_fp").alias("__args_fp"), "decl_json"
@@ -680,7 +677,7 @@ class App:
             tracked = self.state.tracking.read(spark).filter(
                 F.col("component_path").startswith(component_prefix + "/")
             )
-            if partial or tombstone_col is not None:
+            if partial:
                 # Live mode: reconcile only this batch's components; keys
                 # not in the batch keep their tracked state untouched.
                 tracked = tracked.join(F.broadcast(scope_paths), "component_path", "left_semi")
@@ -707,14 +704,6 @@ class App:
         stats.deletes = counts["delete"]
         stats.noops = counts["noop"]
 
-        # memo flush: record results for every miss (even all-noop runs
-        # converge their memo) — one JSON array of rows per args_fp.
-        # Runs on a helper thread overlapping the sink/tracking phases
-        # below (Spark schedules both job sets concurrently): the memo
-        # table is independent of them, and a crash that persists memo
-        # without tracking just replays the memoized result into a
-        # reconcile that still sees the mismatch — convergent either
-        # way (same relaxation as cross-table non-atomicity, §2.5).
         def _observed_n(obs, df) -> int:
             # plan.counts() above fully materialized the keyed/miss
             # caches, so the observations are set — a driver-side dict
@@ -736,385 +725,354 @@ class App:
             except Exception:
                 return df.count()
 
-        memo_thread = None
-        memo_err: list[BaseException] = []
-        if memo:
-            stats.memo_misses = _observed_n(obs_miss, miss_src)
-            stats.memo_hits = _observed_n(obs_keyed, keyed) - stats.memo_misses
-            if use_cheap:
-                # Cheap-fp replays never reached the loaded set: they are
-                # memo hits that skipped content I/O entirely. n_cheap
-                # came out of the same metadata job as n_need above — no
-                # extra count() here.
-                stats.memo_hits += n_cheap
-                stats.extra["cheap_hits"] = n_cheap
-            if stats.memo_misses:
-                # decl_json records the declared (target_path, fp) pairs
-                # so future replays feed reconcile without touching the
-                # payload array (see the replay section above).
-                miss_memo = (
-                    miss_out.withColumn(
-                        "__tp", self._path_col(target.name, target.pk)
-                    )
-                    .withColumn("__fp", fp_col(*[F.col(c) for c in out_cols]))
-                    .groupBy("__args_fp")
-                    .agg(
-                        F.to_json(F.collect_list(F.struct(*out_cols))).alias(
-                            "result_json"
-                        ),
-                        F.to_json(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("__tp").alias("target_path"),
-                                    F.col("__fp").alias("fp"),
-                                )
-                            )
-                        ).alias("decl_json"),
-                    )
-                    .select(
-                        F.lit(logic_fp).alias("logic_fp"),
-                        F.col("__args_fp").alias("args_fp"),
-                        "result_json",
-                        "decl_json",
-                        F.lit(version).cast("long").alias("version"),
-                    )
-                )
-
-                # The source_fp map rides the same helper thread: its
-                # own contract says write order vs memo/tracking does
-                # not matter (a missing side just falls back to
-                # load+recompute next run), so serializing it after the
-                # sink phases only added latency. keyed's cache was
-                # materialized by the reconcile-phase jobs (plan.counts
-                # runs before this point), so the thread never races
-                # the content scan.
-                new_sfp_bg = None
-                if use_cheap and stats.extra["loaded"]:
-                    new_sfp_bg = keyed.select(
-                        F.col("__component_path").alias("component_path"),
-                        F.col("__cheap_fp").alias("cheap_fp"),
-                        F.col("__args_fp").alias("args_fp"),
-                        F.lit(version).cast("long").alias("version"),
-                    )
-
-                def _flush_memo(sfp_df=new_sfp_bg) -> None:
-                    try:
-                        self.state.memo.merge_upsert(miss_memo)
-                        if sfp_df is not None:
-                            self.state.source_fp.merge_upsert(sfp_df)
-                    except BaseException as e:  # re-raised on join below
-                        memo_err.append(e)
-
-                memo_thread = threading.Thread(target=_flush_memo, name="memo-flush")
-                memo_thread.start()
-            _phase("stats_counts")
-        else:
-            stats.memo_misses = _observed_n(obs_keyed, keyed)
-            _phase("stats_counts")
-
-        # ---- Phase 2 precommit: stage marker (pending_token) ----
-        token = uuid.uuid4().hex
-        if stats.inserts or stats.updates or stats.deletes:
-            from cocoindex_spark.engine.reconcile import mark_pending
-
-            # Only the changing rows are merged; the bucket-scoped state
-            # store rewrites just the buckets those keys hash into. The
-            # pending (Phase 2) and applied (Phase 4) merges share one
-            # key set, so the bucket ids are discovered once, and the
-            # prior-state join inside mark_pending reads only those
-            # buckets — on a 100 TB run the precommit cost is ∝ delta,
-            # not ∝ tracked-state size.
-            if cold_start:
-                # Tracking is empty and stays empty until Phase 4 (the
-                # pending merge below is update-only and cold syncs have
-                # none), so the Phase-4 merge takes the empty-table
-                # overwrite path and never consults bucket ids — the
-                # discovery job would be pure overhead.
-                bks = None
-            else:
-                upsert_keys = (
-                    plan.changes()
-                    .filter(F.col("action") != "delete")
-                    .select("component_path", "target_path")
-                )
-                bks = self.state.tracking.touched_buckets(upsert_keys)
-            _phase("precommit_buckets")
-            if stats.updates:
-                pending = mark_pending(
-                    self.state.tracking.read(spark, bks), plan, token
-                )
-                self.state.tracking.merge_upsert(pending, touched=bks)
-                _phase("precommit_merge")
-            # Pure-insert (or insert+delete) syncs skip the pending
-            # merge entirely: the marker exists to widen possible_fps
-            # when an UPDATE may or may not have reached the sink, but
-            # an insert has no prior state to mis-trust — a crash
-            # anywhere re-classifies it as insert next run and the
-            # idempotent sink MERGE converges (phase order guarantees
-            # tracking rows are only written AFTER sink apply). On a
-            # cold 100 TB load this removes one full state-table merge.
-
-            # ---- Phase 3 sink apply (idempotent MERGE) ----
-            # Label-deduplicating sinks (stream-load shape) need the run
-            # version folded into their load labels: retries within this
-            # sync stay idempotent, later syncs re-sending identical
-            # bytes aren't silently dropped by the server's label dedup.
-            if hasattr(target, "set_sync_version"):
-                target.set_sync_version(version)
-            upserts = plan.actions.filter(F.col("action").isin("insert", "update"))
-            if stats.inserts or stats.updates:
-                # Attach payloads to the action rows: miss components
-                # carry theirs in miss_out; replayed components that must
-                # (re)write — recovery or divergence, never the warm
-                # path — have ONLY their payload arrays deserialized
-                # (semi-join on the memo key first, so the parse volume
-                # is ∝ changes, not corpus).
-                payload_miss = miss_out.withColumn(
-                    "target_path", self._path_col(target.name, target.pk)
-                ).select("__args_fp", "target_path", *out_cols)
-                if memo and not full_reprocess and counts.get("__replay_upserts"):
-                    # Replayed components needing a (re)write are the
-                    # upsert fps that are NOT misses — normally zero
-                    # (recovery/divergence only). Their payloads come
-                    # from a BUCKET-SCOPED memo read: on the common path
-                    # touched_buckets([]) = [] and the fat result_json
-                    # column is never scanned at all; when rows do need
-                    # it, I/O is ∝ the handful of touched buckets, never
-                    # the memo table (the pre-r3c shape full-scanned
-                    # result_json inside every sink job).
-                    needed = (
-                        upserts.select("__args_fp")
-                        .distinct()
-                        .join(
-                            miss_out.select("__args_fp").distinct(),
-                            "__args_fp",
-                            "left_anti",
-                        )
-                    )
-                    nb = self.state.memo.touched_buckets(
-                        needed.select(
-                            F.lit(logic_fp).alias("logic_fp"),
-                            F.col("__args_fp").alias("args_fp"),
-                        )
-                    )
-                    payload_rows = (
-                        self.state.memo.read(spark, nb)
-                        .filter(F.col("logic_fp") == logic_fp)
-                        .select(F.col("args_fp").alias("__args_fp"), "result_json")
-                        .join(needed, "__args_fp", "left_semi")
-                    )
-                else:
-                    payload_rows = local_frame(
-                        spark, [], "__args_fp STRING, result_json STRING"
-                    )
-                replay_payload = (
-                    payload_rows.select(
-                        "__args_fp",
-                        F.explode(
-                            F.from_json(F.col("result_json"), ArrayType(row_schema))
-                        ).alias("__row"),
-                    )
-                    .select("__args_fp", F.col("__row.*"))
-                    .withColumn("target_path", self._path_col(target.name, target.pk))
-                    .select("__args_fp", "target_path", *out_cols)
-                )
-                # Join on BOTH (__args_fp, target_path): two components
-                # declaring the same target_path (validate_unique=False)
-                # must each pick up only their OWN payload rows — a
-                # path-only join would cross-join their payloads and
-                # could commit A's tracked fp over B's sink row.
-                upsert_rows = upserts.select("__args_fp", "target_path").join(
-                    payload_miss.unionByName(replay_payload),
-                    ["__args_fp", "target_path"],
-                    "inner",
-                ).select(*out_cols)
-            else:
-                upsert_rows = None
-            dead_keys = None
-            if stats.deletes:
-                # Map deleted target_paths back to pk values via the sink.
-                # Ownership preemption (execution.rs:948-995): a path
-                # whose old owner disappeared but that a NEW component
-                # re-declared this run is claimed, not dead — the
-                # upsert above already wrote the new owner's row, and
-                # deleting by target_path would destroy it. Only paths
-                # no component declared get swept.
-                claimed = plan.actions.filter(
-                    F.col("action").isin("insert", "update")
-                ).select(F.col("target_path").alias("__tp"))
-                dead = (
-                    plan.actions.filter(F.col("action") == "delete")
-                    .select(F.col("target_path").alias("__tp"))
-                    .join(claimed, "__tp", "left_anti")
-                )
-                # Recover pk values from the dead target paths whenever
-                # the parse round-trips exactly (the path encoding IS
-                # name/pk1/pk2/... — any value that would make the parse
-                # ambiguous would already collide in tracking, so this
-                # adds no new constraint). No sink scan at all: the
-                # pre-r9 shape read back the WHOLE target table to map
-                # one dead path to its pk — a full corpus-sized scan per
-                # delete-bearing sync at 100 TB. The read-based mapping
-                # survives only as the fallback for pk types whose
-                # string cast is not an exact round-trip.
-                pk_types = (
-                    [target.schema[c].dataType.simpleString() for c in target.pk]
-                    if hasattr(target, "schema")
-                    else None
-                )
-                # Exactness condition: every pk type round-trips its
-                # string cast, AND no column BEFORE the last is a
-                # string (a '/' inside a non-final string value would
-                # shift the split; the final column absorbs the
-                # remainder, so a trailing string pk is always exact).
-                parse_ok = (
-                    pk_types is not None
-                    and all(t in _SAFE_PK_PARSE_TYPES for t in pk_types)
-                    and all(t != "string" for t in pk_types[:-1])
-                )
-                if pk_types is None and not hasattr(target, "read"):
-                    raise TypeError(
-                        f"target {target.name!r} bears deletes but exposes "
-                        "neither `schema` (to parse pk values from the "
-                        "path encoding) nor `read` (to map them back from "
-                        "the sink) — apply-only sinks must declare a schema"
-                    )
-                if parse_ok or not hasattr(target, "read"):
-                    dead_keys = _keys_from_paths(dead, target.name, target.pk, pk_types)
-                else:
-                    current = target.read(spark).withColumn(
-                        "__tp", self._path_col(target.name, target.pk)
-                    )
-                    dead_keys = current.join(dead, "__tp").select(*target.pk)
-            # Mixed syncs (a rename is add + cascade delete) apply both
-            # channels in ONE bucket-scoped rewrite when the sink
-            # supports it — buckets touched by both would otherwise be
-            # version-written and pointer-swapped twice.
-            # COCO_FUSE_MERGE_APPLY=0 restores the two-pass
-            # upsert-then-delete shape — the A/B lever for measuring
-            # the fusion (r9 verdict finding #1), not a user knob.
-            fuse = os.environ.get("COCO_FUSE_MERGE_APPLY", "1") != "0"
-            if (
-                fuse
-                and upsert_rows is not None
-                and dead_keys is not None
-                and hasattr(target, "merge_apply")
-            ):
-                target.merge_apply(upsert_rows, dead_keys)
-            else:
-                if upsert_rows is not None:
-                    target.upsert(upsert_rows)
-                if dead_keys is not None:
-                    target.delete(dead_keys)
-            _phase("sink_apply")
-
-            # ---- Phase 4 commit: tracking + memo flush ----
-            applied, deleted = tracking_updates(plan, version)
-            if stats.deletes and fuse:
-                # one combined rewrite: upserted AND deleted tracking
-                # rows land in a single version write + pointer swap
-                self.state.tracking.merge_apply(applied, deleted, touched=bks)
-            elif stats.deletes:
-                self.state.tracking.merge_upsert(applied, touched=bks)
-                self.state.tracking.delete_keys(deleted)
-            else:  # skip the delete merge job on pure upsert runs
-                self.state.tracking.merge_upsert(applied, touched=bks)
-            _phase("tracking_commit")
-
-        # ---- source_fp map maintenance (two-level change detection) ----
-        # The (cheap_fp → args_fp) upsert for loaded rows runs on the
-        # memo-flush thread above (order-independent); when no memo
-        # flush happened but rows loaded (all loads memo-hit), write it
-        # here.
+        stats.memo_misses = _observed_n(obs_miss, miss_src)
+        stats.memo_hits = _observed_n(obs_keyed, keyed) - stats.memo_misses
         if use_cheap:
-            if stats.extra["loaded"] and not (memo and stats.memo_misses):
-                new_sfp = keyed.select(
-                    F.col("__component_path").alias("component_path"),
-                    F.col("__cheap_fp").alias("cheap_fp"),
+            # Cheap-fp replays never reached the loaded set: they are
+            # memo hits that skipped content I/O entirely. n_cheap came
+            # out of the same metadata job as n_need above — no extra
+            # count() here.
+            stats.memo_hits += n_cheap
+            stats.extra["cheap_hits"] = n_cheap
+        # memo flush: record results for every miss (even all-noop runs
+        # converge their memo) — one JSON array of rows per args_fp.
+        # decl_json records the declared (target_path, fp) pairs so
+        # future replays feed reconcile without touching the payload
+        # array (see the replay section above).
+        miss_memo = None
+        if stats.memo_misses:
+            miss_memo = (
+                miss_out.withColumn("__tp", self._path_col(target.name, target.pk))
+                .withColumn("__fp", fp_col(*[F.col(c) for c in out_cols]))
+                .groupBy("__args_fp")
+                .agg(
+                    F.to_json(F.collect_list(F.struct(*out_cols))).alias(
+                        "result_json"
+                    ),
+                    F.to_json(
+                        F.collect_list(
+                            F.struct(
+                                F.col("__tp").alias("target_path"),
+                                F.col("__fp").alias("fp"),
+                            )
+                        )
+                    ).alias("decl_json"),
+                )
+                .select(
+                    F.lit(logic_fp).alias("logic_fp"),
                     F.col("__args_fp").alias("args_fp"),
+                    "result_json",
+                    "decl_json",
                     F.lit(version).cast("long").alias("version"),
                 )
-                self.state.source_fp.merge_upsert(new_sfp)
-            if not partial and tombstone_col is None and stats.deletes:
-                # Full syncs enumerate the whole source: sweep map rows
-                # of vanished components (one metadata-sized anti-join).
-                # Gated on reconcile deletes — without any, no component
-                # vanished (a stale row would anyway only cost space: a
-                # returning component with an unchanged cheap fp replays
-                # the same memoized result, which is correct).
-                dead_sfp = (
-                    self.state.source_fp.read(spark)
-                    .filter(F.col("component_path").startswith(component_prefix + "/"))
-                    .join(
-                        cheap_probe.select(
-                            F.col("__component_path").alias("component_path")
-                        ),
-                        "component_path",
-                        "left_anti",
-                    )
-                    .select("component_path")
-                )
-                self.state.source_fp.delete_keys(dead_sfp)
-
-        # ---- error side table maintenance (opt-in) ----
-        if error_col is not None:
-            if stats.extra.get("errors"):
-                self.state.errors.merge_upsert(
-                    failed_paths.select(
-                        F.col("__component_path").alias("component_path"),
-                        "error",
-                        F.lit(version).cast("long").alias("version"),
-                    )
-                )
-            # Clearing: a component stops being "currently failing" when
-            # it recomputes cleanly, replays a memoized result, or
-            # vanishes from the source. A full sync enumerates the whole
-            # world, so everything under the prefix that is NOT in this
-            # run's failed set is clear; a partial batch only vouches
-            # for its own scope. Gated on the errors table actually
-            # having rows for the prefix — the common all-healthy sync
-            # pays one tiny metadata read, not a delete cycle.
-            old_errors = self.state.errors.read(spark).filter(
-                F.col("component_path").startswith(component_prefix + "/")
             )
-            if old_errors.limit(1).count():
-                failed_now = (
-                    failed_paths.select(
+
+        # ---- source_fp map maintenance (two-level change detection) ----
+        # Loaded rows record their (cheap_fp → args_fp) pair; a full
+        # sync also sweeps the map rows of vanished components (one
+        # metadata-sized anti-join), gated on reconcile deletes — without
+        # any, no component vanished (a stale row would anyway only cost
+        # space: a returning component with an unchanged cheap fp
+        # replays the same memoized result, which is correct). Both
+        # channels land in ONE merge on the flush thread below, the map's
+        # only writer: two writers would each swap the pointer from
+        # their own snapshot and one would lose the other's update.
+        new_sfp = dead_sfp = None
+        if use_cheap and stats.extra["loaded"]:
+            new_sfp = keyed.select(
+                F.col("__component_path").alias("component_path"),
+                F.col("__cheap_fp").alias("cheap_fp"),
+                F.col("__args_fp").alias("args_fp"),
+                F.lit(version).cast("long").alias("version"),
+            )
+        if use_cheap and not partial and stats.deletes:
+            dead_sfp = (
+                self.state.source_fp.read(spark)
+                .filter(F.col("component_path").startswith(component_prefix + "/"))
+                .join(
+                    cheap_probe.select(
                         F.col("__component_path").alias("component_path")
-                    )
-                    if failed_paths is not None
-                    else old_errors.select("component_path").limit(0)
+                    ),
+                    "component_path",
+                    "left_anti",
                 )
-                if partial or tombstone_col is not None:
-                    in_scope = old_errors.join(
-                        F.broadcast(scope_paths), "component_path", "left_semi"
-                    )
-                    cleared = in_scope.join(failed_now, "component_path", "left_anti")
+                .select("component_path")
+            )
+
+        # The memo and source_fp writes run on a helper thread
+        # overlapping the sink/tracking phases below (Spark schedules
+        # both job sets concurrently): neither table is read by those
+        # phases, and a crash that persists them without tracking just
+        # replays the memoized result into a reconcile that still sees
+        # the mismatch, or loads and recomputes — convergent either way
+        # (same relaxation as cross-table non-atomicity, §2.5). keyed's
+        # cache was materialized by the reconcile-phase jobs, so the
+        # thread never races the content scan.
+        memo_err: list[BaseException] = []
+
+        def _flush() -> None:
+            try:
+                if miss_memo is not None:
+                    self.state.memo.merge_upsert(miss_memo)
+                if new_sfp is not None or dead_sfp is not None:
+                    self.state.source_fp.merge_apply(new_sfp, dead_sfp)
+            except BaseException as e:  # re-raised after the join below
+                memo_err.append(e)
+
+        memo_thread = None
+        if miss_memo is not None or new_sfp is not None or dead_sfp is not None:
+            memo_thread = threading.Thread(target=_flush, name="memo-flush")
+            memo_thread.start()
+        _phase("stats_counts")
+
+        try:
+            # ---- Phase 2 precommit: stage marker (pending_token) ----
+            token = uuid.uuid4().hex
+            if stats.inserts or stats.updates or stats.deletes:
+                from cocoindex_spark.engine.reconcile import mark_pending
+
+                # Only the changing rows are merged; the bucket-scoped state
+                # store rewrites just the buckets those keys hash into. The
+                # pending (Phase 2) and applied (Phase 4) merges share one
+                # key set, so the bucket ids are discovered once, and the
+                # prior-state join inside mark_pending reads only those
+                # buckets — on a 100 TB run the precommit cost is ∝ delta,
+                # not ∝ tracked-state size.
+                if cold_start:
+                    # Tracking is empty and stays empty until Phase 4 (the
+                    # pending merge below is update-only and cold syncs have
+                    # none), so the Phase-4 merge takes the empty-table
+                    # overwrite path and never consults bucket ids — the
+                    # discovery job would be pure overhead.
+                    bks = None
                 else:
-                    cleared = old_errors.join(failed_now, "component_path", "left_anti")
-                self.state.errors.delete_keys(cleared.select("component_path"))
+                    upsert_keys = (
+                        plan.changes()
+                        .filter(F.col("action") != "delete")
+                        .select("component_path", "target_path")
+                    )
+                    bks = self.state.tracking.touched_buckets(upsert_keys)
+                _phase("precommit_buckets")
+                if stats.updates:
+                    pending = mark_pending(
+                        self.state.tracking.read(spark, bks), plan, token
+                    )
+                    self.state.tracking.merge_upsert(pending, touched=bks)
+                    _phase("precommit_merge")
+                # Pure-insert (or insert+delete) syncs skip the pending
+                # merge entirely: the marker exists to widen possible_fps
+                # when an UPDATE may or may not have reached the sink, but
+                # an insert has no prior state to mis-trust — a crash
+                # anywhere re-classifies it as insert next run and the
+                # idempotent sink MERGE converges (phase order guarantees
+                # tracking rows are only written AFTER sink apply). On a
+                # cold 100 TB load this removes one full state-table merge.
 
-        if memo_thread is not None:
-            memo_thread.join()
-            if memo_err:
-                raise memo_err[0]
-            _phase("memo_flush_wait")
+                # ---- Phase 3 sink apply (idempotent MERGE) ----
+                # Label-deduplicating sinks (stream-load shape) need the run
+                # version folded into their load labels: retries within this
+                # sync stay idempotent, later syncs re-sending identical
+                # bytes aren't silently dropped by the server's label dedup.
+                if hasattr(target, "set_sync_version"):
+                    target.set_sync_version(version)
+                upserts = plan.actions.filter(F.col("action").isin("insert", "update"))
+                if stats.inserts or stats.updates:
+                    # Attach payloads to the action rows: miss components
+                    # carry theirs in miss_out; replayed components that must
+                    # (re)write — recovery or divergence, never the warm
+                    # path — have ONLY their payload arrays deserialized
+                    # (semi-join on the memo key first, so the parse volume
+                    # is ∝ changes, not corpus).
+                    payload_miss = miss_out.withColumn(
+                        "target_path", self._path_col(target.name, target.pk)
+                    ).select("__args_fp", "target_path", *out_cols)
+                    if not full_reprocess and counts.get("__replay_upserts"):
+                        # Replayed components needing a (re)write are the
+                        # upsert fps that are NOT misses — normally zero
+                        # (recovery/divergence only). Their payloads come
+                        # from a BUCKET-SCOPED memo read: on the common path
+                        # touched_buckets([]) = [] and the fat result_json
+                        # column is never scanned at all; when rows do need
+                        # it, I/O is ∝ the handful of touched buckets, never
+                        # the memo table (the pre-r3c shape full-scanned
+                        # result_json inside every sink job).
+                        needed = (
+                            upserts.select("__args_fp")
+                            .distinct()
+                            .join(
+                                miss_out.select("__args_fp").distinct(),
+                                "__args_fp",
+                                "left_anti",
+                            )
+                        )
+                        nb = self.state.memo.touched_buckets(
+                            needed.select(
+                                F.lit(logic_fp).alias("logic_fp"),
+                                F.col("__args_fp").alias("args_fp"),
+                            )
+                        )
+                        payload_rows = (
+                            self.state.memo.read(spark, nb)
+                            .filter(F.col("logic_fp") == logic_fp)
+                            .select(F.col("args_fp").alias("__args_fp"), "result_json")
+                            .join(needed, "__args_fp", "left_semi")
+                        )
+                    else:
+                        payload_rows = local_frame(
+                            spark, [], "__args_fp STRING, result_json STRING"
+                        )
+                    replay_payload = (
+                        payload_rows.select(
+                            "__args_fp",
+                            F.explode(
+                                F.from_json(F.col("result_json"), ArrayType(row_schema))
+                            ).alias("__row"),
+                        )
+                        .select("__args_fp", F.col("__row.*"))
+                        .withColumn("target_path", self._path_col(target.name, target.pk))
+                        .select("__args_fp", "target_path", *out_cols)
+                    )
+                    # Join on BOTH (__args_fp, target_path): two components
+                    # declaring the same target_path (validate_unique=False)
+                    # must each pick up only their OWN payload rows — a
+                    # path-only join would cross-join their payloads and
+                    # could commit A's tracked fp over B's sink row.
+                    upsert_rows = upserts.select("__args_fp", "target_path").join(
+                        payload_miss.unionByName(replay_payload),
+                        ["__args_fp", "target_path"],
+                        "inner",
+                    ).select(*out_cols)
+                else:
+                    upsert_rows = None
+                dead_keys = None
+                if stats.deletes:
+                    # Map deleted target_paths back to pk values via the sink.
+                    # Ownership preemption (execution.rs:948-995): a path
+                    # whose old owner disappeared but that a NEW component
+                    # re-declared this run is claimed, not dead — the
+                    # upsert above already wrote the new owner's row, and
+                    # deleting by target_path would destroy it. Only paths
+                    # no component declared get swept.
+                    claimed = plan.actions.filter(
+                        F.col("action").isin("insert", "update")
+                    ).select(F.col("target_path").alias("__tp"))
+                    dead = (
+                        plan.actions.filter(F.col("action") == "delete")
+                        .select(F.col("target_path").alias("__tp"))
+                        .join(claimed, "__tp", "left_anti")
+                    )
+                    # Recover pk values from the dead target paths whenever
+                    # the parse round-trips exactly (the path encoding IS
+                    # name/pk1/pk2/... — any value that would make the parse
+                    # ambiguous would already collide in tracking, so this
+                    # adds no new constraint). No sink scan at all: the
+                    # pre-r9 shape read back the WHOLE target table to map
+                    # one dead path to its pk — a full corpus-sized scan per
+                    # delete-bearing sync at 100 TB. The read-based mapping
+                    # survives only as the fallback for pk types whose
+                    # string cast is not an exact round-trip.
+                    # (_ensure_target_contract guarantees a `schema`.)
+                    pk_types = [target.schema[c].dataType.simpleString() for c in target.pk]
+                    # Exactness condition: every pk type round-trips its
+                    # string cast, AND no column BEFORE the last is a
+                    # string (a '/' inside a non-final string value would
+                    # shift the split; the final column absorbs the
+                    # remainder, so a trailing string pk is always exact).
+                    parse_ok = all(t in _SAFE_PK_PARSE_TYPES for t in pk_types) and all(
+                        t != "string" for t in pk_types[:-1]
+                    )
+                    if parse_ok or not hasattr(target, "read"):
+                        dead_keys = _keys_from_paths(dead, target.name, target.pk, pk_types)
+                    else:
+                        current = target.read(spark).withColumn(
+                            "__tp", self._path_col(target.name, target.pk)
+                        )
+                        dead_keys = current.join(dead, "__tp").select(*target.pk)
+                # Mixed syncs (a rename is add + cascade delete) apply both
+                # channels in ONE bucket-scoped rewrite when the sink
+                # supports it — buckets touched by both would otherwise be
+                # version-written and pointer-swapped twice.
+                if (
+                    upsert_rows is not None
+                    and dead_keys is not None
+                    and hasattr(target, "merge_apply")
+                ):
+                    target.merge_apply(upsert_rows, dead_keys)
+                else:
+                    if upsert_rows is not None:
+                        target.upsert(upsert_rows)
+                    if dead_keys is not None:
+                        target.delete(dead_keys)
+                _phase("sink_apply")
 
-        # Release this sync's caches: every count/flush above has
-        # materialized, and leaked cache blocks across many syncs in one
-        # session evict each other (a bench run is 35+ plans) — the
-        # recompute storms cost far more than the caching saved.
-        for cached in (
-            plan.actions,
-            miss_out,
-            miss_out_raw,
-            miss_src,
-            keyed,
-            cheap_probe,
-            failed_paths,
-        ):
-            if cached is not None:
-                cached.unpersist()
+                # ---- Phase 4 commit: tracking (one rewrite for both
+                # channels; pure-upsert runs skip the delete channel) ----
+                applied, deleted = tracking_updates(plan, version)
+                self.state.tracking.merge_apply(
+                    applied, deleted if stats.deletes else None, touched=bks
+                )
+                _phase("tracking_commit")
+
+            # ---- error side table maintenance (opt-in) ----
+            if error_col is not None:
+                if stats.extra.get("errors"):
+                    self.state.errors.merge_upsert(
+                        failed_paths.select(
+                            F.col("__component_path").alias("component_path"),
+                            "error",
+                            F.lit(version).cast("long").alias("version"),
+                        )
+                    )
+                # Clearing: a component stops being "currently failing" when
+                # it recomputes cleanly, replays a memoized result, or
+                # vanishes from the source. A full sync enumerates the whole
+                # world, so everything under the prefix that is NOT in this
+                # run's failed set is clear; a partial batch only vouches
+                # for its own scope. Gated on the errors table actually
+                # having rows for the prefix — the common all-healthy sync
+                # pays one tiny metadata read, not a delete cycle.
+                old_errors = self.state.errors.read(spark).filter(
+                    F.col("component_path").startswith(component_prefix + "/")
+                )
+                if old_errors.limit(1).count():
+                    failed_now = (
+                        failed_paths.select(
+                            F.col("__component_path").alias("component_path")
+                        )
+                        if failed_paths is not None
+                        else old_errors.select("component_path").limit(0)
+                    )
+                    if partial:
+                        in_scope = old_errors.join(
+                            F.broadcast(scope_paths), "component_path", "left_semi"
+                        )
+                        cleared = in_scope.join(failed_now, "component_path", "left_anti")
+                    else:
+                        cleared = old_errors.join(failed_now, "component_path", "left_anti")
+                    self.state.errors.delete_keys(cleared.select("component_path"))
+        finally:
+            # Joined on every exit: a failed sync must not leave the
+            # thread writing state after sync_table has raised.
+            if memo_thread is not None:
+                memo_thread.join()
+                _phase("memo_flush_wait")
+            # Release this sync's caches: every count/flush above has
+            # materialized, and leaked cache blocks across many syncs in
+            # one session evict each other (a bench run is 35+ plans) —
+            # the recompute storms cost far more than the caching saved.
+            for cached in (
+                plan.actions,
+                miss_out,
+                miss_out_raw,
+                miss_src,
+                keyed,
+                cheap_probe,
+                failed_paths,
+            ):
+                if cached is not None:
+                    cached.unpersist()
+        if memo_err:
+            raise memo_err[0]
 
         # Adaptive state maintenance: safe here — the sync's scoped
         # bucket ids are all consumed; growth rehashes before the next

@@ -11,6 +11,8 @@ that derived column, exactly as it would on a real `binaryFile` scan's
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2040,8 +2042,59 @@ def sync_code_views_index(
     return target, stats
 
 
-_CV_SERVE_CACHE: dict = {}
-_CV_SERVE_LOCK = None  # created lazily (threading import kept off the hot path)
+# (sf_dir, tag) → wall seconds of the one-time index build sync paid by
+# the first query that touched the tag this session. bench.py reports
+# these as a top-level `sync_sec` dict next to the read mins (the r10
+# verdict's accounting item #2) — additions-only, never folded into the
+# headline total so round-over-round entry semantics stay identical.
+SYNC_SECONDS: dict = {}
+
+_SERVE_CACHE: dict = {}
+_SERVE_LOCK = threading.Lock()
+
+
+def _served_index(spark: SparkSession, sf_dir: str, tag: str, build, config=None):
+    """Build-once-serve-many: ``build(app)`` syncs a corpus into an
+    index target of a fresh App and returns the target, the FIRST time
+    a (session, sf_dir, tag) asks for it; every later call in the
+    process serves straight off the index files. This is the
+    reference's TargetState = Transform(SourceState) contract
+    (core_concepts.mdx:52-54): extraction runs at SYNC time, queries
+    read the maintained target — they never re-run the transform. The
+    engine's reconcile/memo machinery (pipe_* bench phases) is what
+    keeps the index current when the corpus changes; a query over an
+    unchanged corpus is a pure index read. The state lives in a
+    tempdir keyed to the Spark app and removed at exit; nothing
+    persists across bench invocations."""
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    with _SERVE_LOCK:
+        entry = _SERVE_CACHE.get(key)
+        if entry is None:
+            import atexit
+            import shutil
+            import tempfile
+            import time as _time
+
+            from cocoindex_spark.engine.app import App
+
+            root = tempfile.mkdtemp(prefix=f"svc_{tag}_")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            app = App(f"svc_{tag}", state_dir=root, spark=spark)
+            t0 = _time.perf_counter()
+            target = build(app)
+            SYNC_SECONDS[(sf_dir, tag)] = round(_time.perf_counter() - t0, 3)
+            entry = _SERVE_CACHE[key] = (target, config)
+        target, built = entry
+        # A tag is one corpus with one build configuration: a second
+        # caller asking for a different one would silently get the
+        # first build's index (r10 advisor finding #1) — make the
+        # mismatch loud instead.
+        if built != config:
+            raise ValueError(
+                f"served index {tag!r} was built with {built!r}; "
+                f"caller asked for {config!r}"
+            )
+    return target
 
 
 def _served_cv_index(
@@ -2052,53 +2105,16 @@ def _served_cv_index(
     langs: tuple | None = None,
     probe: bool = False,
 ):
-    """Build-once-serve-many: sync `docs_fn`'s (doc_id, lang, code)
-    corpus into a probed code-views index the FIRST time a (session,
-    sf_dir, tag) asks for it; every later call in the process serves
-    straight off the index files. This is the reference's
-    TargetState = Transform(SourceState) contract
-    (core_concepts.mdx:52-54): extraction runs at SYNC time, queries
-    read the maintained target — they never re-run the transform. The
-    engine's reconcile/memo machinery (pipe_* bench phases) is what
-    keeps the index current when the corpus changes; a query over an
-    unchanged corpus is a pure index read."""
-    global _CV_SERVE_LOCK
-    import threading
+    """The code-views index of `docs_fn`'s (doc_id, lang, code) corpus,
+    built once per (session, sf_dir, tag) — see _served_index."""
 
-    if _CV_SERVE_LOCK is None:
-        _CV_SERVE_LOCK = threading.Lock()
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    with _CV_SERVE_LOCK:
-        entry = _CV_SERVE_CACHE.get(key)
-        if entry is None:
-            import atexit
-            import shutil
-            import tempfile
-            import time as _time
+    def build(app):
+        docs = docs_fn(spark, sf_dir)
+        return sync_code_views_index(app, docs, langs=langs, probe=probe)[0]
 
-            from cocoindex_spark.engine.app import App
-
-            root = tempfile.mkdtemp(prefix=f"cv_serve_{tag}_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            app = App(f"cv_{tag}", state_dir=root, spark=spark)
-            t0 = _time.perf_counter()
-            target, _ = sync_code_views_index(
-                app, docs_fn(spark, sf_dir), langs=langs, probe=probe
-            )
-            SYNC_SECONDS[(sf_dir, tag)] = round(_time.perf_counter() - t0, 3)
-            entry = _CV_SERVE_CACHE[key] = (target, langs, probe)
-        target, built_langs, built_probe = entry
-        # A tag is one corpus with one build configuration: a second
-        # caller asking for different langs/probe would silently get
-        # the first build's index (r10 advisor finding #1) — make the
-        # mismatch loud instead.
-        if (built_langs, built_probe) != (langs, probe):
-            raise ValueError(
-                f"served index {tag!r} was built with langs={built_langs!r} "
-                f"probe={built_probe!r}; caller asked for langs={langs!r} "
-                f"probe={probe!r}"
-            )
-    return target
+    return _served_index(
+        spark, sf_dir, tag, build, config={"langs": langs, "probe": probe}
+    )
 
 
 def _q161_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
@@ -2777,51 +2793,23 @@ _FAMILY_SPECS = {
     ),
 }
 
-# (sf_dir, tag) → wall seconds of the one-time index build sync paid by
-# the first query that touched the tag this session. bench.py reports
-# these as a top-level `sync_sec` dict next to the read mins (the r10
-# verdict's accounting item #2) — additions-only, never folded into the
-# headline total so round-over-round entry semantics stay identical.
-SYNC_SECONDS: dict = {}
-
-
 def _served_family_index(spark: SparkSession, sf_dir: str, family: str):
-    """Build-once-serve-many for a family index: the first query of the
+    """The index of one extraction family: the first query of the
     family per (session, sf_dir) pays one engine sync; every later call
-    — any family member, any iteration — is a pure index read. Same
-    lifecycle as _served_cv_index: tempdir keyed to the Spark app,
-    removed at exit; nothing persists across bench invocations."""
-    global _CV_SERVE_LOCK
-    import threading
+    — any family member, any iteration — is a pure index read (see
+    _served_index)."""
+    docs_fn, extract, key_cols, pk, schema = _FAMILY_SPECS[family]
 
-    if _CV_SERVE_LOCK is None:
-        _CV_SERVE_LOCK = threading.Lock()
-    key = (spark.sparkContext.applicationId, sf_dir, "family", family)
-    with _CV_SERVE_LOCK:
-        target = _CV_SERVE_CACHE.get(key)
-        if target is None:
-            import atexit
-            import os as _os
-            import shutil
-            import tempfile
-            import time as _time
+    def build(app):
+        import os as _os
 
-            from cocoindex_spark.engine.app import App
+        target = app.target(
+            _os.path.join(app.state.root, "targets", f"{family}_idx"), pk, schema
+        )
+        app.sync_table(docs_fn(spark, sf_dir), key_cols, extract, target)
+        return target
 
-            docs_fn, extract, key_cols, pk, schema = _FAMILY_SPECS[family]
-            root = tempfile.mkdtemp(prefix=f"svc_{family}_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            app = App(f"svc_{family}", state_dir=root, spark=spark)
-            target = app.target(
-                _os.path.join(app.state.root, "targets", f"{family}_idx"),
-                pk,
-                schema,
-            )
-            t0 = _time.perf_counter()
-            app.sync_table(docs_fn(spark, sf_dir), key_cols, extract, target)
-            SYNC_SECONDS[(sf_dir, family)] = round(_time.perf_counter() - t0, 3)
-            _CV_SERVE_CACHE[key] = target
-    return target
+    return _served_index(spark, sf_dir, family, build)
 
 
 def _defs_read(spark: SparkSession, sf_dir: str, qtag: str) -> DataFrame:

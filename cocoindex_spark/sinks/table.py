@@ -65,7 +65,7 @@ class TableTarget:
         return sorted({r[0] for r in rows})
 
     def upsert(self, rows: DataFrame) -> None:
-        self._table.merge_upsert(rows.select(*[f.name for f in self.schema.fields]))
+        self._table.merge_upsert(rows)
 
     def delete(self, keys: DataFrame) -> None:
         self._table.delete_keys(keys)
@@ -74,9 +74,7 @@ class TableTarget:
         """Upserts + deletions in one bucket-scoped rewrite (one
         version write, one pointer swap) — the engine uses this on
         mixed syncs instead of upsert-then-delete."""
-        self._table.merge_apply(
-            rows.select(*[f.name for f in self.schema.fields]), delete_keys
-        )
+        self._table.merge_apply(rows, delete_keys)
 
     # -- schema contract (target_state.mdx:140-144 schema evolution) ----
     def stored_contract(self) -> dict | None:

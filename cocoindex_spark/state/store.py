@@ -279,13 +279,6 @@ class ManagedTable:
         self._swap_pointer(mapping, n_buckets=n)
         self._gc()
 
-    def _touched_buckets(self, keys: DataFrame) -> list[int]:
-        n = self._meta()[0]
-        rows = (
-            keys.select(self._bucket_expr(n).alias(_BUCKET_COL)).distinct().collect()
-        )  # bounded by n_buckets — a constant, never data-sized
-        return [r[_BUCKET_COL] for r in rows]
-
     # -- adaptive sharding -------------------------------------------------
     def maybe_grow(self, spark: SparkSession, max_bucket_bytes: int = 256 << 20) -> bool:
         """Double the bucket count when the average referenced bucket
@@ -382,106 +375,92 @@ class ManagedTable:
     def touched_buckets(self, keys: DataFrame) -> list[int]:
         """Bucket ids the given key rows hash into. Callers that drive
         several phase writes off one key set compute this once and pass
-        it to merge_upsert / the scoped read — the ids MUST cover every
-        key later merged, or unscoped buckets would swap to a version
-        missing their current rows."""
-        return self._touched_buckets(keys)
+        it to merge_upsert / merge_apply / the scoped read — the ids
+        MUST cover every key later merged, or unscoped buckets would
+        swap to a version missing their current rows."""
+        n = self._meta()[0]
+        rows = (
+            keys.select(self._bucket_expr(n).alias(_BUCKET_COL)).distinct().collect()
+        )  # bounded by n_buckets — a constant, never data-sized
+        return [r[_BUCKET_COL] for r in rows]
 
     def merge_upsert(self, updates: DataFrame, touched: list[int] | None = None) -> None:
-        """Idempotent MERGE: new rows win over current rows on key
-        equality. Repeated application of the same batch converges.
-        Only buckets containing updated keys are rewritten.
-
-        ``touched`` lets callers pass precomputed bucket ids (when the
-        same key set drives several phase writes) to skip the discovery
-        job. The updates are cached for the duration: their lineage is
-        evaluated twice (bucket discovery + version write) and may read
-        this very table's current version — caching pins the pre-swap
-        snapshot."""
-        updates = updates.select(*[f.name for f in self.schema.fields])
-        if self.is_empty():
-            # Empty table: the MERGE degenerates to a plain write — no
-            # current rows to keep, so the bucket-discovery job, the
-            # cache materialization (lineage is evaluated once, by the
-            # write) and the anti-join are pure overhead. One version
-            # write + one full-mapping pointer swap is the identical
-            # result. This is the cold-sync path's per-table floor
-            # (sink target + tracking + first memo flush all hit it).
-            self.overwrite(updates, n_buckets=self._meta()[0])
-            return
-        updates = updates.cache()
-        try:
-            if touched is None:
-                touched = self._touched_buckets(updates)
-            if not touched:
-                return
-            current = self.read(updates.sparkSession, touched)
-            kept = current.join(
-                updates.select(self.key_cols).distinct(), self.key_cols, "left_anti"
-            )
-            self._merge_into_buckets(touched, kept.unionByName(updates))
-        finally:
-            updates.unpersist()
+        """Idempotent MERGE of ``updates`` alone (see merge_apply)."""
+        self.merge_apply(updates, None, touched=touched)
 
     def delete_keys(self, keys: DataFrame) -> None:
-        keys = keys.select(self.key_cols).distinct().cache()
-        try:
-            touched = self._touched_buckets(keys)
-            if not touched:
-                return
-            current = self.read(keys.sparkSession, touched)
-            self._merge_into_buckets(touched, current.join(keys, self.key_cols, "left_anti"))
-        finally:
-            keys.unpersist()
+        """Delete the rows whose key matches a row of ``keys``."""
+        self.merge_apply(None, keys)
 
     def merge_apply(
         self,
-        updates: DataFrame,
-        deletes: DataFrame,
+        updates: DataFrame | None,
+        deletes: DataFrame | None,
         touched: list[int] | None = None,
     ) -> None:
-        """Upserts AND key deletions in ONE bucket-scoped rewrite +
-        ONE pointer swap. Semantics = merge_upsert(updates) followed
-        by delete_keys(deletes) (a key in both channels ends deleted),
-        but buckets touched by both channels are rewritten once, not
-        twice — a mixed sync (rename = add + cascade delete) otherwise
-        pays two version writes and two swaps per table. ``touched``
-        optionally carries precomputed bucket ids for the UPDATE keys
-        (the delete keys' buckets are always discovered here)."""
-        updates = updates.select(*[f.name for f in self.schema.fields])
+        """The table's one MERGE: upserts AND key deletions in ONE
+        bucket-scoped rewrite + ONE pointer swap. Either channel may be
+        None. New rows win over current rows on key equality, a key in
+        both channels ends deleted, and repeated application of the
+        same batch converges. Only buckets holding an updated or
+        deleted key are rewritten, so a mixed sync (rename = add +
+        cascade delete) pays one version write, not two.
+
+        ``touched`` optionally carries precomputed bucket ids for the
+        UPDATE keys (when the same key set drives several phase writes)
+        to skip their discovery job; the delete keys' buckets are
+        always discovered here. Both channels are cached for the
+        duration: their lineage is evaluated twice (bucket discovery +
+        version write) and may read this very table's current version —
+        caching pins the pre-swap snapshot."""
+        if updates is not None:
+            updates = updates.select(*[f.name for f in self.schema.fields])
+        if deletes is not None:
+            deletes = deletes.select(self.key_cols).distinct()
         if self.is_empty():
-            # Empty table (see merge_upsert): apply the delete channel
-            # to the updates alone — "a key in both channels ends
-            # deleted" — and write once.
-            self.overwrite(
-                updates.join(
-                    deletes.select(self.key_cols).distinct(),
-                    self.key_cols,
-                    "left_anti",
-                ),
-                n_buckets=self._meta()[0],
-            )
+            # Empty table: the MERGE degenerates to a plain write of the
+            # updates less the delete channel — no current rows to keep,
+            # so bucket discovery, the caches (lineage is evaluated once,
+            # by the write) and the current-row anti-join are pure
+            # overhead. A delete alone writes nothing and runs no job.
+            # This is the cold-sync path's per-table floor (sink target
+            # + tracking + first memo flush all hit it).
+            if updates is not None:
+                if deletes is not None:
+                    updates = updates.join(deletes, self.key_cols, "left_anti")
+                self.overwrite(updates, n_buckets=self._meta()[0])
             return
-        updates = updates.cache()
-        deletes = deletes.select(self.key_cols).distinct().cache()
+        if updates is not None:
+            updates = updates.cache()
+        if deletes is not None:
+            deletes = deletes.cache()
         try:
-            t_up = self._touched_buckets(updates) if touched is None else touched
-            t_del = self._touched_buckets(deletes)
-            all_touched = sorted(set(t_up) | set(t_del))
-            if not all_touched:
+            if touched is None:
+                touched = self.touched_buckets(updates) if updates is not None else []
+            if deletes is not None:
+                touched = sorted(set(touched) | set(self.touched_buckets(deletes)))
+            if not touched:
                 return
-            current = self.read(updates.sparkSession, all_touched)
-            gone = (
-                updates.select(self.key_cols)
-                .unionByName(deletes)
-                .distinct()
-            )
-            kept = current.join(gone, self.key_cols, "left_anti")
-            live_updates = updates.join(deletes, self.key_cols, "left_anti")
-            self._merge_into_buckets(all_touched, kept.unionByName(live_updates))
+            if deletes is None:
+                gone = updates.select(self.key_cols).distinct()
+            elif updates is None:
+                gone = deletes
+            else:
+                gone = updates.select(self.key_cols).unionByName(deletes).distinct()
+            spark = (updates if updates is not None else deletes).sparkSession
+            merged = self.read(spark, touched).join(gone, self.key_cols, "left_anti")
+            if updates is not None:
+                live = (
+                    updates
+                    if deletes is None
+                    else updates.join(deletes, self.key_cols, "left_anti")
+                )
+                merged = merged.unionByName(live)
+            self._merge_into_buckets(touched, merged)
         finally:
-            updates.unpersist()
-            deletes.unpersist()
+            for df in (updates, deletes):
+                if df is not None:
+                    df.unpersist()
 
 
 def _schema(*fields: tuple) -> StructType:

@@ -6,10 +6,13 @@ edit ⇒ bounded delta)."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
-from cocoindex_spark.engine.app import App
+from cocoindex_spark.engine.app import App, _keys_from_paths
 from cocoindex_spark.engine.function import fn
 
 
@@ -553,3 +556,130 @@ def test_cheap_path_logic_change_reloads_everything(app, spark, tmp_state):
     assert v2.memo_misses == 2 and v2.updates == 2
     got = {r["path"]: r["text_upper"] for r in t.read(spark).collect()}
     assert got == {"a": "alpha", "b": "beta"}  # v2 lowercases
+
+
+def test_null_pk_component_keeps_positions(spark):
+    """name/<NULL>/7 must encode as 'name//7', not 'name/7' — and the
+    parse must round-trip (NULL, 7) for safe non-string pk types (a
+    dropped NULL would shift later segments onto earlier pk columns
+    and the no-scan delete mapping would sweep the wrong key)."""
+    df = spark.createDataFrame(
+        [(None, 7), (3, 9)], "a int, b int"
+    ).withColumn("__tp", App._path_col("t", ["a", "b"]))
+    paths = {r["__tp"] for r in df.collect()}
+    assert paths == {"t//7", "t/3/9"}
+
+    back = _keys_from_paths(df.select("__tp"), "t", ["a", "b"], ["int", "int"])
+    got = {(r["a"], r["b"]) for r in back.collect()}
+    assert got == {(None, 7), (3, 9)}
+
+
+def test_non_null_paths_unchanged(spark):
+    """The explicit encoding is byte-identical to the old concat_ws
+    form for non-null values (tracking target_path stability)."""
+    df = spark.createDataFrame([("x", 1)], "k string, v int").withColumn(
+        "__tp", App._path_col("tgt", ["k", "v"])
+    )
+    assert df.collect()[0]["__tp"] == "tgt/x/1"
+
+
+def test_schemaless_readless_delete_target_fails_clearly(spark, app):
+    """An apply-only sink (no `read`) without a `schema` cannot map
+    dead paths to pk values; the sync must say so up front, not
+    TypeError on None subscripting."""
+
+    class ApplyOnly:
+        name = "wire"
+        pk = ["k"]
+
+        def __init__(self):
+            self.upserts = []
+
+        def upsert(self, df):
+            self.upserts.append(df.collect())
+
+        def delete(self, df):  # pragma: no cover - unreachable
+            raise AssertionError("delete should not be reached")
+
+    tgt = ApplyOnly()
+    src1 = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+    with pytest.raises(TypeError, match="declares no `schema`"):
+        app.sync_table(src1, ["k"], lambda d: d, tgt)
+
+
+def test_mixed_sync_converges(spark, app, tmp_state):
+    """Update + delete + insert in one sync: the sink and tracking each
+    take both channels in one rewrite, and a re-run is all no-op."""
+    tgt = app.target(f"{tmp_state}/t", ["k"], "k STRING, v INT")
+    s1 = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "k string, v int")
+    app.sync_table(s1, ["k"], lambda d: d, tgt)
+    # mixed sync: edit a, delete b, add d
+    s2 = spark.createDataFrame([("a", 10), ("c", 3), ("d", 4)], "k string, v int")
+    st = app.sync_table(s2, ["k"], lambda d: d, tgt)
+    assert st.updates == 1 and st.deletes == 1 and st.inserts == 1
+    got = {(r["k"], r["v"]) for r in tgt.read(spark).collect()}
+    assert got == {("a", 10), ("c", 3), ("d", 4)}
+    again = app.sync_table(s2, ["k"], lambda d: d, tgt)
+    assert again.noops == 3 and again.inserts == again.updates == again.deletes == 0
+
+
+def _slow_writes(table, seconds, monkeypatch):
+    """Delay every version write of one state table by ``seconds``."""
+    write = table._write_version
+
+    def slow(*args, **kwargs):
+        time.sleep(seconds)
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(table, "_write_version", slow)
+
+
+def test_failed_sync_joins_memo_flush(app, spark, tmp_state, monkeypatch):
+    """A sync that raises after the memo flush started still joins the
+    flush thread: no state write outlives the failed call."""
+    target = _target(app, tmp_state)
+
+    def sink_down(rows):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(target, "upsert", sink_down)
+    _slow_writes(app.state.memo, 2.0, monkeypatch)
+    with pytest.raises(RuntimeError, match="sink down"):
+        app.sync_table(_source(spark, [("a.md", "hello")]), ["path"], enrich, target)
+    assert not [
+        t for t in threading.enumerate() if t.name == "memo-flush" and t.is_alive()
+    ]
+
+
+def test_source_fp_edit_and_sweep_both_land(app, spark, tmp_state, monkeypatch):
+    """A full cheap-fp sync that edits `a` and deletes `b` records a's
+    new cheap fp AND sweeps b's map row. The two writes overlap in time
+    here (slow memo and map writes); a second writer would swap the
+    pointer from a stale snapshot and drop one of them."""
+    target = _target(app, tmp_state)
+
+    def listing(revs):
+        return spark.createDataFrame(list(revs.items()), "path STRING, rev LONG")
+
+    def loader(contents):
+        cdf = spark.createDataFrame(list(contents.items()), "path STRING, text STRING")
+        return lambda df: df.join(cdf, "path", "left")
+
+    content = {"a.md": "alpha", "b.md": "beta", "c.md": "gamma"}
+    app.sync_table(
+        listing({"a.md": 1, "b.md": 1, "c.md": 1}), ["path"], enrich, target,
+        cheap_fp_cols=["rev"], load=loader(content),
+    )
+
+    _slow_writes(app.state.memo, 5.0, monkeypatch)
+    _slow_writes(app.state.source_fp, 3.0, monkeypatch)
+    revs2 = {"a.md": 2, "c.md": 1}
+    kw = dict(cheap_fp_cols=["rev"], load=loader(dict(content, **{"a.md": "ALPHA2"})))
+    s2 = app.sync_table(listing(revs2), ["path"], enrich, target, **kw)
+    assert s2.updates == 1 and s2.deletes == 1
+    monkeypatch.undo()
+
+    sfp_paths = {r["component_path"] for r in app.state.source_fp.read(spark).collect()}
+    assert sfp_paths == {"t/docs_out/a.md", "t/docs_out/c.md"}
+    s3 = app.sync_table(listing(revs2), ["path"], enrich, target, **kw)
+    assert s3.extra["loaded"] == 0 and s3.noops == 2

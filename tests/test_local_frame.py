@@ -1,7 +1,8 @@
 """Driver-built frames (session.local_frame): the Arrow LocalRelation
 path returns exactly what ``createDataFrame(<python list>)`` returns,
 probe routing runs on the driver with no Spark job, and no module
-outside ``queries/`` builds a frame from Python rows any other way."""
+outside ``queries/`` builds a frame from Python rows any other way.
+The same source walk keeps environment reads in ``session.py``."""
 
 from __future__ import annotations
 
@@ -112,29 +113,53 @@ def test_probe_partitions_of_no_values_touches_no_spark(tmp_state):
     assert target.probe_partitions(None, []) == []  # no session to touch
 
 
-def _create_data_frame_calls(path):
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
-    return [
-        node.lineno
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "createDataFrame"
-    ]
+def _offending_lines(exempt, skip_dir, match):
+    """``file:line`` of every AST node under ``cocoindex_spark/`` that
+    ``match`` accepts, outside the ``exempt`` files and the top-level
+    ``skip_dir`` package."""
+    offenders = []
+    for dirpath, _dirs, files in os.walk(PKG):
+        if os.path.relpath(dirpath, PKG).split(os.sep)[0] == skip_dir:
+            continue
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or os.path.relpath(path, PKG) in exempt:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, PKG)}:{node.lineno}"
+                for node in ast.walk(tree)
+                if match(node)
+            ]
+    return offenders
 
 
 def test_no_create_data_frame_outside_helper():
     """Driver rows go through ``local_frame``; an RDD becomes a frame
     with ``rdd.toDF(schema)``. Only the helper itself and the oracle
     queries (``queries/``) call ``createDataFrame``."""
-    exempt = {os.path.join(PKG, "session.py")}
-    offenders = []
-    for dirpath, _dirs, files in os.walk(PKG):
-        if os.path.relpath(dirpath, PKG).split(os.sep)[0] == "queries":
-            continue
-        for name in files:
-            path = os.path.join(dirpath, name)
-            if name.endswith(".py") and path not in exempt:
-                offenders += [f"{os.path.relpath(path, PKG)}:{n}" for n in _create_data_frame_calls(path)]
-    assert offenders == []
+    assert _offending_lines(
+        {"session.py"},
+        "queries",
+        lambda node: isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame",
+    ) == []
+
+
+def test_no_environment_reads_outside_session():
+    """Behaviour is set by call arguments, not process environment: only
+    ``session.py`` (deployment settings such as cores and memory) reads
+    ``os.environ`` / ``os.getenv``."""
+    names = {"environ", "getenv"}
+    assert _offending_lines(
+        {"session.py"},
+        None,
+        lambda node: (isinstance(node, ast.Attribute) and node.attr in names)
+        or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "os"
+            and any(alias.name in names for alias in node.names)
+        ),
+    ) == []

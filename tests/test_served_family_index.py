@@ -196,3 +196,25 @@ def test_extractor_logic_fp_covers_operator_chain():
 
     deps = _auto_dep_fps(extract_def_rows.fn)
     assert any(name.startswith("definitions:") for name in deps)
+
+
+def test_served_index_builds_once_and_rejects_config_mismatch(spark):
+    """One build per (session, sf_dir, tag): a repeat call serves the
+    cached target, records one `SYNC_SECONDS` entry, and a caller asking
+    for a different build configuration fails loudly."""
+    from cocoindex_spark.queries import codeq
+
+    builds = []
+
+    def build(app):
+        builds.append(app.name)
+        return object()
+
+    sf_dir = "/served-index-test"
+    cfg = {"langs": ("rust",), "probe": False}
+    first = codeq._served_index(spark, sf_dir, "tagx", build, config=cfg)
+    assert codeq._served_index(spark, sf_dir, "tagx", build, config=dict(cfg)) is first
+    assert builds == ["svc_tagx"]
+    assert (sf_dir, "tagx") in codeq.SYNC_SECONDS
+    with pytest.raises(ValueError, match="was built with"):
+        codeq._served_index(spark, sf_dir, "tagx", build, config={**cfg, "probe": True})

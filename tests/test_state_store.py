@@ -169,3 +169,24 @@ def test_merge_apply_combined_upsert_delete(spark, tmp_state):
         spark.createDataFrame([], "k STRING"),
     )
     assert _rows(t, spark) == {("b", 20), ("c", 3), ("d", 4), ("f", 6)}
+
+
+def test_merge_apply_none_channels(spark, tmp_state):
+    """Either channel may be None: None deletes is a plain upsert, None
+    updates a plain delete, and a delete on an empty table is a no-op
+    that launches no Spark job."""
+    t = ManagedTable(os.path.join(tmp_state, "t"), ["k"], _schema())
+    sc = spark.sparkContext
+    sc.setJobGroup("empty-delete", "empty-delete")
+    try:
+        t.merge_apply(None, spark.createDataFrame([("a", 0)], _schema()).select("k"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("empty-delete") == []
+    assert t.is_empty()
+
+    t.merge_apply(spark.createDataFrame([("a", 1), ("b", 2)], _schema()), None)
+    t.merge_apply(None, spark.createDataFrame([("a", 0)], _schema()).select("k"))
+    assert _rows(t, spark) == {("b", 2)}
+    t.merge_apply(None, None)
+    assert _rows(t, spark) == {("b", 2)}
