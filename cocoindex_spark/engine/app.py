@@ -15,6 +15,20 @@ program (SURVEY.md §3.1 "Spark restatement"):
       → reconcile full-outer join vs tracking         [§2.5]
       → MERGE into sink + tracking commit + memo flush
 
+One sync is a `_SyncRun` whose nine phases run in order, each timed
+into ``SyncStats.extra["phase_ms"]`` under its own name:
+
+    cheap_level          target contract, context fold; with cheap_fp_cols
+                         the listing's cheap fps vs the source_fp map
+    transform_reconcile  memo lookup, transform over misses, reconcile
+    stats_counts         hit/miss counts; memo + source_fp flush thread starts
+    precommit_buckets    tracking buckets of every changing key
+    precommit_merge      stage marker on updated and deleted states
+    sink_apply           idempotent MERGE into the target
+    tracking_commit      tracking rewrite, errors side table
+    memo_flush_wait      flush-thread join, cache release (on every exit)
+    cleanup              state-table growth / compaction
+
 Incremental contract (BASELINE.md): warm re-run ⇒ 0 transform
 invocations and all-noop reconcile; single-item edit ⇒ exactly that
 item recomputed; deleted item ⇒ its target rows deleted.
@@ -34,8 +48,9 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from cocoindex_spark.engine.context import (
     ContextKey,
@@ -43,7 +58,7 @@ from cocoindex_spark.engine.context import (
     _pop_active,
     _push_active,
 )
-from cocoindex_spark.engine.reconcile import reconcile, tracking_updates
+from cocoindex_spark.engine.reconcile import mark_pending, reconcile, tracking_updates
 from cocoindex_spark.fingerprint import fp_col, fp_logic, fp_value
 from cocoindex_spark.session import local_frame
 from cocoindex_spark.sinks.table import TableTarget
@@ -231,8 +246,6 @@ class App:
         return F.concat(*parts)
 
     def target(self, path: str, pk: list[str], schema) -> TableTarget:
-        from pyspark.sql.types import StructType
-
         if isinstance(schema, str):
             schema = StructType.fromDDL(schema)
         return TableTarget(path, pk, schema)
@@ -298,797 +311,24 @@ class App:
         on recovery). ``stats.extra['errors']`` carries the count (the
         reference's UpdateStats error counts).
         """
-        t0 = time.perf_counter()
-        spark = self.spark
-        stats = SyncStats()
-        # Per-phase wall clock (ms), reported in stats.extra["phase_ms"]
-        # — the reference's update-stats timing breakdown. Phases are
-        # action boundaries: lazy plan construction costs nothing, so
-        # each bucket attributes the jobs that ran since the previous.
-        phase_ms: dict[str, int] = {}
-        _last = [t0]
-
-        def _phase(name: str) -> None:
-            now = time.perf_counter()
-            phase_ms[name] = phase_ms.get(name, 0) + int((now - _last[0]) * 1000)
-            _last[0] = now
-        version = int(time.time() * 1000)
-        logic_fp = getattr(transform, "logic_fp", None) or fp_logic(transform)
-
-        component_prefix = f"{self.name}/{target.name}"
-        stats.extra["schema_evolution"] = self._ensure_target_contract(
-            target, component_prefix
+        run = _SyncRun(
+            self, source, key_cols, transform, target,
+            full_reprocess=full_reprocess, partial=partial, tombstone_col=tombstone_col,
+            validate_unique=validate_unique, cheap_fp_cols=cheap_fp_cols, load=load,
+            error_col=error_col,
         )
-        partial = partial or tombstone_col is not None
-        scope_paths = None
-        if partial:
-            scope_paths = source.select(
-                self._path_col(component_prefix, key_cols).alias("component_path")
-            ).distinct()
-        if tombstone_col is not None:
-            source = source.filter(
-                ~F.coalesce(F.col(tombstone_col), F.lit(False))
-            ).drop(tombstone_col)
-        # Fold change-detected context reads into the memo identity:
-        # memo rows written under a context snapshot carry its combined
-        # fingerprint in logic_fp, so re-providing a different value
-        # makes every lookup miss (and the rows GC as dead keys) while
-        # an unchanged context keeps hitting — the reference's
-        # "context fps match" hit condition (execution.rs memo reuse;
-        # logic_registry.rs:35) expressed as one key instead of a
-        # per-row fp-set check, valid because one sync shares one
-        # context snapshot across all rows.
-        ctx_fps = self._transform_context_fps(transform, source)
-        if ctx_fps:
-            base_logic_fp = logic_fp
-            logic_fp = fp_value(["ctx", logic_fp, sorted(ctx_fps)])
-            # Record the folded fp in the per-transform context history
-            # (one tiny idempotent upsert, context users only): gc_memo
-            # reads this to sweep rows written under PREVIOUS context
-            # values, whose folded fp no current lookup can address.
-            self._record_ctx_history(base_logic_fp, logic_fp)
-        src_cols = [c for c in source.columns]
-        # NOT cached: each consumer needs a different column subset —
-        # key-only joins (probe, hit/miss split) must keep parquet
-        # column pruning and never read the json payload columns, which
-        # a whole-frame cache would force into memory. Rows without
-        # decl metadata (written before the column existed) are
-        # invisible here — they recompute once and converge.
-        memo_df = (
-            self.state.memo.read(spark)
-            .filter(F.col("logic_fp") == logic_fp)
-            .filter(F.col("decl_json").isNotNull())
-        )
-        memo_keys = memo_df.select(F.col("args_fp").alias("__args_fp"))
-
-        use_cheap = bool(cheap_fp_cols) and not full_reprocess
-        cheap_listing = None
-        cheap_probe = None
-        cheap_replay = None
-        if use_cheap:
-            if load is None:
-                # Content columns live in `source` itself: derive a
-                # pruned listing (keys + cheap cols only — the cache
-                # below materializes every column it is given, so the
-                # content must not be among them) and re-attach the
-                # remaining columns by key for exactly the cheap-miss
-                # rows. The content side scans once, on the miss branch
-                # only.
-                content_side = source.drop(
-                    *[c for c in cheap_fp_cols if c not in key_cols]
-                )
-                listing_cols = list(
-                    dict.fromkeys([*key_cols, *cheap_fp_cols])
-                )
-                source = source.select(*listing_cols)
-
-                def load(df, _cs=content_side, _k=key_cols):
-                    return df.join(_cs, _k, "left")
-
-            # ---- level 1: cheap fp vs the stored source_fp map ----
-            cheap_listing = (
-                source.withColumn(
-                    "__cheap_fp",
-                    fp_col(F.lit(logic_fp), *[F.col(c) for c in cheap_fp_cols]),
-                )
-                .withColumn(
-                    "__component_path", self._path_col(component_prefix, key_cols)
-                )
-                .dropDuplicates(["__component_path", "__cheap_fp"])
-            )
-            sfp = (
-                self.state.source_fp.read(spark)
-                .filter(F.col("component_path").startswith(component_prefix + "/"))
-                .select(
-                    F.col("component_path").alias("__component_path"),
-                    F.col("cheap_fp").alias("__cheap_fp"),
-                    F.col("args_fp").alias("__args_fp"),
-                )
-            )
-            # ---- level 2: load content for cheap misses only ----
-            # ONE metadata-only frame (listing ⋈ fp-map ⋈ memo keys — no
-            # content column anywhere) is computed ONCE and cached; the
-            # hit/miss split, the replay branch, and both cheap-path
-            # counts (n_need: rows that must load content; n_cheap:
-            # replays that skip content I/O entirely) all derive from it
-            # as cache-backed filters. The r2/r3a shape re-executed the
-            # listing ⋈ fp-map join in every downstream job (probe agg,
-            # keyed materialization via need_load, desired via
-            # cheap_replay) — three metadata joins per sync — which is
-            # exactly why pipe_edit_cheap lost to pipe_edit on constant
-            # overhead. When nothing needs loading we substitute an empty
-            # LocalRelation below, which the optimizer prunes
-            # (PropagateEmptyRelation) out of every plan it feeds:
-            # merely executing load()'s plan over an empty input would
-            # still scan its right side (a content join scans the content
-            # table even when the probe side is empty), which is the
-            # O(data) warm cost this path exists to eliminate.
-            cheap_probe = (
-                cheap_listing.join(sfp, ["__component_path", "__cheap_fp"], "left")
-                .join(
-                    memo_keys.withColumn("__in_memo", F.lit(True)), "__args_fp", "left"
-                )
-                .cache()
-            )
-            # A cheap hit only skips loading if its memoized result still
-            # exists (__in_memo); a GC'd memo entry falls back to the
-            # load path.
-            _replayable = F.col("__args_fp").isNotNull() & F.col(
-                "__in_memo"
-            ).isNotNull()
-            need_load = cheap_probe.filter(~_replayable).drop(
-                "__args_fp", "__in_memo"
-            )
-            # Replays carry METADATA only (decl_json) — the fat
-            # result_json column stays out of every main-path memo scan;
-            # the sink phase fetches payloads bucket-scoped for exactly
-            # the replayed rows that must rewrite (normally zero).
-            cheap_replay = (
-                cheap_probe.filter(_replayable)
-                .select("__args_fp", "__component_path")
-                .join(
-                    memo_df.select(
-                        F.col("args_fp").alias("__args_fp"), "decl_json"
-                    ),
-                    "__args_fp",
-                    "inner",
-                )
-                .select("__args_fp", "__component_path", "decl_json")
-            )
-            n_total, n_cheap = cheap_probe.agg(
-                F.count(F.lit(1)),
-                F.sum(
-                    F.when(
-                        F.col("__args_fp").isNotNull() & F.col("__in_memo").isNotNull(),
-                        1,
-                    ).otherwise(0)
-                ),
-            ).first()
-            n_cheap = int(n_cheap or 0)
-            stats.extra["loaded"] = n_need = int(n_total) - n_cheap
-            _phase("cheap_level")
-            loaded = load(need_load) if load is not None else need_load
-            if n_need == 0:
-                loaded = local_frame(spark, [], loaded.schema)
-            # The content fingerprint (and the transform's view) excludes
-            # the volatile cheap columns: a touched mtime with identical
-            # content must memo-hit, not recompute (component.rs:97-101 —
-            # the content fp is over content, the cheap version is only a
-            # validation hint). Key columns are never stripped.
-            volatile = set(cheap_fp_cols) - set(key_cols)
-            src_cols = [
-                c
-                for c in loaded.columns
-                if c not in ("__cheap_fp", "__component_path") and c not in volatile
-            ]
-            keyed = loaded.withColumn(
-                "__args_fp", fp_col(F.lit(logic_fp), *[F.col(c) for c in src_cols])
-            )
-        else:
-            keyed = source.withColumn(
-                "__args_fp", fp_col(F.lit(logic_fp), *[F.col(c) for c in src_cols])
-            ).withColumn("__component_path", self._path_col(component_prefix, key_cols))
-        # __args_fp covers every source column (keys included), so equal
-        # fingerprints ⇒ fully-identical rows ⇒ the same component.
-        # Collapse them here: otherwise the memo flush would collect both
-        # copies' outputs under one fingerprint and each later hit would
-        # replay the doubled array (duplicate target declarations). The
-        # dedup partitions by __args_fp — the same key the memo join
-        # shuffles on — so the exchange is reused, not added.
-        keyed = keyed.dropDuplicates(["__args_fp"])
-        # Row counts ride as observations INSIDE the cached plans: the
-        # metrics fire during the caches' first (full) materialization —
-        # the reconcile-phase jobs that run anyway — so the stats phase
-        # reads driver-side values instead of launching two more
-        # cache-scan jobs per sync (keyed.count / miss_src.count). The
-        # first materializing actions (duplicate-declaration check,
-        # plan.counts) are full scans — group-bys over the whole frame —
-        # never limit-style partial reads, so the observed counts are
-        # exact.
-        from pyspark.sql import Observation
-
-        obs_keyed = Observation()
-        keyed = keyed.observe(obs_keyed, F.count(F.lit(1)).alias("n"))
-        keyed = keyed.cache()
-
-        # ---- cold-start detection (r10 verdict item #3) ----
-        # A freshly-created state store (first sync of a served index,
-        # pipe_cold, any new App) provably holds nothing: the pointer
-        # files are empty — a driver-side read, no job. Everything is
-        # then a memo miss and every desired row an insert, so the memo
-        # lookup joins AND the reconcile full-outer join are pure plan
-        # overhead (two shuffles + their job latency) and are skipped
-        # outright. Guarded on BOTH tables: a non-empty memo with empty
-        # tracking (e.g. a prior run crashed after the memo flush) still
-        # takes the full path, whose replay/reconcile semantics that
-        # recovery depends on.
-        cold_start = (
-            not full_reprocess
-            and self.state.tracking.is_empty()
-            and self.state.memo.is_empty()
-        )
-
-        # ---- memo lookup join (§3.2: anti-join against _state/memo) ----
-        if not full_reprocess and not cold_start:
-            hits_keys = keyed.join(
-                memo_df.select(
-                    F.col("args_fp").alias("__args_fp"), "decl_json"
-                ),
-                "__args_fp",
-                "inner",
-            )
-            miss_src = keyed.join(memo_keys, "__args_fp", "left_anti")
-        else:
-            hits_keys = keyed.limit(0).withColumn(
-                "decl_json", F.lit(None).cast("string")
-            )
-            miss_src = keyed
-
-        obs_miss = Observation()
-        miss_src = miss_src.observe(obs_miss, F.count(F.lit(1)).alias("n"))
-        miss_src = miss_src.cache()
-        # Run the transform ONLY over misses (always run it so we learn
-        # the output schema even when everything hit). The app is the
-        # active context provider for the duration: use_context() works
-        # inside the transform and its helpers.
-        _push_active(self.context)
         try:
-            miss_out = transform(
-                miss_src.select(*src_cols, "__args_fp", "__component_path")
-            )
+            for phase in _PHASES[:-2]:
+                run.timed(phase)
         finally:
-            _pop_active()
-        out_cols = [
-            c for c in miss_out.columns if c not in ("__args_fp", "__component_path")
-        ]
-        if "__args_fp" not in miss_out.columns:
-            raise ValueError("transform must preserve the __args_fp column")
-        miss_out = miss_out.cache()
-
-        # ---- failure isolation (error_col contract) ----
-        failed_paths = None
-        miss_out_raw = miss_out
-        if error_col is not None:
-            if error_col not in miss_out.columns:
-                raise ValueError(
-                    f"error_col {error_col!r} not in transform output columns"
-                )
-            out_cols = [c for c in out_cols if c != error_col]
-            failed_paths = (
-                miss_out.filter(F.col(error_col).isNotNull())
-                .groupBy("__component_path")
-                .agg(F.min(error_col).alias("error"))
-                .cache()
-            )
-            stats.extra["errors"] = failed_paths.count()
-            # Component granularity: one failed row fails the whole
-            # component — none of its rows are declared or memoized.
-            # (The pre-filter frame stays cached; this derives from it.)
-            miss_out = miss_out.join(
-                failed_paths.select("__component_path"), "__component_path", "left_anti"
-            ).drop(error_col)
-            miss_out = miss_out.cache()
-
-        # ---- replay memo hits (METADATA only — payloads stay serialized)
-        # Replayed components feed reconcile from the decl metadata
-        # recorded at flush time: two short strings parsed per component
-        # instead of the full payload array. On a warm run over 100 TB
-        # that is O(components), not O(data); result_json is
-        # deserialized only for the rare replayed rows the reconcile
-        # marks insert/update (recovery/divergence), below in the sink
-        # phase.
-        from pyspark.sql.types import ArrayType, StringType
-        from pyspark.sql.types import StructField as _SF
-        from pyspark.sql.types import StructType as _ST
-
-        replay_src = hits_keys.select(
-            "__args_fp", "__component_path", "decl_json"
-        )
-        if cheap_replay is not None:
-            # Cheap-fp hits never loaded content; their memoized result
-            # was fetched by the replay join above.
-            replay_src = replay_src.unionByName(cheap_replay)
-        row_schema = miss_out.select(*out_cols).schema
-        decl_schema = ArrayType(
-            _ST([_SF("target_path", StringType()), _SF("fp", StringType())])
-        )
-
-        # ---- declare target states ----
-        # __args_fp rides through reconcile as a passthrough column so
-        # the sink phase can fetch a replayed component's payload by
-        # memo key without re-deriving it.
-        miss_decl = miss_out.select(
-            F.col("__component_path").alias("component_path"),
-            self._path_col(target.name, target.pk).alias("target_path"),
-            fp_col(*[F.col(c) for c in out_cols]).alias("fp"),
-            "__args_fp",
-            F.lit(False).alias("__is_replay"),
-        )
-        hit_decl = replay_src.select(
-            F.col("__component_path").alias("component_path"),
-            F.explode(F.from_json(F.col("decl_json"), decl_schema)).alias("__d"),
-            "__args_fp",
-        ).select(
-            "component_path",
-            F.col("__d.target_path").alias("target_path"),
-            F.col("__d.fp").alias("fp"),
-            "__args_fp",
-            F.lit(True).alias("__is_replay"),
-        )
-        desired = miss_decl.unionByName(hit_decl)
-
-        if validate_unique:
-            dup = (
-                desired.groupBy("target_path")
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"duplicate target state declared: {dup[0]['target_path']!r} "
-                    "(two components produced the same target pk this run)"
-                )
-
-        # ---- reconcile (§2.5) ----
-        if cold_start:
-            # Empty tracking ⇒ every desired state is an INSERT; the
-            # full-outer join (a shuffle of the whole desired frame
-            # against an empty scan) classifies nothing the literal
-            # can't. Failed components are simply absent from desired
-            # (masked above) and have no prior state to protect.
-            from cocoindex_spark.engine.reconcile import (
-                ACTION_INSERT,
-                ReconcilePlan,
-            )
-
-            plan = ReconcilePlan(
-                actions=desired.select(
-                    "component_path",
-                    "target_path",
-                    F.lit(ACTION_INSERT).alias("action"),
-                    "fp",
-                    "__args_fp",
-                    "__is_replay",
-                )
-            )
-        else:
-            tracked = self.state.tracking.read(spark).filter(
-                F.col("component_path").startswith(component_prefix + "/")
-            )
-            if partial:
-                # Live mode: reconcile only this batch's components; keys
-                # not in the batch keep their tracked state untouched.
-                tracked = tracked.join(F.broadcast(scope_paths), "component_path", "left_semi")
-            if failed_paths is not None and stats.extra.get("errors"):
-                # Failed components leave the reconcile scope entirely:
-                # absent from desired AND masked from tracked, so their
-                # previous target rows are neither deleted nor rewritten
-                # (the reference keeps a failed child's prior state).
-                tracked = tracked.join(
-                    F.broadcast(
-                        failed_paths.select(
-                            F.col("__component_path").alias("component_path")
-                        )
-                    ),
-                    "component_path",
-                    "left_anti",
-                )
-            plan = reconcile(desired, tracked, full_reprocess=full_reprocess)
-        plan.actions = plan.actions.cache()
-        counts = plan.counts()
-        _phase("transform_reconcile")
-        stats.inserts = counts["insert"]
-        stats.updates = counts["update"]
-        stats.deletes = counts["delete"]
-        stats.noops = counts["noop"]
-
-        def _observed_n(obs, df) -> int:
-            # plan.counts() above fully materialized the keyed/miss
-            # caches, so the observations are set — a driver-side dict
-            # read, not a job. Fallback: when the optimizer erased the
-            # observed subtree entirely (empty-relation propagation
-            # through a limit(0)/empty source drops the CollectMetrics
-            # node), the metrics row is absent — count the cached frame
-            # instead (trivial: it is empty or tiny in exactly those
-            # cases). The absent-row probe is the NON-BLOCKING JVM
-            # `getRowOrEmpty` (r5 advisor: `Observation.get` raises on
-            # the installed PySpark 4.1 but BLOCKS forever on 3.x —
-            # probing first makes the fallback version-independent;
-            # pyproject.toml also pins pyspark>=4).
-            try:
-                jo = getattr(obs, "_jo", None)
-                if jo is None or jo.getRowOrEmpty().isEmpty():
-                    return df.count()
-                return int(obs.get["n"])
-            except Exception:
-                return df.count()
-
-        stats.memo_misses = _observed_n(obs_miss, miss_src)
-        stats.memo_hits = _observed_n(obs_keyed, keyed) - stats.memo_misses
-        if use_cheap:
-            # Cheap-fp replays never reached the loaded set: they are
-            # memo hits that skipped content I/O entirely. n_cheap came
-            # out of the same metadata job as n_need above — no extra
-            # count() here.
-            stats.memo_hits += n_cheap
-            stats.extra["cheap_hits"] = n_cheap
-        # memo flush: record results for every miss (even all-noop runs
-        # converge their memo) — one JSON array of rows per args_fp.
-        # decl_json records the declared (target_path, fp) pairs so
-        # future replays feed reconcile without touching the payload
-        # array (see the replay section above).
-        miss_memo = None
-        if stats.memo_misses:
-            miss_memo = (
-                miss_out.withColumn("__tp", self._path_col(target.name, target.pk))
-                .withColumn("__fp", fp_col(*[F.col(c) for c in out_cols]))
-                .groupBy("__args_fp")
-                .agg(
-                    F.to_json(F.collect_list(F.struct(*out_cols))).alias(
-                        "result_json"
-                    ),
-                    F.to_json(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__tp").alias("target_path"),
-                                F.col("__fp").alias("fp"),
-                            )
-                        )
-                    ).alias("decl_json"),
-                )
-                .select(
-                    F.lit(logic_fp).alias("logic_fp"),
-                    F.col("__args_fp").alias("args_fp"),
-                    "result_json",
-                    "decl_json",
-                    F.lit(version).cast("long").alias("version"),
-                )
-            )
-
-        # ---- source_fp map maintenance (two-level change detection) ----
-        # Loaded rows record their (cheap_fp → args_fp) pair; a full
-        # sync also sweeps the map rows of vanished components (one
-        # metadata-sized anti-join), gated on reconcile deletes — without
-        # any, no component vanished (a stale row would anyway only cost
-        # space: a returning component with an unchanged cheap fp
-        # replays the same memoized result, which is correct). Both
-        # channels land in ONE merge on the flush thread below, the map's
-        # only writer: two writers would each swap the pointer from
-        # their own snapshot and one would lose the other's update.
-        new_sfp = dead_sfp = None
-        if use_cheap and stats.extra["loaded"]:
-            new_sfp = keyed.select(
-                F.col("__component_path").alias("component_path"),
-                F.col("__cheap_fp").alias("cheap_fp"),
-                F.col("__args_fp").alias("args_fp"),
-                F.lit(version).cast("long").alias("version"),
-            )
-        if use_cheap and not partial and stats.deletes:
-            dead_sfp = (
-                self.state.source_fp.read(spark)
-                .filter(F.col("component_path").startswith(component_prefix + "/"))
-                .join(
-                    cheap_probe.select(
-                        F.col("__component_path").alias("component_path")
-                    ),
-                    "component_path",
-                    "left_anti",
-                )
-                .select("component_path")
-            )
-
-        # The memo and source_fp writes run on a helper thread
-        # overlapping the sink/tracking phases below (Spark schedules
-        # both job sets concurrently): neither table is read by those
-        # phases, and a crash that persists them without tracking just
-        # replays the memoized result into a reconcile that still sees
-        # the mismatch, or loads and recomputes — convergent either way
-        # (same relaxation as cross-table non-atomicity, §2.5). keyed's
-        # cache was materialized by the reconcile-phase jobs, so the
-        # thread never races the content scan.
-        memo_err: list[BaseException] = []
-
-        def _flush() -> None:
-            try:
-                if miss_memo is not None:
-                    self.state.memo.merge_upsert(miss_memo)
-                if new_sfp is not None or dead_sfp is not None:
-                    self.state.source_fp.merge_apply(new_sfp, dead_sfp)
-            except BaseException as e:  # re-raised after the join below
-                memo_err.append(e)
-
-        memo_thread = None
-        if miss_memo is not None or new_sfp is not None or dead_sfp is not None:
-            memo_thread = threading.Thread(target=_flush, name="memo-flush")
-            memo_thread.start()
-        _phase("stats_counts")
-
-        try:
-            # ---- Phase 2 precommit: stage marker (pending_token) ----
-            token = uuid.uuid4().hex
-            if stats.inserts or stats.updates or stats.deletes:
-                from cocoindex_spark.engine.reconcile import mark_pending
-
-                # Only the changing rows are merged; the bucket-scoped state
-                # store rewrites just the buckets those keys hash into. The
-                # pending (Phase 2) and applied (Phase 4) merges share one
-                # key set, so the bucket ids are discovered once, and the
-                # prior-state join inside mark_pending reads only those
-                # buckets — on a 100 TB run the precommit cost is ∝ delta,
-                # not ∝ tracked-state size.
-                if cold_start:
-                    # Tracking is empty and stays empty until Phase 4 (the
-                    # pending merge below is update-only and cold syncs have
-                    # none), so the Phase-4 merge takes the empty-table
-                    # overwrite path and never consults bucket ids — the
-                    # discovery job would be pure overhead.
-                    bks = None
-                else:
-                    upsert_keys = (
-                        plan.changes()
-                        .filter(F.col("action") != "delete")
-                        .select("component_path", "target_path")
-                    )
-                    bks = self.state.tracking.touched_buckets(upsert_keys)
-                _phase("precommit_buckets")
-                if stats.updates:
-                    pending = mark_pending(
-                        self.state.tracking.read(spark, bks), plan, token
-                    )
-                    self.state.tracking.merge_upsert(pending, touched=bks)
-                    _phase("precommit_merge")
-                # Pure-insert (or insert+delete) syncs skip the pending
-                # merge entirely: the marker exists to widen possible_fps
-                # when an UPDATE may or may not have reached the sink, but
-                # an insert has no prior state to mis-trust — a crash
-                # anywhere re-classifies it as insert next run and the
-                # idempotent sink MERGE converges (phase order guarantees
-                # tracking rows are only written AFTER sink apply). On a
-                # cold 100 TB load this removes one full state-table merge.
-
-                # ---- Phase 3 sink apply (idempotent MERGE) ----
-                # Label-deduplicating sinks (stream-load shape) need the run
-                # version folded into their load labels: retries within this
-                # sync stay idempotent, later syncs re-sending identical
-                # bytes aren't silently dropped by the server's label dedup.
-                if hasattr(target, "set_sync_version"):
-                    target.set_sync_version(version)
-                upserts = plan.actions.filter(F.col("action").isin("insert", "update"))
-                if stats.inserts or stats.updates:
-                    # Attach payloads to the action rows: miss components
-                    # carry theirs in miss_out; replayed components that must
-                    # (re)write — recovery or divergence, never the warm
-                    # path — have ONLY their payload arrays deserialized
-                    # (semi-join on the memo key first, so the parse volume
-                    # is ∝ changes, not corpus).
-                    payload_miss = miss_out.withColumn(
-                        "target_path", self._path_col(target.name, target.pk)
-                    ).select("__args_fp", "target_path", *out_cols)
-                    if not full_reprocess and counts.get("__replay_upserts"):
-                        # Replayed components needing a (re)write are the
-                        # upsert fps that are NOT misses — normally zero
-                        # (recovery/divergence only). Their payloads come
-                        # from a BUCKET-SCOPED memo read: on the common path
-                        # touched_buckets([]) = [] and the fat result_json
-                        # column is never scanned at all; when rows do need
-                        # it, I/O is ∝ the handful of touched buckets, never
-                        # the memo table (the pre-r3c shape full-scanned
-                        # result_json inside every sink job).
-                        needed = (
-                            upserts.select("__args_fp")
-                            .distinct()
-                            .join(
-                                miss_out.select("__args_fp").distinct(),
-                                "__args_fp",
-                                "left_anti",
-                            )
-                        )
-                        nb = self.state.memo.touched_buckets(
-                            needed.select(
-                                F.lit(logic_fp).alias("logic_fp"),
-                                F.col("__args_fp").alias("args_fp"),
-                            )
-                        )
-                        payload_rows = (
-                            self.state.memo.read(spark, nb)
-                            .filter(F.col("logic_fp") == logic_fp)
-                            .select(F.col("args_fp").alias("__args_fp"), "result_json")
-                            .join(needed, "__args_fp", "left_semi")
-                        )
-                    else:
-                        payload_rows = local_frame(
-                            spark, [], "__args_fp STRING, result_json STRING"
-                        )
-                    replay_payload = (
-                        payload_rows.select(
-                            "__args_fp",
-                            F.explode(
-                                F.from_json(F.col("result_json"), ArrayType(row_schema))
-                            ).alias("__row"),
-                        )
-                        .select("__args_fp", F.col("__row.*"))
-                        .withColumn("target_path", self._path_col(target.name, target.pk))
-                        .select("__args_fp", "target_path", *out_cols)
-                    )
-                    # Join on BOTH (__args_fp, target_path): two components
-                    # declaring the same target_path (validate_unique=False)
-                    # must each pick up only their OWN payload rows — a
-                    # path-only join would cross-join their payloads and
-                    # could commit A's tracked fp over B's sink row.
-                    upsert_rows = upserts.select("__args_fp", "target_path").join(
-                        payload_miss.unionByName(replay_payload),
-                        ["__args_fp", "target_path"],
-                        "inner",
-                    ).select(*out_cols)
-                else:
-                    upsert_rows = None
-                dead_keys = None
-                if stats.deletes:
-                    # Map deleted target_paths back to pk values via the sink.
-                    # Ownership preemption (execution.rs:948-995): a path
-                    # whose old owner disappeared but that a NEW component
-                    # re-declared this run is claimed, not dead — the
-                    # upsert above already wrote the new owner's row, and
-                    # deleting by target_path would destroy it. Only paths
-                    # no component declared get swept.
-                    claimed = plan.actions.filter(
-                        F.col("action").isin("insert", "update")
-                    ).select(F.col("target_path").alias("__tp"))
-                    dead = (
-                        plan.actions.filter(F.col("action") == "delete")
-                        .select(F.col("target_path").alias("__tp"))
-                        .join(claimed, "__tp", "left_anti")
-                    )
-                    # Recover pk values from the dead target paths whenever
-                    # the parse round-trips exactly (the path encoding IS
-                    # name/pk1/pk2/... — any value that would make the parse
-                    # ambiguous would already collide in tracking, so this
-                    # adds no new constraint). No sink scan at all: the
-                    # pre-r9 shape read back the WHOLE target table to map
-                    # one dead path to its pk — a full corpus-sized scan per
-                    # delete-bearing sync at 100 TB. The read-based mapping
-                    # survives only as the fallback for pk types whose
-                    # string cast is not an exact round-trip.
-                    # (_ensure_target_contract guarantees a `schema`.)
-                    pk_types = [target.schema[c].dataType.simpleString() for c in target.pk]
-                    # Exactness condition: every pk type round-trips its
-                    # string cast, AND no column BEFORE the last is a
-                    # string (a '/' inside a non-final string value would
-                    # shift the split; the final column absorbs the
-                    # remainder, so a trailing string pk is always exact).
-                    parse_ok = all(t in _SAFE_PK_PARSE_TYPES for t in pk_types) and all(
-                        t != "string" for t in pk_types[:-1]
-                    )
-                    if parse_ok or not hasattr(target, "read"):
-                        dead_keys = _keys_from_paths(dead, target.name, target.pk, pk_types)
-                    else:
-                        current = target.read(spark).withColumn(
-                            "__tp", self._path_col(target.name, target.pk)
-                        )
-                        dead_keys = current.join(dead, "__tp").select(*target.pk)
-                # Mixed syncs (a rename is add + cascade delete) apply both
-                # channels in ONE bucket-scoped rewrite when the sink
-                # supports it — buckets touched by both would otherwise be
-                # version-written and pointer-swapped twice.
-                if (
-                    upsert_rows is not None
-                    and dead_keys is not None
-                    and hasattr(target, "merge_apply")
-                ):
-                    target.merge_apply(upsert_rows, dead_keys)
-                else:
-                    if upsert_rows is not None:
-                        target.upsert(upsert_rows)
-                    if dead_keys is not None:
-                        target.delete(dead_keys)
-                _phase("sink_apply")
-
-                # ---- Phase 4 commit: tracking (one rewrite for both
-                # channels; pure-upsert runs skip the delete channel) ----
-                applied, deleted = tracking_updates(plan, version)
-                self.state.tracking.merge_apply(
-                    applied, deleted if stats.deletes else None, touched=bks
-                )
-                _phase("tracking_commit")
-
-            # ---- error side table maintenance (opt-in) ----
-            if error_col is not None:
-                if stats.extra.get("errors"):
-                    self.state.errors.merge_upsert(
-                        failed_paths.select(
-                            F.col("__component_path").alias("component_path"),
-                            "error",
-                            F.lit(version).cast("long").alias("version"),
-                        )
-                    )
-                # Clearing: a component stops being "currently failing" when
-                # it recomputes cleanly, replays a memoized result, or
-                # vanishes from the source. A full sync enumerates the whole
-                # world, so everything under the prefix that is NOT in this
-                # run's failed set is clear; a partial batch only vouches
-                # for its own scope. Gated on the errors table actually
-                # having rows for the prefix — the common all-healthy sync
-                # pays one tiny metadata read, not a delete cycle.
-                old_errors = self.state.errors.read(spark).filter(
-                    F.col("component_path").startswith(component_prefix + "/")
-                )
-                if old_errors.limit(1).count():
-                    failed_now = (
-                        failed_paths.select(
-                            F.col("__component_path").alias("component_path")
-                        )
-                        if failed_paths is not None
-                        else old_errors.select("component_path").limit(0)
-                    )
-                    if partial:
-                        in_scope = old_errors.join(
-                            F.broadcast(scope_paths), "component_path", "left_semi"
-                        )
-                        cleared = in_scope.join(failed_now, "component_path", "left_anti")
-                    else:
-                        cleared = old_errors.join(failed_now, "component_path", "left_anti")
-                    self.state.errors.delete_keys(cleared.select("component_path"))
-        finally:
-            # Joined on every exit: a failed sync must not leave the
+            # On every exit: a failed sync must not leave the flush
             # thread writing state after sync_table has raised.
-            if memo_thread is not None:
-                memo_thread.join()
-                _phase("memo_flush_wait")
-            # Release this sync's caches: every count/flush above has
-            # materialized, and leaked cache blocks across many syncs in
-            # one session evict each other (a bench run is 35+ plans) —
-            # the recompute storms cost far more than the caching saved.
-            for cached in (
-                plan.actions,
-                miss_out,
-                miss_out_raw,
-                miss_src,
-                keyed,
-                cheap_probe,
-                failed_paths,
-            ):
-                if cached is not None:
-                    cached.unpersist()
-        if memo_err:
-            raise memo_err[0]
-
-        # Adaptive state maintenance: safe here — the sync's scoped
-        # bucket ids are all consumed; growth rehashes before the next
-        # sync. A grown table is already one fresh version, so
-        # compaction (fragment-count / dead-bytes OPTIMIZE,
-        # store.py maybe_compact) only runs when growth didn't fire.
-        for t in (self.state.tracking, self.state.memo, self.state.source_fp):
-            if not t.maybe_grow(spark):
-                t.maybe_compact(spark)
-        tgt_tbl = getattr(target, "_table", None)
-        if tgt_tbl is not None:
-            tgt_tbl.maybe_compact(spark)
-        _phase("cleanup")
-        stats.extra["phase_ms"] = phase_ms
-        stats.wall_sec = time.perf_counter() - t0
-        return stats
+            run.timed("memo_flush_wait")
+        if run.flush_err is not None:
+            raise run.flush_err
+        run.timed("cleanup")
+        run.stats.wall_sec = time.perf_counter() - run.t0
+        return run.stats
 
     # -- memo GC (§7.4.8; reference: version retention execution.rs:447-452,
     #    tombstone GC Phase 5 app_store.rs:316) --------------------------
@@ -1160,7 +400,7 @@ class App:
         # it requires the EXACT envelope key set (marker + v + only the
         # optional ctx/states), so a legacy bare user dict that happens
         # to carry the marker alongside other keys is returned intact
-        # rather than unwrapped (r7 advisor finding).
+        # rather than unwrapped.
         envelope = (
             isinstance(stored, dict)
             and stored.get("__coco_memo__") == 1
@@ -1468,3 +708,733 @@ class App:
         app_store.rs:316)."""
         self.context.close()
         self.state.drop()
+
+
+# The phases of one sync, in run order; each names a _SyncRun method and
+# a key of SyncStats.extra["phase_ms"].
+_PHASES = (
+    "cheap_level",
+    "transform_reconcile",
+    "stats_counts",
+    "precommit_buckets",
+    "precommit_merge",
+    "sink_apply",
+    "tracking_commit",
+    "memo_flush_wait",
+    "cleanup",
+)
+
+
+def _observed_n(obs, df: DataFrame) -> int:
+    """The row count an Observation recorded while ``df``'s cache
+    materialized — a driver-side read, not a job. When the optimizer
+    erased the observed subtree (empty-relation propagation through a
+    limit(0)/empty source drops the CollectMetrics node) the metrics row
+    is absent, and the cached frame — empty or tiny in exactly those
+    cases — is counted instead. The absent-row probe is the non-blocking
+    JVM ``getRowOrEmpty``: ``Observation.get`` raises on PySpark 4 but
+    blocks forever on 3.x (pyproject.toml pins pyspark>=4)."""
+    try:
+        jo = getattr(obs, "_jo", None)
+        if jo is None or jo.getRowOrEmpty().isEmpty():
+            return df.count()
+        return int(obs.get["n"])
+    except Exception:
+        return df.count()
+
+
+class _SyncRun:
+    """One ``App.sync_table`` call: its options, the frames its phases
+    hand on, and one method per phase of ``_PHASES``. Every phase runs
+    on every sync and returns at once when an earlier phase left it
+    nothing to do. Phases are action boundaries — lazy plan
+    construction costs nothing — so a phase's time is the Spark jobs it
+    ran."""
+
+    def __init__(
+        self, app: App, source, key_cols, transform, target, *,
+        full_reprocess, partial, tombstone_col, validate_unique, cheap_fp_cols, load, error_col,
+    ):
+        self.t0 = time.perf_counter()
+        self.app, self.spark, self.state = app, app.spark, app.state
+        self.source, self.key_cols = source, key_cols
+        self.transform, self.target = transform, target
+        self.full_reprocess = full_reprocess
+        self.partial = partial or tombstone_col is not None
+        self.tombstone_col = tombstone_col
+        self.validate_unique = validate_unique
+        self.cheap_fp_cols = cheap_fp_cols or []
+        self.use_cheap = bool(cheap_fp_cols) and not full_reprocess
+        self.load = load
+        self.error_col = error_col
+        self.stats = SyncStats()
+        self.phase_ms: dict[str, int] = {}
+        self.stats.extra["phase_ms"] = self.phase_ms
+        self.version = int(time.time() * 1000)
+        self.logic_fp = getattr(transform, "logic_fp", None) or fp_logic(transform)
+        self.prefix = f"{app.name}/{target.name}"
+        self.failed_paths = self.bks = self.flush_thread = self.flush_err = None
+        self._cached: list[DataFrame] = []
+
+    def timed(self, phase: str) -> None:
+        t = time.perf_counter()
+        getattr(self, phase)()
+        self.phase_ms[phase] = int((time.perf_counter() - t) * 1000)
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for this sync; memo_flush_wait releases it."""
+        df = df.cache()
+        self._cached.append(df)
+        return df
+
+    @property
+    def changed(self) -> bool:
+        return bool(self.stats.inserts or self.stats.updates or self.stats.deletes)
+
+    # ---- cheap_level --------------------------------------------------
+    def cheap_level(self) -> None:
+        """Target contract, live-mode scope, context fold and memo
+        scan; with ``cheap_fp_cols``, level 1 of two-level change
+        detection: the listing's cheap fps against the source_fp map."""
+        app, spark = self.app, self.spark
+        self.stats.extra["schema_evolution"] = app._ensure_target_contract(
+            self.target, self.prefix
+        )
+        if self.partial:
+            self.scope_paths = self.source.select(
+                app._path_col(self.prefix, self.key_cols).alias("component_path")
+            ).distinct()
+        if self.tombstone_col is not None:
+            self.source = self.source.filter(
+                ~F.coalesce(F.col(self.tombstone_col), F.lit(False))
+            ).drop(self.tombstone_col)
+        # Fold change-detected context reads into the memo identity:
+        # memo rows written under a context snapshot carry its combined
+        # fingerprint in logic_fp, so re-providing a different value
+        # makes every lookup miss (and the rows GC as dead keys) while
+        # an unchanged context keeps hitting — the reference's
+        # "context fps match" hit condition (execution.rs memo reuse;
+        # logic_registry.rs:35) expressed as one key instead of a
+        # per-row fp-set check, valid because one sync shares one
+        # context snapshot across all rows.
+        ctx_fps = app._transform_context_fps(self.transform, self.source)
+        if ctx_fps:
+            base_logic_fp = self.logic_fp
+            self.logic_fp = fp_value(["ctx", base_logic_fp, sorted(ctx_fps)])
+            # Record the folded fp in the per-transform context history
+            # (one tiny idempotent upsert, context users only): gc_memo
+            # reads this to sweep rows written under PREVIOUS context
+            # values, whose folded fp no current lookup can address.
+            app._record_ctx_history(base_logic_fp, self.logic_fp)
+        # NOT cached: each consumer needs a different column subset —
+        # key-only joins (probe, hit/miss split) must keep parquet
+        # column pruning and never read the json payload columns, which
+        # a whole-frame cache would force into memory. Rows without
+        # decl metadata (written before the column existed) are
+        # invisible here — they recompute once and converge.
+        self.memo_df = (
+            self.state.memo.read(spark)
+            .filter(F.col("logic_fp") == self.logic_fp)
+            .filter(F.col("decl_json").isNotNull())
+        )
+        self.memo_keys = self.memo_df.select(F.col("args_fp").alias("__args_fp"))
+        if not self.use_cheap:
+            return
+        key_cols, cheap_cols = self.key_cols, self.cheap_fp_cols
+        if self.load is None:
+            # Content columns live in `source` itself: derive a pruned
+            # listing (keys + cheap cols only — the cache below
+            # materializes every column it is given, so the content
+            # must not be among them) and re-attach the remaining
+            # columns by key for exactly the cheap-miss rows. The
+            # content side scans once, on the miss branch only.
+            content_side = self.source.drop(*[c for c in cheap_cols if c not in key_cols])
+            self.source = self.source.select(*dict.fromkeys([*key_cols, *cheap_cols]))
+            self.load = lambda df: df.join(content_side, key_cols, "left")
+        listing = (
+            self.source.withColumn(
+                "__cheap_fp",
+                fp_col(F.lit(self.logic_fp), *[F.col(c) for c in cheap_cols]),
+            )
+            .withColumn("__component_path", app._path_col(self.prefix, key_cols))
+            .dropDuplicates(["__component_path", "__cheap_fp"])
+        )
+        sfp = (
+            self.state.source_fp.read(spark)
+            .filter(F.col("component_path").startswith(self.prefix + "/"))
+            .select(
+                F.col("component_path").alias("__component_path"),
+                F.col("cheap_fp").alias("__cheap_fp"),
+                F.col("args_fp").alias("__args_fp"),
+            )
+        )
+        # ONE metadata-only frame (listing ⋈ fp-map ⋈ memo keys — no
+        # content column anywhere) is computed ONCE and cached; the
+        # hit/miss split, the replay branch, and both cheap-path counts
+        # (rows that must load content; replays that skip content I/O
+        # entirely) all derive from it as cache-backed filters, so the
+        # metadata joins run once per sync.
+        self.cheap_probe = self._cache(
+            listing.join(sfp, ["__component_path", "__cheap_fp"], "left").join(
+                self.memo_keys.withColumn("__in_memo", F.lit(True)), "__args_fp", "left"
+            )
+        )
+        # A cheap hit only skips loading if its memoized result still
+        # exists (__in_memo); a GC'd memo entry falls back to the
+        # load path.
+        replayable = F.col("__args_fp").isNotNull() & F.col("__in_memo").isNotNull()
+        self.need_load = self.cheap_probe.filter(~replayable).drop("__args_fp", "__in_memo")
+        # Replays carry METADATA only (decl_json) — the fat result_json
+        # column stays out of every main-path memo scan; the sink phase
+        # fetches payloads bucket-scoped for exactly the replayed rows
+        # that must rewrite (normally zero).
+        self.cheap_replay = (
+            self.cheap_probe.filter(replayable)
+            .select("__args_fp", "__component_path")
+            .join(
+                self.memo_df.select(F.col("args_fp").alias("__args_fp"), "decl_json"),
+                "__args_fp",
+                "inner",
+            )
+        )
+        n_total, n_cheap = self.cheap_probe.agg(
+            F.count(F.lit(1)), F.sum(F.when(replayable, 1).otherwise(0))
+        ).first()
+        self.stats.extra["cheap_hits"] = n_cheap = int(n_cheap or 0)
+        self.stats.extra["loaded"] = int(n_total) - n_cheap
+
+    # ---- transform_reconcile -------------------------------------------
+    def _keyed(self) -> DataFrame:
+        """Source rows keyed by content fingerprint (``__args_fp``) and
+        component path. On the cheap path only the cheap misses load
+        content; when none do, an empty LocalRelation stands in, which
+        the optimizer prunes (PropagateEmptyRelation) out of every plan
+        it feeds — executing load()'s plan over an empty input would
+        still scan its right side, the O(data) warm cost this path
+        exists to eliminate."""
+        app, logic = self.app, F.lit(self.logic_fp)
+        if not self.use_cheap:
+            src_cols = list(self.source.columns)
+            keyed = self.source.withColumn(
+                "__args_fp", fp_col(logic, *[F.col(c) for c in src_cols])
+            ).withColumn("__component_path", app._path_col(self.prefix, self.key_cols))
+        else:
+            loaded = self.load(self.need_load)
+            if self.stats.extra["loaded"] == 0:
+                loaded = local_frame(self.spark, [], loaded.schema)
+            # The content fingerprint (and the transform's view)
+            # excludes the volatile cheap columns: a touched mtime with
+            # identical content must memo-hit, not recompute
+            # (component.rs:97-101 — the content fp is over content, the
+            # cheap version is only a validation hint). Key columns are
+            # never stripped.
+            volatile = set(self.cheap_fp_cols) - set(self.key_cols)
+            src_cols = [
+                c
+                for c in loaded.columns
+                if c not in ("__cheap_fp", "__component_path") and c not in volatile
+            ]
+            keyed = loaded.withColumn(
+                "__args_fp", fp_col(logic, *[F.col(c) for c in src_cols])
+            )
+        self.src_cols = src_cols
+        # __args_fp covers every source column (keys included), so equal
+        # fingerprints ⇒ fully-identical rows ⇒ the same component.
+        # Collapse them here: otherwise the memo flush would collect both
+        # copies' outputs under one fingerprint and each later hit would
+        # replay the doubled array (duplicate target declarations). The
+        # dedup partitions by __args_fp — the same key the memo join
+        # shuffles on — so the exchange is reused, not added.
+        return keyed.dropDuplicates(["__args_fp"])
+
+    def transform_reconcile(self) -> None:
+        """Memo lookup, the user transform over misses only, failure
+        isolation, target-state declarations, and the reconcile diff
+        against tracking (§2.5), counted per action in one job."""
+        # Row counts ride as observations INSIDE the cached plans: the
+        # metrics fire during the caches' first (full) materialization —
+        # the reconcile-phase jobs that run anyway — so stats_counts
+        # reads driver-side values instead of launching two more
+        # cache-scan jobs per sync. The first materializing actions
+        # (duplicate-declaration check, plan.counts) are full scans, so
+        # the observed counts are exact.
+        self.obs_keyed = Observation()
+        self.keyed = self._cache(
+            self._keyed().observe(self.obs_keyed, F.count(F.lit(1)).alias("n"))
+        )
+        # A freshly-created state store (first sync of a served index,
+        # any new App) provably holds nothing: the pointer files are
+        # empty — a driver-side read, no job. Everything is then a memo
+        # miss and every desired row an insert, so the memo lookup joins
+        # and the reconcile join are skipped outright. Guarded on BOTH
+        # tables: a non-empty memo with empty tracking (e.g. a prior run
+        # crashed after the memo flush) still takes the full path, whose
+        # replay/reconcile semantics that recovery depends on.
+        self.cold_start = (
+            not self.full_reprocess
+            and self.state.tracking.is_empty()
+            and self.state.memo.is_empty()
+        )
+        # ---- memo lookup join (§3.2: anti-join against _state/memo) ----
+        if not self.full_reprocess and not self.cold_start:
+            hits_keys = self.keyed.join(
+                self.memo_df.select(F.col("args_fp").alias("__args_fp"), "decl_json"),
+                "__args_fp",
+                "inner",
+            )
+            miss_src = self.keyed.join(self.memo_keys, "__args_fp", "left_anti")
+        else:
+            hits_keys = self.keyed.limit(0).withColumn(
+                "decl_json", F.lit(None).cast("string")
+            )
+            miss_src = self.keyed
+        self.obs_miss = Observation()
+        self.miss_src = self._cache(
+            miss_src.observe(self.obs_miss, F.count(F.lit(1)).alias("n"))
+        )
+        # Run the transform ONLY over misses (always run it so we learn
+        # the output schema even when everything hit). The app is the
+        # active context provider for the duration: use_context() works
+        # inside the transform and its helpers.
+        _push_active(self.app.context)
+        try:
+            miss_out = self.transform(
+                self.miss_src.select(*self.src_cols, "__args_fp", "__component_path")
+            )
+        finally:
+            _pop_active()
+        if "__args_fp" not in miss_out.columns:
+            raise ValueError("transform must preserve the __args_fp column")
+        self.out_cols = [
+            c for c in miss_out.columns if c not in ("__args_fp", "__component_path")
+        ]
+        self.miss_out = self._cache(miss_out)
+        if self.error_col is not None:
+            self._isolate_failures()
+
+        replay_src = hits_keys.select("__args_fp", "__component_path", "decl_json")
+        if self.use_cheap:
+            # Cheap-fp hits never loaded content; their memoized
+            # metadata came from the replay join in cheap_level.
+            replay_src = replay_src.unionByName(self.cheap_replay)
+        desired = self._desired(replay_src)
+        if self.validate_unique:
+            dup = (
+                desired.groupBy("target_path")
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .collect()
+            )
+            if dup:
+                raise ValueError(
+                    f"duplicate target state declared: {dup[0]['target_path']!r} "
+                    "(two components produced the same target pk this run)"
+                )
+        tracked = None if self.cold_start else self._tracked()
+        self.plan = reconcile(desired, tracked, full_reprocess=self.full_reprocess)
+        self.plan.actions = self._cache(self.plan.actions)
+        self.counts = self.plan.counts()
+        self.stats.inserts = self.counts["insert"]
+        self.stats.updates = self.counts["update"]
+        self.stats.deletes = self.counts["delete"]
+        self.stats.noops = self.counts["noop"]
+
+    def _isolate_failures(self) -> None:
+        """The ``error_col`` contract at component granularity: one
+        failed row fails the whole component — none of its rows are
+        declared or memoized."""
+        error_col = self.error_col
+        if error_col not in self.miss_out.columns:
+            raise ValueError(f"error_col {error_col!r} not in transform output columns")
+        self.out_cols = [c for c in self.out_cols if c != error_col]
+        self.failed_paths = self._cache(
+            self.miss_out.filter(F.col(error_col).isNotNull())
+            .groupBy("__component_path")
+            .agg(F.min(error_col).alias("error"))
+        )
+        self.stats.extra["errors"] = self.failed_paths.count()
+        self.miss_out = self._cache(
+            self.miss_out.join(
+                self.failed_paths.select("__component_path"),
+                "__component_path",
+                "left_anti",
+            ).drop(error_col)
+        )
+
+    def _desired(self, replay_src: DataFrame) -> DataFrame:
+        """Declared target states of misses and replayed hits.
+        Replayed components feed reconcile from the decl metadata
+        recorded at flush time: two short strings parsed per component
+        instead of the full payload array, so a warm run over 100 TB is
+        O(components), not O(data). ``__args_fp`` rides through
+        reconcile so the sink phase can fetch a replayed component's
+        payload by memo key without re-deriving it."""
+        target = self.target
+        decl_schema = ArrayType(
+            StructType(
+                [StructField("target_path", StringType()), StructField("fp", StringType())]
+            )
+        )
+        miss_decl = self.miss_out.select(
+            F.col("__component_path").alias("component_path"),
+            self.app._path_col(target.name, target.pk).alias("target_path"),
+            fp_col(*[F.col(c) for c in self.out_cols]).alias("fp"),
+            "__args_fp",
+            F.lit(False).alias("__is_replay"),
+        )
+        hit_decl = replay_src.select(
+            F.col("__component_path").alias("component_path"),
+            F.explode(F.from_json(F.col("decl_json"), decl_schema)).alias("__d"),
+            "__args_fp",
+        ).select(
+            "component_path",
+            F.col("__d.target_path").alias("target_path"),
+            F.col("__d.fp").alias("fp"),
+            "__args_fp",
+            F.lit(True).alias("__is_replay"),
+        )
+        return miss_decl.unionByName(hit_decl)
+
+    def _tracked(self) -> DataFrame:
+        tracked = self.state.tracking.read(self.spark).filter(
+            F.col("component_path").startswith(self.prefix + "/")
+        )
+        if self.partial:
+            # Live mode: reconcile only this batch's components; keys
+            # not in the batch keep their tracked state untouched.
+            tracked = tracked.join(
+                F.broadcast(self.scope_paths), "component_path", "left_semi"
+            )
+        if self.stats.extra.get("errors"):
+            # Failed components leave the reconcile scope entirely:
+            # absent from desired AND masked from tracked, so their
+            # previous target rows are neither deleted nor rewritten
+            # (the reference keeps a failed child's prior state).
+            tracked = tracked.join(
+                F.broadcast(
+                    self.failed_paths.select(
+                        F.col("__component_path").alias("component_path")
+                    )
+                ),
+                "component_path",
+                "left_anti",
+            )
+        return tracked
+
+    # ---- stats_counts ---------------------------------------------------
+    def stats_counts(self) -> None:
+        """Memo hit/miss counts from the observations, then the memo and
+        source_fp writes, started on the flush thread."""
+        stats = self.stats
+        stats.memo_misses = _observed_n(self.obs_miss, self.miss_src)
+        stats.memo_hits = _observed_n(self.obs_keyed, self.keyed) - stats.memo_misses
+        if self.use_cheap:
+            # Cheap-fp replays never reached the loaded set: they are
+            # memo hits that skipped content I/O entirely.
+            stats.memo_hits += stats.extra["cheap_hits"]
+        miss_memo = self._miss_memo() if stats.memo_misses else None
+        # ---- source_fp map maintenance (two-level change detection) ----
+        # Loaded rows record their (cheap_fp → args_fp) pair; a full
+        # sync also sweeps the map rows of vanished components (one
+        # metadata-sized anti-join), gated on reconcile deletes — without
+        # any, no component vanished (a stale row would anyway only cost
+        # space: a returning component with an unchanged cheap fp
+        # replays the same memoized result, which is correct). Both
+        # channels land in ONE merge on the flush thread, the map's only
+        # writer: two writers would each swap the pointer from their own
+        # snapshot and one would lose the other's update.
+        new_sfp = dead_sfp = None
+        if self.use_cheap and stats.extra["loaded"]:
+            new_sfp = self.keyed.select(
+                F.col("__component_path").alias("component_path"),
+                F.col("__cheap_fp").alias("cheap_fp"),
+                F.col("__args_fp").alias("args_fp"),
+                F.lit(self.version).cast("long").alias("version"),
+            )
+        if self.use_cheap and not self.partial and stats.deletes:
+            dead_sfp = (
+                self.state.source_fp.read(self.spark)
+                .filter(F.col("component_path").startswith(self.prefix + "/"))
+                .join(
+                    self.cheap_probe.select(
+                        F.col("__component_path").alias("component_path")
+                    ),
+                    "component_path",
+                    "left_anti",
+                )
+                .select("component_path")
+            )
+        # The memo and source_fp writes run on a helper thread
+        # overlapping the commit phases (Spark schedules both job sets
+        # concurrently): neither table is read by those phases, and a
+        # crash that persists them without tracking just replays the
+        # memoized result into a reconcile that still sees the
+        # mismatch, or loads and recomputes — convergent either way
+        # (same relaxation as cross-table non-atomicity, §2.5). keyed's
+        # cache was materialized by the reconcile-phase jobs, so the
+        # thread never races the content scan.
+        if miss_memo is not None or new_sfp is not None or dead_sfp is not None:
+            self.flush_thread = threading.Thread(
+                target=self._flush, args=(miss_memo, new_sfp, dead_sfp), name="memo-flush"
+            )
+            self.flush_thread.start()
+
+    def _miss_memo(self) -> DataFrame:
+        """Memo rows for every miss (even all-noop runs converge their
+        memo): one JSON array of result rows per args_fp, plus
+        decl_json — the declared (target_path, fp) pairs future replays
+        feed to reconcile without touching the payload array."""
+        out_cols, target = self.out_cols, self.target
+        return (
+            self.miss_out.withColumn("__tp", self.app._path_col(target.name, target.pk))
+            .withColumn("__fp", fp_col(*[F.col(c) for c in out_cols]))
+            .groupBy("__args_fp")
+            .agg(
+                F.to_json(F.collect_list(F.struct(*out_cols))).alias("result_json"),
+                F.to_json(
+                    F.collect_list(
+                        F.struct(
+                            F.col("__tp").alias("target_path"),
+                            F.col("__fp").alias("fp"),
+                        )
+                    )
+                ).alias("decl_json"),
+            )
+            .select(
+                F.lit(self.logic_fp).alias("logic_fp"),
+                F.col("__args_fp").alias("args_fp"),
+                "result_json",
+                "decl_json",
+                F.lit(self.version).cast("long").alias("version"),
+            )
+        )
+
+    def _flush(self, miss_memo, new_sfp, dead_sfp) -> None:
+        """The flush thread's body; sync_table re-raises its error after
+        the join."""
+        try:
+            if miss_memo is not None:
+                self.state.memo.merge_upsert(miss_memo)
+            if new_sfp is not None or dead_sfp is not None:
+                self.state.source_fp.merge_apply(new_sfp, dead_sfp)
+        except BaseException as e:
+            self.flush_err = e
+
+    # ---- commit phases (submit protocol, submit_session.rs) -------------
+    def precommit_buckets(self) -> None:
+        """Bucket ids of every changing tracking key, discovered once:
+        the pending and the applied merges share the key set, and the
+        prior-state read in precommit_merge reads only those buckets —
+        on a 100 TB run the precommit cost is ∝ delta, not ∝ tracked
+        state. A cold start needs none: tracking stays empty until the
+        commit, which takes the empty-table overwrite path."""
+        if self.changed and not self.cold_start:
+            self.bks = self.state.tracking.touched_buckets(
+                self.plan.changes().select("component_path", "target_path")
+            )
+
+    def precommit_merge(self) -> None:
+        """Stage marker (Phase 2): every update and delete merges a
+        ``pending_token`` into its tracking row before the sink is
+        touched. A crash between sink apply and tracking commit then
+        leaves a row the next run rewrites or deletes, never one it
+        trusts. Inserts write no marker — a cold load skips this state
+        merge entirely — so a crash after sink apply leaves their target
+        rows with no tracking row: a re-run on the same source inserts
+        them again and converges, but if the item has left the source by
+        then, its target row stays."""
+        if self.stats.updates or self.stats.deletes:
+            pending = mark_pending(
+                self.state.tracking.read(self.spark, self.bks),
+                self.plan,
+                uuid.uuid4().hex,
+            )
+            self.state.tracking.merge_upsert(pending, touched=self.bks)
+
+    def sink_apply(self) -> None:
+        """Phase 3: idempotent MERGE of the changes into the sink."""
+        if not self.changed:
+            return
+        target = self.target
+        # Label-deduplicating sinks (stream-load shape) need the run
+        # version folded into their load labels: retries within this
+        # sync stay idempotent, later syncs re-sending identical bytes
+        # aren't silently dropped by the server's label dedup.
+        if hasattr(target, "set_sync_version"):
+            target.set_sync_version(self.version)
+        upsert_rows = self._upsert_rows() if self.stats.inserts or self.stats.updates else None
+        dead_keys = self._dead_keys() if self.stats.deletes else None
+        # Mixed syncs (a rename is add + cascade delete) apply both
+        # channels in ONE bucket-scoped rewrite when the sink supports
+        # it — buckets touched by both would otherwise be
+        # version-written and pointer-swapped twice.
+        if upsert_rows is not None and dead_keys is not None and hasattr(target, "merge_apply"):
+            target.merge_apply(upsert_rows, dead_keys)
+        else:
+            if upsert_rows is not None:
+                target.upsert(upsert_rows)
+            if dead_keys is not None:
+                target.delete(dead_keys)
+
+    def _upsert_rows(self) -> DataFrame:
+        """Payloads for the insert/update actions: miss components carry
+        theirs in miss_out; replayed components that must (re)write —
+        recovery or divergence, never the warm path — have ONLY their
+        payload arrays deserialized (semi-join on the memo key first, so
+        the parse volume is ∝ changes, not corpus)."""
+        spark, target, out_cols = self.spark, self.target, self.out_cols
+        path_col = self.app._path_col(target.name, target.pk)
+        upserts = self.plan.actions.filter(F.col("action").isin("insert", "update"))
+        payload_miss = self.miss_out.withColumn("target_path", path_col).select(
+            "__args_fp", "target_path", *out_cols
+        )
+        if not self.full_reprocess and self.counts.get("__replay_upserts"):
+            # Their payloads come from a BUCKET-SCOPED memo read: I/O is
+            # ∝ the handful of touched buckets, never the memo table.
+            needed = (
+                upserts.select("__args_fp")
+                .distinct()
+                .join(self.miss_out.select("__args_fp").distinct(), "__args_fp", "left_anti")
+            )
+            nb = self.state.memo.touched_buckets(
+                needed.select(
+                    F.lit(self.logic_fp).alias("logic_fp"),
+                    F.col("__args_fp").alias("args_fp"),
+                )
+            )
+            payload_rows = (
+                self.state.memo.read(spark, nb)
+                .filter(F.col("logic_fp") == self.logic_fp)
+                .select(F.col("args_fp").alias("__args_fp"), "result_json")
+                .join(needed, "__args_fp", "left_semi")
+            )
+        else:
+            payload_rows = local_frame(spark, [], "__args_fp STRING, result_json STRING")
+        row_schema = self.miss_out.select(*out_cols).schema
+        replay_payload = (
+            payload_rows.select(
+                "__args_fp",
+                F.explode(F.from_json(F.col("result_json"), ArrayType(row_schema))).alias(
+                    "__row"
+                ),
+            )
+            .select("__args_fp", F.col("__row.*"))
+            .withColumn("target_path", path_col)
+            .select("__args_fp", "target_path", *out_cols)
+        )
+        # Join on BOTH (__args_fp, target_path): two components
+        # declaring the same target_path (validate_unique=False) must
+        # each pick up only their OWN payload rows — a path-only join
+        # would cross-join their payloads and could commit A's tracked
+        # fp over B's sink row.
+        return (
+            upserts.select("__args_fp", "target_path")
+            .join(
+                payload_miss.unionByName(replay_payload),
+                ["__args_fp", "target_path"],
+                "inner",
+            )
+            .select(*out_cols)
+        )
+
+    def _dead_keys(self) -> DataFrame:
+        """pk values of the deleted target paths. Ownership preemption
+        (execution.rs:948-995): a path whose old owner disappeared but
+        that a NEW component re-declared this run is claimed, not dead —
+        the upsert already wrote the new owner's row. Only paths no
+        component declared get swept."""
+        target, actions = self.target, self.plan.actions
+        claimed = actions.filter(F.col("action").isin("insert", "update")).select(
+            F.col("target_path").alias("__tp")
+        )
+        dead = (
+            actions.filter(F.col("action") == "delete")
+            .select(F.col("target_path").alias("__tp"))
+            .join(claimed, "__tp", "left_anti")
+        )
+        # pk values parse back from the dead paths whenever the parse
+        # round-trips exactly (the path encoding IS name/pk1/pk2/... —
+        # a value that would make the parse ambiguous already collides
+        # in tracking) — no sink scan. Exactness: every pk type
+        # round-trips its string cast, and no column before the last is
+        # a string (a '/' inside a non-final string value would shift
+        # the split; the final column absorbs the remainder). Other pk
+        # types map paths to keys by reading the sink.
+        # (_ensure_target_contract guarantees a `schema`.)
+        pk_types = [target.schema[c].dataType.simpleString() for c in target.pk]
+        parse_ok = all(t in _SAFE_PK_PARSE_TYPES for t in pk_types) and all(
+            t != "string" for t in pk_types[:-1]
+        )
+        if parse_ok or not hasattr(target, "read"):
+            return _keys_from_paths(dead, target.name, target.pk, pk_types)
+        current = target.read(self.spark).withColumn(
+            "__tp", self.app._path_col(target.name, target.pk)
+        )
+        return current.join(dead, "__tp").select(*target.pk)
+
+    def tracking_commit(self) -> None:
+        """Phase 4: one tracking rewrite for both channels (pure-upsert
+        runs skip the delete channel), then the errors side table."""
+        if self.changed:
+            applied, deleted = tracking_updates(self.plan, self.version)
+            self.state.tracking.merge_apply(
+                applied, deleted if self.stats.deletes else None, touched=self.bks
+            )
+        if self.error_col is not None:
+            self._maintain_errors()
+
+    def _maintain_errors(self) -> None:
+        """Record this run's failed components; clear the rest. A
+        component stops being "currently failing" when it recomputes
+        cleanly, replays a memoized result, or vanishes from the source.
+        A full sync enumerates the whole world, so everything under the
+        prefix NOT in this run's failed set is clear; a partial batch
+        only vouches for its own scope. Gated on the errors table
+        having rows for the prefix — the common all-healthy sync pays
+        one tiny metadata read, not a delete cycle."""
+        errors, failed = self.state.errors, self.failed_paths
+        if self.stats.extra.get("errors"):
+            errors.merge_upsert(
+                failed.select(
+                    F.col("__component_path").alias("component_path"),
+                    "error",
+                    F.lit(self.version).cast("long").alias("version"),
+                )
+            )
+        old = errors.read(self.spark).filter(
+            F.col("component_path").startswith(self.prefix + "/")
+        )
+        if not old.limit(1).count():
+            return
+        if self.partial:
+            old = old.join(F.broadcast(self.scope_paths), "component_path", "left_semi")
+        failed_now = (
+            failed.select(F.col("__component_path").alias("component_path"))
+            if failed is not None
+            else old.select("component_path").limit(0)
+        )
+        errors.delete_keys(old.join(failed_now, "component_path", "left_anti").select("component_path"))
+
+    def memo_flush_wait(self) -> None:
+        """Join the flush thread and release this sync's caches. Leaked
+        cache blocks across many syncs in one session evict each other
+        (a bench run is 35+ plans) — the recompute storms cost far more
+        than the caching saved."""
+        if self.flush_thread is not None:
+            self.flush_thread.join()
+        for df in self._cached:
+            df.unpersist()
+
+    def cleanup(self) -> None:
+        """Adaptive state maintenance: safe here — the sync's scoped
+        bucket ids are all consumed; growth rehashes before the next
+        sync. A grown table is already one fresh version, so compaction
+        (fragment-count / dead-bytes OPTIMIZE, store.py maybe_compact)
+        only runs when growth didn't fire."""
+        for t in (self.state.tracking, self.state.memo, self.state.source_fp):
+            if not t.maybe_grow(self.spark):
+                t.maybe_compact(self.spark)
+        tgt_tbl = getattr(self.target, "_table", None)
+        if tgt_tbl is not None:
+            tgt_tbl.maybe_compact(self.spark)

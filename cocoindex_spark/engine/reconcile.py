@@ -18,7 +18,10 @@ processing_component.mdx:248-253):
   match — used by full_reprocess and lossy child invalidation.
 - Re-running any phase is safe: sink apply is an idempotent MERGE and
   tracking commit happens after sink apply, so a crash between them
-  re-applies the same actions next run.
+  re-applies the same actions when the next run sees the same source.
+  Updates and deletes also carry a stage marker (``mark_pending``), so
+  they converge whatever the next source holds; inserts do not (see
+  ``_SyncRun.precommit_merge`` in engine/app.py).
 """
 
 from __future__ import annotations
@@ -71,17 +74,24 @@ class ReconcilePlan:
 
 def reconcile(
     desired: DataFrame,
-    tracked: DataFrame,
+    tracked: DataFrame | None = None,
     full_reprocess: bool = False,
 ) -> ReconcilePlan:
     """Classify desired vs tracked target states.
 
     desired: component_path, target_path, fp, + payload columns.
-    tracked: the tracking-table schema (possible_fps, may_be_missing).
+    tracked: the tracking-table schema (possible_fps, may_be_missing);
+    None when tracking is known to be empty — every desired state is
+    then an insert, classified with no join (no shuffle).
     """
     payload_cols = [
         c for c in desired.columns if c not in ("component_path", "target_path", "fp")
     ]
+    if tracked is None:
+        insert = F.lit(ACTION_INSERT).alias("action")
+        return ReconcilePlan(
+            actions=desired.select("component_path", "target_path", insert, "fp", *payload_cols)
+        )
     d = desired.alias("d")
     t = tracked.alias("t")
     joined = d.join(
@@ -154,29 +164,32 @@ def mark_pending(tracked: DataFrame, plan: ReconcilePlan, token: str) -> DataFra
 
     Returns ONLY the changing rows (tracking-table schema) — callers
     MERGE them; untouched states never get rewritten (the bucket-scoped
-    state-store path)."""
-    changing = plan.changes().filter(F.col("action") != ACTION_DELETE)
-    pend = changing.select(
+    state-store path). A delete keeps its prior fingerprints: the token
+    alone makes a run that finds the state desired again rewrite it,
+    whether or not the interrupted sink delete landed."""
+    pend = plan.changes().select(
         "component_path",
         "target_path",
-        F.col("fp"),
-        F.array(F.col("fp")).alias("new_fp_arr"),
+        F.col("fp").alias("new_fp"),
+        F.col("action"),
     )
     prior = tracked.select(
         "component_path",
         "target_path",
+        F.col("fp").alias("prior_fp"),
         F.col("possible_fps").alias("prior_fps"),
         F.col("may_be_missing").alias("prior_missing"),
         F.col("version").alias("prior_version"),
     )
     j = pend.join(prior, ["component_path", "target_path"], "left")
+    prior_fps = F.coalesce(F.col("prior_fps"), F.array())
     return j.select(
         "component_path",
         "target_path",
-        "fp",
-        F.array_union(F.coalesce(F.col("prior_fps"), F.array()), F.col("new_fp_arr")).alias(
-            "possible_fps"
-        ),
+        F.coalesce(F.col("new_fp"), F.col("prior_fp")).alias("fp"),
+        F.when(F.col("action") == ACTION_DELETE, prior_fps)
+        .otherwise(F.array_union(prior_fps, F.array(F.col("new_fp"))))
+        .alias("possible_fps"),
         F.coalesce(F.col("prior_missing"), F.lit(False)).alias("may_be_missing"),
         F.coalesce(F.col("prior_version"), F.lit(0)).cast("long").alias("version"),
         F.lit(token).alias("pending_token"),

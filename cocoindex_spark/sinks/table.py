@@ -120,16 +120,11 @@ class TableTarget:
             )
 
     def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path)
+        self._table.fs.write_atomic(self._meta_path, json.dumps(meta))
 
     def indexes(self) -> list[dict]:
         return self._read_meta().get("indexes", [])
 
     def _read_meta(self) -> dict:
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                return json.load(f)
-        return {}
+        text = self._table.fs.read_text(self._meta_path)
+        return json.loads(text) if text is not None else {}

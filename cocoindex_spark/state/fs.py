@@ -22,14 +22,24 @@ import os
 import shutil
 
 
+def _local(path: str) -> str:
+    """An ``os`` path for a bare path or a ``file://`` URI."""
+    return path[len("file://"):] if path.startswith("file://") else path
+
+
 class LocalFS:
+    """``os``/``shutil`` metadata I/O; takes bare paths and ``file://``
+    URIs, so metadata lands in the directory Spark writes."""
+
     def read_text(self, path: str) -> str | None:
+        path = _local(path)
         if not os.path.exists(path):
             return None
         with open(path) as f:
             return f.read()
 
     def write_atomic(self, path: str, text: str) -> None:
+        path = _local(path)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             f.write(text)
@@ -37,22 +47,22 @@ class LocalFS:
 
     def listdir(self, path: str) -> list[str]:
         try:
-            return os.listdir(path)
+            return os.listdir(_local(path))
         except FileNotFoundError:
             return []
 
     def isdir(self, path: str) -> bool:
-        return os.path.isdir(path)
+        return os.path.isdir(_local(path))
 
     def rmtree(self, path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(_local(path), ignore_errors=True)
 
     def makedirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(_local(path), exist_ok=True)
 
     def total_bytes(self, path: str) -> int:
         total = 0
-        for root, _dirs, files in os.walk(path):
+        for root, _dirs, files in os.walk(_local(path)):
             for fn in files:
                 try:
                     total += os.path.getsize(os.path.join(root, fn))

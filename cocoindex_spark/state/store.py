@@ -10,7 +10,6 @@ Keyspaces map to managed tables under one state root:
                    (custom_target_connector.mdx:74-87, 211-213)
 - ``memo``       — function memoization keyed by (logic_fp, args_fp)
                    (FunctionMemoization, db_schema.rs:67-70)
-- ``child_existence`` — child key sets per parent path (0xa0)
 - ``user_state`` — persistent per-component scratch (0x34)
 
 Writes are convergent roll-forward: a new immutable version directory
@@ -366,8 +365,7 @@ class ManagedTable:
         # mapping + layout in ONE pointer swap — a crash (or a
         # concurrent reader) at any point sees either the old layout
         # over old-layout dirs or the new layout over new-layout dirs,
-        # never a probe pointer over dirs lacking __probe= partitions
-        # (the r7 advisor's finding on the swap-before-write order).
+        # never a probe pointer over dirs lacking __probe= partitions.
         df = self.read(spark).localCheckpoint(eager=True)
         self.overwrite(df, n_buckets=cur_n, probe=want)
         return True
@@ -510,10 +508,6 @@ MEMO_SCHEMA = _schema(
     ("version", "long"),
 )
 
-CHILD_EXISTENCE_SCHEMA = _schema(
-    ("parent_path", "string"), ("child_key", "string"), ("version", "long")
-)
-
 USER_STATE_SCHEMA = _schema(
     ("component_path", "string"),
     ("state_key", "string"),
@@ -553,9 +547,6 @@ class StateStore:
             os.path.join(root, "tracking"), ["component_path", "target_path"], TRACKING_SCHEMA
         )
         self.memo = ManagedTable(os.path.join(root, "memo"), ["logic_fp", "args_fp"], MEMO_SCHEMA)
-        self.child_existence = ManagedTable(
-            os.path.join(root, "child_existence"), ["parent_path", "child_key"], CHILD_EXISTENCE_SCHEMA
-        )
         self.user_state = ManagedTable(
             os.path.join(root, "user_state"), ["component_path", "state_key"], USER_STATE_SCHEMA
         )
@@ -570,7 +561,3 @@ class StateStore:
         from cocoindex_spark.state.fs import fs_for
 
         fs_for(self.root).rmtree(self.root)
-
-
-def with_version(df: DataFrame, version: int) -> DataFrame:
-    return df.withColumn("version", F.lit(version).cast("long"))

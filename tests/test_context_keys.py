@@ -319,3 +319,31 @@ def test_provide_time_state_no_statefns_unchanged(app, spark, tmp_state):
     assert app.sync_table(src, ["id"], transform, t).memo_misses == 0
     app.provide(key, 3)
     assert app.sync_table(src, ["id"], transform, t).memo_misses == 3
+
+
+def test_gc_memo_sweeps_rotated_context_generations(app, spark, tmp_state):
+    """gc_memo sweeps the memo generations a detect_change context
+    rotation strands: their folded logic_fp no lookup addresses."""
+    key = _mk_key("gcscale", detect_change=True)
+
+    @fn(memo=True)
+    def scale_rows(df):
+        k = use_context(key)
+        return df.select(
+            "__args_fp", "__component_path", "id", (F.col("x") * F.lit(k)).cast("long").alias("y")
+        )
+
+    t = app.target(f"{tmp_state}/t", ["id"], "id LONG, y LONG")
+    src = _src(spark)
+    for v in (2, 3, 4):
+        app.provide(key, v)
+        app.sync_table(src, ["id"], scale_rows, t)
+
+    # three context generations × 3 rows; the two rotated-away
+    # generations (6 rows) are dead keys no current lookup addresses
+    assert app.gc_memo(src, scale_rows) == 6
+    assert app.gc_memo(src, scale_rows) == 0  # idempotent
+
+    # the current generation survives: warm re-run is still all-hit
+    warm = app.sync_table(src, ["id"], scale_rows, t)
+    assert warm.memo_misses == 0 and warm.updates == 0

@@ -340,3 +340,147 @@ def caller(df):
     (tmp_path / "l1").mkdir()
     m = _write_and_import(tmp_path / "l1", src, "cg_lib_a")
     assert isinstance(m.caller.logic_fp, str) and len(m.caller.logic_fp) > 0
+
+
+def _load_as(tmp_path, name: str, body: str, tag: str):
+    """Load ``body`` as module ``name`` from file ``{name}_{tag}.py``.
+    The logic fp folds the module name, so variants of one logical
+    module share ``name``; ``tag`` only names the backing file."""
+    import importlib.util
+    import sys
+
+    p = tmp_path / f"{name}_{tag}.py"
+    p.write_text(body)
+    spec = importlib.util.spec_from_file_location(name, p)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[name] = mod
+    spec.loader.exec_module(mod)
+    return mod
+
+
+_SCC_BODY = """
+from cocoindex_spark import fn
+
+@fn()
+def even(n):
+    return True if n == 0 else odd(n - 1)
+
+@fn()
+def odd(n):
+    return {odd_ret} if n == 0 else even(n - 1)
+"""
+
+
+def test_mutual_recursion_fp_order_independent(tmp_path):
+    """Mutually-recursive fns get fps independent of which member
+    resolves first, and an edit to EITHER member invalidates both."""
+    import sys
+
+    m1 = _load_as(tmp_path, "sccmod", _SCC_BODY.format(odd_ret="False"), "a")
+    even_first = (m1.even.logic_fp, m1.odd.logic_fp)
+
+    m2 = _load_as(tmp_path, "sccmod", _SCC_BODY.format(odd_ret="False"), "b")
+    odd_fp = m2.odd.logic_fp  # resolve the OTHER member first
+    odd_first = (m2.even.logic_fp, odd_fp)
+
+    assert even_first == odd_first  # access order is invisible
+    assert even_first[0] != even_first[1]  # members still distinct
+
+    # an edit to odd's body invalidates BOTH members' fps
+    m3 = _load_as(tmp_path, "sccmod", _SCC_BODY.format(odd_ret="None"), "c")
+    assert m3.even.logic_fp != even_first[0]
+    assert m3.odd.logic_fp != even_first[1]
+    sys.modules.pop("sccmod", None)
+
+
+_SCC_EXT_BODY = """
+from cocoindex_spark import fn
+
+@fn()
+def helper(n):
+    return n + {delta}
+
+@fn()
+def ping(n):
+    return helper(n) if n == 0 else pong(n - 1)
+
+@fn()
+def pong(n):
+    return 0 if n == 0 else ping(n - 1)
+"""
+
+
+def test_scc_members_track_external_callees(tmp_path):
+    """Editing a tracked helper CALLED BY a mutually-recursive fn must
+    change every cycle member's logic_fp — the helper's fp folds into
+    ping's cycle contribution via the auto call-graph walk."""
+    import sys
+
+    m1 = _load_as(tmp_path, "sccext", _SCC_EXT_BODY.format(delta=1), "a")
+    fp1 = (m1.ping.logic_fp, m1.pong.logic_fp)
+
+    # identical code → identical fps (stability)
+    m2 = _load_as(tmp_path, "sccext", _SCC_EXT_BODY.format(delta=1), "b")
+    assert (m2.ping.logic_fp, m2.pong.logic_fp) == fp1
+
+    # edit ONLY the helper (not any cycle member's own body)
+    m3 = _load_as(tmp_path, "sccext", _SCC_EXT_BODY.format(delta=2), "c")
+    assert m3.ping.logic_fp != fp1[0], "helper edit must invalidate ping"
+    assert m3.pong.logic_fp != fp1[1], "helper edit must invalidate pong"
+    sys.modules.pop("sccext", None)
+
+
+_CALLER_CALLEE_BODY = """
+from cocoindex_spark import fn
+
+@fn()
+def callee(n):
+    return n * 3
+
+@fn()
+def caller(n):
+    return callee(n) + 1
+"""
+
+
+def test_concurrent_resolution_no_false_cycle(tmp_path, monkeypatch):
+    """Thread A resolves callee while thread B resolves caller (whose
+    walk reaches callee). A shared resolve stack would see callee on
+    the stack from thread A and mint a bogus joint fingerprint for
+    {caller, callee}; the thread-local stack must not."""
+    import itertools
+    import sys
+    import threading
+
+    from cocoindex_spark.engine import function as fmod
+
+    # serial ground truth from an identical module
+    ref = _load_as(tmp_path, "ccmod", _CALLER_CALLEE_BODY, "ref")
+    want = (ref.caller.logic_fp, ref.callee.logic_fp)
+
+    mod = _load_as(tmp_path, "ccmod", _CALLER_CALLEE_BODY, "par")
+    barrier = threading.Barrier(2)
+    counter = itertools.count()
+    real = fmod._auto_dep_fps
+
+    def rendezvous(f, _seen=None, _exclude=None):
+        # hold the first two resolutions (one per thread) mid-flight
+        # so both stacks are live simultaneously
+        if next(counter) < 2:
+            try:
+                barrier.wait(timeout=10)
+            except threading.BrokenBarrierError:
+                pass
+        return real(f, _seen, _exclude)
+
+    monkeypatch.setattr(fmod, "_auto_dep_fps", rendezvous)
+    got: dict[str, str] = {}
+    t1 = threading.Thread(target=lambda: got.__setitem__("callee", mod.callee.logic_fp))
+    t2 = threading.Thread(target=lambda: got.__setitem__("caller", mod.caller.logic_fp))
+    t1.start(); t2.start(); t1.join(timeout=30); t2.join(timeout=30)
+    monkeypatch.setattr(fmod, "_auto_dep_fps", real)
+
+    assert mod.caller._scc_peers == set(), "false cycle detected"
+    assert mod.callee._scc_peers == set(), "false cycle detected"
+    assert (got["caller"], got["callee"]) == want
+    sys.modules.pop("ccmod", None)

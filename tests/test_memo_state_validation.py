@@ -168,3 +168,78 @@ def test_first_run_sees_non_existence():
     assert len(states) == 1
     states[0](NON_EXISTENCE)
     assert len(seen) == 1 and is_non_existence(seen[0])
+
+
+# ---- persisted envelope (call_fn memo rows) ----------------------------
+
+
+def test_memo_value_containing_envelope_marker(app):
+    """A memoized value that is a dict carrying the literal key
+    '__coco_memo__' round-trips: every row is persisted enveloped."""
+    calls = []
+
+    @fn()
+    def produce(name):
+        calls.append(name)
+        return {"__coco_memo__": "user data", "x": 7}
+
+    want = {"__coco_memo__": "user data", "x": 7}
+    assert app.call_fn(produce, "k") == want
+    assert app.call_fn(produce, "k") == want  # replayed, not KeyError
+    assert calls == ["k"]
+
+
+def test_legacy_bare_dict_with_marker_not_unwrapped(app):
+    """A PRE-envelope memo row whose bare user value is a dict carrying
+    __coco_memo__ == 1 and a 'v' key PLUS other keys must be returned
+    intact — only the exact envelope key set unwraps."""
+    import json
+
+    from cocoindex_spark.fingerprint import fp_value_with_states
+
+    @fn()
+    def produce(name):
+        raise AssertionError("must replay from memo, not re-run")
+
+    legacy_value = {"__coco_memo__": 1, "v": "user data", "extra": 42}
+    args_fp, _ = fp_value_with_states([["k"], {}])
+    row = app.spark.createDataFrame(
+        [(produce.logic_fp, args_fp, json.dumps(legacy_value), None, 0)],
+        app.state.memo.schema,
+    )
+    app.state.memo.merge_upsert(row)
+
+    assert app.call_fn(produce, "k") == legacy_value
+
+
+class TupleStateFile:
+    def __init__(self, path: str, mtime: int):
+        self.path = path
+        self.mtime = mtime
+
+    def __coco_memo_key__(self):
+        return self.path
+
+    def __coco_memo_state__(self, prev):
+        if is_non_existence(prev):
+            return MemoStateOutcome(state=(self.mtime, "h"))
+        return MemoStateOutcome(state=tuple(prev), memo_valid=True)
+
+
+def test_tuple_state_no_redundant_upsert(app, monkeypatch):
+    """A state fn returning a tuple compares JSON-canonically with its
+    stored (list) form, so a pure hit does not rewrite the memo row."""
+
+    @fn(memo=True)
+    def summarize(file):
+        return f"sum:{file.path}"
+
+    assert app.call_fn(summarize, TupleStateFile("/a", 1)) == "sum:/a"
+
+    upserts = []
+    real = app.state.memo.merge_upsert
+    monkeypatch.setattr(
+        app.state.memo, "merge_upsert", lambda df: (upserts.append(1), real(df))[1]
+    )
+    assert app.call_fn(summarize, TupleStateFile("/a", 1)) == "sum:/a"
+    assert upserts == []

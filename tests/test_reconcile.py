@@ -76,3 +76,13 @@ def test_counts(spark):
     tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA"], False, 1, None)])
     counts = reconcile(desired, tracked).counts()
     assert counts == {"insert": 1, "update": 0, "delete": 0, "noop": 1}
+
+
+def test_untracked_plan_is_all_inserts_without_a_join(spark):
+    """tracked=None (tracking known empty): every desired state is an
+    insert, payload columns pass through, and the plan has no join."""
+    desired = _desired(spark, [("c/1", "t/1", "fpA", "v1"), ("c/2", "t/2", "fpB", "v2")])
+    plan = reconcile(desired, None)
+    assert _actions(plan) == {"t/1": "insert", "t/2": "insert"}
+    assert plan.actions.columns == ["component_path", "target_path", "action", "fp", "payload"]
+    assert "Join" not in plan.actions._jdf.queryExecution().optimizedPlan().toString()

@@ -237,3 +237,35 @@ def test_explode_chunks_spark(spark):
     assert rows[0]["start_char"] == 0
     assert rows[-1]["end_char"] == len("one two three four five six seven eight")
     assert out.columns[:2] == ["id", "body"]
+
+
+def test_cdc_chunks_single_word_doc(spark, monkeypatch):
+    """q147 CDC chunking of single-word documents: Spark's
+    sequence(1, 0) is DESCENDING, so a one-word doc must not index out
+    of range, and it must emit the whole-doc chunk the DuckDB oracle
+    does."""
+    import duckdb
+    import pandas as pd
+
+    import cocoindex_spark.queries.textq as tq
+    from cocoindex_spark.queries import all_oracles
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": ["d1", "d2", "d3", "d4"],
+            "text": ["hello", "a b c d e f g h i j", "hello", "  lone  "],
+            "source": ["s", "s", "t", "t"],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    monkeypatch.setattr(tq, "table", lambda sp, sf, name: df)
+    got = {
+        (r.chunk_hash, r.n_occurrences, r.n_docs)
+        for r in tq.q147_cdc_chunk_dedup(spark, "ignored").collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = {tuple(r) for r in con.execute(all_oracles()["q147_cdc_chunk_dedup"]).fetchall()}
+    assert got == want
+    # the single-word docs surface as one shared whole-doc chunk
+    assert any(n_occ == 2 and n_docs == 2 for _, n_occ, n_docs in got)

@@ -190,3 +190,23 @@ def test_merge_apply_none_channels(spark, tmp_state):
     assert _rows(t, spark) == {("b", 2)}
     t.merge_apply(None, None)
     assert _rows(t, spark) == {("b", 2)}
+
+
+def test_file_uri_table_round_trips(spark, tmp_path, monkeypatch):
+    """A file:// table root is the directory Spark writes: rows and the
+    target's stored contract read back, and nothing lands in cwd."""
+    from cocoindex_spark.sinks.table import TableTarget
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    uri = f"file://{tmp_path}/t"
+    t = TableTarget(uri, ["k"], _schema())
+    t.upsert(spark.createDataFrame([("a", 1), ("b", 2)], _schema()))
+    t.store_contract()
+
+    again = TableTarget(uri, ["k"], _schema())
+    assert _rows(again._table, spark) == {("a", 1), ("b", 2)}
+    assert again.stored_contract() == {"pk": ["k"], "columns": [["k", "string"], ["v", "bigint"]]}
+    assert os.path.exists(tmp_path / "t" / "_meta.json")
+    assert os.listdir(cwd) == []
