@@ -578,9 +578,9 @@ class App:
         )
 
     # -- schema evolution (target_state.mdx:140-144; SURVEY §7.4.5) -------
-    def _ensure_target_contract(self, target: TableTarget, component_prefix: str) -> str:
-        """Reconcile the target's declared (pk, schema) against the
-        stored contract from previous runs.
+    def _ensure_target_contract(self, run: _SyncRun) -> str:
+        """Reconcile ``run``'s target's declared (pk, schema) against
+        the stored contract from previous runs.
 
         - pk change ⇒ **destructive**: drop rows + tracking; children
           fully re-created (child_invalidation destructive).
@@ -589,6 +589,7 @@ class App:
           state is written through on the next reconcile even when its
           fingerprint matches (lossy backfill).
         """
+        target, component_prefix = run.target, run.prefix
         if not hasattr(target, "schema"):
             raise TypeError(
                 f"target {target.name!r} declares no `schema` — every sink "
@@ -640,7 +641,7 @@ class App:
                     stored["pk"],
                     [old_types[c] for c in stored["pk"]],
                 )
-                target.delete(dead_keys)
+                target.apply(None, dead_keys, run.version)
             self.state.tracking.delete_keys(tracked_keys)
             store()
             return "destructive"
@@ -797,9 +798,7 @@ class _SyncRun:
         scan; with ``cheap_fp_cols``, level 1 of two-level change
         detection: the listing's cheap fps against the source_fp map."""
         app, spark = self.app, self.spark
-        self.stats.extra["schema_evolution"] = app._ensure_target_contract(
-            self.target, self.prefix
-        )
+        self.stats.extra["schema_evolution"] = app._ensure_target_contract(self)
         if self.partial:
             self.scope_paths = self.source.select(
                 app._path_col(self.prefix, self.key_cols).alias("component_path")
@@ -1253,29 +1252,18 @@ class _SyncRun:
             self.state.tracking.merge_upsert(pending, touched=self.bks)
 
     def sink_apply(self) -> None:
-        """Phase 3: idempotent MERGE of the changes into the sink."""
+        """Phase 3: idempotent MERGE of the changes into the sink — one
+        ``target.apply(upserts, deletes, version)`` call, either channel
+        None when empty. A mixed sync (a rename is add + cascade delete)
+        reaches the sink as one write: one bucket-scoped rewrite on a
+        table, one Spark pass on a wire sink. The version lets a
+        label-deduplicating sink (stream load) keep retries within this
+        sync idempotent without dropping a later sync's identical bytes."""
         if not self.changed:
             return
-        target = self.target
-        # Label-deduplicating sinks (stream-load shape) need the run
-        # version folded into their load labels: retries within this
-        # sync stay idempotent, later syncs re-sending identical bytes
-        # aren't silently dropped by the server's label dedup.
-        if hasattr(target, "set_sync_version"):
-            target.set_sync_version(self.version)
         upsert_rows = self._upsert_rows() if self.stats.inserts or self.stats.updates else None
         dead_keys = self._dead_keys() if self.stats.deletes else None
-        # Mixed syncs (a rename is add + cascade delete) apply both
-        # channels in ONE bucket-scoped rewrite when the sink supports
-        # it — buckets touched by both would otherwise be
-        # version-written and pointer-swapped twice.
-        if upsert_rows is not None and dead_keys is not None and hasattr(target, "merge_apply"):
-            target.merge_apply(upsert_rows, dead_keys)
-        else:
-            if upsert_rows is not None:
-                target.upsert(upsert_rows)
-            if dead_keys is not None:
-                target.delete(dead_keys)
+        self.target.apply(upsert_rows, dead_keys, self.version)
 
     def _upsert_rows(self) -> DataFrame:
         """Payloads for the insert/update actions: miss components carry

@@ -31,6 +31,10 @@ from pyspark.sql.types import StructField, StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+# Half the host's memory, at most 16g: a local-mode JVM grows its heap
+# toward the cap, and two Spark processes on one host must both fit.
+_HOST_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+DRIVER_MEM = f"{min(16 << 10, _HOST_MB // 2)}m"
 
 TABLES = (
     "region",
@@ -59,7 +63,7 @@ def get_spark(app_name: str = "cocoindex-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet stores TIMESTAMP(NANOS); read as long and convert.

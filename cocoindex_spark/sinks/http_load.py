@@ -7,8 +7,9 @@ deduplicates labels, which is what makes retried loads exactly-once.
 Deletes ride the same channel as rows carrying the hidden
 ``__DORIS_DELETE_SIGN__`` column (merge-on-write semantics).
 
-Spark-first shape, same as the wire SQL sink: ``foreachPartition`` —
-each executor partition chunks its rows, POSTs each chunk with a
+``apply(upserts, deletes, version)`` sends both channels in one Spark
+pass through the shared batched partition writer (``sinks/_wire.py``):
+each executor partition chunks its rows, PUTs each chunk with a
 DETERMINISTIC label (target name + sync version + md5 of the chunk
 payload), commits nothing driver-side. A task retry re-sends
 byte-identical chunks under identical labels, so the server's label
@@ -28,9 +29,13 @@ from __future__ import annotations
 
 import hashlib
 import json
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import DELETE, request_json, write_batched
 
 DELETE_SIGN = "__DORIS_DELETE_SIGN__"
 
@@ -39,41 +44,25 @@ class StreamLoadError(RuntimeError):
     """A stream load the server reported as failed (possibly under HTTP 200)."""
 
 
-def _put(url: str, label: str, body: bytes, headers: dict | None = None) -> int:
-    import urllib.request
-
-    req = urllib.request.Request(url, data=body, method="PUT")
-    req.add_header("label", label)
-    req.add_header("Content-Type", "application/json")
-    req.add_header("format", "json")
-    req.add_header("strip_outer_array", "true")
-    for k, v in (headers or {}).items():
-        req.add_header(k, v)
-    with urllib.request.urlopen(req) as resp:
-        # Doris reports load failures in the JSON body UNDER HTTP 200
-        # (Status=Fail, Label Already Exists, type errors) — a bare
-        # status check silently swallows them and the sync would commit
-        # tracking as applied over a load the server dropped.
-        raw = resp.read()
-        try:
-            payload = json.loads(raw) if raw else {}
-        except ValueError:
-            payload = {}
-        status = payload.get("Status", "Success")
-        if status in ("Success", "Publish Timeout"):
-            return resp.status
-        if status == "Label Already Exists":
-            # Same label ⇒ same sync + identical bytes (labels fold the
-            # sync version): this is a task retry of an already-consumed
-            # chunk — the exactly-once contract working as intended.
-            return resp.status
+def _put(url: str, label: str, body: bytes) -> None:
+    headers = {"label": label, "format": "json", "strip_outer_array": "true"}
+    payload = request_json(url, "PUT", body, headers)
+    # Doris reports load failures in the JSON body UNDER HTTP 200
+    # (Status=Fail, Label Already Exists, type errors) — a bare status
+    # check silently swallows them and the sync would commit tracking as
+    # applied over a load the server dropped. "Label Already Exists" is
+    # success: same label ⇒ same sync + identical bytes (labels fold the
+    # sync version), so this is a task retry of an already-consumed
+    # chunk — the exactly-once contract working as intended.
+    status = payload.get("Status", "Success")
+    if status not in ("Success", "Publish Timeout", "Label Already Exists"):
         raise StreamLoadError(
             f"stream load failed: label={label} Status={status} "
             f"Message={payload.get('Message', '')!r}"
         )
 
 
-class HttpLoadTarget:
+class HttpLoadTarget(Target):
     """TableTarget-contract sink over the stream-load protocol.
 
     ``endpoint`` is the base URL (``http://fe:8030``); rows load to
@@ -97,66 +86,35 @@ class HttpLoadTarget:
         self.db = db
         self.rows_per_load = rows_per_load
         self._num_writers = num_writers
-        # Per-sync token folded into load labels. A pure content-hash
-        # label is stable FOREVER: a later sync legitimately re-sending
-        # byte-identical rows (A→B→A revert, delete-then-reinsert) would
-        # reuse an already-consumed label and the server's label dedup
-        # would silently drop the load. Folding the sync version keeps
-        # retry idempotency WITHIN a sync (task retries share the token)
-        # without suppressing future legitimate loads. The engine sets
-        # this per run via set_sync_version(); standalone callers get a
-        # constant and keep the old behavior.
-        self.sync_version: str = "0"
-
-    def set_sync_version(self, version) -> None:
-        self.sync_version = str(version)
 
     @property
     def load_url(self) -> str:
         return f"{self.endpoint}/api/{self.db}/{self.name}/_stream_load"
 
-    def _send_rows(self, rows: DataFrame, delete: bool) -> None:
-        cols = [f.name for f in self.schema.fields] if not delete else list(self.pk)
-        url, chunk_rows, table = self.load_url, self.rows_per_load, self.name
-        sign = {DELETE_SIGN: 1} if delete else {}
-        sync_version = self.sync_version
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Load rows and delete-sign rows in one Spark pass. Every label
+        folds in ``version``, so retries within a sync dedup and later
+        syncs re-sending identical bytes do not (module docstring);
+        standalone callers get version 0."""
+        cols, pk = [f.name for f in self.schema.fields], list(self.pk)
+        url, table = self.load_url, self.name
 
-        def load_partition(it) -> None:
-            buf = []
+        def encode(op, row):
+            if op == DELETE:
+                return {**{c: row[c] for c in pk}, DELETE_SIGN: 1}
+            return {c: row[c] for c in cols}
 
-            def flush() -> None:
-                if not buf:
-                    return
-                body = json.dumps(buf, sort_keys=True, default=str).encode()
-                # Deterministic label WITHIN a sync: a retried task
-                # re-sends the same bytes under the same label →
-                # server-side dedup makes the load idempotent (the
-                # reference's label contract). The sync version keeps
-                # labels from colliding ACROSS syncs (see __init__).
-                label = f"{table}-{sync_version}-{hashlib.md5(body).hexdigest()}"
-                _put(url, label, body)
-                buf.clear()
+        def send(op, batch) -> None:
+            body = json.dumps(batch, sort_keys=True, default=str).encode()
+            # Deterministic label WITHIN a sync: a retried task re-sends
+            # the same bytes (the writer sorts each partition by pk)
+            # under the same label → server-side dedup makes the load
+            # idempotent (the reference's label contract).
+            _put(url, f"{table}-{version}-{hashlib.md5(body).hexdigest()}", body)
 
-            for row in it:
-                buf.append({**{c: row[c] for c in cols}, **sign})
-                if len(buf) >= chunk_rows:
-                    flush()
-            flush()
-
-        # One row per pk (same duplicate-winner rule as the SQL sink),
-        # deterministic chunk contents: sort within partitions so a
-        # retry or a different traversal order yields identical chunks
-        # and therefore identical labels.
-        (
-            rows.select(*cols)
-            .dropDuplicates(self.pk)
-            .repartition(self._num_writers, *self.pk)
-            .sortWithinPartitions(*self.pk)
-            .foreachPartition(load_partition)
+        write_batched(
+            upserts, deletes, pk, cols, self._num_writers,
+            (self.rows_per_load,) * 2, encode, lambda: nullcontext(send),
         )
-
-    def upsert(self, rows: DataFrame) -> None:
-        self._send_rows(rows, delete=False)
-
-    def delete(self, keys: DataFrame) -> None:
-        self._send_rows(keys, delete=True)

@@ -23,8 +23,11 @@ Message ids are deterministic md5-derived 64-bit ints of
 id-deduplicating topic converges — same replay-safety standard as the
 stream-load labels (sinks/http_load.py).
 
-Deletes raise ``UnsupportedOperationError`` exactly like the
-reference: an append-only log cannot express retraction; the engine
+``apply(upserts, deletes, version)`` sends through the shared batched
+partition writer (``sinks/_wire.py``), keeping every row. A delete
+channel raises ``UnsupportedOperationError`` exactly like the
+reference, before any message is sent: an append-only log cannot
+express retraction, and a mixed sync must not half-apply; the engine
 routes tombstone-requiring components to TopicTarget instead.
 
 Tests run against a recording stdlib http.server
@@ -38,11 +41,14 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 from cocoindex_spark.session import local_frame
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import request_json, write_batched
 
 
 class UnsupportedOperationError(RuntimeError):
@@ -57,25 +63,16 @@ def message_id(key: str, payload: bytes) -> int:
 
 def _request(url: str, method: str, body: dict | None) -> dict:
     import urllib.error
-    import urllib.request
 
-    data = json.dumps(body).encode() if body is not None else None
-    req = urllib.request.Request(url, data=data, method=method)
-    req.add_header("Content-Type", "application/json")
     try:
-        with urllib.request.urlopen(req) as resp:
-            raw = resp.read()
+        return request_json(url, method, None if body is None else json.dumps(body).encode())
     except urllib.error.HTTPError as e:
         if e.code == 409:  # already exists — idempotent declare
             return {}
         raise RuntimeError(f"iggy request failed: {method} {url} -> {e.code}")
-    try:
-        return json.loads(raw) if raw else {}
-    except ValueError:
-        return {}
 
 
-class IggyHttpTarget:
+class IggyHttpTarget(Target):
     """Append-only topic sink speaking the Iggy HTTP dialect.
 
     ``pk`` is the partitioning key column (one column, stringified);
@@ -128,68 +125,54 @@ class IggyHttpTarget:
             {"name": self.topic, "partitions_count": self.partitions_count},
         )
 
-    def upsert(self, rows: DataFrame) -> None:
-        """Append one message per row, key-partitioned. Rows are
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Append one message per upsert row, key-partitioned; every
+        row is kept (an append-only log has no last-wins). Rows are
         repartitioned BY KEY so each key's messages leave one task in
-        order — per-key ordering survives parallel writers."""
-        key, val = self.pk[0], self.value_col
-        url, chunk = self.send_url, self.messages_per_request
+        order — per-key ordering survives parallel writers. A delete
+        channel raises before anything is sent."""
+        if deletes is not None:
+            raise UnsupportedOperationError(
+                "Iggy topics are append-only logs: no Kafka-style tombstones "
+                "(reference iggy/_target.py:129). Use TopicTarget for "
+                "components that retract."
+            )
+        key, val, url = self.pk[0], self.value_col, self.send_url
 
-        def write_partition(it) -> None:
-            buf: list[tuple[str, dict]] = []
+        def encode(op, row):
+            raw = row[val]
+            payload = bytes(raw if isinstance(raw, (bytes, bytearray)) else str(raw).encode())
+            k = str(row[key])
+            return k, {
+                "id": message_id(k, payload),
+                "payload": base64.b64encode(payload).decode(),
+            }
 
-            def flush() -> None:
-                if not buf:
-                    return
-                # one request per partitioning key run: the envelope
-                # carries a single messages_key for the whole batch
-                by_key: dict[str, list[dict]] = {}
-                for k, msg in buf:
-                    by_key.setdefault(k, []).append(msg)
-                for k, msgs in by_key.items():
-                    _request(
-                        url,
-                        "POST",
-                        {
-                            "partitioning": {
-                                "kind": "messages_key",
-                                "value": base64.b64encode(k.encode()).decode(),
-                            },
-                            "messages": msgs,
+        def send(op, batch) -> None:
+            # one request per partitioning key run: the envelope
+            # carries a single messages_key for the whole batch
+            by_key: dict[str, list[dict]] = {}
+            for k, msg in batch:
+                by_key.setdefault(k, []).append(msg)
+            for k, msgs in by_key.items():
+                _request(
+                    url,
+                    "POST",
+                    {
+                        "partitioning": {
+                            "kind": "messages_key",
+                            "value": base64.b64encode(k.encode()).decode(),
                         },
-                    )
-                buf.clear()
-
-            for row in it:
-                k = str(row[key])
-                raw = row[val]
-                payload = raw if isinstance(raw, (bytes, bytearray)) else str(
-                    raw
-                ).encode()
-                buf.append(
-                    (
-                        k,
-                        {
-                            "id": message_id(k, bytes(payload)),
-                            "payload": base64.b64encode(bytes(payload)).decode(),
-                        },
-                    )
+                        "messages": msgs,
+                    },
                 )
-                if len(buf) >= chunk:
-                    flush()
-            flush()
 
-        (
-            rows.select(key, val)
-            .repartition(self._num_writers, key)
-            .foreachPartition(write_partition)
-        )
-
-    def delete(self, keys: DataFrame) -> None:
-        raise UnsupportedOperationError(
-            "Iggy topics are append-only logs: no Kafka-style tombstones "
-            "(reference iggy/_target.py:129). Use TopicTarget for "
-            "components that retract."
+        write_batched(
+            upserts, None, self.pk, [key, val], self._num_writers,
+            (self.messages_per_request,) * 2, encode, lambda: nullcontext(send),
+            keyed=False,
         )
 
 

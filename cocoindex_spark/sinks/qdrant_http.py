@@ -10,10 +10,11 @@ Protocol (public Qdrant REST API):
 - delete: ``POST /collections/{c}/points/delete?wait=true`` with
   ``{"points": [id, ...]}``
 
-Spark-first shape, same as the SQL/stream-load sinks: executor-side
-``foreachPartition``, chunked requests, nothing driver-side. Qdrant
-point upserts are idempotent by id — retries and replays converge,
-which is the contract the engine's MERGE phase assumes.
+``apply(upserts, deletes, version)`` sends both in one Spark pass
+through the shared batched partition writer (``sinks/_wire.py``):
+chunked requests from the executors, nothing driver-side. Qdrant point
+upserts are idempotent by id — retries and replays converge, which is
+the contract the engine's MERGE phase assumes.
 
 Point ids: Qdrant accepts unsigned ints or UUIDs. Integer keys pass
 through; any other key becomes a deterministic UUID5 of its string
@@ -30,9 +31,13 @@ from __future__ import annotations
 
 import json
 import uuid
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import IntegralType, StructType
+from pyspark.sql.types import StructType
+
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import DELETE, request_json, write_batched
 
 _NAMESPACE = uuid.UUID("6ba7b810-9dad-11d1-80b4-00c04fd430c8")  # uuid.NAMESPACE_DNS
 
@@ -45,27 +50,13 @@ def point_id(value) -> int | str:
 
 
 def _request(url: str, method: str, body: dict) -> None:
-    import urllib.request
-
-    req = urllib.request.Request(
-        url, data=json.dumps(body).encode(), method=method
-    )
-    req.add_header("Content-Type", "application/json")
-    with urllib.request.urlopen(req) as resp:
-        raw = resp.read()
-        try:
-            payload = json.loads(raw) if raw else {}
-        except ValueError:
-            payload = {}
-        # Qdrant reports {"status": "ok" | {"error": ...}}
-        status = payload.get("status", "ok")
-        if status != "ok" and not (
-            isinstance(status, str) and status in ("ok", "accepted")
-        ):
-            raise RuntimeError(f"qdrant request failed: {url} -> {payload}")
+    payload = request_json(url, method, json.dumps(body).encode())
+    # Qdrant reports {"status": "ok" | {"error": ...}}
+    if payload.get("status", "ok") not in ("ok", "accepted"):
+        raise RuntimeError(f"qdrant request failed: {url} -> {payload}")
 
 
-class QdrantHttpTarget:
+class QdrantHttpTarget(Target):
     """TableTarget-contract sink speaking the Qdrant REST dialect.
 
     ``pk`` must be a single column (the point id); ``vector_col`` names
@@ -92,7 +83,6 @@ class QdrantHttpTarget:
         self.vector_col = vector_col
         self.points_per_request = points_per_request
         self._num_writers = num_writers
-        self._int_key = isinstance(schema[pk[0]].dataType, IntegralType)
 
     @property
     def upsert_url(self) -> str:
@@ -102,62 +92,31 @@ class QdrantHttpTarget:
     def delete_url(self) -> str:
         return f"{self.endpoint}/collections/{self.name}/points/delete?wait=true"
 
-    def upsert(self, rows: DataFrame) -> None:
-        key = self.pk[0]
-        vec = self.vector_col
-        payload_cols = [
-            f.name for f in self.schema.fields if f.name not in (key, vec)
-        ]
-        url, chunk = self.upsert_url, self.points_per_request
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Upsert points and delete point ids in one Spark pass; the
+        version is unused (point writes are idempotent by id)."""
+        key, vec = self.pk[0], self.vector_col
+        payload_cols = [f.name for f in self.schema.fields if f.name not in (key, vec)]
+        upsert_url, delete_url = self.upsert_url, self.delete_url
 
-        def write_partition(it) -> None:
-            buf: list[dict] = []
+        def encode(op, row):
+            if op == DELETE:
+                return point_id(row[key])
+            return {
+                "id": point_id(row[key]),
+                "vector": [float(x) for x in (row[vec] or [])],
+                "payload": {c: row[c] for c in payload_cols},
+            }
 
-            def flush() -> None:
-                if buf:
-                    _request(url, "PUT", {"points": list(buf)})
-                    buf.clear()
+        def send(op, batch) -> None:
+            if op == DELETE:
+                _request(delete_url, "POST", {"points": batch})
+            else:
+                _request(upsert_url, "PUT", {"points": batch})
 
-            for row in it:
-                buf.append(
-                    {
-                        "id": point_id(row[key]),
-                        "vector": [float(x) for x in (row[vec] or [])],
-                        "payload": {c: row[c] for c in payload_cols},
-                    }
-                )
-                if len(buf) >= chunk:
-                    flush()
-            flush()
-
-        (
-            rows.select(key, vec, *payload_cols)
-            .dropDuplicates([key])
-            .repartition(self._num_writers, key)
-            .foreachPartition(write_partition)
-        )
-
-    def delete(self, keys: DataFrame) -> None:
-        key = self.pk[0]
-        url, chunk = self.delete_url, self.points_per_request
-
-        def delete_partition(it) -> None:
-            buf: list = []
-
-            def flush() -> None:
-                if buf:
-                    _request(url, "POST", {"points": list(buf)})
-                    buf.clear()
-
-            for row in it:
-                buf.append(point_id(row[key]))
-                if len(buf) >= chunk:
-                    flush()
-            flush()
-
-        (
-            keys.select(key)
-            .distinct()
-            .repartition(self._num_writers, key)
-            .foreachPartition(delete_partition)
+        write_batched(
+            upserts, deletes, self.pk, [key, vec, *payload_cols], self._num_writers,
+            (self.points_per_request,) * 2, encode, lambda: nullcontext(send),
         )

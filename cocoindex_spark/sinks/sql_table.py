@@ -6,10 +6,12 @@ Reference: the postgres TableTarget's batched writes
 to the bind-parameter limit, deletes as pk-``IN``/``OR`` chunks; both
 idempotent so re-application converges).
 
-Spark-first shape: the driver never sees a row. ``upsert``/``delete``
-run ``foreachPartition`` — every executor partition opens its own
-DB-API connection (from a picklable ``connection_factory``), writes
-its rows in bind-limit-sized batches, commits, closes. Task retries
+Spark-first shape: the driver never sees a row. ``apply(upserts,
+deletes, version)`` sends both channels in one Spark pass through the
+shared batched partition writer (``sinks/_wire.py``) — every executor
+partition opens its own DB-API connection (from a picklable
+``connection_factory``), writes its rows in bind-limit-sized batches,
+commits, closes. Task retries
 re-run the same idempotent MERGE, so speculative execution and
 failures converge exactly like the parquet-backed TableTarget.
 
@@ -28,11 +30,14 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from cocoindex_spark.session import local_frame
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import DELETE, write_batched
 
 # PostgreSQL's wire protocol caps bind parameters per statement at
 # int16 (32767); the reference chunks to the same limit.
@@ -64,6 +69,18 @@ def _placeholders(n: int, paramstyle: str, base: int = 0) -> str:
     raise ValueError(f"unsupported paramstyle: {paramstyle}")
 
 
+@contextmanager
+def _connected(connect: Callable[[], object]):
+    """One DB-API connection from ``connect``: committed when the block
+    completes, closed either way."""
+    con = connect()
+    try:
+        yield con
+        con.commit()
+    finally:
+        con.close()
+
+
 def _sanitize(v):
     """Strip NUL bytes from strings — wire-limited sinks reject them
     (the reference sanitizes at the same boundary)."""
@@ -72,13 +89,13 @@ def _sanitize(v):
     return v
 
 
-class SqlTableTarget:
+class SqlTableTarget(Target):
     """TableTarget contract against a SQL database.
 
     ``connection_factory`` must be picklable (cloudpickle handles
     closures) and return a fresh DB-API connection — it runs inside
     executor tasks. ``num_writers`` caps concurrent connections (the
-    partitions are coalesced down to it before the write).
+    rows are repartitioned by pk into that many partitions).
     """
 
     def __init__(
@@ -111,8 +128,7 @@ class SqlTableTarget:
             for f in self.schema.fields
         )
         pk_list = ", ".join(f'"{c}"' for c in self.pk)
-        con = self._connect()
-        try:
+        with _connected(self._connect) as con:
             cur = con.cursor()
             cur.execute(
                 f'CREATE TABLE IF NOT EXISTS "{self.name}" ({cols}, PRIMARY KEY ({pk_list}))'
@@ -121,9 +137,6 @@ class SqlTableTarget:
                 'CREATE TABLE IF NOT EXISTS "_cocoindex_meta" '
                 "(key TEXT PRIMARY KEY, value TEXT)"
             )
-            con.commit()
-        finally:
-            con.close()
 
     # -- executor-side writes ---------------------------------------------
     def upsert_sql(self, n_rows: int) -> str:
@@ -169,140 +182,83 @@ class SqlTableTarget:
             f"WHEN NOT MATCHED THEN INSERT ({col_list}) VALUES ({insert_vals})"
         ).replace("  ", " ")
 
-    def upsert(self, rows: DataFrame) -> None:
-        cols = [f.name for f in self.schema.fields]
-        n_params = len(cols)
-        chunk_rows = max(1, self._bind_limit // max(n_params, 1))
-        connect, sql_for = self._connect, self.upsert_sql
-
-        def write_partition(it) -> None:
-            buf = []
-            con = None
-            try:
-                for row in it:
-                    buf.append([_sanitize(row[c]) for c in cols])
-                    if len(buf) >= chunk_rows:
-                        con = con or connect()
-                        _flush_upsert(con, buf)
-                        buf = []
-                if buf:
-                    con = con or connect()
-                    _flush_upsert(con, buf)
-                if con is not None:
-                    con.commit()
-            finally:
-                if con is not None:
-                    con.close()
-
-        def _flush_upsert(con, buf) -> None:
-            params = [v for r in buf for v in r]
-            con.cursor().execute(sql_for(len(buf)), params)
-
-        # One row per pk: PostgreSQL rejects a multi-row ON CONFLICT
-        # statement that touches the same key twice ("cannot affect row
-        # a second time"), so duplicate declarations pick an arbitrary
-        # winner HERE — the documented MERGE semantics — instead of
-        # crashing whenever both copies land in one chunk.
-        (
-            rows.select(*cols)
-            .dropDuplicates(self.pk)
-            .coalesce(self._num_writers)
-            .foreachPartition(write_partition)
+    def delete_sql(self, n_rows: int) -> str:
+        """The delete statement for an ``n_rows`` chunk: a pk ``IN``
+        list, or an ``OR`` of pk conjunctions for a composite pk."""
+        pk, ps = self.pk, self._paramstyle
+        if len(pk) == 1:
+            return f'DELETE FROM "{self.name}" WHERE "{pk[0]}" IN ({_placeholders(n_rows, ps)})'
+        ors = " OR ".join(
+            "("
+            + " AND ".join(
+                f'"{c}" = {_placeholders(1, ps, i * len(pk) + j)}' for j, c in enumerate(pk)
+            )
+            + ")"
+            for i in range(n_rows)
         )
+        return f'DELETE FROM "{self.name}" WHERE {ors}'
 
-    def delete(self, keys: DataFrame) -> None:
-        pk = list(self.pk)
-        n_pk = len(pk)
-        chunk_rows = max(1, self._bind_limit // n_pk)
-        connect, paramstyle, table = self._connect, self._paramstyle, self.name
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Upsert rows and delete keys in one Spark pass, each partition
+        on its own connection with one commit; the version is unused
+        (both statements are idempotent). Each statement stays under
+        the bind limit. One row per pk: PostgreSQL rejects a multi-row
+        ON CONFLICT statement that touches the same key twice ("cannot
+        affect row a second time"), so duplicate declarations pick an
+        arbitrary winner — the documented MERGE semantics."""
+        cols, pk = [f.name for f in self.schema.fields], list(self.pk)
+        limits = (
+            max(1, self._bind_limit // max(len(cols), 1)),
+            max(1, self._bind_limit // len(pk)),
+        )
+        connect, sql_for = self._connect, (self.upsert_sql, self.delete_sql)
 
-        def delete_partition(it) -> None:
-            buf = []
-            con = None
-            try:
-                for row in it:
-                    buf.append([_sanitize(row[c]) for c in pk])
-                    if len(buf) >= chunk_rows:
-                        con = con or connect()
-                        _flush_delete(con, buf)
-                        buf = []
-                if buf:
-                    con = con or connect()
-                    _flush_delete(con, buf)
-                if con is not None:
-                    con.commit()
-            finally:
-                if con is not None:
-                    con.close()
+        def encode(op, row):
+            return [_sanitize(row[c]) for c in (pk if op == DELETE else cols)]
 
-        def _flush_delete(con, buf) -> None:
-            if n_pk == 1:
-                sql = (
-                    f'DELETE FROM "{table}" WHERE "{pk[0]}" IN '
-                    f"({_placeholders(len(buf), paramstyle)})"
+        @contextmanager
+        def open_sender():
+            with _connected(connect) as con:
+                yield lambda op, batch: con.cursor().execute(
+                    sql_for[op](len(batch)), [v for r in batch for v in r]
                 )
-                params = [r[0] for r in buf]
-            else:
-                ors = []
-                for i in range(len(buf)):
-                    base = i * n_pk
-                    ands = " AND ".join(
-                        f'"{pk[j]}" = {_placeholders(1, paramstyle, base + j)}'
-                        for j in range(n_pk)
-                    )
-                    ors.append(f"({ands})")
-                sql = f'DELETE FROM "{table}" WHERE {" OR ".join(ors)}'
-                params = [v for r in buf for v in r]
-            con.cursor().execute(sql, params)
 
-        keys.select(*pk).coalesce(self._num_writers).foreachPartition(delete_partition)
+        write_batched(upserts, deletes, pk, cols, self._num_writers, limits, encode, open_sender)
 
     # -- reads (driver-side verification path) ----------------------------
     def read(self, spark: SparkSession) -> DataFrame:
         cols = [f.name for f in self.schema.fields]
-        con = self._connect()
-        try:
+        with _connected(self._connect) as con:
             cur = con.cursor()
             cur.execute(f'SELECT {", ".join(chr(34) + c + chr(34) for c in cols)} FROM "{self.name}"')
             data = cur.fetchall()
-        finally:
-            con.close()
         return local_frame(spark, [tuple(r) for r in data], self.schema)
 
     def truncate(self) -> None:
-        con = self._connect()
-        try:
+        with _connected(self._connect) as con:
             con.cursor().execute(f'DELETE FROM "{self.name}"')
-            con.commit()
-        finally:
-            con.close()
 
     # -- contract / index metadata (same surface as TableTarget) ----------
     def _meta_get(self, key: str):
-        con = self._connect()
-        try:
+        with _connected(self._connect) as con:
             cur = con.cursor()
             cur.execute(
                 f'SELECT value FROM "_cocoindex_meta" WHERE key = {_placeholders(1, self._paramstyle)}',
                 [key],
             )
             row = cur.fetchone()
-            return json.loads(row[0]) if row else None
-        finally:
-            con.close()
+        return json.loads(row[0]) if row else None
 
     def _meta_set(self, key: str, value) -> None:
-        con = self._connect()
-        try:
-            ph = _placeholders(2, self._paramstyle)
+        ph = _placeholders(2, self._paramstyle)
+        with _connected(self._connect) as con:
             con.cursor().execute(
                 f'INSERT INTO "_cocoindex_meta" (key, value) VALUES ({ph}) '
                 "ON CONFLICT (key) DO UPDATE SET value = EXCLUDED.value",
                 [key, json.dumps(value)],
             )
-            con.commit()
-        finally:
-            con.close()
 
     def stored_contract(self) -> dict | None:
         return self._meta_get(f"contract:{self.name}")

@@ -3,10 +3,11 @@ table-shaped sinks (postgres/sqlite/bigquery/snowflake/doris TableTarget,
 e.g. python/cocoindex/connectors/postgres/_target.py:742-836 —
 chunked upsert + chunked delete, convergent/idempotent).
 
-Apply is a MERGE over the managed table keyed by the declared primary
-key; deletes are anti-joins. Optional index declarations are recorded
-as table metadata (declare_vector_index analog) — consumers (the
-similarity operators) read them to pick an LSH bucket table.
+``apply(upserts, deletes, version)`` is one MERGE over the managed
+table keyed by the declared primary key; deletes are anti-joins.
+Optional index declarations are recorded as table metadata
+(declare_vector_index analog) — consumers (the similarity operators)
+read them to pick an LSH bucket table.
 """
 
 from __future__ import annotations
@@ -18,10 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from cocoindex_spark.session import local_frame
+from cocoindex_spark.sinks import Target
 from cocoindex_spark.state.store import ManagedTable
 
 
-class TableTarget:
+class TableTarget(Target):
     def __init__(self, path: str, pk: list[str], schema: StructType):
         self.name = os.path.basename(path.rstrip("/"))
         self.path = path
@@ -64,17 +66,13 @@ class TableTarget:
         rows = df.select(self._table.probe_expr([F.col("__pv")]).alias("p")).collect()
         return sorted({r[0] for r in rows})
 
-    def upsert(self, rows: DataFrame) -> None:
-        self._table.merge_upsert(rows)
-
-    def delete(self, keys: DataFrame) -> None:
-        self._table.delete_keys(keys)
-
-    def merge_apply(self, rows: DataFrame, delete_keys: DataFrame) -> None:
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
         """Upserts + deletions in one bucket-scoped rewrite (one
-        version write, one pointer swap) — the engine uses this on
-        mixed syncs instead of upsert-then-delete."""
-        self._table.merge_apply(rows, delete_keys)
+        version write, one pointer swap); either channel may be None.
+        The version is unused: the MERGE is idempotent."""
+        self._table.merge_apply(upserts, deletes)
 
     # -- schema contract (target_state.mdx:140-144 schema evolution) ----
     def stored_contract(self) -> dict | None:

@@ -1,19 +1,22 @@
 """Turbopuffer namespace-write sink — the serverless-vector-store wire
 dialect (reference: python/cocoindex/connectors/turbopuffer/
-_target.py:287-312 — one ``namespace.write`` call carrying
-``upsert_rows`` and/or ``deletes``; namespaces are created implicitly
-on first write, so there is no create call).
+_target.py:287-312 — ``namespace.write`` with ``upsert_rows`` and/or
+``deletes``; namespaces are created implicitly on first write, so
+there is no create call).
 
 Protocol (public turbopuffer v2 REST API):
-``POST /v2/namespaces/{ns}`` with
+``POST /v2/namespaces/{ns}`` with either
 ``{"upsert_rows": [{"id", "vector", ...attributes}],
-   "deletes": [id, ...], "distance_metric": "cosine_distance"}``,
-``Authorization: Bearer <api_key>``.
+   "distance_metric": "cosine_distance"}`` or ``{"deletes": [id, ...]}``,
+``Authorization: Bearer <api_key>``. Each POST carries one channel: the
+reference can put both in one write, this sink batches them apart.
 
-Spark-first shape: executor-side ``foreachPartition``, chunked writes,
-row-level idempotency by id (a retried chunk re-asserts the same rows
-— converges under the engine's MERGE contract). Non-integer keys map
-to deterministic UUID5 strings, same scheme as the Qdrant sink.
+``apply(upserts, deletes, version)`` sends both channels in one Spark
+pass through the shared batched partition writer (``sinks/_wire.py``):
+chunked writes from the executors, row-level idempotency by id (a
+retried chunk re-asserts the same rows — converges under the engine's
+MERGE contract). Non-integer keys map to deterministic UUID5 strings,
+same scheme as the Qdrant sink.
 
 Tests run against a recording ``http.server``
 (tests/test_turbopuffer_http.py); the framing — path, body shape,
@@ -23,30 +26,24 @@ flattened attributes, bearer auth, chunking — is the tested contract.
 from __future__ import annotations
 
 import json
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import DELETE, request_json, write_batched
 from cocoindex_spark.sinks.qdrant_http import point_id
 
 
 def _post(url: str, api_key: str, body: dict) -> None:
-    import urllib.request
-
-    req = urllib.request.Request(url, data=json.dumps(body).encode(), method="POST")
-    req.add_header("Content-Type", "application/json")
-    req.add_header("Authorization", f"Bearer {api_key}")
-    with urllib.request.urlopen(req) as resp:
-        raw = resp.read()
-        try:
-            payload = json.loads(raw) if raw else {}
-        except ValueError:
-            payload = {}
-        if payload.get("status", "OK") not in ("OK", "ok", "success"):
-            raise RuntimeError(f"turbopuffer write failed: {url} -> {payload}")
+    auth = {"Authorization": f"Bearer {api_key}"}
+    payload = request_json(url, "POST", json.dumps(body).encode(), auth)
+    if payload.get("status", "OK") not in ("OK", "ok", "success"):
+        raise RuntimeError(f"turbopuffer write failed: {url} -> {payload}")
 
 
-class TurbopufferHttpTarget:
+class TurbopufferHttpTarget(Target):
     """TableTarget-contract sink over the turbopuffer write API."""
 
     def __init__(
@@ -77,67 +74,34 @@ class TurbopufferHttpTarget:
     def write_url(self) -> str:
         return f"{self.endpoint}/v2/namespaces/{self.name}"
 
-    def upsert(self, rows: DataFrame) -> None:
-        key = self.pk[0]
-        vec = self.vector_col
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Write rows and delete ids in one Spark pass; each POST
+        carries one channel. The version is unused (writes are
+        idempotent by id)."""
+        key, vec = self.pk[0], self.vector_col
         attrs = [f.name for f in self.schema.fields if f.name not in (key, vec)]
-        url, api_key, chunk = self.write_url, self.api_key, self.rows_per_write
-        metric = self.distance_metric
+        url, api_key, metric = self.write_url, self.api_key, self.distance_metric
 
-        def write_partition(it) -> None:
-            buf: list[dict] = []
+        def encode(op, row):
+            if op == DELETE:
+                return point_id(row[key])
+            return {
+                "id": point_id(row[key]),
+                "vector": [float(x) for x in (row[vec] or [])],
+                # attributes ride FLATTENED in the row dict — the v2 row
+                # shape (reference _row_to_upsert)
+                **{c: row[c] for c in attrs},
+            }
 
-            def flush() -> None:
-                if buf:
-                    _post(
-                        url,
-                        api_key,
-                        {"upsert_rows": list(buf), "distance_metric": metric},
-                    )
-                    buf.clear()
+        def send(op, batch) -> None:
+            if op == DELETE:
+                _post(url, api_key, {"deletes": batch})
+            else:
+                _post(url, api_key, {"upsert_rows": batch, "distance_metric": metric})
 
-            for row in it:
-                buf.append(
-                    {
-                        "id": point_id(row[key]),
-                        "vector": [float(x) for x in (row[vec] or [])],
-                        # attributes ride FLATTENED in the row dict —
-                        # the v2 row shape (reference _row_to_upsert)
-                        **{c: row[c] for c in attrs},
-                    }
-                )
-                if len(buf) >= chunk:
-                    flush()
-            flush()
-
-        (
-            rows.select(key, vec, *attrs)
-            .dropDuplicates([key])
-            .repartition(self._num_writers, key)
-            .foreachPartition(write_partition)
-        )
-
-    def delete(self, keys: DataFrame) -> None:
-        key = self.pk[0]
-        url, api_key, chunk = self.write_url, self.api_key, self.rows_per_write
-
-        def delete_partition(it) -> None:
-            buf: list = []
-
-            def flush() -> None:
-                if buf:
-                    _post(url, api_key, {"deletes": list(buf)})
-                    buf.clear()
-
-            for row in it:
-                buf.append(point_id(row[key]))
-                if len(buf) >= chunk:
-                    flush()
-            flush()
-
-        (
-            keys.select(key)
-            .distinct()
-            .repartition(self._num_writers, key)
-            .foreachPartition(delete_partition)
+        write_batched(
+            upserts, deletes, self.pk, [key, vec, *attrs], self._num_writers,
+            (self.rows_per_write,) * 2, encode, lambda: nullcontext(send),
         )

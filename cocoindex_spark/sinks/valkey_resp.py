@@ -7,10 +7,11 @@ bytes for the server's vector index).
 
 The transport is RESP2 framed over a stdlib socket (no client
 library): commands are arrays of bulk strings — binary-safe, so packed
-vectors ride unmodified. Spark-first shape: ``foreachPartition``, one
-connection per partition, commands pipelined in batches, replies fully
-drained and ``-ERR`` raised (a swallowed error would let the engine
-commit tracking over a write the server rejected).
+vectors ride unmodified. ``apply(upserts, deletes, version)`` sends both
+channels in one Spark pass through the shared batched partition writer
+(``sinks/_wire.py``): one connection per partition, commands pipelined
+in batches, replies fully drained and ``-ERR`` raised (a swallowed error
+would let the engine commit tracking over a write the server rejected).
 
 Idempotent by construction: DEL+HSET of the same fields converges under
 retries/replays — the engine's MERGE contract over an at-least-once
@@ -23,9 +24,13 @@ is the tested contract.
 from __future__ import annotations
 
 import struct
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, FloatType, StructType
+
+from cocoindex_spark.sinks import Target
+from cocoindex_spark.sinks._wire import DELETE, write_batched
 
 
 def encode_command(*args: bytes | str) -> bytes:
@@ -101,7 +106,7 @@ class _Conn:
         self.sock.close()
 
 
-class ValkeyRespTarget:
+class ValkeyRespTarget(Target):
     """TableTarget-contract sink writing one hash per row at
     ``{name}:{pk}``. ``vector_col`` (optional) is packed to f32-LE
     bytes; other columns become string hash fields."""
@@ -132,86 +137,54 @@ class ValkeyRespTarget:
         self.docs_per_pipeline = docs_per_pipeline
         self._num_writers = num_writers
 
-    def _hash_key(self, value) -> str:
-        return f"{self.name}:{value}"
-
-    def upsert(self, rows: DataFrame) -> None:
-        key = self.pk[0]
-        vec = self.vector_col
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Write hashes and delete keys in one Spark pass over one
+        connection per partition; the version is unused (DEL+HSET is
+        idempotent)."""
+        key, vec = self.pk[0], self.vector_col
         fields = [f.name for f in self.schema.fields if f.name != key]
         prefix, host, port = self.name, self.host, self.port
-        batch_n = self.docs_per_pipeline
 
-        def write_partition(it) -> None:
+        def encode(op, row):
+            hk = f"{prefix}:{row[key]}"
+            if op == DELETE:
+                return hk
+            kv: list[bytes | str] = []
+            for c in fields:
+                v = row[c]
+                if v is not None:
+                    kv += [c, pack_f32(v) if c == vec else str(v)]
+            # Atomic MULTI/EXEC: DEL then HSET, so no stale payload
+            # field survives an update (the reference's exact envelope).
+            return (
+                encode_command("MULTI")
+                + encode_command("DEL", hk)
+                + encode_command("HSET", hk, *kv)
+                + encode_command("EXEC")
+            )
+
+        @contextmanager
+        def open_sender():
             conn = _Conn(host, port)
-            pending = 0  # replies owed: MULTI + DEL + HSET + EXEC per doc
 
-            def drain() -> None:
-                nonlocal pending
-                for _ in range(pending):
+            def send(op, batch) -> None:
+                if op == DELETE:
+                    conn.send(encode_command("DEL", *batch))
+                    replies = 1
+                else:
+                    conn.send(b"".join(batch))
+                    replies = 4 * len(batch)  # MULTI + DEL + HSET + EXEC
+                for _ in range(replies):
                     conn.read_reply()  # raises on -ERR
-                pending = 0
 
             try:
-                for row in it:
-                    hk = f"{prefix}:{row[key]}"
-                    kv: list[bytes | str] = []
-                    for c in fields:
-                        v = row[c]
-                        if v is None:
-                            continue
-                        kv.append(c)
-                        kv.append(pack_f32(v) if c == vec else str(v))
-                    # Atomic MULTI/EXEC: DEL then HSET, so no stale
-                    # payload field survives an update (the reference's
-                    # exact envelope).
-                    conn.send(
-                        encode_command("MULTI")
-                        + encode_command("DEL", hk)
-                        + encode_command("HSET", hk, *kv)
-                        + encode_command("EXEC")
-                    )
-                    pending += 4
-                    if pending >= batch_n * 4:
-                        drain()
-                drain()
+                yield send
             finally:
                 conn.close()
 
-        (
-            rows.select(key, *fields)
-            .dropDuplicates([key])
-            .repartition(self._num_writers, key)
-            .foreachPartition(write_partition)
-        )
-
-    def delete(self, keys: DataFrame) -> None:
-        key = self.pk[0]
-        prefix, host, port = self.name, self.host, self.port
-        batch_n = self.docs_per_pipeline
-
-        def delete_partition(it) -> None:
-            conn = _Conn(host, port)
-            try:
-                buf: list[str] = []
-
-                def flush() -> None:
-                    if buf:
-                        conn.send(encode_command("DEL", *buf))
-                        conn.read_reply()
-                        buf.clear()
-
-                for row in it:
-                    buf.append(f"{prefix}:{row[key]}")
-                    if len(buf) >= batch_n:
-                        flush()
-                flush()
-            finally:
-                conn.close()
-
-        (
-            keys.select(key)
-            .distinct()
-            .repartition(self._num_writers, key)
-            .foreachPartition(delete_partition)
+        write_batched(
+            upserts, deletes, self.pk, [key, *fields], self._num_writers,
+            (self.docs_per_pipeline,) * 2, encode, open_sender,
         )

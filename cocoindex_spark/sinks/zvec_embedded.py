@@ -75,6 +75,7 @@ from pyspark.sql.types import (
 )
 
 from cocoindex_spark.fingerprint import fp_value
+from cocoindex_spark.sinks import Target
 from cocoindex_spark.state.store import ManagedTable
 
 _METRICS = ("cosine", "ip", "l2")
@@ -437,14 +438,15 @@ class ZvecCollection:
                 )
         return rows.select(*cols)
 
-    def upsert(self, rows: DataFrame) -> None:
-        self._store.merge_upsert(self._encode(rows))
-
-    def delete(self, keys: DataFrame) -> None:
-        s = self.schema
-        self._store.delete_keys(
-            keys.select(F.col(s.primary_key).cast("string").alias("__doc_id"))
-        )
+    def apply(self, upserts: DataFrame | None, deletes: DataFrame | None) -> None:
+        """Encoded upserts and doc-id deletes in one MERGE."""
+        if upserts is not None:
+            upserts = self._encode(upserts)
+        if deletes is not None:
+            deletes = deletes.select(
+                F.col(self.schema.primary_key).cast("string").alias("__doc_id")
+            )
+        self._store.merge_apply(upserts, deletes)
 
     def optimize(self, spark: SparkSession) -> None:
         """Post-apply optimize (reference _target.py:658-659): compact
@@ -580,11 +582,11 @@ class ManagedZvecConnection:
         self._open.clear()
 
 
-class ZvecTarget:
+class ZvecTarget(Target):
     """TableTarget-contract sink over an embedded zvec collection, so
-    the sync engine can drive it like every other target: ``upsert``
-    receives only changed rows, ``delete`` only removed keys, and each
-    apply ends in ``optimize()`` (reference _target.py:638-659)."""
+    the sync engine can drive it like every other target: ``apply``
+    receives only changed rows and removed keys, and ends in one
+    ``optimize()`` (reference _target.py:638-659)."""
 
     def __init__(
         self,
@@ -601,15 +603,15 @@ class ZvecTarget:
         self._conn = conn
         self._col = conn.open_or_create(name, self.collection_schema)
 
-    def upsert(self, rows: DataFrame) -> None:
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """One upsert batch, one delete batch and one optimize
+        (reference _target.py:638-659): a mixed sync rewrites the
+        collection once."""
         col = self._conn.open_existing(self.name)
-        col.upsert(rows)
-        col.optimize(rows.sparkSession)
-
-    def delete(self, keys: DataFrame) -> None:
-        col = self._conn.open_existing(self.name)
-        col.delete(keys)
-        col.optimize(keys.sparkSession)
+        col.apply(upserts, deletes)
+        col.optimize((upserts if upserts is not None else deletes).sparkSession)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self._conn.open_existing(self.name).read_docs(spark)

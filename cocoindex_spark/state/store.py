@@ -404,13 +404,15 @@ class ManagedTable:
         deleted key are rewritten, so a mixed sync (rename = add +
         cascade delete) pays one version write, not two.
 
-        ``touched`` optionally carries precomputed bucket ids for the
-        UPDATE keys (when the same key set drives several phase writes)
-        to skip their discovery job; the delete keys' buckets are
-        always discovered here. Both channels are cached for the
+        ``touched`` optionally carries precomputed bucket ids (when the
+        same key set drives several phase writes); they must cover the
+        keys of BOTH channels. Without it, one discovery job runs over
+        the union of the keys. Both channels are cached for the
         duration: their lineage is evaluated twice (bucket discovery +
         version write) and may read this very table's current version —
         caching pins the pre-swap snapshot."""
+        if updates is None and deletes is None:
+            return
         if updates is not None:
             updates = updates.select(*[f.name for f in self.schema.fields])
         if deletes is not None:
@@ -433,18 +435,17 @@ class ManagedTable:
         if deletes is not None:
             deletes = deletes.cache()
         try:
+            if updates is None:
+                keys = gone = deletes
+            else:
+                keys = updates.select(self.key_cols)
+                if deletes is not None:
+                    keys = keys.unionByName(deletes)
+                gone = keys.distinct()
             if touched is None:
-                touched = self.touched_buckets(updates) if updates is not None else []
-            if deletes is not None:
-                touched = sorted(set(touched) | set(self.touched_buckets(deletes)))
+                touched = self.touched_buckets(keys)
             if not touched:
                 return
-            if deletes is None:
-                gone = updates.select(self.key_cols).distinct()
-            elif updates is None:
-                gone = deletes
-            else:
-                gone = updates.select(self.key_cols).unionByName(deletes).distinct()
             spark = (updates if updates is not None else deletes).sparkSession
             merged = self.read(spark, touched).join(gone, self.key_cols, "left_anti")
             if updates is not None:

@@ -24,8 +24,8 @@ Faithful semantics carried over:
 Spark-first shape: the map holds DRIVER-side state, exactly like the
 reference holds process-local state — this is a control-plane resource
 (work lists, routing tables, per-tenant configs), not a data-plane
-sink. The engine only ever sends the reconciled DELTA to ``upsert``/
-``delete``, so the collect volume is ∝ changes; the snapshot DataFrame
+sink. The engine only ever sends the reconciled DELTA to ``apply``,
+so the collect volume is ∝ changes; the snapshot DataFrame
 is parallelized back out for the consuming stage to process at scale.
 """
 
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from cocoindex_spark.session import local_frame
+from cocoindex_spark.sinks import Target
 
 _MISSING = object()
 
@@ -79,7 +80,7 @@ class _Watch:
         self._map._close_watch()
 
 
-class LiveMap:
+class LiveMap(Target):
     """TableTarget-contract keyed map. ``pk`` may be multiple columns;
     the entry key is the pk value (scalar for a single pk column,
     tuple otherwise) and the entry value is the tuple of the remaining
@@ -97,10 +98,15 @@ class LiveMap:
         self._watch_scan_seq: int | None = None
 
     # ---- engine target contract ----------------------------------------
-    def upsert(self, rows: DataFrame) -> None:
-        data = rows.select(*self.pk, *self._value_cols).collect()
+    def apply(
+        self, upserts: DataFrame | None, deletes: DataFrame | None, version: int = 0
+    ) -> None:
+        """Both channels under one lock hold, upserts first; the
+        version is unused."""
+        ups = [] if upserts is None else upserts.select(*self.pk, *self._value_cols).collect()
+        dels = [] if deletes is None else deletes.select(*self.pk).collect()
         with self._lock:
-            for r in data:
+            for r in ups:
                 key = self._key_of(r)
                 value = tuple(r[c] for c in self._value_cols)
                 prev = self._entries.get(key, _MISSING)
@@ -108,11 +114,7 @@ class LiveMap:
                     self._entries[key] = value
                     self._seq += 1
                     self._emit((key, value, False, self._seq))
-
-    def delete(self, keys: DataFrame) -> None:
-        data = keys.select(*self.pk).collect()
-        with self._lock:
-            for r in data:
+            for r in dels:
                 key = self._key_of(r)
                 if key in self._entries:
                     del self._entries[key]

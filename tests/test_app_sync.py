@@ -639,10 +639,10 @@ def test_failed_sync_joins_memo_flush(app, spark, tmp_state, monkeypatch):
     flush thread: no state write outlives the failed call."""
     target = _target(app, tmp_state)
 
-    def sink_down(rows):
+    def sink_down(upserts, deletes, version):
         raise RuntimeError("sink down")
 
-    monkeypatch.setattr(target, "upsert", sink_down)
+    monkeypatch.setattr(target, "apply", sink_down)
     _slow_writes(app.state.memo, 2.0, monkeypatch)
     with pytest.raises(RuntimeError, match="sink down"):
         app.sync_table(_source(spark, [("a.md", "hello")]), ["path"], enrich, target)

@@ -90,12 +90,10 @@ def test_labels_differ_across_syncs(spark, record_server):
     endpoint, received = record_server
     t = _target(endpoint)
     df = spark.createDataFrame([("a", "1", 1), ("b", "2", 2)], t.schema)
-    t.set_sync_version(101)
-    t.upsert(df)
+    t.apply(df, None, 101)
     first = sorted(r["label"] for r in received)
     received.clear()
-    t.set_sync_version(102)  # next sync: same bytes, new version
-    t.upsert(df)
+    t.apply(df, None, 102)  # next sync: same bytes, new version
     second = sorted(r["label"] for r in received)
     assert set(first).isdisjoint(second)
     assert all(lbl.startswith("docs-102-") for lbl in second)
@@ -165,3 +163,26 @@ def test_delete_sign_rows(spark, record_server):
     rows = [row for r in received for row in r["rows"]]
     assert all(row[DELETE_SIGN] == 1 for row in rows)
     assert {row["k"] for row in rows} == {"a", "b"}
+
+
+def test_pk_change_sweeps_through_apply(spark, record_server, tmp_state):
+    """A pk change on an apply-only sink sweeps every tracked row
+    through apply's delete channel, labelled with the sync's version
+    like the rows that sync re-loads."""
+    from cocoindex_spark.engine.app import App
+
+    endpoint, received = record_server
+    app = App("hpk", state_dir=tmp_state, spark=spark)
+    src = spark.createDataFrame([("a", "1", 1), ("b", "2", 2)], "k STRING, v STRING, n LONG")
+    try:
+        wide = HttpLoadTarget("docs", ["k", "n"], _target(endpoint).schema, endpoint, db="testdb")
+        app.sync_table(src, ["k"], lambda d: d, wide)
+        received.clear()
+        s = app.sync_table(src, ["k"], lambda d: d, _target(endpoint))
+        assert s.extra["schema_evolution"] == "destructive"
+        swept = [row for r in received for row in r["rows"] if row.get(DELETE_SIGN) == 1]
+        assert sorted(row["k"] for row in swept) == ["a", "b"]
+        versions = {r["label"].split("-")[1] for r in received}
+        assert len(versions) == 1 and versions != {"0"}
+    finally:
+        app.drop()

@@ -222,3 +222,37 @@ def test_engine_pure_insert_sync_drives_iggy(spark, record_server, tmp_state):
             )
     finally:
         app.drop()
+
+
+def test_engine_mixed_sync_raises_before_any_send(spark, record_server, tmp_state):
+    """A mixed sync (edit 1, add 3, drop 2) on the append-only sink
+    raises before a single message leaves: the upserts must not land
+    when the deletes cannot."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from cocoindex_spark.engine.app import App
+
+    endpoint, received = record_server
+
+    def render(df):
+        return df.select(
+            "__args_fp", "__component_path", "doc_id", F.upper("title").alias("body")
+        )
+
+    app = App("imixed", state_dir=tmp_state, spark=spark)
+    t = IggyHttpTarget(
+        "docs", "chunks", ["doc_id"], endpoint, value_col="body",
+        schema=StructType.fromDDL("doc_id LONG, body STRING"), num_writers=2,
+    )
+    schema = "doc_id LONG, title STRING"
+    try:
+        app.sync_table(spark.createDataFrame([(1, "one"), (2, "two")], schema), ["doc_id"], render, t)
+        received.clear()
+        with pytest.raises(UnsupportedOperationError, match="append-only"):
+            app.sync_table(
+                spark.createDataFrame([(1, "uno"), (3, "three")], schema), ["doc_id"], render, t
+            )
+        assert not [r for r in received if r["path"].endswith("/messages")]
+    finally:
+        app.drop()

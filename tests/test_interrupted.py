@@ -36,11 +36,11 @@ def test_crash_between_precommit_and_sink_apply_converges(app, spark, tmp_state)
     # Edited source; crash the run right before the sink write (after
     # the pending marker is durably merged).
     src2 = spark.createDataFrame([("a", "x2"), ("b", "y")], "path STRING, text STRING")
-    real_upsert = target.upsert
-    target.upsert = lambda rows: (_ for _ in ()).throw(RuntimeError("simulated crash"))
+    real_apply = target.apply
+    target.apply = lambda *args: (_ for _ in ()).throw(RuntimeError("simulated crash"))
     with pytest.raises(RuntimeError, match="simulated crash"):
         app.sync_table(src2, ["path"], upcase, target)
-    target.upsert = real_upsert
+    target.apply = real_apply
 
     # State now holds BOTH possible fingerprints for `a` + a pending token.
     tr = {
@@ -88,11 +88,11 @@ def test_crash_on_pure_insert_sync_converges(app, spark, tmp_state):
     target = app.target(f"{tmp_state}/t2", ["path"], "path STRING, up STRING")
     src = spark.createDataFrame([("a", "x"), ("b", "y")], "path STRING, text STRING")
 
-    real_upsert = target.upsert
-    target.upsert = lambda rows: (_ for _ in ()).throw(RuntimeError("boom"))
+    real_apply = target.apply
+    target.apply = lambda *args: (_ for _ in ()).throw(RuntimeError("boom"))
     with pytest.raises(RuntimeError, match="boom"):
         app.sync_table(src, ["path"], upcase, target)
-    target.upsert = real_upsert
+    target.apply = real_apply
 
     # tracking commit never ran and inserts skip the pending merge
     assert app.state.tracking.read(spark).count() == 0

@@ -148,6 +148,24 @@ def test_no_create_data_frame_outside_helper():
     ) == []
 
 
+def test_no_foreach_partition_in_wire_sinks():
+    """The six wire sinks write through the one batched partition writer
+    (``sinks/_wire.py``); none runs a ``foreachPartition`` loop of its
+    own."""
+    wire = {
+        os.path.join("sinks", f"{m}.py")
+        for m in ("qdrant_http", "turbopuffer_http", "http_load", "valkey_resp", "sql_table", "iggy_http")
+    }
+    offenders = _offending_lines(
+        set(),
+        None,
+        lambda node: isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "foreachPartition",
+    )
+    assert [o for o in offenders if o.rsplit(":", 1)[0] in wire] == []
+
+
 def test_no_environment_reads_outside_session():
     """Behaviour is set by call arguments, not process environment: only
     ``session.py`` (deployment settings such as cores and memory) reads

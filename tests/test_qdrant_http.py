@@ -176,3 +176,65 @@ def test_engine_sync_drives_qdrant_target(spark, record_server, tmp_state):
         assert deleted == [2]
     finally:
         app.drop()
+
+
+def test_engine_rename_sync_is_one_apply(spark, record_server, tmp_state):
+    """A rename (doc 2's content moves to doc 4) reaches the wire sink
+    through one apply: a PUT for the new id and a points/delete for the
+    old one, with the old pk parsed from its tracked path."""
+    from pyspark.sql import functions as F
+
+    from cocoindex_spark.engine.app import App
+    from cocoindex_spark.engine.function import fn
+
+    endpoint, received = record_server
+
+    @fn(memo=True)
+    def embed(df):
+        return df.select(
+            "__args_fp",
+            "__component_path",
+            "doc_id",
+            F.array(F.length("title").cast("float")).alias("embedding"),
+            "title",
+        )
+
+    app = App("qrename", state_dir=tmp_state, spark=spark)
+    t = _target(endpoint)
+    schema = "doc_id LONG, title STRING"
+    try:
+        app.sync_table(spark.createDataFrame([(1, "one"), (2, "two")], schema), ["doc_id"], embed, t)
+        received.clear()
+        s = app.sync_table(
+            spark.createDataFrame([(1, "one"), (4, "two")], schema), ["doc_id"], embed, t
+        )
+        assert s.inserts == 1 and s.deletes == 1 and s.updates == 0
+        put = [p["id"] for r in received if r["method"] == "PUT" for p in r["body"]["points"]]
+        deleted = [
+            i
+            for r in received
+            if r["path"] == "/collections/chunks/points/delete?wait=true"
+            for i in r["body"]["points"]
+        ]
+        assert put == [4] and deleted == [2]
+    finally:
+        app.drop()
+
+
+def test_mixed_apply_launches_as_many_jobs_as_upsert(spark, record_server):
+    """Both channels share one Spark pass: a mixed apply launches as
+    many jobs as an upsert of the same rows alone."""
+    from test_local_frame import _jobs_in_group
+
+    endpoint, received = record_server
+    t = _target(endpoint)
+    rows = spark.createDataFrame([(i, [float(i)], f"t{i}") for i in range(4)], t.schema)
+    keys = spark.createDataFrame([(7,), (8,)], "doc_id LONG")
+    upsert_jobs = _jobs_in_group(spark, "qdrant-upsert", lambda: t.upsert(rows))
+    mixed_jobs = _jobs_in_group(spark, "qdrant-mixed", lambda: t.apply(rows, keys))
+    assert upsert_jobs and len(mixed_jobs) == len(upsert_jobs)
+    deleted = {
+        i for r in received if r["path"].endswith("/points/delete?wait=true")
+        for i in r["body"]["points"]
+    }
+    assert deleted == {7, 8}

@@ -171,6 +171,34 @@ def test_merge_apply_combined_upsert_delete(spark, tmp_state):
     assert _rows(t, spark) == {("b", 20), ("c", 3), ("d", 4), ("f", 6)}
 
 
+def test_merge_apply_discovers_buckets_once(spark, tmp_state, monkeypatch):
+    """A mixed merge runs one bucket discovery over both channels' keys,
+    and none when the caller passes ``touched`` covering them."""
+    t = ManagedTable(os.path.join(tmp_state, "t"), ["k"], _schema())
+    t.merge_upsert(spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], _schema()))
+    real, calls = ManagedTable.touched_buckets, []
+
+    def counting(table, keys):
+        calls.append(keys)
+        return real(table, keys)
+
+    monkeypatch.setattr(ManagedTable, "touched_buckets", counting)
+    t.merge_apply(
+        spark.createDataFrame([("b", 20), ("d", 4)], _schema()),
+        spark.createDataFrame([("a", 0)], _schema()).select("k"),
+    )
+    assert len(calls) == 1
+    assert _rows(t, spark) == {("b", 20), ("c", 3), ("d", 4)}
+
+    ups = spark.createDataFrame([("c", 30), ("e", 5)], _schema())
+    dels = spark.createDataFrame([("b", 0)], _schema()).select("k")
+    touched = real(t, ups.select("k").unionByName(dels))
+    calls.clear()
+    t.merge_apply(ups, dels, touched=touched)
+    assert calls == []
+    assert _rows(t, spark) == {("c", 30), ("d", 4), ("e", 5)}
+
+
 def test_merge_apply_none_channels(spark, tmp_state):
     """Either channel may be None: None deletes is a plain upsert, None
     updates a plain delete, and a delete on an empty table is a no-op

@@ -177,6 +177,30 @@ class TestApplyLoop:
         assert [r["doc_id"] for r in remaining] == ["2"]
         conn.close()
 
+    def test_mixed_engine_sync_publishes_one_version(self, spark, tmp_path):
+        """A mixed sync (edit 1, add 9, drop 2) is one apply: one
+        rewrite of the collection, so one new data version."""
+        from cocoindex_spark.engine.app import App
+
+        conn = ManagedZvecConnection(str(tmp_path / "zvec"))
+        schema = StructType.fromDDL("doc_id LONG, body STRING")
+        target = ZvecTarget(conn, "docs", ["doc_id"], schema)
+        app = App("zmixed", state_dir=str(tmp_path / "state"), spark=spark)
+        store = target._col._store
+        try:
+            src = [(i, f"b{i}") for i in range(1, 9)]
+            app.sync_table(spark.createDataFrame(src, schema), ["doc_id"], lambda d: d, target)
+            versions_before = set(store._pointer().values())
+            src = [(1, "edited")] + src[2:] + [(9, "b9")]
+            s = app.sync_table(spark.createDataFrame(src, schema), ["doc_id"], lambda d: d, target)
+            assert (s.inserts, s.updates, s.deletes) == (1, 1, 1)
+            got = {r["doc_id"]: r["body"] for r in target.read(spark).collect()}
+            assert got == {str(k): v for k, v in src}
+            assert len(set(store._pointer().values()) - versions_before) == 1
+        finally:
+            app.drop()
+            conn.close()
+
     def test_dimension_enforced(self, spark, tmp_path):
         conn, target, _ = _mk_target(spark, tmp_path)
         bad = spark.createDataFrame(
