@@ -15,17 +15,16 @@ program (SURVEY.md §3.1 "Spark restatement"):
       → reconcile full-outer join vs tracking         [§2.5]
       → MERGE into sink + tracking commit + memo flush
 
-One sync is a `_SyncRun` whose nine phases run in order, each timed
+One sync is a `_SyncRun` whose seven phases run in order, each timed
 into ``SyncStats.extra["phase_ms"]`` under its own name:
 
-    cheap_level          target contract, context fold; with cheap_fp_cols
-                         the listing's cheap fps vs the source_fp map
+    cheap_level          leftover-intent recovery, target contract, context
+                         fold; with cheap_fp_cols the listing's cheap fps
+                         vs the source_fp map
     transform_reconcile  memo lookup, transform over misses, reconcile
     stats_counts         hit/miss counts; memo + source_fp flush thread starts
-    precommit_buckets    tracking buckets of every changing key
-    precommit_merge      stage marker on updated and deleted states
-    sink_apply           idempotent MERGE into the target
-    tracking_commit      tracking rewrite, errors side table
+    sink_apply           intent write, idempotent MERGE into the target
+    tracking_commit      tracking rewrite, intent retire, errors side table
     memo_flush_wait      flush-thread join, cache release (on every exit)
     cleanup              state-table growth / compaction
 
@@ -41,10 +40,10 @@ state tables shard by key hash and the memo join is a plain shuffle
 
 from __future__ import annotations
 
+import copy
 import os
 import threading
 import time
-import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -58,7 +57,7 @@ from cocoindex_spark.engine.context import (
     _pop_active,
     _push_active,
 )
-from cocoindex_spark.engine.reconcile import mark_pending, reconcile, tracking_updates
+from cocoindex_spark.engine.reconcile import reconcile, tracking_updates
 from cocoindex_spark.fingerprint import fp_col, fp_logic, fp_value
 from cocoindex_spark.session import local_frame
 from cocoindex_spark.sinks.table import TableTarget
@@ -633,7 +632,9 @@ class App:
                 # no truncate on an apply-only sink: sweep the tracked
                 # target paths through its delete channel instead —
                 # parsed with the OLD contract's pk (the paths encode
-                # the previous key structure)
+                # the previous key structure), and sent through a copy
+                # of the target keyed by that pk, which is the key the
+                # rows were written under
                 old_types = dict(stored["columns"])
                 dead_keys = _keys_from_paths(
                     tracked_keys.select(F.col("target_path").alias("__tp")),
@@ -641,7 +642,9 @@ class App:
                     stored["pk"],
                     [old_types[c] for c in stored["pk"]],
                 )
-                target.apply(None, dead_keys, run.version)
+                old_target = copy.copy(target)
+                old_target.pk = stored["pk"]
+                old_target.apply(None, dead_keys, run.version)
             self.state.tracking.delete_keys(tracked_keys)
             store()
             return "destructive"
@@ -717,8 +720,6 @@ _PHASES = (
     "cheap_level",
     "transform_reconcile",
     "stats_counts",
-    "precommit_buckets",
-    "precommit_merge",
     "sink_apply",
     "tracking_commit",
     "memo_flush_wait",
@@ -774,7 +775,7 @@ class _SyncRun:
         self.version = int(time.time() * 1000)
         self.logic_fp = getattr(transform, "logic_fp", None) or fp_logic(transform)
         self.prefix = f"{app.name}/{target.name}"
-        self.failed_paths = self.bks = self.flush_thread = self.flush_err = None
+        self.failed_paths = self.flush_thread = self.flush_err = None
         self._cached: list[DataFrame] = []
 
     def timed(self, phase: str) -> None:
@@ -794,10 +795,13 @@ class _SyncRun:
 
     # ---- cheap_level --------------------------------------------------
     def cheap_level(self) -> None:
-        """Target contract, live-mode scope, context fold and memo
-        scan; with ``cheap_fp_cols``, level 1 of two-level change
-        detection: the listing's cheap fps against the source_fp map."""
+        """Leftover-intent recovery, target contract, live-mode scope,
+        context fold and memo scan; with ``cheap_fp_cols``, level 1 of
+        two-level change detection: the listing's cheap fps against the
+        source_fp map."""
         app, spark = self.app, self.spark
+        if not self.state.intent.is_empty():
+            self._recover_intent()
         self.stats.extra["schema_evolution"] = app._ensure_target_contract(self)
         if self.partial:
             self.scope_paths = self.source.select(
@@ -901,6 +905,29 @@ class _SyncRun:
         ).first()
         self.stats.extra["cheap_hits"] = n_cheap = int(n_cheap or 0)
         self.stats.extra["loaded"] = int(n_total) - n_cheap
+
+    def _recover_intent(self) -> None:
+        """Fold an intent left by an interrupted sync (of any target of
+        this app) into tracking, then clear it. Every intent key is
+        marked ``may_be_missing``; one with no tracking row gets a NULL
+        fp, which reconcile reads as "maybe in the target, never
+        committed". The next sync that covers a key then rewrites it if
+        desired and deletes it if not; keys out of a partial batch's
+        scope stay marked until one does."""
+        tracking = self.state.tracking
+        keys = self.state.intent.read(self.spark)
+        bks = tracking.touched_buckets(keys)
+        folded = keys.join(
+            tracking.read(self.spark, bks), ["component_path", "target_path"], "left"
+        ).select(
+            "component_path",
+            "target_path",
+            "fp",
+            F.lit(True).alias("may_be_missing"),
+            F.coalesce("version", F.lit(self.version)).cast("long").alias("version"),
+        )
+        tracking.merge_upsert(folded, touched=bks)
+        self.state.intent.clear()
 
     # ---- transform_reconcile -------------------------------------------
     def _keyed(self) -> DataFrame:
@@ -1221,46 +1248,23 @@ class _SyncRun:
             self.flush_err = e
 
     # ---- commit phases (submit protocol, submit_session.rs) -------------
-    def precommit_buckets(self) -> None:
-        """Bucket ids of every changing tracking key, discovered once:
-        the pending and the applied merges share the key set, and the
-        prior-state read in precommit_merge reads only those buckets —
-        on a 100 TB run the precommit cost is ∝ delta, not ∝ tracked
-        state. A cold start needs none: tracking stays empty until the
-        commit, which takes the empty-table overwrite path."""
-        if self.changed and not self.cold_start:
-            self.bks = self.state.tracking.touched_buckets(
-                self.plan.changes().select("component_path", "target_path")
-            )
-
-    def precommit_merge(self) -> None:
-        """Stage marker (Phase 2): every update and delete merges a
-        ``pending_token`` into its tracking row before the sink is
-        touched. A crash between sink apply and tracking commit then
-        leaves a row the next run rewrites or deletes, never one it
-        trusts. Inserts write no marker — a cold load skips this state
-        merge entirely — so a crash after sink apply leaves their target
-        rows with no tracking row: a re-run on the same source inserts
-        them again and converges, but if the item has left the source by
-        then, its target row stays."""
-        if self.stats.updates or self.stats.deletes:
-            pending = mark_pending(
-                self.state.tracking.read(self.spark, self.bks),
-                self.plan,
-                uuid.uuid4().hex,
-            )
-            self.state.tracking.merge_upsert(pending, touched=self.bks)
-
     def sink_apply(self) -> None:
-        """Phase 3: idempotent MERGE of the changes into the sink — one
-        ``target.apply(upserts, deletes, version)`` call, either channel
-        None when empty. A mixed sync (a rename is add + cascade delete)
-        reaches the sink as one write: one bucket-scoped rewrite on a
-        table, one Spark pass on a wire sink. The version lets a
-        label-deduplicating sink (stream load) keep retries within this
-        sync idempotent without dropping a later sync's identical bytes."""
+        """The intent, then the sink. The changing keys overwrite the
+        intent table first (write-ahead: a crash from here until
+        tracking_commit retires it leaves the keys for the next sync's
+        recovery). Then one idempotent MERGE of the changes into the
+        sink — one ``target.apply(upserts, deletes, version)`` call,
+        either channel None when empty. A mixed sync (a rename is add +
+        cascade delete) reaches the sink as one write: one bucket-scoped
+        rewrite on a table, one Spark pass on a wire sink. The version
+        lets a label-deduplicating sink (stream load) keep retries within
+        this sync idempotent without dropping a later sync's identical
+        bytes."""
         if not self.changed:
             return
+        self.state.intent.overwrite(
+            self.plan.changes().select("component_path", "target_path")
+        )
         upsert_rows = self._upsert_rows() if self.stats.inserts or self.stats.updates else None
         dead_keys = self._dead_keys() if self.stats.deletes else None
         self.target.apply(upsert_rows, dead_keys, self.version)
@@ -1362,13 +1366,13 @@ class _SyncRun:
         return current.join(dead, "__tp").select(*target.pk)
 
     def tracking_commit(self) -> None:
-        """Phase 4: one tracking rewrite for both channels (pure-upsert
-        runs skip the delete channel), then the errors side table."""
+        """One tracking rewrite for both channels (pure-upsert runs skip
+        the delete channel), the intent retire after its pointer swap,
+        then the errors side table."""
         if self.changed:
             applied, deleted = tracking_updates(self.plan, self.version)
-            self.state.tracking.merge_apply(
-                applied, deleted if self.stats.deletes else None, touched=self.bks
-            )
+            self.state.tracking.merge_apply(applied, deleted if self.stats.deletes else None)
+            self.state.intent.clear()
         if self.error_col is not None:
             self._maintain_errors()
 

@@ -10,18 +10,21 @@ idempotent MERGEs to the sink and the tracking table.
 Convergence contract (the reference's roll-forward semantics,
 processing_component.mdx:248-253):
 
-- ``possible_fps`` may hold several candidate previous fingerprints
-  after an interrupted run; a no-op is only declared when ALL of them
-  equal the desired fingerprint and ``may_be_missing`` is false
+- A no-op is declared only when the tracked fingerprint equals the
+  desired one and ``may_be_missing`` is false
   (postgres/_target.py:870-875's suppression rule).
 - ``may_be_missing=True`` forces a (re)write even when fingerprints
-  match — used by full_reprocess and lossy child invalidation.
-- Re-running any phase is safe: sink apply is an idempotent MERGE and
-  tracking commit happens after sink apply, so a crash between them
-  re-applies the same actions when the next run sees the same source.
-  Updates and deletes also carry a stage marker (``mark_pending``), so
-  they converge whatever the next source holds; inserts do not (see
-  ``_SyncRun.precommit_merge`` in engine/app.py).
+  match — used by full_reprocess, lossy child invalidation and
+  interrupted-run recovery.
+- A tracked row with a NULL ``fp`` is a state that may have reached the
+  target but was never committed: it is an insert when desired and a
+  delete when not.
+- Re-running any phase is safe: sink apply is an idempotent MERGE, and
+  every change is recorded in the state store's intent table before the
+  sink is touched. A sync that finds an intent left by an interrupted
+  run folds it into tracking first (``_SyncRun._recover_intent`` in
+  engine/app.py), so inserts, updates and deletes all converge whatever
+  the next source holds.
 """
 
 from __future__ import annotations
@@ -80,7 +83,7 @@ def reconcile(
     """Classify desired vs tracked target states.
 
     desired: component_path, target_path, fp, + payload columns.
-    tracked: the tracking-table schema (possible_fps, may_be_missing);
+    tracked: the tracking-table schema (fp, may_be_missing);
     None when tracking is known to be empty — every desired state is
     then an insert, classified with no join (no shuffle).
     """
@@ -104,21 +107,16 @@ def reconcile(
     d_exists = F.col("d.target_path").isNotNull() | F.col("d.component_path").isNotNull()
     t_exists = F.col("t.target_path").isNotNull() | F.col("t.component_path").isNotNull()
 
-    # No-op only when every possible previous fingerprint equals the
-    # desired one and the state can't be missing from the sink.
-    all_fps_match = (
-        F.size(F.col("t.possible_fps")) > 0
-    ) & F.forall(F.col("t.possible_fps"), lambda p: p == F.col("d.fp"))
-    clean_noop = (
-        all_fps_match
-        & ~F.coalesce(F.col("t.may_be_missing"), F.lit(True))
-        & F.col("t.pending_token").isNull()
+    # No-op only when the fingerprint matches and the state can't be
+    # missing from the sink.
+    clean_noop = (F.col("t.fp") == F.col("d.fp")) & ~F.coalesce(
+        F.col("t.may_be_missing"), F.lit(True)
     )
     if full_reprocess:
         clean_noop = F.lit(False)
 
     action = (
-        F.when(d_exists & ~t_exists, ACTION_INSERT)
+        F.when(d_exists & (~t_exists | F.col("t.fp").isNull()), ACTION_INSERT)
         .when(~d_exists & t_exists, ACTION_DELETE)
         .when(clean_noop, ACTION_NOOP)
         .otherwise(ACTION_UPDATE)
@@ -137,8 +135,8 @@ def reconcile(
 def tracking_updates(plan: ReconcilePlan, version: int) -> tuple[DataFrame, DataFrame]:
     """(upserts, delete_keys) for the tracking table after sink apply.
 
-    Applied states collapse ``possible_fps`` to the single desired
-    fingerprint and clear ``may_be_missing``/``pending_token``.
+    Applied states record the desired fingerprint and clear
+    ``may_be_missing``.
     """
     applied = plan.actions.filter(
         F.col("action").isin(ACTION_INSERT, ACTION_UPDATE)
@@ -146,51 +144,11 @@ def tracking_updates(plan: ReconcilePlan, version: int) -> tuple[DataFrame, Data
         "component_path",
         "target_path",
         F.col("fp"),
-        F.array(F.col("fp")).alias("possible_fps"),
         F.lit(False).alias("may_be_missing"),
         F.lit(version).cast("long").alias("version"),
-        F.lit(None).cast("string").alias("pending_token"),
     )
     deletes = plan.actions.filter(F.col("action") == ACTION_DELETE).select(
         "component_path", "target_path"
     )
     return applied, deletes
 
-
-def mark_pending(tracked: DataFrame, plan: ReconcilePlan, token: str) -> DataFrame:
-    """Precommit stage marker (submit_session.rs:30-66 Phase 2): record
-    the intent to change states so an interrupted run widens
-    ``possible_fps`` instead of trusting a single fingerprint.
-
-    Returns ONLY the changing rows (tracking-table schema) — callers
-    MERGE them; untouched states never get rewritten (the bucket-scoped
-    state-store path). A delete keeps its prior fingerprints: the token
-    alone makes a run that finds the state desired again rewrite it,
-    whether or not the interrupted sink delete landed."""
-    pend = plan.changes().select(
-        "component_path",
-        "target_path",
-        F.col("fp").alias("new_fp"),
-        F.col("action"),
-    )
-    prior = tracked.select(
-        "component_path",
-        "target_path",
-        F.col("fp").alias("prior_fp"),
-        F.col("possible_fps").alias("prior_fps"),
-        F.col("may_be_missing").alias("prior_missing"),
-        F.col("version").alias("prior_version"),
-    )
-    j = pend.join(prior, ["component_path", "target_path"], "left")
-    prior_fps = F.coalesce(F.col("prior_fps"), F.array())
-    return j.select(
-        "component_path",
-        "target_path",
-        F.coalesce(F.col("new_fp"), F.col("prior_fp")).alias("fp"),
-        F.when(F.col("action") == ACTION_DELETE, prior_fps)
-        .otherwise(F.array_union(prior_fps, F.array(F.col("new_fp"))))
-        .alias("possible_fps"),
-        F.coalesce(F.col("prior_missing"), F.lit(False)).alias("may_be_missing"),
-        F.coalesce(F.col("prior_version"), F.lit(0)).cast("long").alias("version"),
-        F.lit(token).alias("pending_token"),
-    )

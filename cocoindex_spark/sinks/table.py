@@ -91,8 +91,7 @@ class TableTarget(Target):
 
     def truncate(self) -> None:
         """Destructive recreate (pk change): drop all rows."""
-        spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        self._table.overwrite(local_frame(spark, [], self.schema))
+        self._table.clear()
 
     # -- index metadata (declare_vector_index / declare_fts_index analog)
     def declare_index(

@@ -4,10 +4,15 @@ swap — the Spark-native re-home of the reference's LMDB state store
 
 Keyspaces map to managed tables under one state root:
 
-- ``tracking``   — per-(component_path, target_path) fingerprints with
-                   ``possible_fps`` array + ``may_be_missing`` for
-                   interrupted-run convergence
-                   (custom_target_connector.mdx:74-87, 211-213)
+- ``tracking``   — per-(component_path, target_path) fingerprint plus
+                   ``may_be_missing``, which forces a rewrite; a NULL
+                   fp marks a state that may be in the target but was
+                   never committed (custom_target_connector.mdx:74-87,
+                   211-213)
+- ``intent``     — the (component_path, target_path) keys a sync is
+                   about to change, written before its sink apply and
+                   cleared after its tracking commit; a leftover intent
+                   is folded into tracking by the next sync
 - ``memo``       — function memoization keyed by (logic_fp, args_fp)
                    (FunctionMemoization, db_schema.rs:67-70)
 - ``user_state`` — persistent per-component scratch (0x34)
@@ -370,6 +375,16 @@ class ManagedTable:
         self.overwrite(df, n_buckets=cur_n, probe=want)
         return True
 
+    def clear(self) -> None:
+        """Empty the table with no Spark job: swap the pointer to no
+        buckets (layout kept), then remove every version directory. A
+        crash between the two leaves only unreferenced directories,
+        which no reader sees."""
+        self._swap_pointer({})
+        for d in self.fs.listdir(self.path):
+            if d.startswith("v_"):
+                self.fs.rmtree(os.path.join(self.path, d))
+
     def touched_buckets(self, keys: DataFrame) -> list[int]:
         """Bucket ids the given key rows hash into. Callers that drive
         several phase writes off one key set compute this once and pass
@@ -466,7 +481,6 @@ def _schema(*fields: tuple) -> StructType:
     # Built without fromDDL: that needs an active SparkContext at
     # import time.
     from pyspark.sql.types import (
-        ArrayType,
         BooleanType,
         LongType,
         StringType,
@@ -477,7 +491,6 @@ def _schema(*fields: tuple) -> StructType:
         "string": StringType(),
         "long": LongType(),
         "bool": BooleanType(),
-        "array<string>": ArrayType(StringType()),
     }
     return StructType([StructField(n, type_map[t], True) for n, t in fields])
 
@@ -486,11 +499,11 @@ TRACKING_SCHEMA = _schema(
     ("component_path", "string"),
     ("target_path", "string"),
     ("fp", "string"),
-    ("possible_fps", "array<string>"),
     ("may_be_missing", "bool"),
     ("version", "long"),
-    ("pending_token", "string"),
 )
+
+INTENT_SCHEMA = _schema(("component_path", "string"), ("target_path", "string"))
 
 # decl_json: the declared target states — JSON array of
 # {target_path, fp} — recorded at flush time so a replay can feed the
@@ -546,6 +559,10 @@ class StateStore:
         self.root = root
         self.tracking = ManagedTable(
             os.path.join(root, "tracking"), ["component_path", "target_path"], TRACKING_SCHEMA
+        )
+        self.intent = ManagedTable(
+            os.path.join(root, "intent"), ["component_path", "target_path"], INTENT_SCHEMA,
+            n_buckets=1,
         )
         self.memo = ManagedTable(os.path.join(root, "memo"), ["logic_fp", "args_fp"], MEMO_SCHEMA)
         self.user_state = ManagedTable(

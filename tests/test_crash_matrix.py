@@ -5,8 +5,9 @@ record, processing_component.mdx:248-253; SURVEY §2.5).
 Each protocol is one sync over a prepared state, crashed at:
 
 - the entry of each phase of ``_PHASES`` (the ``_SyncRun`` methods);
-- every pointer swap of the target and the tracking table, after the
-  new version directory landed (``ManagedTable._swap_pointer``);
+- every pointer swap of the target, the tracking table and the intent
+  table (its write and its retire), after the new version directory
+  landed (``ManagedTable._swap_pointer``);
 - on the memo-flush thread: its first write, and the memo and
   source_fp pointer swaps.
 
@@ -22,8 +23,8 @@ A re-run on the same source from each crash state must leave target
 rows and tracking rows (``version`` aside) equal to the reference
 run's, recomputing no more than it did; a third sync must then be
 all-noop (and load no content on the cheap path). A re-run is a
-function of the durable state it starts from (target, tracking, memo
-and source_fp rows, versions and token values aside), so each distinct
+function of the durable state it starts from (target, tracking, intent,
+memo and source_fp rows, versions aside), so each distinct
 crash state is re-run once (the prepared state's re-run is the
 reference run), and each distinct re-run end state gets one third
 sync. Cases run on a few threads: every case has its own state root.
@@ -121,9 +122,7 @@ def _snapshot(app, spark, target):
             r.component_path,
             r.target_path,
             r.fp,
-            tuple(sorted(r.possible_fps)),
             r.may_be_missing,
-            r.pending_token is not None,
         )
         for r in app.state.tracking.read(spark).collect()
     )
@@ -131,12 +130,12 @@ def _snapshot(app, spark, target):
 
 
 def _durable_state(spark, root):
-    """Everything a re-run from ``root`` reads, versions and token
-    values aside."""
+    """Everything a re-run from ``root`` reads, versions aside."""
     app, target = _open(spark, root)
+    intent = sorted(tuple(r) for r in app.state.intent.read(spark).collect())
     memo = sorted(tuple(r)[:4] for r in app.state.memo.read(spark).collect())
     sfp = sorted(tuple(r)[:3] for r in app.state.source_fp.read(spark).collect())
-    return repr((_snapshot(app, spark, target), memo, sfp, target.stored_contract()))
+    return repr((_snapshot(app, spark, target), intent, memo, sfp, target.stored_contract()))
 
 
 def _table_at(path: str) -> tuple[str, str]:
@@ -161,7 +160,7 @@ class _Hooks:
 
         def swap(table, *a, **kw):
             root, name = _table_at(table.path)
-            if root in self.copies and name in ("target", "tracking"):
+            if root in self.copies and name in ("target", "tracking", "intent"):
                 n = sum(p.startswith(f"swap:{name}#") for p in self.copies[root])
                 self._copy(root, f"swap:{name}#{n + 1}")
             self._raise_at(root, f"swap:{name}")
@@ -227,7 +226,9 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
         stats = _sync(app, spark, target, PROTOCOLS[name][1])
         crashes = hooks.copies.pop(root)
         assert set(_PHASES) <= set(crashes), name
-        assert {"swap:target#1", "swap:tracking#1"} <= set(crashes), name
+        assert {"swap:target#1", "swap:tracking#1", "swap:intent#1", "swap:intent#2"} <= set(
+            crashes
+        ), name
         return name, stats, _snapshot(app, spark, target), crashes
 
     refs = {name: (stats, want, crashes) for name, stats, want, crashes in _each(reference, PROTOCOLS)}
@@ -280,14 +281,10 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
     _each(third, list(ends.items()))
 
 
-def test_interrupted_delete_converges_when_item_returns(spark, tmp_path, monkeypatch):
-    """A delete whose sink apply landed but whose tracking commit did
-    not must not leave a tracked row the next run trusts: when the item
-    returns, it is written again."""
+def _crash_at_tracking_commit(app, spark, target, spec, monkeypatch):
+    """Run ``spec`` with its tracking commit raising: the sink apply
+    lands, tracking and the intent stay as the sink left them."""
     import cocoindex_spark.engine.app as app_mod
-
-    app, target = _open(spark, tmp_path)
-    _sync(app, spark, target, ("full", {"a": "x", "b": "y"}))
 
     def crash(*a, **kw):
         raise Crash("tracking commit")
@@ -295,9 +292,78 @@ def test_interrupted_delete_converges_when_item_returns(spark, tmp_path, monkeyp
     with monkeypatch.context() as m:
         m.setattr(app_mod, "tracking_updates", crash)
         with pytest.raises(Crash):
-            _sync(app, spark, target, ("full", {"a": "x"}))
-    assert sorted(tuple(r) for r in target.read(spark).collect()) == [("a", "X")]
+            _sync(app, spark, target, spec)
+
+
+def _rows(spark, target):
+    return sorted(tuple(r) for r in target.read(spark).collect())
+
+
+def test_interrupted_delete_converges_when_item_returns(spark, tmp_path, monkeypatch):
+    """A delete whose sink apply landed but whose tracking commit did
+    not must not leave a tracked row the next run trusts: when the item
+    returns, it is written again."""
+    app, target = _open(spark, tmp_path)
+    _sync(app, spark, target, ("full", {"a": "x", "b": "y"}))
+    _crash_at_tracking_commit(app, spark, target, ("full", {"a": "x"}), monkeypatch)
+    assert _rows(spark, target) == [("a", "X")]
 
     back = _sync(app, spark, target, ("full", {"a": "x", "b": "y"}))
     assert back.updates == 1 and back.noops == 1
-    assert sorted(tuple(r) for r in target.read(spark).collect()) == [("a", "X"), ("b", "Y")]
+    assert _rows(spark, target) == [("a", "X"), ("b", "Y")]
+
+
+def test_interrupted_insert_converges_when_item_leaves(spark, tmp_path, monkeypatch):
+    """An insert whose sink apply landed but whose tracking commit did
+    not must not stay in the target once the item leaves the source."""
+    app, target = _open(spark, tmp_path)
+    _sync(app, spark, target, ("full", {"a": "x"}))
+    _crash_at_tracking_commit(app, spark, target, ("full", {"a": "x", "b": "y"}), monkeypatch)
+    assert _rows(spark, target) == [("a", "X"), ("b", "Y")]
+
+    gone = _sync(app, spark, target, ("full", {"a": "x"}))
+    assert gone.deletes == 1 and gone.noops == 1
+    assert _rows(spark, target) == [("a", "X")]
+
+
+def test_partial_batch_keeps_crashed_key_marked_until_full_sync(spark, tmp_path, monkeypatch):
+    """A partial batch that recovers a crashed full sync's intent but
+    leaves the crashed key out of its scope keeps that key in the
+    target, marked, until the next full sync deletes it."""
+    app, target = _open(spark, tmp_path)
+    _sync(app, spark, target, ("full", {"a": "x"}))
+    _crash_at_tracking_commit(app, spark, target, ("full", {"a": "x", "b": "y"}), monkeypatch)
+
+    batch = _sync(app, spark, target, ("partial", {"a": "x2"}))
+    assert (batch.updates, batch.inserts, batch.deletes) == (1, 0, 0)
+    assert app.state.intent.is_empty()
+    assert _rows(spark, target) == [("a", "X2"), ("b", "Y")]
+    tracked = {
+        r.target_path: (r.fp, r.may_be_missing) for r in app.state.tracking.read(spark).collect()
+    }
+    assert tracked["t/b"] == (None, True) and tracked["t/a"][1] is False
+
+    full = _sync(app, spark, target, ("full", {"a": "x2"}))
+    assert (full.deletes, full.noops) == (1, 1)
+    assert _rows(spark, target) == [("a", "X2")]
+    again = _sync(app, spark, target, ("full", {"a": "x2"}))
+    assert (again.inserts, again.updates, again.deletes, again.noops) == (0, 0, 0, 1)
+
+
+def test_other_target_sync_keeps_crashed_intent(spark, tmp_path, monkeypatch):
+    """The intent table is shared by an app's targets: a sync of target
+    B after target A crashed folds A's intent into tracking rather than
+    dropping it, so A's next sync still converges."""
+    app, target = _open(spark, tmp_path)
+    other = app.target(f"{tmp_path}/u", ["path"], SCHEMA)
+    _sync(app, spark, target, ("full", {"a": "x"}))
+    _crash_at_tracking_commit(app, spark, target, ("full", {"a": "x", "b": "y"}), monkeypatch)
+
+    b = _sync(app, spark, other, ("full", {"z": "w"}))
+    assert (b.inserts, b.deletes) == (1, 0)
+    assert app.state.intent.is_empty()
+
+    back = _sync(app, spark, target, ("full", {"a": "x"}))
+    assert (back.deletes, back.noops) == (1, 1)
+    assert _rows(spark, target) == [("a", "X")]
+    assert _rows(spark, other) == [("z", "W")]

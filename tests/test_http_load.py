@@ -186,3 +186,28 @@ def test_pk_change_sweeps_through_apply(spark, record_server, tmp_state):
         assert len(versions) == 1 and versions != {"0"}
     finally:
         app.drop()
+
+
+def test_pk_widening_sweeps_under_the_old_pk(spark, record_server, tmp_state):
+    """A pk change that adds a column sweeps the tracked rows under the
+    pk they were written with: each delete-sign row carries the old key
+    only."""
+    from cocoindex_spark.engine.app import App
+
+    endpoint, received = record_server
+    app = App("hpkw", state_dir=tmp_state, spark=spark)
+    src = spark.createDataFrame([("a", "1", 1), ("b", "2", 2)], "k STRING, v STRING, n LONG")
+    try:
+        app.sync_table(src, ["k"], lambda d: d, _target(endpoint))
+        received.clear()
+        wide = HttpLoadTarget("docs", ["k", "n"], _target(endpoint).schema, endpoint, db="testdb")
+        s = app.sync_table(src, ["k"], lambda d: d, wide)
+        assert s.extra["schema_evolution"] == "destructive"
+        swept = [row for r in received for row in r["rows"] if row.get(DELETE_SIGN) == 1]
+        assert sorted(swept, key=lambda row: row["k"]) == [
+            {"k": "a", DELETE_SIGN: 1},
+            {"k": "b", DELETE_SIGN: 1},
+        ]
+        assert wide.pk == ["k", "n"]
+    finally:
+        app.drop()

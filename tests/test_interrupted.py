@@ -1,9 +1,9 @@
 """Interrupted-run convergence (custom_target_connector.mdx:211-213:
 multiple possible previous records after interrupted runs;
 submit_session.rs:54-66 stage markers; SURVEY §7.4.3: kill mid-run and
-re-converge). A crash between the precommit pending-marker and the sink
-apply must leave state that the next run rolls forward, never trusting
-a single fingerprint."""
+re-converge). A crash between the intent write and the sink apply must
+leave state that the next run rolls forward, never trusting the tracked
+fingerprint."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def test_crash_between_precommit_and_sink_apply_converges(app, spark, tmp_state)
     app.sync_table(src1, ["path"], upcase, target)
 
     # Edited source; crash the run right before the sink write (after
-    # the pending marker is durably merged).
+    # the intent is durably written).
     src2 = spark.createDataFrame([("a", "x2"), ("b", "y")], "path STRING, text STRING")
     real_apply = target.apply
     target.apply = lambda *args: (_ for _ in ()).throw(RuntimeError("simulated crash"))
@@ -42,25 +42,23 @@ def test_crash_between_precommit_and_sink_apply_converges(app, spark, tmp_state)
         app.sync_table(src2, ["path"], upcase, target)
     target.apply = real_apply
 
-    # State now holds BOTH possible fingerprints for `a` + a pending token.
-    tr = {
-        r.target_path: (len(r.possible_fps), r.pending_token)
-        for r in app.state.tracking.read(spark).collect()
-    }
-    assert tr["t/a"][0] == 2 and tr["t/a"][1] is not None
+    # The intent holds the changing key `a`.
+    assert [r.target_path for r in app.state.intent.read(spark).collect()] == ["t/a"]
     # Sink still has the OLD value (the write never happened).
     assert {r.path: r.up for r in target.read(spark).collect()}["a"] == "X"
 
-    # Re-run: the pending/widened state forces the write through even
-    # though the memo replays the transform (hits are fine — the
-    # reconcile layer is what must not no-op).
+    # Re-run: the recovered intent marks `a` may_be_missing, which
+    # forces the write through even though the memo replays the
+    # transform (hits are fine — the reconcile layer is what must not
+    # no-op).
     s = app.sync_table(src2, ["path"], upcase, target)
     assert s.updates >= 1
     assert {r.path: r.up for r in target.read(spark).collect()} == {"a": "X2", "b": "Y"}
 
-    # Converged: pending cleared, single fp per state, next run all-noop.
+    # Converged: intent retired, no state marked, next run all-noop.
+    assert app.state.intent.is_empty()
     tr2 = app.state.tracking.read(spark).collect()
-    assert all(r.pending_token is None and len(r.possible_fps) == 1 for r in tr2)
+    assert all(not r.may_be_missing and r.fp is not None for r in tr2)
     s3 = app.sync_table(src2, ["path"], upcase, target)
     assert s3.noops == 2 and s3.updates == 0
 
@@ -80,11 +78,10 @@ def test_repeated_identical_sync_is_idempotent(app, spark, tmp_state):
 
 
 def test_crash_on_pure_insert_sync_converges(app, spark, tmp_state):
-    """Pure-insert syncs write no pending markers (nothing prior to
-    mis-trust); a crash at the sink leaves NO tracking rows, and the
-    re-run re-classifies every component as insert — restoring payloads
-    from the flushed memo (0 recomputes) through the bucket-scoped
-    sink fetch."""
+    """A crash at the sink of a pure-insert sync leaves NO committed
+    tracking rows, and the re-run re-classifies every component as
+    insert — restoring payloads from the flushed memo (0 recomputes)
+    through the bucket-scoped sink fetch."""
     target = app.target(f"{tmp_state}/t2", ["path"], "path STRING, up STRING")
     src = spark.createDataFrame([("a", "x"), ("b", "y")], "path STRING, text STRING")
 
@@ -94,7 +91,7 @@ def test_crash_on_pure_insert_sync_converges(app, spark, tmp_state):
         app.sync_table(src, ["path"], upcase, target)
     target.apply = real_apply
 
-    # tracking commit never ran and inserts skip the pending merge
+    # tracking commit never ran
     assert app.state.tracking.read(spark).count() == 0
     assert target.read(spark).count() == 0
 

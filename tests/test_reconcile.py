@@ -1,5 +1,5 @@
 """Reconcile classification semantics (execution.rs:917-1141):
-insert/update/delete/noop, multi-possible-previous-states, forced
+insert/update/delete/noop, uncommitted (NULL-fp) tracked states, forced
 reprocess, may_be_missing."""
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ def _desired(spark, rows):
 
 
 def _tracked(spark, rows):
-    # rows: (component_path, target_path, fp, possible_fps, may_be_missing, version, pending)
+    # rows: (component_path, target_path, fp, may_be_missing, version)
     return spark.createDataFrame(rows, TRACKING_SCHEMA)
 
 
@@ -35,45 +35,46 @@ def test_classification(spark):
     tracked = _tracked(
         spark,
         [
-            ("c/1", "t/1", "fpA", ["fpA"], False, 1, None),
-            ("c/2", "t/2", "fpB", ["fpB"], False, 1, None),
-            ("c/4", "t/4", "fpD", ["fpD"], False, 1, None),  # not declared -> delete
+            ("c/1", "t/1", "fpA", False, 1),
+            ("c/2", "t/2", "fpB", False, 1),
+            ("c/4", "t/4", "fpD", False, 1),  # not declared -> delete
         ],
     )
     acts = _actions(reconcile(desired, tracked))
     assert acts == {"t/1": "noop", "t/2": "update", "t/3": "insert", "t/4": "delete"}
 
 
-def test_multi_possible_states_forces_update(spark):
-    """After an interrupted run, tracking may hold several candidate
-    fingerprints; noop only if ALL match (custom_target_connector.mdx:211)."""
+def test_uncommitted_desired_state_is_insert(spark):
+    """A NULL tracked fp (folded from an interrupted run's intent: the
+    state may be in the target but was never committed) is rewritten
+    as an insert when still desired."""
     desired = _desired(spark, [("c/1", "t/1", "fpA", "v")])
-    tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA", "fpOLD"], False, 1, None)])
-    assert _actions(reconcile(desired, tracked)) == {"t/1": "update"}
+    tracked = _tracked(spark, [("c/1", "t/1", None, True, 1)])
+    assert _actions(reconcile(desired, tracked)) == {"t/1": "insert"}
+
+
+def test_uncommitted_absent_state_is_delete(spark):
+    """A NULL tracked fp no longer desired is deleted from the target."""
+    desired = _desired(spark, [("c/1", "t/1", "fpA", "v")])
+    tracked = _tracked(spark, [("c/1", "t/1", "fpA", False, 1), ("c/2", "t/2", None, True, 1)])
+    assert _actions(reconcile(desired, tracked)) == {"t/1": "noop", "t/2": "delete"}
 
 
 def test_may_be_missing_forces_update(spark):
     desired = _desired(spark, [("c/1", "t/1", "fpA", "v")])
-    tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA"], True, 1, None)])
-    assert _actions(reconcile(desired, tracked)) == {"t/1": "update"}
-
-
-def test_pending_token_forces_update(spark):
-    """A stage marker left by a crashed precommit voids the noop."""
-    desired = _desired(spark, [("c/1", "t/1", "fpA", "v")])
-    tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA"], False, 1, "tok")])
+    tracked = _tracked(spark, [("c/1", "t/1", "fpA", True, 1)])
     assert _actions(reconcile(desired, tracked)) == {"t/1": "update"}
 
 
 def test_full_reprocess(spark):
     desired = _desired(spark, [("c/1", "t/1", "fpA", "v")])
-    tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA"], False, 1, None)])
+    tracked = _tracked(spark, [("c/1", "t/1", "fpA", False, 1)])
     assert _actions(reconcile(desired, tracked, full_reprocess=True)) == {"t/1": "update"}
 
 
 def test_counts(spark):
     desired = _desired(spark, [("c/1", "t/1", "fpA", "v"), ("c/2", "t/2", "fpN", "v")])
-    tracked = _tracked(spark, [("c/1", "t/1", "fpA", ["fpA"], False, 1, None)])
+    tracked = _tracked(spark, [("c/1", "t/1", "fpA", False, 1)])
     counts = reconcile(desired, tracked).counts()
     assert counts == {"insert": 1, "update": 0, "delete": 0, "noop": 1}
 

@@ -238,3 +238,18 @@ def test_file_uri_table_round_trips(spark, tmp_path, monkeypatch):
     assert again.stored_contract() == {"pk": ["k"], "columns": [["k", "string"], ["v", "bigint"]]}
     assert os.path.exists(tmp_path / "t" / "_meta.json")
     assert os.listdir(cwd) == []
+
+
+def test_clear_empties_table_and_removes_versions(spark, tmp_state):
+    """clear() leaves an empty table with no version directory, and the
+    table takes writes afterwards."""
+    t = ManagedTable(os.path.join(tmp_state, "t"), ["k"], _schema())
+    t.merge_upsert(spark.createDataFrame([("a", 1), ("b", 2)], _schema()))
+    t.merge_upsert(spark.createDataFrame([("b", 20)], _schema()))
+    t.clear()
+    assert t.is_empty()
+    assert t.read(spark).count() == 0
+    assert not [d for d in os.listdir(t.path) if d.startswith("v_")]
+
+    t.merge_upsert(spark.createDataFrame([("c", 3)], _schema()))
+    assert _rows(t, spark) == {("c", 3)}
