@@ -32,7 +32,7 @@ Spark-engine shape: transforms are PLAN BUILDERS — their
 ``App.sync_table`` discovers a transform's context reads with one
 plan-construction probe on an empty slice and folds the observed
 fingerprints into the memo identity for the whole sync (every row of
-one sync shares one context snapshot). The single-call ``App.memoize``
+one sync shares one context snapshot). The single-call ``App.call_fn``
 path records reads during execution and stores the fingerprints next
 to the result, validated against the live set on hit — the reference's
 per-entry ``context_memo_states`` shape (execution.rs:124-137).
@@ -195,7 +195,7 @@ def _pop_active() -> None:
 def use_context(key: ContextKey[T] | str, t: type | None = None) -> Any:
     """Read a context value from the enclosing App (reference
     ``coco.use_context``). Valid inside transforms / memoized functions
-    invoked by an App (sync_table, memoize) — the App is the active
+    invoked by an App (sync_table, call_fn) — the App is the active
     provider there. Elsewhere use ``app.use_context(...)``."""
     stack = getattr(_tls, "stack", None)
     if not stack:

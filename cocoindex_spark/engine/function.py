@@ -23,12 +23,14 @@ A decorated transform is a :class:`TrackedFn` carrying:
   the memo-key pipeline, function.mdx `deps`); callables are folded as
   logic deps (their own logic fp) for explicit call-graph edges.
 - ``memo_key`` — per-PARAMETER fingerprint overrides for the
-  single-call memo path (``App.memoize``): map a parameter name to a
+  single-call memo path (``App.call_fn``): map a parameter name to a
   callable (fingerprint its return instead of the argument) or None
   (exclude the parameter entirely) — docs memoization_keys.mdx
   "Override at the call site". Validated at decoration time: unknown
   names raise ValueError, non-callable non-None values raise TypeError.
-- ``memo`` — whether App.sync_table consults the memo table.
+- ``memo`` — whether ``App.call_fn`` stores its result in the memo
+  table (it still looks the call up either way). ``App.sync_table``
+  ignores it: a sync always memoizes its transform's output rows.
 
 Batching is inherent: transforms are DataFrame→DataFrame, so Spark
 already executes them in Arrow batches (the reference's
@@ -243,10 +245,11 @@ class TrackedFn:
         return functools.partial(self.__call__, obj)
 
     def _member_fp(self, scc: set["TrackedFn"]) -> str:
-        """This fn's contribution to its cycle's joint fingerprint:
-        own AST + version + explicit deps + auto call-graph deps
-        EXCLUDING the cycle members themselves (their fps are the
-        thing being computed). External tracked callees therefore
+        """Own AST + version + explicit deps + auto call-graph deps,
+        EXCLUDING the members of ``scc``. With an empty ``scc`` this is
+        the plain (acyclic) logic fp; for a cycle member it is its
+        contribution to the cycle's joint fingerprint (the members' fps
+        are the thing being computed). External tracked callees therefore
         still fold in — editing a tracked helper called by a
         mutually-recursive fn invalidates the whole cycle (the r7
         advisor's finding: the old explicit-deps-only contribution
@@ -289,21 +292,7 @@ class TrackedFn:
                 return f"cycle:{self.__module__}.{self.__qualname__}"
             stack.append(self)
             try:
-                if self._logic_tracking is None:
-                    # untracked: stable across any code edit
-                    raw = fp_value(
-                        ["untracked", self.__module__, self.__qualname__]
-                    )
-                elif self._logic_tracking == "self":
-                    raw = fp_logic(
-                        self.fn, version=self._version, deps=self._dep_fps
-                    )
-                else:
-                    raw = fp_logic(
-                        self.fn,
-                        version=self._version,
-                        deps=self._dep_fps + _auto_dep_fps(self.fn),
-                    )
+                raw = self._member_fp(set())
             finally:
                 stack.pop()
             if self._scc_peers:

@@ -1094,12 +1094,13 @@ def code_views(text: str, language: str) -> list[dict]:
 
 
 def code_views_multilang_df(df, text_col: str, lang_col: str):
-    """``code_views_df`` with PER-ROW language dispatch: one Arrow pass
-    over a mixed-language corpus instead of one filtered pass (and one
-    source scan, and one union branch) per language. Row output is
-    identical — ``code_views(text, lang)`` runs per row either way; a
-    multi-language index sync is where the N-pass shape actually hurt
-    (N scans of the loaded miss frame per sync)."""
+    """One Arrow pass emitting BOTH element and reference rows, with
+    PER-ROW language dispatch: ``code_views(text, lang)`` runs per row,
+    so the corpus is lexed once (not once for elements and once for
+    references) and a mixed-language corpus takes one pass instead of
+    one filtered pass (and one source scan, and one union branch) per
+    language. Columns: every input column, then (cv_row_kind, cv_kind,
+    cv_name, cv_namespace, cv_qualifier, cv_start, cv_end)."""
     from pyspark.sql import functions as F
 
     schema = (
@@ -1129,35 +1130,3 @@ def code_views_multilang_df(df, text_col: str, lang_col: str):
         F.col("__v.end").alias("cv_end"),
     )
 
-
-def code_views_df(df, text_col: str, language: str):
-    """One Arrow pass emitting BOTH element and reference rows —
-    replaces the elements_df + references_df pair when a consumer
-    needs both (the def⋈ref joins): the corpus is lexed once, not
-    twice. Columns (cv_row_kind, cv_kind, cv_name, cv_namespace,
-    cv_qualifier, cv_start, cv_end); split downstream with a filter
-    on cv_row_kind (and localCheckpoint the projected frame so the
-    two branches don't re-run the extraction)."""
-    from pyspark.sql import functions as F
-
-    schema = (
-        "array<struct<row_kind: string, kind: string, name: string, "
-        "namespace: string, qualifier: string, start: long, end: long>>"
-    )
-
-    def run(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [[] if t is None else code_views(t, language) for t in texts]
-        )
-
-    udf = F.pandas_udf(run, schema)
-    return df.withColumn("__v", F.explode(udf(F.col(text_col)))).select(
-        *df.columns,
-        F.col("__v.row_kind").alias("cv_row_kind"),
-        F.col("__v.kind").alias("cv_kind"),
-        F.col("__v.name").alias("cv_name"),
-        F.col("__v.namespace").alias("cv_namespace"),
-        F.col("__v.qualifier").alias("cv_qualifier"),
-        F.col("__v.start").alias("cv_start"),
-        F.col("__v.end").alias("cv_end"),
-    )

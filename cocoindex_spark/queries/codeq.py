@@ -1124,20 +1124,7 @@ def q152_element_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pre-r10 definitions_df join computed at query time), so THIS
     # read plan is a pure parquet scan + filter — zero extraction, no
     # join, no window.
-    def docs(spark, sf_dir):
-        d = table(spark, sf_dir, "documents").select("doc_id")
-        a = (F.col("doc_id") % 4).cast("string")
-        b = (F.col("doc_id") % 5).cast("string")
-        c = (F.col("doc_id") % 3).cast("string")
-        code = F.concat(
-            F.lit("struct S"), a, F.lit(";\nimpl S"), a,
-            F.lit(" {\n    fn m"), b, F.lit("(&self) -> u64 { 1 }\n}\nfn free"),
-            c, F.lit("() -> u64 { 2 }\n// fn fake() {}\n"),
-            F.lit('const X: &str = "fn fake2() {}";\n'),
-        )
-        return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
-
-    views = _served_cv_index(spark, sf_dir, "q152", docs, langs=("rust",)).read(spark)
+    views = _code_views_read(spark, sf_dir, "q152")
     return views.filter(
         (F.col("row_kind") == "element")
         & F.col("kind").isin("struct", "impl", "method", "function")
@@ -1146,6 +1133,20 @@ def q152_element_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("kind").alias("element_kind"),
         F.col("name").alias("name"),
     )
+
+
+def _q152_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select("doc_id")
+    a = (F.col("doc_id") % 4).cast("string")
+    b = (F.col("doc_id") % 5).cast("string")
+    c = (F.col("doc_id") % 3).cast("string")
+    code = F.concat(
+        F.lit("struct S"), a, F.lit(";\nimpl S"), a,
+        F.lit(" {\n    fn m"), b, F.lit("(&self) -> u64 { 1 }\n}\nfn free"),
+        c, F.lit("() -> u64 { 2 }\n// fn fake() {}\n"),
+        F.lit('const X: &str = "fn fake2() {}";\n'),
+    )
+    return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
 
 
 # --- q153: full element views — kind classification (field / constant
@@ -1208,46 +1209,7 @@ def q153_element_namespaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index's element rows ARE elements_df's output (same extractor,
     # namespace stored as `owner`), so the full 3-language element view
     # is a pure parquet scan + filter — zero query-time extraction.
-    def docs(spark, sf_dir):
-        d = table(spark, sf_dir, "documents").select("doc_id")
-        a = (F.col("doc_id") % 5).cast("string")
-        b = (F.col("doc_id") % 4).cast("string")
-        c = (F.col("doc_id") % 7).cast("string")
-        rust = F.concat(
-            F.lit("mod m"), a, F.lit(" {\n    pub struct S"), b,
-            F.lit(" { pub f"), c, F.lit(": u64 }\n    impl S"), b,
-            F.lit(" {\n        const C"), c, F.lit(": u64 = 1;\n        pub fn get"),
-            c, F.lit("(&self) -> u64 { self.f"), c, F.lit(" }\n    }\n}\nconst TOP"),
-            a, F.lit(": u64 = 2;\n// const FAKE: u64 = 3; fn fake() {}\n"),
-        )
-        java = F.concat(
-            F.lit("package com.ex.p"), a, F.lit(";\npublic class K"), b,
-            F.lit(" {\n    private long v"), c,
-            F.lit(";\n    public static final int MAX"), a,
-            F.lit(" = 1;\n    public K"), b, F.lit("(long v) { }\n    public long get"),
-            c, F.lit("() { return v"), c, F.lit("; }\n}\n// class Fake { int x; }\n"),
-        )
-        cs = F.concat(
-            F.lit("namespace Ex.N"), a, F.lit(";\npublic class C"), b,
-            F.lit(" {\n    private int n"), c,
-            F.lit(";\n    public const string TAG"), a,
-            F.lit(' = "const Fake = 1;";\n    public int P'), c,
-            F.lit(" { get; set; }\n    public C"), b,
-            F.lit("(int n) { }\n    public int Get"), c,
-            F.lit("() { return n"), c, F.lit("; }\n}\n"),
-        )
-        m3 = F.col("doc_id") % 3
-        code = F.when(m3 == 0, rust).when(m3 == 1, java).otherwise(cs)
-        lang = (
-            F.when(m3 == 0, F.lit("rust"))
-            .when(m3 == 1, F.lit("java"))
-            .otherwise(F.lit("c_sharp"))
-        )
-        return d.select("doc_id", lang.alias("lang"), code.alias("code"))
-
-    views = _served_cv_index(
-        spark, sf_dir, "q153", docs, langs=("rust", "java", "c_sharp")
-    ).read(spark)
+    views = _code_views_read(spark, sf_dir, "q153")
     return views.filter(F.col("row_kind") == "element").select(
         "doc_id",
         "lang",
@@ -1255,6 +1217,44 @@ def q153_element_namespaces(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("name").alias("el_name"),
         F.col("owner").alias("el_namespace"),
     )
+
+
+def _q153_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select("doc_id")
+    a = (F.col("doc_id") % 5).cast("string")
+    b = (F.col("doc_id") % 4).cast("string")
+    c = (F.col("doc_id") % 7).cast("string")
+    rust = F.concat(
+        F.lit("mod m"), a, F.lit(" {\n    pub struct S"), b,
+        F.lit(" { pub f"), c, F.lit(": u64 }\n    impl S"), b,
+        F.lit(" {\n        const C"), c, F.lit(": u64 = 1;\n        pub fn get"),
+        c, F.lit("(&self) -> u64 { self.f"), c, F.lit(" }\n    }\n}\nconst TOP"),
+        a, F.lit(": u64 = 2;\n// const FAKE: u64 = 3; fn fake() {}\n"),
+    )
+    java = F.concat(
+        F.lit("package com.ex.p"), a, F.lit(";\npublic class K"), b,
+        F.lit(" {\n    private long v"), c,
+        F.lit(";\n    public static final int MAX"), a,
+        F.lit(" = 1;\n    public K"), b, F.lit("(long v) { }\n    public long get"),
+        c, F.lit("() { return v"), c, F.lit("; }\n}\n// class Fake { int x; }\n"),
+    )
+    cs = F.concat(
+        F.lit("namespace Ex.N"), a, F.lit(";\npublic class C"), b,
+        F.lit(" {\n    private int n"), c,
+        F.lit(";\n    public const string TAG"), a,
+        F.lit(' = "const Fake = 1;";\n    public int P'), c,
+        F.lit(" { get; set; }\n    public C"), b,
+        F.lit("(int n) { }\n    public int Get"), c,
+        F.lit("() { return n"), c, F.lit("; }\n}\n"),
+    )
+    m3 = F.col("doc_id") % 3
+    code = F.when(m3 == 0, rust).when(m3 == 1, java).otherwise(cs)
+    lang = (
+        F.when(m3 == 0, F.lit("rust"))
+        .when(m3 == 1, F.lit("java"))
+        .otherwise(F.lit("c_sharp"))
+    )
+    return d.select("doc_id", lang.alias("lang"), code.alias("code"))
 
 
 # --- q154: call-site indegree per definition — the def⋈ref join over
@@ -1286,24 +1286,13 @@ GROUP BY defs.name
 """,
 )
 def q154_callsite_indegree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Served from the engine-synced code-views index (extract-once-
-    # serve-many, core_concepts.mdx:52-54): the first call per
-    # (session, sf) syncs the corpus's element/reference rows into the
-    # probed index; THIS read plan is a pure parquet scan + joins/aggs
-    # — zero extraction (no Python eval nodes), audit-asserted.
-    def docs(spark, sf_dir):
-        d = table(spark, sf_dir, "documents").select("doc_id")
-        a = (F.col("doc_id") % 5).cast("string")
-        b = (F.col("doc_id") % 3).cast("string")
-        code = F.concat(
-            F.lit("fn util"), a, F.lit("() -> u64 { 1 }\nfn run"), b,
-            F.lit("() -> u64 { util"), a, F.lit("() + util"), a,
-            F.lit("() + ext() }\n// fn fake() { util9() }\n"),
-            F.lit('const S: &str = "util8()";\n'),
-        )
-        return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
-
-    views = _served_cv_index(spark, sf_dir, "q154", docs, langs=("rust",)).read(spark)
+    # Served from the engine-synced code_views family index (extract-
+    # once-serve-many, core_concepts.mdx:52-54): the first element-view
+    # query per (session, sf) syncs every member corpus's element/
+    # reference rows into it; THIS read plan is a pure parquet scan of
+    # the q154 slice + joins/aggs — zero extraction (no Python eval
+    # nodes), audit-asserted.
+    views = _code_views_read(spark, sf_dir, "q154")
     defs = views.filter(
         (F.col("row_kind") == "element")
         & F.col("kind").isin("function", "method")
@@ -1325,10 +1314,23 @@ def q154_callsite_indegree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q154_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select("doc_id")
+    a = (F.col("doc_id") % 5).cast("string")
+    b = (F.col("doc_id") % 3).cast("string")
+    code = F.concat(
+        F.lit("fn util"), a, F.lit("() -> u64 { 1 }\nfn run"), b,
+        F.lit("() -> u64 { util"), a, F.lit("() + util"), a,
+        F.lit("() + ext() }\n// fn fake() { util9() }\n"),
+        F.lit('const S: &str = "util8()";\n'),
+    )
+    return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
+
+
 def _q156_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q156/q159 corpus: every doc carries a qualified caller; docs
-    with doc_id % 7 == 0 additionally define `mod srv{b} { fn api{c} }`
-    (b = doc_id % 3, c = doc_id % 4)."""
+    """The q156/q159/q162 rust corpus (doc_id, lang, code): every doc
+    carries a qualified caller; docs with doc_id % 7 == 0 additionally
+    define `mod srv{b} { fn api{c} }` (b = doc_id % 3, c = doc_id % 4)."""
     d = table(spark, sf_dir, "documents").select("doc_id")
     b = (F.col("doc_id") % 3).cast("string")
     c = (F.col("doc_id") % 4).cast("string")
@@ -1342,9 +1344,11 @@ def _q156_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("::api"), c, F.lit("() + local() }\n"),
         F.lit('// srv9::api9()\nstatic S: &str = "srv8::api8()";\n'),
     )
-    return d.withColumn(
-        "code",
-        F.concat(F.when(F.col("doc_id") % 7 == 0, lib).otherwise(F.lit("")), caller),
+    return d.select(
+        "doc_id",
+        F.lit("rust").alias("lang"),
+        F.concat(F.when(F.col("doc_id") % 7 == 0, lib).otherwise(F.lit("")), caller)
+        .alias("code"),
     )
 
 
@@ -1356,9 +1360,9 @@ def _q156_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     equi-join of (qualifier, name) against (declaration namespace,
 #     name) across ALL documents — the real "who calls this module's
 #     function" question. Decoy calls in comments/strings never count
-#     (shared lexer). Scale shape: ONE Arrow extraction (elements and
-#     references share the lex; code_views_df), two aggs over the
-#     checkpointed metadata frame, one equi-join on the bounded
+#     (shared lexer). Scale shape: one scan of the usage_code_views
+#     family index (elements and references were extracted from one
+#     lex at sync time), two aggs, one equi-join on the bounded
 #     (namespace, fn) key space.
 @register(
     "q156_qualified_usage_search",
@@ -1391,14 +1395,7 @@ def q156_qualified_usage_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows and the call-site qualifier chain on reference rows, so both
     # aggregation sides read ONE maintained parquet table — no
     # query-time extraction.
-    def docs(spark, sf_dir):
-        return _q156_docs(spark, sf_dir).select(
-            "doc_id", F.lit("rust").alias("lang"), "code"
-        )
-
-    views = _served_cv_index(
-        spark, sf_dir, "q156", docs, langs=("rust",), probe=True
-    ).read(spark)
+    views = _served_family_index(spark, sf_dir, "usage_code_views").read(spark)
     defs = (
         views.filter(
             (F.col("row_kind") == "element")
@@ -1473,43 +1470,42 @@ def q157_python_swift_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     # python rows come from the same stdlib-ast walk, the swift rows
     # from the same token-stream extractor — a pure index scan + filter
     # replaces both query-time Arrow passes.
-    def docs(spark, sf_dir):
-        d = table(spark, sf_dir, "documents").select("doc_id")
-        a = (F.col("doc_id") % 5).cast("string")
-        b = (F.col("doc_id") % 3).cast("string")
-        c = (F.col("doc_id") % 4).cast("string")
-        py = F.concat(
-            F.lit("class Svc"), b, F.lit(":\n    class In"), c,
-            F.lit(":\n        def m"), c,
-            F.lit("(self):\n            return 1\n\n    def run"), c,
-            F.lit("(self):\n        if True:\n            pass\n        return 2\n\ndef free"),
-            a, F.lit('(x):\n    """def fake(): pass"""\n    return Svc'), b,
-            F.lit("()\n"),
-        )
-        sw = F.concat(
-            F.lit("struct Pt"), b, F.lit(" {\n    var x"), c,
-            F.lit(": Double\n    func norm"), c,
-            F.lit('() -> Double { let t = "var fake2 = 1"; return 1.0 }\n}\n\nextension Pt'),
-            b, F.lit(" {\n    func dbl"), c, F.lit("() -> Double { return helper"),
-            a, F.lit("() }\n}\n\nlet MAX"), a,
-            F.lit(" = 10\n// var fake = 1\n"),
-        )
-        even = F.col("doc_id") % 2 == 0
-        return d.select(
-            "doc_id",
-            F.when(even, F.lit("python")).otherwise(F.lit("swift")).alias("lang"),
-            F.when(even, py).otherwise(sw).alias("code"),
-        )
-
-    views = _served_cv_index(
-        spark, sf_dir, "q157", docs, langs=("python", "swift")
-    ).read(spark)
+    views = _code_views_read(spark, sf_dir, "q157")
     return views.filter(F.col("row_kind") == "element").select(
         "doc_id",
         "lang",
         F.col("kind").alias("el_kind"),
         F.col("name").alias("el_name"),
         F.col("owner").alias("el_namespace"),
+    )
+
+
+def _q157_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select("doc_id")
+    a = (F.col("doc_id") % 5).cast("string")
+    b = (F.col("doc_id") % 3).cast("string")
+    c = (F.col("doc_id") % 4).cast("string")
+    py = F.concat(
+        F.lit("class Svc"), b, F.lit(":\n    class In"), c,
+        F.lit(":\n        def m"), c,
+        F.lit("(self):\n            return 1\n\n    def run"), c,
+        F.lit("(self):\n        if True:\n            pass\n        return 2\n\ndef free"),
+        a, F.lit('(x):\n    """def fake(): pass"""\n    return Svc'), b,
+        F.lit("()\n"),
+    )
+    sw = F.concat(
+        F.lit("struct Pt"), b, F.lit(" {\n    var x"), c,
+        F.lit(": Double\n    func norm"), c,
+        F.lit('() -> Double { let t = "var fake2 = 1"; return 1.0 }\n}\n\nextension Pt'),
+        b, F.lit(" {\n    func dbl"), c, F.lit("() -> Double { return helper"),
+        a, F.lit("() }\n}\n\nlet MAX"), a,
+        F.lit(" = 10\n// var fake = 1\n"),
+    )
+    even = F.col("doc_id") % 2 == 0
+    return d.select(
+        "doc_id",
+        F.when(even, F.lit("python")).otherwise(F.lit("swift")).alias("lang"),
+        F.when(even, py).otherwise(sw).alias("code"),
     )
 
 
@@ -1558,16 +1554,11 @@ FROM ad LEFT JOIN ar ON ad.lang = ar.lang AND ad.ns = ar.ns AND ad.fn = ar.fn
 """,
 )
 def q158_multilang_usage_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def docs(spark, sf_dir):
-        return _q158_docs(spark, sf_dir)
-
     # Served from the engine-synced code-views index (see q154): one
     # maintained parquet table holds all four languages' element +
     # reference rows; the cross-language resolution is joins/aggs over
     # that scan — no query-time extraction.
-    views = _served_cv_index(
-        spark, sf_dir, "q158", docs, langs=("rust", "java", "go", "typescript")
-    ).read(spark)
+    views = _code_views_read(spark, sf_dir, "q158")
     defs = (
         views.filter(
             (F.col("row_kind") == "element")
@@ -1656,56 +1647,19 @@ def _q158_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     types.rs:119-142 Declaration/Reference as the indexed rows; the
 #     reconcile machinery as the index maintainer). The corpus's
 #     element + reference rows are a sync target keyed per document
-#     with __probe=hash(name)%64 partition dirs, so "find usages of
-#     srv1::api2" reads ONLY api2's partition directories (planning-
-#     time file pruning) instead of re-extracting or scanning the
-#     whole index — and a document edit re-syncs exactly its rows
-#     (blast radius 1, pinned in tests/test_usage_index_sync.py).
-#     Value-identical to q156's from-scratch extraction filtered to
-#     the probe target.
+#     with __probe=hash(name)%64 partition dirs (the usage_code_views
+#     family, synced here into a fresh tempdir app so the query pays
+#     its own cold build), so "find usages of srv1::api2" reads ONLY
+#     api2's partition directories (planning-time file pruning)
+#     instead of re-extracting or scanning the whole index — and a
+#     document edit re-syncs exactly its rows (blast radius 1, pinned
+#     in tests/test_usage_index_sync.py). Value-identical to q156's
+#     from-scratch extraction filtered to the probe target.
 
 from cocoindex_spark.engine.function import fn as _coco_fn  # noqa: E402
 from cocoindex_spark.operators.code_elements import (  # noqa: E402
-    code_views_df,
     code_views_multilang_df,
 )
-
-
-@_coco_fn(memo=True)
-def extract_usage_rows(df: DataFrame) -> DataFrame:
-    """Per-doc element+reference rows in index shape: (row_kind, kind,
-    name, owner, start) where owner is the declaration's namespace for
-    elements and the call site's qualifier chain for references — the
-    two sides of the usage-resolution equi-join share one column."""
-    v = code_views_df(df, "code", "rust")
-    return v.select(
-        "__args_fp",
-        "__component_path",
-        "doc_id",
-        F.col("cv_row_kind").alias("row_kind"),
-        F.col("cv_kind").alias("kind"),
-        F.col("cv_name").alias("name"),
-        F.when(F.col("cv_row_kind") == "element", F.col("cv_namespace"))
-        .otherwise(F.col("cv_qualifier"))
-        .alias("owner"),
-        F.col("cv_start").alias("start"),
-    )
-
-
-def sync_usage_index(app, docs: DataFrame):
-    """Sync docs (doc_id, code) into the name-probed usage index;
-    returns (target, stats)."""
-    import os as _os
-
-    target = app.target(
-        _os.path.join(app.state.root, "targets", "usage_idx"),
-        ["doc_id", "row_kind", "kind", "name", "start"],
-        "doc_id LONG, row_kind STRING, kind STRING, name STRING,"
-        " owner STRING, start LONG",
-    )
-    target.declare_index("usage", "code", probe_col="name", probe_buckets=64)
-    stats = app.sync_table(docs, ["doc_id"], extract_usage_rows, target)
-    return target, stats
 
 
 def _q159_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
@@ -1713,7 +1667,7 @@ def _q159_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from cocoindex_spark.state.store import _PROBE_COL
 
     app = App("usageidx", state_dir=root, spark=spark)
-    target, _ = sync_usage_index(app, _q156_docs(spark, sf_dir))
+    target, _ = sync_family(app, "usage_code_views", _q156_docs(spark, sf_dir))
     # seek-shaped usage lookup: only the probed name's __probe dirs
     pids = target.probe_partitions(spark, ["api2"])
     rows = (
@@ -1798,30 +1752,31 @@ def q160_elements_on_corpus_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Served from the engine-synced code-views index (see q154): the
     # lexer's comment/string-exactness work on real corpus prose runs
     # ONCE at sync time; this read plan is a pure index scan + filter.
-    def docs(spark, sf_dir):
-        d = table(spark, sf_dir, "documents").select("doc_id", "text")
-        a = (F.col("doc_id") % 5).cast("string")
-        b = (F.col("doc_id") % 3).cast("string")
-        c = (F.col("doc_id") % 4).cast("string")
-        clean = F.regexp_replace(
-            F.regexp_replace(F.col("text"), r'[\\"]', ""), r"[\r\n]+", " "
-        )
-        code = F.concat(
-            F.lit("mod m"), a, F.lit(" {\n    pub fn f"), b,
-            F.lit("() -> u64 { 1 }\n}\nstatic CORPUS"), c,
-            F.lit(': &str = "'), clean, F.lit('";\n// '), clean,
-            F.lit("\nfn tail"), a, F.lit("() -> u64 { m"), a,
-            F.lit("::f"), b, F.lit("() }\n"),
-        )
-        return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
-
-    views = _served_cv_index(spark, sf_dir, "q160", docs, langs=("rust",)).read(spark)
+    views = _code_views_read(spark, sf_dir, "q160")
     return views.filter(F.col("row_kind") == "element").select(
         "doc_id",
         F.col("kind").alias("el_kind"),
         F.col("name").alias("el_name"),
         F.col("owner").alias("el_namespace"),
     )
+
+
+def _q160_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = table(spark, sf_dir, "documents").select("doc_id", "text")
+    a = (F.col("doc_id") % 5).cast("string")
+    b = (F.col("doc_id") % 3).cast("string")
+    c = (F.col("doc_id") % 4).cast("string")
+    clean = F.regexp_replace(
+        F.regexp_replace(F.col("text"), r'[\\"]', ""), r"[\r\n]+", " "
+    )
+    code = F.concat(
+        F.lit("mod m"), a, F.lit(" {\n    pub fn f"), b,
+        F.lit("() -> u64 { 1 }\n}\nstatic CORPUS"), c,
+        F.lit(': &str = "'), clean, F.lit('";\n// '), clean,
+        F.lit("\nfn tail"), a, F.lit("() -> u64 { m"), a,
+        F.lit("::f"), b, F.lit("() }\n"),
+    )
+    return d.select("doc_id", F.lit("rust").alias("lang"), code.alias("code"))
 
 
 # --- q161: THE corpus code-views index — q159's engine-synced,
@@ -1937,28 +1892,25 @@ def _q161_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cv_rows_for_langs(df: DataFrame, langs: tuple) -> DataFrame:
-    """The extraction body shared by every code-views index: ONE Arrow
-    pass with per-row language dispatch (the pre-r10 shape ran one
-    filtered pass + one source scan + one union branch PER language —
-    pure plan overhead, since the per-row extraction work is identical),
-    projected into the (lang, row_kind, kind, name, owner, start) index
-    shape. ``langs`` bounds the dispatch: rows of other languages are
-    dropped, matching the old per-language filter loop.
+@_coco_fn(memo=True)
+def extract_code_view_rows(df: DataFrame) -> DataFrame:
+    """Per-doc element+reference rows for a MULTI-LANGUAGE corpus: ONE
+    Arrow pass with per-row language dispatch on the `lang` column.
+    Every input column but `code` passes through (so a family corpus's `qtag` rides along), followed
+    by the index shape (row_kind, kind, name, owner, start), where
+    owner is the declaration's namespace for elements and the call
+    site's qualifier chain for references — the two sides of the
+    usage-resolution equi-join share one column (reference
+    types.rs:119-142).
 
-    The extractor import is MODULE-scope (below, code_views_multilang_df)
+    The extractor import is MODULE-scope (above, code_views_multilang_df)
     so _auto_dep_fps folds the actual extraction logic transitively into
-    every tracked caller's logic_fp — an extractor edit invalidates
-    memoized index rows (r10 advisor finding #2; a function-local import
-    was invisible to the dep walk)."""
-    v = code_views_multilang_df(
-        df.filter(F.col("lang").isin(*langs)), "code", "lang"
-    )
+    this fn's logic_fp — an extractor edit invalidates memoized index
+    rows (r10 advisor finding #2; a function-local import was invisible
+    to the dep walk)."""
+    v = code_views_multilang_df(df, "code", "lang")
     return v.select(
-        "__args_fp",
-        "__component_path",
-        "doc_id",
-        "lang",
+        *[c for c in df.columns if c != "code"],
         F.col("cv_row_kind").alias("row_kind"),
         F.col("cv_kind").alias("kind"),
         F.col("cv_name").alias("name"),
@@ -1969,152 +1921,26 @@ def _cv_rows_for_langs(df: DataFrame, langs: tuple) -> DataFrame:
     )
 
 
-@_coco_fn(memo=True)
-def extract_code_view_rows(df: DataFrame) -> DataFrame:
-    """Per-doc element+reference rows for a MULTI-LANGUAGE corpus
-    (`lang` column routes each partition through its language's
-    extractor; one Arrow pass per language, union). Index shape:
-    (lang, row_kind, kind, name, owner, start) where owner is the
-    declaration's namespace for elements and the call site's
-    qualifier chain for references — the two sides of the
-    usage-resolution equi-join share one column (reference
-    types.rs:119-142)."""
-    return _cv_rows_for_langs(df, _CV_LANGS)
-
-
-def cv_extractor(langs: tuple):
-    """``extract_code_view_rows`` restricted to ``langs`` — the same
-    row contract over a corpus that only contains those languages (the
-    full 5-language loop would pay |_CV_LANGS| empty extraction plans
-    per sync). logic_fp folds the language tuple into the shared
-    body's fingerprint, so each corpus's memo rows are keyed by the
-    exact extraction logic that produced them."""
-    langs = tuple(langs)
-    if langs == _CV_LANGS:
-        return extract_code_view_rows
-
-    def extract(df: DataFrame) -> DataFrame:
-        return _cv_rows_for_langs(df, langs)
-
-    from cocoindex_spark.engine.function import _auto_dep_fps
-    from cocoindex_spark.fingerprint import fp_logic, fp_value
-
-    # Fold the shared body's TRANSITIVE deps (the module-scope
-    # code_views_multilang_df chain) so an extractor edit invalidates
-    # these restricted variants too, not just the full-loop one.
-    extract.logic_fp = fp_value(
-        [
-            "cv_extract",
-            fp_logic(_cv_rows_for_langs, deps=_auto_dep_fps(_cv_rows_for_langs)),
-            list(langs),
-        ]
-    )
-    return extract
-
-
-def sync_code_views_index(
-    app, docs: DataFrame, langs: tuple | None = None, probe: bool = True
-):
-    """Sync a multi-language (doc_id, lang, code) corpus into the
-    name-probed code-views index; returns (target, stats). ``langs``
-    restricts extraction to the languages actually present in the
-    corpus (default: the full _CV_LANGS loop). ``probe=False`` skips
-    the name-probe layout: an index consumed ONLY by full-table
-    aggregation reads (q152/q153/q157/q158-style element views) pays
-    |probe_buckets|× the file count for dirs no query ever prunes —
-    at bench scale that was ~1000 tiny files vs 16, a multi-second
-    listing/footer tax on every read AND a write fan-out tax on every
-    sync. Seek-shaped consumers (q162's name probe) keep the layout."""
-    import os as _os
-
-    target = app.target(
-        _os.path.join(app.state.root, "targets", "code_views_idx"),
-        ["doc_id", "row_kind", "kind", "name", "start"],
-        "doc_id LONG, lang STRING, row_kind STRING, kind STRING,"
-        " name STRING, owner STRING, start LONG",
-    )
-    if probe:
-        target.declare_index("usage", "code", probe_col="name", probe_buckets=64)
-    transform = (
-        extract_code_view_rows if langs is None else cv_extractor(tuple(langs))
-    )
-    stats = app.sync_table(docs, ["doc_id"], transform, target)
-    return target, stats
-
-
-# (sf_dir, tag) → wall seconds of the one-time index build sync paid by
-# the first query that touched the tag this session. bench.py reports
-# these as a top-level `sync_sec` dict next to the read mins (the r10
-# verdict's accounting item #2) — additions-only, never folded into the
-# headline total so round-over-round entry semantics stay identical.
-SYNC_SECONDS: dict = {}
-
-_SERVE_CACHE: dict = {}
-_SERVE_LOCK = threading.Lock()
-
-
-def _served_index(spark: SparkSession, sf_dir: str, tag: str, build, config=None):
-    """Build-once-serve-many: ``build(app)`` syncs a corpus into an
-    index target of a fresh App and returns the target, the FIRST time
-    a (session, sf_dir, tag) asks for it; every later call in the
-    process serves straight off the index files. This is the
-    reference's TargetState = Transform(SourceState) contract
-    (core_concepts.mdx:52-54): extraction runs at SYNC time, queries
-    read the maintained target — they never re-run the transform. The
-    engine's reconcile/memo machinery (pipe_* bench phases) is what
-    keeps the index current when the corpus changes; a query over an
-    unchanged corpus is a pure index read. The state lives in a
-    tempdir keyed to the Spark app and removed at exit; nothing
-    persists across bench invocations."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    with _SERVE_LOCK:
-        entry = _SERVE_CACHE.get(key)
-        if entry is None:
-            import atexit
-            import shutil
-            import tempfile
-            import time as _time
-
-            from cocoindex_spark.engine.app import App
-
-            root = tempfile.mkdtemp(prefix=f"svc_{tag}_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            app = App(f"svc_{tag}", state_dir=root, spark=spark)
-            t0 = _time.perf_counter()
-            target = build(app)
-            SYNC_SECONDS[(sf_dir, tag)] = round(_time.perf_counter() - t0, 3)
-            entry = _SERVE_CACHE[key] = (target, config)
-        target, built = entry
-        # A tag is one corpus with one build configuration: a second
-        # caller asking for a different one would silently get the
-        # first build's index (r10 advisor finding #1) — make the
-        # mismatch loud instead.
-        if built != config:
-            raise ValueError(
-                f"served index {tag!r} was built with {built!r}; "
-                f"caller asked for {config!r}"
-            )
-    return target
-
-
-def _served_cv_index(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    docs_fn,
-    langs: tuple | None = None,
-    probe: bool = False,
-):
-    """The code-views index of `docs_fn`'s (doc_id, lang, code) corpus,
-    built once per (session, sf_dir, tag) — see _served_index."""
-
-    def build(app):
-        docs = docs_fn(spark, sf_dir)
-        return sync_code_views_index(app, docs, langs=langs, probe=probe)[0]
-
-    return _served_index(
-        spark, sf_dir, tag, build, config={"langs": langs, "probe": probe}
-    )
+def _code_views_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The code_views-family corpus: (qtag, doc_id, lang, code), each
+    element-view query's own corpus under its qtag, verbatim — the
+    extraction output (and therefore every oracle) is unchanged."""
+    corpora = {
+        "q152": _q152_docs,
+        "q153": _q153_docs,
+        "q154": _q154_docs,
+        "q157": _q157_docs,
+        "q158": _q158_docs,
+        "q160": _q160_docs,
+    }
+    frames = [
+        docs(spark, sf_dir).select(F.lit(qtag).alias("qtag"), "doc_id", "lang", "code")
+        for qtag, docs in corpora.items()
+    ]
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def _q161_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
@@ -2122,7 +1948,7 @@ def _q161_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from cocoindex_spark.state.store import _PROBE_COL
 
     app = App("cvidx", state_dir=root, spark=spark)
-    target, _ = sync_code_views_index(app, _q161_docs(spark, sf_dir))
+    target, _ = sync_family(app, "usage_code_views", _q161_docs(spark, sf_dir))
     # seek-shaped usage lookup across ALL five languages from ONE
     # probe: only the probed names' __probe dirs are read
     names = ["api2", "m1"]
@@ -2202,11 +2028,12 @@ def q161_code_views_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q162: seek-shaped usage probe SERVED from q156's index — the
 #     many-queries-one-index half of extract-once-serve-many
 #     (core_concepts.mdx:52-54). q156 (or whichever query touches the
-#     tag first) pays the one-time sync; THIS query answers "who calls
-#     srv1::api2" by reading ONLY the probed name's __probe partition
-#     dirs of the SAME maintained index — planning-time file pruning,
-#     zero extraction, audit-asserted. Contrast q161, which owns its
-#     own corpus+index: here two registered queries share one target.
+#     usage_code_views family first) pays the one-time sync; THIS
+#     query answers "who calls srv1::api2" by reading ONLY the probed
+#     name's __probe partition dirs of the SAME maintained index —
+#     planning-time file pruning, zero extraction, audit-asserted.
+#     Contrast q161, which syncs its own corpus into a tempdir app:
+#     here two registered queries share one target.
 @register(
     "q162_usage_probe_served",
     oracle="""
@@ -2223,14 +2050,7 @@ FROM d
 def q162_usage_probe_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cocoindex_spark.state.store import _PROBE_COL
 
-    def docs(spark, sf_dir):
-        return _q156_docs(spark, sf_dir).select(
-            "doc_id", F.lit("rust").alias("lang"), "code"
-        )
-
-    target = _served_cv_index(
-        spark, sf_dir, "q156", docs, langs=("rust",), probe=True
-    )
+    target = _served_family_index(spark, sf_dir, "usage_code_views")
     pids = target.probe_partitions(spark, ["api2"])
     rows = (
         target.read_indexed(spark)
@@ -2759,7 +2579,16 @@ def extract_import_rows(df: DataFrame) -> DataFrame:
 
 
 # (family → sync spec): docs builder, extractor, component key cols,
-# target pk, target schema. One engine sync per family per session.
+# target pk, target schema, name-probe layout (None, or (column, bucket
+# count)). One engine sync per family per session. The two code-views
+# families hold the element-view corpora (q152, q153, q154, q157, q158,
+# q160; each query reads its qtag slice whole) and the probed usage
+# corpus (q156/q162 served; q159/q161 sync their own corpora into
+# tempdir apps).
+_CV_SCHEMA = (
+    "lang STRING, row_kind STRING, kind STRING, name STRING,"
+    " owner STRING, start LONG"
+)
 _FAMILY_SPECS = {
     "defs": (
         _defs_docs,
@@ -2768,6 +2597,7 @@ _FAMILY_SPECS = {
         ["qtag", "doc_id", "lang", "def_kind", "def_name", "def_start"],
         "qtag STRING, doc_id LONG, lang STRING, def_kind STRING,"
         " def_name STRING, def_start LONG, def_end LONG",
+        None,
     ),
     "chunks": (
         _chunks_docs,
@@ -2776,6 +2606,7 @@ _FAMILY_SPECS = {
         ["qtag", "doc_id", "chunk_idx"],
         "qtag STRING, doc_id LONG, chunk_idx INT, chunk_md5 STRING,"
         " start_char INT, end_char INT",
+        None,
     ),
     "caps": (
         _caps_docs,
@@ -2783,6 +2614,7 @@ _FAMILY_SPECS = {
         ["qtag", "doc_id"],
         ["qtag", "doc_id", "m_idx"],
         "qtag STRING, doc_id LONG, m_idx INT, c1 STRING, c2 STRING, c3 STRING",
+        None,
     ),
     "imports": (
         _imports_docs,
@@ -2790,26 +2622,93 @@ _FAMILY_SPECS = {
         ["doc_id"],
         ["doc_id", "module", "imp_start"],
         "doc_id LONG, lang STRING, module STRING, imp_start LONG",
+        None,
+    ),
+    "code_views": (
+        _code_views_docs,
+        extract_code_view_rows,
+        ["qtag", "doc_id"],
+        ["qtag", "doc_id", "row_kind", "kind", "name", "start"],
+        "qtag STRING, doc_id LONG, " + _CV_SCHEMA,
+        None,
+    ),
+    "usage_code_views": (
+        _q156_docs,
+        extract_code_view_rows,
+        ["doc_id"],
+        ["doc_id", "row_kind", "kind", "name", "start"],
+        "doc_id LONG, " + _CV_SCHEMA,
+        ("name", 64),
     ),
 }
 
+
+def sync_family(app, family: str, docs: DataFrame):
+    """Sync ``docs`` into ``family``'s index target of ``app``; returns
+    (target, stats). The one builder of every family target, served or
+    built in a query's own tempdir app (q159, q161)."""
+    import os as _os
+
+    _, extract, key_cols, pk, schema, probe = _FAMILY_SPECS[family]
+    target = app.target(
+        _os.path.join(app.state.root, "targets", f"{family}_idx"), pk, schema
+    )
+    if probe is not None:
+        probe_col, buckets = probe
+        target.declare_index("usage", "code", probe_col=probe_col, probe_buckets=buckets)
+    stats = app.sync_table(docs, key_cols, extract, target)
+    return target, stats
+
+
+# (sf_dir, family) → wall seconds of the one-time index build sync paid
+# by the first query that touched the family this session. bench.py
+# reports these as a top-level `sync_sec` dict next to the read mins
+# (the r10 verdict's accounting item #2) — never folded into the
+# headline total so round-over-round entry semantics stay identical.
+SYNC_SECONDS: dict = {}
+
+_SERVE_CACHE: dict = {}
+_SERVE_LOCK = threading.Lock()
+
+
 def _served_family_index(spark: SparkSession, sf_dir: str, family: str):
-    """The index of one extraction family: the first query of the
-    family per (session, sf_dir) pays one engine sync; every later call
-    — any family member, any iteration — is a pure index read (see
-    _served_index)."""
-    docs_fn, extract, key_cols, pk, schema = _FAMILY_SPECS[family]
+    """Build-once-serve-many: the FIRST query of a family per (session,
+    sf_dir) syncs the family's corpus into the index target of a fresh
+    App; every later call in the process — any family member, any
+    iteration — serves straight off the index files. This is the
+    reference's TargetState = Transform(SourceState) contract
+    (core_concepts.mdx:52-54): extraction runs at SYNC time, queries
+    read the maintained target — they never re-run the transform. The
+    engine's reconcile/memo machinery (pipe_* bench phases) is what
+    keeps the index current when the corpus changes; a query over an
+    unchanged corpus is a pure index read. The state lives in a
+    tempdir keyed to the Spark app and removed at exit; nothing
+    persists across bench invocations."""
+    key = (spark.sparkContext.applicationId, sf_dir, family)
+    with _SERVE_LOCK:
+        target = _SERVE_CACHE.get(key)
+        if target is None:
+            import atexit
+            import shutil
+            import tempfile
+            import time as _time
 
-    def build(app):
-        import os as _os
+            from cocoindex_spark.engine.app import App
 
-        target = app.target(
-            _os.path.join(app.state.root, "targets", f"{family}_idx"), pk, schema
-        )
-        app.sync_table(docs_fn(spark, sf_dir), key_cols, extract, target)
-        return target
+            root = tempfile.mkdtemp(prefix=f"svc_{family}_")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            app = App(f"svc_{family}", state_dir=root, spark=spark)
+            t0 = _time.perf_counter()
+            docs = _FAMILY_SPECS[family][0](spark, sf_dir)
+            target, _ = sync_family(app, family, docs)
+            SYNC_SECONDS[(sf_dir, family)] = round(_time.perf_counter() - t0, 3)
+            _SERVE_CACHE[key] = target
+    return target
 
-    return _served_index(spark, sf_dir, family, build)
+
+def _code_views_read(spark: SparkSession, sf_dir: str, qtag: str) -> DataFrame:
+    v = _served_family_index(spark, sf_dir, "code_views").read(spark)
+    return v.filter(F.col("qtag") == qtag)
 
 
 def _defs_read(spark: SparkSession, sf_dir: str, qtag: str) -> DataFrame:

@@ -89,21 +89,14 @@ def test_crash_on_pure_insert_sync_converges(app, spark, tmp_state):
     target.apply = lambda *args: (_ for _ in ()).throw(RuntimeError("boom"))
     with pytest.raises(RuntimeError, match="boom"):
         app.sync_table(src, ["path"], upcase, target)
+    # sync_table joins the memo-flush thread on every exit, so the
+    # crashed run's memo rows are durable before it raises
+    assert app.state.memo.read(spark).count() == 2
     target.apply = real_apply
 
     # tracking commit never ran
     assert app.state.tracking.read(spark).count() == 0
     assert target.read(spark).count() == 0
-
-    # The memo flush rides a helper thread the crash does not join —
-    # wait for it so the recovery deterministically replays (a recovery
-    # BEFORE the flush lands would recompute instead; both converge).
-    import time
-
-    for _ in range(100):
-        if app.state.memo.read(spark).count() >= 2:
-            break
-        time.sleep(0.2)
 
     s = app.sync_table(src, ["path"], upcase, target)
     assert s.inserts == 2

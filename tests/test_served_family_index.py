@@ -1,11 +1,11 @@
-"""The r11 served FAMILY indexes (defs / chunks / captures / imports)
-— one engine sync per row-shape family serving every query of that
-family as a pure parquet read (the q152 extract-once-serve-many recipe
-with per-(qtag, doc) components). Pins:
+"""The served FAMILY indexes (defs / chunks / captures / imports /
+code_views) — one engine sync per row-shape family serving every query
+of that family as a pure parquet read (the extract-once-serve-many
+recipe with per-(qtag, doc) components). Pins:
 
-- row-for-row equality between the family extractors and the pre-r11
-  per-query operator pipelines (definitions_df / explode_chunks /
-  match_code_df / imports_df) for each family member's corpus;
+- row-for-row equality between the family extractors and the per-query
+  operator pipelines (definitions_df / explode_chunks / match_code_df /
+  imports_df / code_views_multilang_df) for each family member's corpus;
 - blast radius: editing one document re-syncs exactly that document's
   components, and only its qtag rows change;
 - the served read plans contain zero Python eval nodes.
@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from cocoindex_spark.engine.app import App
 from cocoindex_spark.queries.codeq import (
-    _FAMILY_SPECS,
     extract_def_rows,
+    sync_family,
 )
 
 
@@ -28,17 +28,6 @@ def app(spark, tmp_state):
     a = App("svc_test", state_dir=tmp_state, spark=spark)
     yield a
     a.drop()
-
-
-def _sync(app, docs, family):
-    import os
-
-    docs_fn, extract, key_cols, pk, schema = _FAMILY_SPECS[family]
-    target = app.target(
-        os.path.join(app.state.root, "targets", f"{family}_idx"), pk, schema
-    )
-    stats = app.sync_table(docs, key_cols, extract, target)
-    return target, stats
 
 
 def test_defs_rows_match_definitions_df(spark, tmp_state):
@@ -58,7 +47,7 @@ def test_defs_rows_match_definitions_df(spark, tmp_state):
         "qtag STRING, doc_id LONG, lang STRING, code STRING",
     )
     app = App("svc_eq", state_dir=tmp_state, spark=spark)
-    target, cold = _sync(app, docs, "defs")
+    target, cold = sync_family(app, "defs", docs)
     assert cold.memo_misses == 4
     got = sorted(
         (r["doc_id"], r["def_kind"], r["def_name"], r["def_start"], r["def_end"])
@@ -88,13 +77,10 @@ def test_family_blast_radius_one_doc(spark, tmp_state):
         "qtag STRING, doc_id LONG, lang STRING, code STRING",
     )
     app = App("svc_blast", state_dir=tmp_state, spark=spark)
-    target, cold = _sync(app, mk("fn f2() -> u64 { 2 }\n"), "defs")
+    target, cold = sync_family(app, "defs", mk("fn f2() -> u64 { 2 }\n"))
     assert cold.memo_misses == 4
 
-    docs_fn, extract, key_cols, pk, schema = _FAMILY_SPECS["defs"]
-    edit = app.sync_table(
-        mk("fn f2edit() -> u64 { 2 }\n"), key_cols, extract, target
-    )
+    _, edit = sync_family(app, "defs", mk("fn f2edit() -> u64 { 2 }\n"))
     assert edit.memo_misses == 1  # blast radius: the one edited component
     rows = {
         (r["qtag"], r["doc_id"], r["def_name"])
@@ -121,7 +107,7 @@ def test_chunk_and_capture_and_import_rows_match_operators(spark, tmp_state):
         [("t", 9, "rust", 70, code)],
         "qtag STRING, doc_id LONG, lang STRING, csize INT, code STRING",
     )
-    target, _ = _sync(app, docs, "chunks")
+    target, _ = sync_family(app, "chunks", docs)
     got = sorted(
         (r["chunk_idx"], r["chunk_md5"], r["start_char"], r["end_char"])
         for r in target.read(spark).collect()
@@ -149,7 +135,7 @@ def test_chunk_and_capture_and_import_rows_match_operators(spark, tmp_state):
         "qtag STRING, doc_id LONG, code STRING",
     )
     app2 = App("svc_ops2", state_dir=tmp_state, spark=spark)
-    tcaps, _ = _sync(app2, cdocs, "caps")
+    tcaps, _ = sync_family(app2, "caps", cdocs)
     got = [
         (r["doc_id"], r["c1"], r["c2"])
         for r in tcaps.read(spark).collect()
@@ -172,7 +158,7 @@ def test_chunk_and_capture_and_import_rows_match_operators(spark, tmp_state):
         ],
         "doc_id LONG, lang STRING, code STRING",
     )
-    timp, _ = _sync(app2, idocs, "imports")
+    timp, _ = sync_family(app2, "imports", idocs)
     got = sorted(
         (r["doc_id"], r["module"]) for r in timp.read(spark).collect()
     )
@@ -198,23 +184,86 @@ def test_extractor_logic_fp_covers_operator_chain():
     assert any(name.startswith("definitions:") for name in deps)
 
 
-def test_served_index_builds_once_and_rejects_config_mismatch(spark):
-    """One build per (session, sf_dir, tag): a repeat call serves the
-    cached target, records one `SYNC_SECONDS` entry, and a caller asking
-    for a different build configuration fails loudly."""
+def test_served_family_index_builds_once(spark, monkeypatch):
+    """One build per (session, sf_dir, family): the first call syncs
+    the family's corpus once and records one `SYNC_SECONDS` entry; a
+    repeat call serves the cached target without building again."""
     from cocoindex_spark.queries import codeq
 
     builds = []
 
-    def build(app):
-        builds.append(app.name)
-        return object()
+    def fake_sync(app, family, docs):
+        builds.append((app.name, family, docs))
+        return object(), None
 
+    monkeypatch.setattr(codeq, "sync_family", fake_sync)
+    monkeypatch.setitem(
+        codeq._FAMILY_SPECS, "famx", (lambda spark, sf_dir: sf_dir,) + (None,) * 5
+    )
     sf_dir = "/served-index-test"
-    cfg = {"langs": ("rust",), "probe": False}
-    first = codeq._served_index(spark, sf_dir, "tagx", build, config=cfg)
-    assert codeq._served_index(spark, sf_dir, "tagx", build, config=dict(cfg)) is first
-    assert builds == ["svc_tagx"]
-    assert (sf_dir, "tagx") in codeq.SYNC_SECONDS
-    with pytest.raises(ValueError, match="was built with"):
-        codeq._served_index(spark, sf_dir, "tagx", build, config={**cfg, "probe": True})
+    first = codeq._served_family_index(spark, sf_dir, "famx")
+    assert codeq._served_family_index(spark, sf_dir, "famx") is first
+    assert builds == [("svc_famx", "famx", sf_dir)]
+    assert (sf_dir, "famx") in codeq.SYNC_SECONDS
+
+
+_CV_ROWS = [
+    ("a", 1, "rust", "mod srv { pub fn api() -> u64 { 1 } }\n"
+        "fn go1() -> u64 { srv::api() }\n// srv::api()\n"),
+    ("a", 2, "java", "public class Svc {\n"
+        "    public static int api() { return 1; }\n"
+        "    public int go2() { return Svc.api(); }\n}\n"),
+    ("b", 1, "python", "class Svc:\n    def api(self):\n        return 1\n"
+        'r = Svc.api()\ns = "Svc.api()"\n'),
+    ("b", 2, "rust", "struct S2;\nimpl S2 {\n    fn m2(&self) -> u64 { 2 }\n}\n"),
+]
+_CV_COLS = ("qtag", "doc_id", "lang", "row_kind", "kind", "name", "owner", "start")
+
+
+def _cv_docs(spark, rows):
+    return spark.createDataFrame(
+        rows, "qtag STRING, doc_id LONG, lang STRING, code STRING"
+    )
+
+
+def test_code_views_rows_match_multilang_operator(spark, tmp_state):
+    """The code_views family's rows for a two-qtag, three-language
+    corpus == code_views_multilang_df on the same frame, with each
+    row's qtag carried through."""
+    from cocoindex_spark.operators.code_elements import code_views_multilang_df
+
+    docs = _cv_docs(spark, _CV_ROWS)
+    app = App("svc_cv_eq", state_dir=tmp_state, spark=spark)
+    target, cold = sync_family(app, "code_views", docs)
+    assert cold.memo_misses == 4
+    got = sorted(tuple(r[c] for c in _CV_COLS) for r in target.read(spark).collect())
+    want = sorted(
+        (r["qtag"], r["doc_id"], r["lang"], r["cv_row_kind"], r["cv_kind"],
+         r["cv_name"],
+         r["cv_namespace"] if r["cv_row_kind"] == "element" else r["cv_qualifier"],
+         r["cv_start"])
+        for r in code_views_multilang_df(docs, "code", "lang").collect()
+    )
+    assert got == want
+    assert {(q, k) for q, _, _, k, *_ in got} == {
+        ("a", "element"), ("a", "reference"), ("b", "element"), ("b", "reference")
+    }
+
+
+def test_code_views_blast_radius_one_qtag_doc(spark, tmp_state):
+    """Editing one (qtag, doc) recomputes exactly that component; rows
+    of every other qtag are untouched."""
+    app = App("svc_cv_blast", state_dir=tmp_state, spark=spark)
+    target, cold = sync_family(app, "code_views", _cv_docs(spark, _CV_ROWS))
+    assert cold.memo_misses == 4
+    before = {tuple(r[c] for c in _CV_COLS) for r in target.read(spark).collect()}
+
+    rows2 = list(_CV_ROWS)
+    rows2[3] = ("b", 2, "rust", "struct S2;\nimpl S2 {\n    fn m2edit(&self) -> u64 { 2 }\n}\n")
+    _, edit = sync_family(app, "code_views", _cv_docs(spark, rows2))
+    assert edit.memo_misses == 1  # blast radius: the one edited component
+    after = {tuple(r[c] for c in _CV_COLS) for r in target.read(spark).collect()}
+    changed = before ^ after
+    assert {(r[0], r[1]) for r in changed} == {("b", 2)}
+    assert {r[5] for r in after - before} == {"m2edit"}
+    assert {r for r in before if r[0] == "a"} == {r for r in after if r[0] == "a"}

@@ -1,8 +1,9 @@
-"""Usage index maintained by the reconcile machinery — element +
-reference rows as a sync target with a name-probe layout (q159; the
-FTS/LSH synced-index pattern applied to code usage search, reference
+"""The probed code-views index (the usage_code_views family behind
+q156/q159/q161/q162) maintained by the reconcile machinery — element +
+reference rows as a sync target with a name-probe layout (the FTS/LSH
+synced-index pattern applied to code usage search, reference
 types.rs:119-142). Pins: edit blast radius 1, stale rows converge,
-probe prunes file I/O, probe answer matches from-scratch extraction."""
+probe prunes file I/O, decoys in comments/strings are never indexed."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cocoindex_spark.engine.app import App
-from cocoindex_spark.queries.codeq import sync_usage_index
 from cocoindex_spark.state.store import _PROBE_COL
 
 
@@ -21,135 +21,10 @@ def app(spark, tmp_state):
     a.drop()
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id LONG, code STRING")
-
-
-def test_usage_index_blast_radius_and_probe(app, spark):
-    from test_probe_layout import files_read
-
-    docs = _docs(
-        spark,
-        [
-            (1, "mod srv { pub fn api() -> u64 { 1 } }\n"),
-            (2, "fn go2() -> u64 { srv::api() + srv::api() }\n"),
-            (3, "fn go3() -> u64 { srv::api() }\n// srv::api()\n"),
-            (4, 'fn other() -> u64 { helper() }\nstatic S: &str = "srv::api()";\n'),
-        ],
-    )
-    target, cold = sync_usage_index(app, docs)
-    assert cold.memo_misses == 4
-
-    pids = target.probe_partitions(spark, ["api"])
-    probed = (
-        target.read_indexed(spark)
-        .filter(F.col(_PROBE_COL).isin(pids))
-        .filter((F.col("name") == "api") & (F.col("owner") == "srv"))
-    )
-    got = probed.groupBy("row_kind").count().collect()
-    counts = {r["row_kind"]: r["count"] for r in got}
-    # one definition; three real call sites (decoys in comment/string
-    # never indexed — the lexer dropped them at sync time)
-    assert counts == {"element": 1, "reference": 3}
-    assert files_read(probed) < files_read(target.read(spark))
-
-    # edit doc 2: one recompute; its rows converge (one call now)
-    docs2 = _docs(
-        spark,
-        [
-            (1, "mod srv { pub fn api() -> u64 { 1 } }\n"),
-            (2, "fn go2() -> u64 { srv::api() }\n"),
-            (3, "fn go3() -> u64 { srv::api() }\n// srv::api()\n"),
-            (4, 'fn other() -> u64 { helper() }\nstatic S: &str = "srv::api()";\n'),
-        ],
-    )
-    _, edit = sync_usage_index(app, docs2)
-    assert edit.memo_misses == 1
-    # re-plan the probe: read() resolves the CURRENT pointer (the old
-    # `probed` frame captured the pre-edit version paths)
-    refs2 = (
-        target.read_indexed(spark)
-        .filter(F.col(_PROBE_COL).isin(pids))
-        .filter(
-            (F.col("name") == "api")
-            & (F.col("owner") == "srv")
-            & (F.col("row_kind") == "reference")
-        )
-    )
-    assert refs2.count() == 2
-    assert {r["doc_id"] for r in refs2.collect()} == {2, 3}
-
-
-def test_usage_index_live_maintenance(app, spark, tmp_state):
-    """The usage index maintained through the LIVE path: a watched-file
-    edit re-syncs exactly the edited document's element/reference rows
-    across micro-batches, and the name probe keeps pruning file I/O —
-    the same generalization test_fts_live_maintenance pins for the FTS
-    postings target."""
-    import os
-
-    from cocoindex_spark.queries.codeq import extract_usage_rows
-    from cocoindex_spark.streaming.live import LiveSync
-    from test_probe_layout import files_read
-
-    target = app.target(
-        f"{tmp_state}/usage_live",
-        ["doc_id", "row_kind", "kind", "name", "start"],
-        "doc_id LONG, row_kind STRING, kind STRING, name STRING,"
-        " owner STRING, start LONG",
-    )
-    target.declare_index("usage", "code", probe_col="name", probe_buckets=64)
-
-    src_dir = os.path.join(tmp_state, "code_src")
-    ckpt = os.path.join(tmp_state, "usage_ckpt")
-    os.makedirs(src_dir)
-    schema = "doc_id LONG, code STRING, offset LONG"
-    spark.createDataFrame(
-        [
-            (1, "mod srv { pub fn api() -> u64 { 1 } }\n", 1),
-            (2, "fn go2() -> u64 { srv::api() + srv::api() }\n", 2),
-            (3, "fn go3() -> u64 { srv::api() }\n", 3),
-        ],
-        schema,
-    ).write.mode("overwrite").parquet(os.path.join(src_dir, "b1"))
-
-    sync = LiveSync(app, ["doc_id"], extract_usage_rows, target, order_cols=["offset"])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    q = sync.start(stream, ckpt, available_now=True)
-    q.awaitTermination(120)
-    assert sync.batch_stats[-1].memo_misses == 3
-
-    # watched edit: doc 2 drops one call site
-    spark.createDataFrame(
-        [(2, "fn go2() -> u64 { srv::api() }\n", 4)], schema
-    ).write.mode("overwrite").parquet(os.path.join(src_dir, "b2"))
-    q2 = sync.start(stream, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    assert sync.batch_stats[-1].memo_misses == 1  # blast radius 1
-
-    pids = target.probe_partitions(spark, ["api"])
-    probed = (
-        target.read_indexed(spark)
-        .filter(F.col(_PROBE_COL).isin(pids))
-        .filter(
-            (F.col("name") == "api")
-            & (F.col("owner") == "srv")
-            & (F.col("row_kind") == "reference")
-        )
-    )
-    assert {(r["doc_id"]) for r in probed.collect()} == {2, 3}
-    assert probed.count() == 2
-    assert files_read(probed) < files_read(target.read(spark))
-
-
-# --- the q159 shape generalized: ONE multi-language corpus code-views
-#     index (q161) — five languages' element/reference rows in one
-#     name-probed target; one probe answers cross-language usage
-#     resolution; a document edit re-syncs exactly its rows.
+# ONE multi-language corpus code-views index (q161's shape) — five
+# languages' element/reference rows in one name-probed target; one
+# probe answers cross-language usage resolution; a document edit
+# re-syncs exactly its rows.
 
 
 def _mdocs(spark, rows):
@@ -169,17 +44,20 @@ _M_ROWS = [
     (5, "python", "class Svc:\n    def api(self):\n        return 1\n"
         "r = Svc.api()\nt = Svc.api()\n"
         's = "Svc.api()"\n# Svc.api()\n'),
+    # rust decoys: a call in a comment, a call in a string literal
+    (6, "rust", "fn go3() -> u64 { srv::api() }\n// srv::api()\n"),
+    (7, "rust", 'fn other() -> u64 { helper() }\nstatic S: &str = "srv::api()";\n'),
 ]
 
 
 def test_code_views_index_multilang_blast_radius_and_probe(app, spark):
     from test_probe_layout import files_read
 
-    from cocoindex_spark.queries.codeq import sync_code_views_index
+    from cocoindex_spark.queries.codeq import sync_family
 
     docs = _mdocs(spark, _M_ROWS)
-    target, cold = sync_code_views_index(app, docs)
-    assert cold.memo_misses == 5
+    target, cold = sync_family(app, "usage_code_views", docs)
+    assert cold.memo_misses == 7
 
     pids = target.probe_partitions(spark, ["api"])
     probed = (
@@ -188,9 +66,9 @@ def test_code_views_index_multilang_blast_radius_and_probe(app, spark):
         .filter((F.col("name") == "api") & (F.col("owner") != ""))
     )
     rows = probed.collect()
-    # one qualified definition per language; references: rust 1,
-    # java 1, go 1, ts 1 (comment decoy dropped), python 2 (string +
-    # comment decoys dropped)
+    # one qualified definition per language; references: rust 2
+    # (comment + string decoys dropped), java 1, go 1, ts 1 (comment
+    # decoy dropped), python 2 (string + comment decoys dropped)
     defs = {(r["lang"], r["owner"]) for r in rows if r["row_kind"] == "element"}
     assert defs == {("rust", "srv"), ("java", "Svc"), ("go", "svc"),
                     ("typescript", "Svc"), ("python", "Svc")}
@@ -198,14 +76,14 @@ def test_code_views_index_multilang_blast_radius_and_probe(app, spark):
     for r in rows:
         if r["row_kind"] == "reference":
             refs[r["lang"]] = refs.get(r["lang"], 0) + 1
-    assert refs == {"rust": 1, "java": 1, "go": 1, "typescript": 1, "python": 2}
+    assert refs == {"rust": 2, "java": 1, "go": 1, "typescript": 1, "python": 2}
     assert files_read(probed) < files_read(target.read(spark))
 
     # edit ONE python doc: exactly one recompute; its rows converge
     rows2 = list(_M_ROWS)
     rows2[4] = (5, "python", "class Svc:\n    def api(self):\n        return 1\n"
                 "r = Svc.api()\n")
-    _, edit = sync_code_views_index(app, _mdocs(spark, rows2))
+    _, edit = sync_family(app, "usage_code_views", _mdocs(spark, rows2))
     assert edit.memo_misses == 1
     probed2 = (
         target.read_indexed(spark)
@@ -223,7 +101,7 @@ def test_code_views_index_live_maintenance(app, spark, tmp_state):
     """The multi-language code-views index maintained through the LIVE
     path: a watched edit to one document re-syncs exactly its rows
     (blast radius 1) across micro-batches, and the name probe keeps
-    pruning file I/O — q159's live test generalized to the q161 target."""
+    pruning file I/O."""
     import os
 
     from test_probe_layout import files_read
@@ -257,7 +135,7 @@ def test_code_views_index_live_maintenance(app, spark, tmp_state):
     )
     q = sync.start(stream, ckpt, available_now=True)
     q.awaitTermination(120)
-    assert sync.batch_stats[-1].memo_misses == 5
+    assert sync.batch_stats[-1].memo_misses == 7
 
     # watched edit: the python doc drops one call site
     spark.createDataFrame(
@@ -278,46 +156,6 @@ def test_code_views_index_live_maintenance(app, spark, tmp_state):
     )
     by_lang = {r["lang"]: r["n"] for r in
                probed.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert by_lang == {"rust": 1, "java": 1, "go": 1, "typescript": 1, "python": 1}
+    assert by_lang == {"rust": 2, "java": 1, "go": 1, "typescript": 1, "python": 1}
     assert files_read(probed) < files_read(target.read(spark))
 
-
-def test_cv_extractor_lang_restriction(app, spark):
-    """r10: cv_extractor(langs) — the language-restricted extractor the
-    served code-view indexes sync with — must produce exactly the full
-    extractor's rows for those languages (same row contract, fewer
-    extraction plans), and its logic_fp must differ per language tuple
-    (memo rows from one restriction can never be replayed by another)."""
-    from cocoindex_spark.queries.codeq import (
-        _CV_LANGS,
-        cv_extractor,
-        extract_code_view_rows,
-        sync_code_views_index,
-    )
-
-    two = cv_extractor(("rust", "java"))
-    assert two.logic_fp != extract_code_view_rows.logic_fp
-    assert cv_extractor(("rust",)).logic_fp != two.logic_fp
-    # the full tuple resolves to THE tracked extractor (shared memo key)
-    assert cv_extractor(_CV_LANGS) is extract_code_view_rows
-
-    docs = _mdocs(spark, [r for r in _M_ROWS if r[1] in ("rust", "java")])
-    target, cold = sync_code_views_index(app, docs, langs=("rust", "java"))
-    assert cold.memo_misses == 2
-    got = {
-        (r["lang"], r["row_kind"], r["kind"], r["name"], r["owner"])
-        for r in target.read(spark).collect()
-    }
-    # full-loop extraction over the same two-language corpus (built on
-    # a literal frame, outside any sync) must agree row-for-row
-    from cocoindex_spark.queries.codeq import _cv_rows_for_langs
-
-    ref = _mdocs(spark, [r for r in _M_ROWS if r[1] in ("rust", "java")])
-    ref = ref.withColumn("__args_fp", F.lit("x")).withColumn(
-        "__component_path", F.lit("y")
-    )
-    want = {
-        (r["lang"], r["row_kind"], r["kind"], r["name"], r["owner"])
-        for r in _cv_rows_for_langs(ref, _CV_LANGS).collect()
-    }
-    assert got == want and got

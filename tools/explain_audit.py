@@ -556,10 +556,12 @@ CHECKS = {
         ],
     ),
     "q154_callsite_indegree": (
-        # served from the build-once code-views index (r9 verdict item
-        # 2): the read plan scans the synced code_views_idx parquet and
-        # aggregates — ZERO query-time extraction (no Python eval)
-        [r"code_views_idx", r"HashAggregate"],
+        # served from the build-once code_views family index (r9 verdict
+        # item 2): the read plan scans the synced code_views_idx parquet
+        # with the qtag filter pushed and aggregates — ZERO query-time
+        # extraction (no Python eval)
+        [r"code_views_idx", r"PushedFilters: \[.*EqualTo\(qtag,q154\)",
+         r"HashAggregate"],
         [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython"],
     ),
     "q156_qualified_usage_search": (
@@ -569,10 +571,12 @@ CHECKS = {
         [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython"],
     ),
     "q158_multilang_usage_resolution": (
-        # served from the build-once code-views index: all four
+        # served from the build-once code_views family index: all four
         # languages' element/reference rows come off ONE maintained
-        # table scan — no per-language re-extraction at query time
-        [r"code_views_idx", r"HashAggregate"],
+        # table scan with the qtag filter pushed — no per-language
+        # re-extraction at query time
+        [r"code_views_idx", r"PushedFilters: \[.*EqualTo\(qtag,q158\)",
+         r"HashAggregate"],
         [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython"],
     ),
     "q162_usage_probe_served": (
@@ -667,37 +671,12 @@ CHECKS = {
         [r"imports_idx", r"HashAggregate"],
         _SERVED_FORBID + [r"Union"],
     ),
-    "q152_element_kinds": (
-        # r10: served from the build-once code-views index — the read
-        # plan is a pure index scan + filter: zero extraction, zero
-        # joins (the pre-r10 containment join ran at sync time inside
-        # the extractor's element classifier)
-        [r"code_views_idx"],
-        [r"CartesianProduct", r"BroadcastNestedLoopJoin", r"Window",
-         r"BatchEvalPython", r"ArrowEvalPython", r"SortMergeJoin",
-         r"ShuffledHashJoin", r"BroadcastHashJoin"],
-    ),
-    "q153_element_namespaces": (
-        # r10: served from the build-once code-views index — pure scan
-        # + filter, no extraction, no join, no shuffle before the sort
-        [r"code_views_idx"],
-        [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython",
-         r"SortMergeJoin", r"ShuffledHashJoin", r"BroadcastHashJoin"],
-    ),
-    "q157_python_swift_elements": (
-        # r10: served from the build-once code-views index (python ast
-        # + swift token extraction both ran at sync time)
-        [r"code_views_idx"],
-        [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython",
-         r"SortMergeJoin", r"ShuffledHashJoin", r"BroadcastHashJoin"],
-    ),
-    "q160_elements_on_corpus_text": (
-        # r10: served from the build-once code-views index (the real-
-        # prose comment/string lexing ran at sync time)
-        [r"code_views_idx"],
-        [r"CartesianProduct", r"BatchEvalPython", r"ArrowEvalPython",
-         r"SortMergeJoin", r"ShuffledHashJoin", r"BroadcastHashJoin"],
-    ),
+    # the element views: pure reads of their qtag slice of the
+    # code_views family index (extraction ran at sync time)
+    "q152_element_kinds": _served("code_views", "q152"),
+    "q153_element_namespaces": _served("code_views", "q153"),
+    "q157_python_swift_elements": _served("code_views", "q157"),
+    "q160_elements_on_corpus_text": _served("code_views", "q160"),
     "q127_quantization_recall": (
         # both rankings ride ONE broadcast of the 10-query panel; the
         # overlap is an equi-join + per-query agg (BNLJ = that bounded

@@ -36,7 +36,7 @@ def one_run(spark, sf_dir: str) -> dict:
     from cocoindex_spark.engine.app import App
     from cocoindex_spark.queries.codeq import (
         _q161_docs,
-        sync_code_views_index,
+        sync_family,
     )
     from cocoindex_spark.state.store import _PROBE_COL
 
@@ -44,7 +44,7 @@ def one_run(spark, sf_dir: str) -> dict:
     try:
         app = App("cvidx", state_dir=root, spark=spark)
         t0 = time.perf_counter()
-        target, _ = sync_code_views_index(app, _q161_docs(spark, sf_dir))
+        target, _ = sync_family(app, "usage_code_views", _q161_docs(spark, sf_dir))
         build = time.perf_counter() - t0
 
         names = ["api2", "m1"]

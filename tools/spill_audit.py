@@ -141,16 +141,11 @@ def main() -> None:
 
     # --- heaviest serve syncs at sf1 (chunks, defs family builds)
     for fam in ("chunks", "defs"):
-        docs_fn, extract, key_cols, pk, schema = codeq._FAMILY_SPECS[fam]
 
-        def run(fam=fam, docs_fn=docs_fn, extract=extract, key_cols=key_cols,
-                pk=pk, schema=schema):
+        def run(fam=fam):
             r = tempfile.mkdtemp(prefix=f"spill_{fam}_")
             a = App(f"spill_{fam}", state_dir=r, spark=spark)
-            t = a.target(
-                os.path.join(a.state.root, "targets", f"{fam}_idx"), pk, schema
-            )
-            a.sync_table(docs_fn(spark, BIG), key_cols, extract, t)
+            codeq.sync_family(a, fam, codeq._FAMILY_SPECS[fam][0](spark, BIG))
             shutil.rmtree(r, ignore_errors=True)
 
         sections.append((f"sync_{fam}_sf1", run))
