@@ -21,7 +21,8 @@ into ``SyncStats.extra["phase_ms"]`` under its own name:
     cheap_level          leftover-intent recovery, target contract, context
                          fold; with cheap_fp_cols the listing's cheap fps
                          vs the source_fp map
-    transform_reconcile  memo lookup, transform over misses, reconcile
+    transform_reconcile  memo lookup, transform over misses, reconcile; a
+                         small change set goes driver-side (below)
     stats_counts         hit/miss counts; memo + source_fp flush thread starts
     sink_apply           intent write, idempotent MERGE into the target
     tracking_commit      tracking rewrite, intent retire, errors side table
@@ -36,6 +37,17 @@ Every step is a distributed DataFrame op — no driver-side loop over
 items — so the same program runs unchanged on a 1000-executor cluster;
 state tables shard by key hash and the memo join is a plain shuffle
 (or broadcast when small).
+
+Delta-sized commits: once transform_reconcile has counted a change set
+that fits ``spark.sql.autoBroadcastJoinThreshold`` (the largest
+relation Spark itself broadcasts to every executor), the change rows,
+the target upsert rows and the memo rows are each computed once and
+pinned on the driver as LocalRelations (``_SyncRun._localize``). Every
+commit write then plans over driver-side frames: its bucket discovery
+runs on the driver with no Spark job, and no write re-reads the
+reconcile's lineage. Cold builds, ``full_reprocess``, no-op syncs and
+larger change sets keep the distributed path, which a session with the
+threshold at -1 forces for every sync.
 """
 
 from __future__ import annotations
@@ -59,7 +71,7 @@ from cocoindex_spark.engine.context import (
 )
 from cocoindex_spark.engine.reconcile import reconcile, tracking_updates
 from cocoindex_spark.fingerprint import fp_col, fp_logic, fp_value
-from cocoindex_spark.session import local_frame
+from cocoindex_spark.session import local_frame, to_local
 from cocoindex_spark.sinks.table import TableTarget
 from cocoindex_spark.state.store import StateStore
 
@@ -727,6 +739,12 @@ _PHASES = (
 )
 
 
+def _cached_bytes(df: DataFrame) -> int:
+    """The in-memory size a materialized cache of ``df`` reports — a
+    driver-side read of the cache's accumulated statistics, no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def _observed_n(obs, df: DataFrame) -> int:
     """The row count an Observation recorded while ``df``'s cache
     materialized — a driver-side read, not a job. When the optimizer
@@ -751,7 +769,11 @@ class _SyncRun:
     on every sync and returns at once when an earlier phase left it
     nothing to do. Phases are action boundaries — lazy plan
     construction costs nothing — so a phase's time is the Spark jobs it
-    ran."""
+    ran. ``local`` says whether the commit phases run over driver-side
+    frames (``_localize``): then ``plan.actions`` holds only the change
+    rows and ``upsert_rows`` the target's upserts, both LocalRelations.
+    Otherwise ``upsert_rows`` is None and sink_apply builds the upserts
+    as a lineage over the reconcile's caches."""
 
     def __init__(
         self, app: App, source, key_cols, transform, target, *,
@@ -776,6 +798,8 @@ class _SyncRun:
         self.logic_fp = getattr(transform, "logic_fp", None) or fp_logic(transform)
         self.prefix = f"{app.name}/{target.name}"
         self.failed_paths = self.flush_thread = self.flush_err = None
+        self.local = False
+        self.upsert_rows: DataFrame | None = None
         self._cached: list[DataFrame] = []
 
     def timed(self, phase: str) -> None:
@@ -1065,6 +1089,34 @@ class _SyncRun:
         self.stats.updates = self.counts["update"]
         self.stats.deletes = self.counts["delete"]
         self.stats.noops = self.counts["noop"]
+        self._localize()
+
+    def _localize(self) -> None:
+        """A small change set becomes driver-side frames, once. The
+        change rows (the non-noop actions) and the target upsert rows
+        are computed by their usual lineage over the reconcile's caches,
+        collected through Arrow and rebuilt as LocalRelations
+        (``session.to_local``); the flush thread does the same for the
+        memo rows. Intent keys, dead keys and tracking updates are
+        projections and filters of the local change rows, so every
+        commit write's bucket discovery runs on the driver and no write
+        re-reads the reconcile's lineage. "Small" is the bytes the
+        materialized caches report (``plan.actions`` scaled to its
+        changed rows, plus ``miss_out``) within
+        ``spark.sql.autoBroadcastJoinThreshold``, the largest relation
+        Spark itself broadcasts to every executor. Cold builds,
+        ``full_reprocess`` and no-op syncs keep the distributed path."""
+        if self.cold_start or self.full_reprocess or not self.changed:
+            return
+        n_changed = self.stats.inserts + self.stats.updates + self.stats.deletes
+        est = _cached_bytes(self.plan.actions) * n_changed // (n_changed + self.stats.noops)
+        est += _cached_bytes(self.miss_out)
+        if not 0 <= est <= self.spark._jconf.autoBroadcastJoinThreshold():
+            return
+        if self.stats.inserts or self.stats.updates:
+            self.upsert_rows = to_local(self._upsert_rows())
+        self.plan.actions = to_local(self.plan.changes())
+        self.local = True
 
     def _isolate_failures(self) -> None:
         """The ``error_col`` contract at component granularity: one
@@ -1241,7 +1293,7 @@ class _SyncRun:
         the join."""
         try:
             if miss_memo is not None:
-                self.state.memo.merge_upsert(miss_memo)
+                self.state.memo.merge_upsert(to_local(miss_memo) if self.local else miss_memo)
             if new_sfp is not None or dead_sfp is not None:
                 self.state.source_fp.merge_apply(new_sfp, dead_sfp)
         except BaseException as e:
@@ -1265,7 +1317,9 @@ class _SyncRun:
         self.state.intent.overwrite(
             self.plan.changes().select("component_path", "target_path")
         )
-        upsert_rows = self._upsert_rows() if self.stats.inserts or self.stats.updates else None
+        upsert_rows = self.upsert_rows
+        if upsert_rows is None and (self.stats.inserts or self.stats.updates):
+            upsert_rows = self._upsert_rows()
         dead_keys = self._dead_keys() if self.stats.deletes else None
         self.target.apply(upsert_rows, dead_keys, self.version)
 
@@ -1340,11 +1394,14 @@ class _SyncRun:
         claimed = actions.filter(F.col("action").isin("insert", "update")).select(
             F.col("target_path").alias("__tp")
         )
-        dead = (
-            actions.filter(F.col("action") == "delete")
-            .select(F.col("target_path").alias("__tp"))
-            .join(claimed, "__tp", "left_anti")
+        dead = actions.filter(F.col("action") == "delete").select(
+            F.col("target_path").alias("__tp")
         )
+        # Driver-local change rows are checked on the driver (no job):
+        # the anti-join, a Spark job even between local frames, runs
+        # only when a deleted path really is re-declared.
+        if not self.local or {r[0] for r in dead.collect()} & {r[0] for r in claimed.collect()}:
+            dead = dead.join(claimed, "__tp", "left_anti")
         # pk values parse back from the dead paths whenever the parse
         # round-trips exactly (the path encoding IS name/pk1/pk2/... —
         # a value that would make the parse ambiguous already collides

@@ -20,6 +20,14 @@ driver-sized probe costs Spark jobs. An Arrow table instead becomes a
 an empty one outright (PropagateEmptyRelation). The Arrow path does not
 read ``spark.sql.execution.arrow.pyspark.enabled``, so it behaves the
 same on a vanilla session.
+
+:func:`to_local` turns a computed frame into such a ``LocalRelation``
+(one Arrow collect, rebuilt under the frame's own schema so every type
+round-trips exactly), and :func:`is_local` tells whether a frame's
+optimized plan is one. A small sync's change set goes local once after
+its reconcile; projections and filters of it then stay local, so the
+commit's bucket discovery (``ManagedTable.touched_buckets``) runs on the
+driver.
 """
 
 from __future__ import annotations
@@ -100,6 +108,19 @@ def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
     else:
         table = to_arrow_schema(schema, prefers_large_types=large).empty_table()
     return spark.createDataFrame(table, schema)
+
+
+def to_local(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a driver-side ``LocalRelation``: one collect
+    through Arrow, rebuilt under ``df``'s schema."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def is_local(df: DataFrame) -> bool:
+    """True iff ``df`` optimizes to a ``LocalRelation``: its rows are on
+    the driver and collecting it runs no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict:

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from cocoindex_spark.session import local_frame
+from cocoindex_spark.session import is_local, local_frame
 
 _POINTER = "_CURRENT"
 _KEEP_UNREFERENCED = 2
@@ -390,12 +390,16 @@ class ManagedTable:
         several phase writes off one key set compute this once and pass
         it to merge_upsert / merge_apply / the scoped read — the ids
         MUST cover every key later merged, or unscoped buckets would
-        swap to a version missing their current rows."""
+        swap to a version missing their current rows. Driver-local keys
+        (a projection or filter of a ``LocalRelation``) are hashed and
+        deduplicated on the driver with no Spark job; other keys pay a
+        ``distinct`` (two jobs under AQE)."""
         n = self._meta()[0]
-        rows = (
-            keys.select(self._bucket_expr(n).alias(_BUCKET_COL)).distinct().collect()
-        )  # bounded by n_buckets — a constant, never data-sized
-        return [r[_BUCKET_COL] for r in rows]
+        ids = keys.select(self._bucket_expr(n).alias(_BUCKET_COL))
+        if not is_local(ids):
+            ids = ids.distinct()
+        # bounded by n_buckets — a constant, never data-sized
+        return sorted({r[_BUCKET_COL] for r in ids.collect()})
 
     def merge_upsert(self, updates: DataFrame, touched: list[int] | None = None) -> None:
         """Idempotent MERGE of ``updates`` alone (see merge_apply)."""
@@ -421,17 +425,23 @@ class ManagedTable:
 
         ``touched`` optionally carries precomputed bucket ids (when the
         same key set drives several phase writes); they must cover the
-        keys of BOTH channels. Without it, one discovery job runs over
-        the union of the keys. Both channels are cached for the
-        duration: their lineage is evaluated twice (bucket discovery +
+        keys of BOTH channels. Without it, bucket discovery runs over
+        the keys of both channels: on the driver when every channel is
+        driver-local (``session.is_local``), else as one discovery job
+        over their union. A distributed channel is cached for the
+        duration: its lineage is evaluated twice (bucket discovery +
         version write) and may read this very table's current version —
-        caching pins the pre-swap snapshot."""
+        caching pins the pre-swap snapshot. A driver-local channel skips
+        the cache: its rows are already on the driver, so its lineage
+        cannot read the table being written."""
         if updates is None and deletes is None:
             return
         if updates is not None:
             updates = updates.select(*[f.name for f in self.schema.fields])
         if deletes is not None:
-            deletes = deletes.select(self.key_cols).distinct()
+            deletes = deletes.select(self.key_cols)
+            if not is_local(deletes):
+                deletes = deletes.distinct()
         if self.is_empty():
             # Empty table: the MERGE degenerates to a plain write of the
             # updates less the delete channel — no current rows to keep,
@@ -445,23 +455,31 @@ class ManagedTable:
                     updates = updates.join(deletes, self.key_cols, "left_anti")
                 self.overwrite(updates, n_buckets=self._meta()[0])
             return
-        if updates is not None:
-            updates = updates.cache()
-        if deletes is not None:
-            deletes = deletes.cache()
+        cached: list[DataFrame] = []
+
+        def pin(df: DataFrame | None) -> DataFrame | None:
+            if df is None or is_local(df):
+                return df
+            cached.append(df.cache())
+            return cached[-1]
+
+        updates, deletes = pin(updates), pin(deletes)
         try:
-            if updates is None:
-                keys = gone = deletes
-            else:
-                keys = updates.select(self.key_cols)
-                if deletes is not None:
-                    keys = keys.unionByName(deletes)
-                gone = keys.distinct()
+            key_sets = [df.select(self.key_cols) for df in (updates, deletes) if df is not None]
+            keys = key_sets[0] if len(key_sets) == 1 else key_sets[0].unionByName(key_sets[1])
             if touched is None:
-                touched = self.touched_buckets(keys)
+                if cached:
+                    touched = self.touched_buckets(keys)
+                else:
+                    touched = sorted({b for k in key_sets for b in self.touched_buckets(k)})
             if not touched:
                 return
             spark = (updates if updates is not None else deletes).sparkSession
+            # The anti-join needs no dedup; a distributed key set with
+            # upserts is deduplicated to shrink what the join ships (the
+            # delete channel alone already is), a driver-local one is not
+            # (that would cost a job).
+            gone = keys.distinct() if cached and updates is not None else keys
             merged = self.read(spark, touched).join(gone, self.key_cols, "left_anti")
             if updates is not None:
                 live = (
@@ -472,9 +490,8 @@ class ManagedTable:
                 merged = merged.unionByName(live)
             self._merge_into_buckets(touched, merged)
         finally:
-            for df in (updates, deletes):
-                if df is not None:
-                    df.unpersist()
+            for df in cached:
+                df.unpersist()
 
 
 def _schema(*fields: tuple) -> StructType:

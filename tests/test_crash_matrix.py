@@ -28,6 +28,11 @@ memo and source_fp rows, versions aside), so each distinct
 crash state is re-run once (the prepared state's re-run is the
 reference run), and each distinct re-run end state gets one third
 sync. Cases run on a few threads: every case has its own state root.
+
+Every protocol but ``cold`` is small, so it commits over driver-side
+frames (``_SyncRun._localize``); the distributed commit path is crashed
+too, with the non-cold protocols re-run on a session whose
+``spark.sql.autoBroadcastJoinThreshold`` is -1.
 """
 
 from __future__ import annotations
@@ -206,8 +211,21 @@ def _each(fn, items):
 
 
 def test_crash_matrix(spark, tmp_path, monkeypatch):
+    _crash_matrix(spark, tmp_path, monkeypatch, PROTOCOLS, local=True)
+
+
+def test_crash_matrix_distributed_commit(spark, tmp_path, monkeypatch):
+    distributed = spark.newSession()
+    distributed.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    protocols = {name: p for name, p in PROTOCOLS.items() if name != "cold"}
+    _crash_matrix(distributed, tmp_path, monkeypatch, protocols, local=False)
+
+
+def _crash_matrix(spark, tmp_path, monkeypatch, protocols, local):
+    """Every crash point of each of ``protocols``, re-run to convergence;
+    every non-cold sync takes the driver-local commit iff ``local``."""
     hooks = _Hooks(monkeypatch)
-    befores = {repr(before): before for before, _ in PROTOCOLS.values()}
+    befores = {repr(before): before for before, _ in protocols.values()}
     prep = {key: f"{tmp_path}/prep{i}" for i, key in enumerate(befores)}
 
     def prepare(key):
@@ -216,7 +234,7 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
             _sync(app, spark, target, spec)
 
     _each(prepare, list(prep))
-    start = {name: prep[repr(before)] for name, (before, _) in PROTOCOLS.items()}
+    start = {name: prep[repr(before)] for name, (before, _) in protocols.items()}
 
     def reference(name):
         root = f"{tmp_path}/{name}/ref"
@@ -224,6 +242,7 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
         hooks.copies[root] = {}
         app, target = _open(spark, root)
         stats = _sync(app, spark, target, PROTOCOLS[name][1])
+        assert hooks._runs[root].local == (local and name != "cold"), name
         crashes = hooks.copies.pop(root)
         assert set(_PHASES) <= set(crashes), name
         assert {"swap:target#1", "swap:tracking#1", "swap:intent#1", "swap:intent#2"} <= set(
@@ -231,7 +250,7 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
         ), name
         return name, stats, _snapshot(app, spark, target), crashes
 
-    refs = {name: (stats, want, crashes) for name, stats, want, crashes in _each(reference, PROTOCOLS)}
+    refs = {name: (stats, want, crashes) for name, stats, want, crashes in _each(reference, protocols)}
 
     def crash_flush_thread(case):
         name, point = case
@@ -244,12 +263,12 @@ def test_crash_matrix(spark, tmp_path, monkeypatch):
         assert root not in hooks.crash, case
         refs[name][2][point] = root
 
-    _each(crash_flush_thread, [(n, p) for n, points in THREAD_POINTS.items() for p in points])
+    _each(crash_flush_thread, [(n, p) for n, points in THREAD_POINTS.items() if n in protocols for p in points])
 
     # One re-run per distinct crash state of each protocol.
     cases = [(n, p, root) for n, (_, _, crashes) in refs.items() for p, root in crashes.items()]
     states = _each(lambda case: _durable_state(spark, case[2]), cases)
-    checked = {(n, _durable_state(spark, start[n])) for n in PROTOCOLS}
+    checked = {(n, _durable_state(spark, start[n])) for n in protocols}
     reruns = []
     for case, state in zip(cases, states):
         if (case[0], state) not in checked:
