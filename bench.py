@@ -113,8 +113,8 @@ HEADLINE = [
     "q95_cube_revenue",
     "q96_shared_sql_topspenders",
     # round-4 additions. q99_pair_relation_read is deliberately NOT
-    # benched: it runs a full engine sync (a pipe_cold twin) whose cost
-    # the pipe_* phases already measure.
+    # benched: its serve sync is a pipe_cold twin whose cost the pipe_*
+    # phases already measure.
     "q97_shared_sql_doc_quality",
     "q98_brace_definitions",
     "q100_brace_chunks",
@@ -153,17 +153,18 @@ HEADLINE = [
     "q133_markdown_chunks",
     "q134_rust_captures",
     # q135/q136/q137 are deliberately NOT benched for the same reason
-    # as q99: each runs a full engine sync (a pipe_cold twin over the
-    # whole corpus) whose cost the pipe_* phases already measure; the
-    # query-side rollup/top-k they add is sub-second.
+    # as q99: each serves an index built by a full engine sync (a
+    # pipe_cold twin over the whole corpus) whose cost the pipe_* phases
+    # already measure; the query-side rollup/top-k they add is sub-second.
     "q138_containment_match",
     "q139_gopher_rules",
     "q140_unigram_surprisal",
     "q141_copurchase_recs",
     "q142_session_search",
-    # q144/q145 are NOT benched: like q99/q135-q137 each runs a full
-    # engine sync per call (a pipe_cold twin the pipe_* phases already
-    # measure); their query sides are sub-second once the table exists.
+    # q144/q145 are NOT benched: like q99/q135-q137 each pays a full
+    # engine sync (q144 once per session, q145 per call; a pipe_cold
+    # twin the pipe_* phases already measure); their query sides are
+    # sub-second once the table exists.
     "q143_balanced_epoch_sample",
     "q146_shingle_containment",
     "q147_cdc_chunk_dedup",
@@ -431,7 +432,7 @@ def main() -> None:
     # tag first. Reported as a SEPARATE top-level dict (like phase_ms):
     # folding them into `queries` would inflate the headline total and
     # break round-over-round entry semantics (additions-only rule).
-    from cocoindex_spark.queries.codeq import SYNC_SECONDS
+    from cocoindex_spark.queries.registry import SYNC_SECONDS
 
     sync_sec = {
         tag: sec for (sfd, tag), sec in sorted(SYNC_SECONDS.items())

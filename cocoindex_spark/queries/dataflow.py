@@ -25,6 +25,7 @@ from cocoindex_spark.operators.vector_ops import (
     sql_sign_bucket,
 )
 from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.session import local_frame
 
 
 # --- q60: THE core operator — reconcile join (declared ⋈ tracked →
@@ -495,8 +496,8 @@ def q145_context_memo_invalidation(spark: SparkSession, sf_dir: str) -> DataFram
         run("p6_state_refresh", 2, "conn-B", mtime=2, content=5)  # cheap-valid
         run("p7_state_invalid", 2, "conn-B", mtime=3, content=9)  # content edit
         run("p8_state_back", 2, "conn-B", mtime=4, content=5)  # new generation
-        return spark.createDataFrame(
-            rows, "phase STRING, memo_misses LONG, inserts LONG, updates LONG"
+        return local_frame(
+            spark, rows, "phase STRING, memo_misses LONG, inserts LONG, updates LONG"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

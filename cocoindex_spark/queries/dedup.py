@@ -24,7 +24,7 @@ from cocoindex_spark.operators.text_ops import (
     sql_simhash16,
     sql_words,
 )
-from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.queries.registry import register, served, table
 
 MINHASH_K = 8  # signature length
 MINHASH_BANDS = 2  # 2 bands × 4 rows
@@ -669,24 +669,16 @@ def _simhash_index(df: DataFrame) -> DataFrame:
 
 @register("q99_pair_relation_read", oracle=_WIDE_PAIRS_ORACLE)
 def q99_pair_relation_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from cocoindex_spark.engine.app import App
-
-    root = tempfile.mkdtemp(prefix="pair_idx_")
-    try:
-        app = App("pair_idx", state_dir=root, spark=spark)
+    def build(app):
         target = app.target(
-            f"{root}/simhash_idx", ["doc_id"], "doc_id LONG, simhash LONG"
+            f"{app.state.root}/simhash_idx", ["doc_id"], "doc_id LONG, simhash LONG"
         )
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         app.sync_table(d, ["doc_id"], _simhash_index, target)
-        idx = target.read(spark).select("doc_id", "simhash")
-        # Materialize before the temp state dir is removed.
-        return _band_pairs(idx).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return target
+
+    idx = served(spark, sf_dir, "simhash", build).read(spark)
+    return _band_pairs(idx.select("doc_id", "simhash"))
 
 
 # --- q89: cross-source near-dup overlap matrix — which SOURCES

@@ -19,7 +19,8 @@ from cocoindex_spark.operators.fts import (
     sql_tokens,
     tokens_col,
 )
-from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.queries.registry import register, served, table
+from cocoindex_spark.session import local_frame
 
 
 # --- q75: BM25 top-20 over the documents corpus, query = doc 0's
@@ -173,14 +174,39 @@ def sync_fts_index(app, docs: DataFrame):
     return target, stats
 
 
-def _q155_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    from cocoindex_spark.engine.app import App
+@register(
+    "q155_fts_synced_bm25",
+    oracle=f"""
+WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id <> 0),
+postings AS (
+  SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
+  FROM (SELECT doc_id, UNNEST({sql_tokens("text")}) AS term FROM corpus)
+  GROUP BY term, doc_id
+),
+doclens AS (
+  SELECT doc_id, CAST(len({sql_tokens("text")}) AS BIGINT) AS dl FROM corpus
+),
+qt AS (
+  SELECT DISTINCT UNNEST({sql_tokens("text")}) AS term
+  FROM documents WHERE doc_id = 0
+),
+scored AS ({sql_bm25("doc_id")})
+SELECT doc_id, bm25_int FROM scored
+ORDER BY bm25_int DESC, doc_id ASC
+LIMIT 20
+""",
+)
+def q155_fts_synced_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cocoindex_spark.operators.fts import _BM25_SCALE
     from cocoindex_spark.state.store import _PROBE_COL
 
-    app = App("ftsindex", state_dir=root, spark=spark)
     d = table(spark, sf_dir, "documents")
-    target, _ = sync_fts_index(app, d.filter(F.col("doc_id") != 0).select("doc_id", "text"))
+
+    def build(app):
+        target, _ = sync_fts_index(app, d.filter(F.col("doc_id") != 0).select("doc_id", "text"))
+        return target, app.get_state("__fts__", "corpus_stats")
+
+    target, (n_docs, sum_dl) = served(spark, sf_dir, "fts", build)
     qterms = [
         r["term"]
         for r in d.filter(F.col("doc_id") == 0)
@@ -189,8 +215,7 @@ def _q155_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
         .collect()  # bounded: one query's terms
     ]
     if not qterms:
-        return spark.createDataFrame([], "doc_id LONG, bm25_int LONG")
-    n_docs, sum_dl = app.get_state("__fts__", "corpus_stats")
+        return local_frame(spark, [], "doc_id LONG, bm25_int LONG")
     # seek-shaped candidate scan: only the query terms' __probe dirs
     pids = target.probe_partitions(spark, qterms)
     qp = (
@@ -218,36 +243,3 @@ def _q155_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
         .orderBy(F.desc("bm25_int"), F.asc("doc_id"))
         .limit(20)
     )
-
-
-@register(
-    "q155_fts_synced_bm25",
-    oracle=f"""
-WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id <> 0),
-postings AS (
-  SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, UNNEST({sql_tokens("text")}) AS term FROM corpus)
-  GROUP BY term, doc_id
-),
-doclens AS (
-  SELECT doc_id, CAST(len({sql_tokens("text")}) AS BIGINT) AS dl FROM corpus
-),
-qt AS (
-  SELECT DISTINCT UNNEST({sql_tokens("text")}) AS term
-  FROM documents WHERE doc_id = 0
-),
-scored AS ({sql_bm25("doc_id")})
-SELECT doc_id, bm25_int FROM scored
-ORDER BY bm25_int DESC, doc_id ASC
-LIMIT 20
-""",
-)
-def q155_fts_synced_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="fts_index_")
-    try:
-        return _q155_probe(spark, sf_dir, root).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

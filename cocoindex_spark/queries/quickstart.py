@@ -16,8 +16,6 @@ the candidate set is the bucket's members, never the corpus.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +29,8 @@ from cocoindex_spark.operators.vector_ops import (
     sql_sign_bucket,
     sqnorm_fixed,
 )
-from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.queries.registry import register, served, table
+from cocoindex_spark.session import local_frame
 from cocoindex_spark.state.store import _PROBE_COL
 
 CHUNK = 32
@@ -134,49 +133,6 @@ _SQL_CHUNKS = f"""
 """
 
 
-def _q137_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    from cocoindex_spark.engine.app import App
-
-    app = App("quickstart", state_dir=root, spark=spark)
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    target, _ = sync_quickstart_table(app, docs)
-    # probe row: one PK lookup (bounded collect — the "query
-    # embedding" a real caller would supply)
-    probe_rows = (
-        target.read(spark)
-        .filter((F.col("doc_id") == 0) & (F.col("chunk_idx") == 0))
-        .withColumn("sqn", sqnorm_fixed(F.col("embedding")))
-        .filter(F.col("sqn") > 0)
-        .select("embedding", "bucket", "sqn")
-        .collect()
-    )
-    if not probe_rows:
-        return spark.createDataFrame([], "doc_id LONG, chunk_idx LONG, sim DOUBLE")
-    qe, qb, qsqn = probe_rows[0]
-    # candidate scan: statically partition-pruned on the probe's
-    # bucket — reads only the __probe=hash(qb) files of the index
-    pids = target.probe_partitions(spark, [int(qb)])
-    probe_df = spark.createDataFrame([(qe, int(qsqn))], "qe ARRAY<FLOAT>, qsqn LONG")
-    return (
-        target.read_indexed(spark)
-        .filter(F.col(_PROBE_COL).isin(pids))
-        .filter(F.col("bucket") == int(qb))
-        .withColumn("sqn", sqnorm_fixed(F.col("embedding")))
-        .filter(F.col("sqn") > 0)
-        .crossJoin(F.broadcast(probe_df))
-        .select(
-            "doc_id",
-            "chunk_idx",
-            (
-                dot_fixed(F.col("embedding"), F.col("qe")).cast("double")
-                / F.sqrt(F.col("sqn").cast("double") * F.col("qsqn").cast("double"))
-            ).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("doc_id"), F.asc("chunk_idx"))
-        .limit(3)
-    )
-
-
 @register(
     "q137_quickstart_topk",
     oracle=f"""
@@ -202,8 +158,42 @@ LIMIT 3
 """,
 )
 def q137_quickstart_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = tempfile.mkdtemp(prefix="quickstart_")
-    try:
-        return _q137_probe(spark, sf_dir, root).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    target = served(
+        spark, sf_dir, "quickstart", lambda app: sync_quickstart_table(app, docs)[0]
+    )
+    # probe row: one PK lookup (bounded collect — the "query
+    # embedding" a real caller would supply)
+    probe_rows = (
+        target.read(spark)
+        .filter((F.col("doc_id") == 0) & (F.col("chunk_idx") == 0))
+        .withColumn("sqn", sqnorm_fixed(F.col("embedding")))
+        .filter(F.col("sqn") > 0)
+        .select("embedding", "bucket", "sqn")
+        .collect()
+    )
+    if not probe_rows:
+        return local_frame(spark, [], "doc_id LONG, chunk_idx LONG, sim DOUBLE")
+    qe, qb, qsqn = probe_rows[0]
+    # candidate scan: statically partition-pruned on the probe's
+    # bucket — reads only the __probe=hash(qb) files of the index
+    pids = target.probe_partitions(spark, [int(qb)])
+    probe_df = local_frame(spark, [(qe, int(qsqn))], "qe ARRAY<FLOAT>, qsqn LONG")
+    return (
+        target.read_indexed(spark)
+        .filter(F.col(_PROBE_COL).isin(pids))
+        .filter(F.col("bucket") == int(qb))
+        .withColumn("sqn", sqnorm_fixed(F.col("embedding")))
+        .filter(F.col("sqn") > 0)
+        .crossJoin(F.broadcast(probe_df))
+        .select(
+            "doc_id",
+            "chunk_idx",
+            (
+                dot_fixed(F.col("embedding"), F.col("qe")).cast("double")
+                / F.sqrt(F.col("sqn").cast("double") * F.col("qsqn").cast("double"))
+            ).alias("sim"),
+        )
+        .orderBy(F.desc("sim"), F.asc("doc_id"), F.asc("chunk_idx"))
+        .limit(3)
+    )

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -149,3 +150,42 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # with UTC set above this is the identity on the epoch value.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# (sf_dir, tag) → wall seconds of the one-time sync that built a served
+# index, paid by the first query that touched the tag this session.
+# bench.py reports these as a top-level `sync_sec` dict next to the read
+# mins, never folded into the headline total.
+SYNC_SECONDS: dict = {}
+
+_SERVE_CACHE: dict = {}
+_SERVE_LOCK = threading.Lock()
+
+
+def served(spark: SparkSession, sf_dir: str, tag: str, build: Callable):
+    """Build-once-serve-many: the first call per (Spark app, sf_dir, tag)
+    runs ``build(app)`` on a fresh ``App`` whose state lives in a tempdir
+    removed at exit, times it into ``SYNC_SECONDS`` and caches what it
+    returns (the synced target, plus whatever the query reads next to
+    it); every later call returns the cached value without syncing.
+    This is the TargetState = Transform(SourceState) contract
+    (core_concepts.mdx:52-54): the transform runs at sync time and
+    queries read the maintained target. The lock is not re-entrant, so
+    ``build`` must not call ``served``."""
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    with _SERVE_LOCK:
+        if key not in _SERVE_CACHE:
+            import atexit
+            import shutil
+            import tempfile
+            import time
+
+            from cocoindex_spark.engine.app import App
+
+            root = tempfile.mkdtemp(prefix=f"svc_{tag}_")
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            app = App(f"svc_{tag}", state_dir=root, spark=spark)
+            t0 = time.perf_counter()
+            _SERVE_CACHE[key] = build(app)
+            SYNC_SECONDS[(sf_dir, tag)] = round(time.perf_counter() - t0, 3)
+        return _SERVE_CACHE[key]

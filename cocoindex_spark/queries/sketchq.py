@@ -36,7 +36,7 @@ from cocoindex_spark.operators.sketch import (
     sql_hll_estimate_from_regs,
     sql_hll_registers,
 )
-from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.queries.registry import register, served, table
 
 _TOKENS_SQL = (
     "(SELECT source, UNNEST(string_split(trim(text), ' ')) AS tok FROM documents)"
@@ -419,54 +419,6 @@ def _cm_contrib(df: DataFrame) -> DataFrame:
     )
 
 
-def _synced_sketch(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
-    """Sync the per-doc contribution table into a temp engine target
-    and return the GLOBAL sketch rolled up from it (localCheckpointed:
-    the returned frame outlives the temp state dir)."""
-    import shutil
-    import tempfile
-
-    from cocoindex_spark.engine.app import App
-
-    root = tempfile.mkdtemp(prefix=f"{which}_sketch_idx_")
-    try:
-        app = App(f"{which}_idx", state_dir=root, spark=spark)
-        d = table(spark, sf_dir, "documents")
-        if which == "hll":
-            t = app.target(
-                f"{root}/hllidx",
-                ["doc_id"],
-                "doc_id LONG, source STRING,"
-                " regs ARRAY<STRUCT<j BIGINT, rho BIGINT>>",
-            )
-            app.sync_table(
-                d.select("doc_id", "source", "text"), ["doc_id"], _hll_contrib, t
-            )
-            rolled = (
-                t.read(spark)
-                .select("source", F.explode("regs").alias("r"))
-                .groupBy("source", F.col("r.j").alias("j"))
-                .agg(F.max("r.rho").alias("M"))
-            )
-        else:
-            t = app.target(
-                f"{root}/cmidx",
-                ["doc_id"],
-                "doc_id LONG,"
-                " cells ARRAY<STRUCT<row INT, cell BIGINT, n BIGINT>>",
-            )
-            app.sync_table(d.select("doc_id", "text"), ["doc_id"], _cm_contrib, t)
-            rolled = (
-                t.read(spark)
-                .select(F.explode("cells").alias("c"))
-                .groupBy(F.col("c.row").alias("row"), F.col("c.cell").alias("cell"))
-                .agg(F.sum("c.n").alias("n"))
-            )
-        return rolled.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 @register(
     "q135_hll_sketch_read",
     oracle=f"""
@@ -480,9 +432,29 @@ FROM exact e JOIN hll h ON e.source = h.source
 """,
 )
 def q135_hll_sketch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    regs = _synced_sketch(spark, sf_dir, "hll")
-    est = hll_estimate(regs, ["source"])
     d = table(spark, sf_dir, "documents")
+
+    def build(app):
+        t = app.target(
+            f"{app.state.root}/hllidx",
+            ["doc_id"],
+            "doc_id LONG, source STRING, regs ARRAY<STRUCT<j BIGINT, rho BIGINT>>",
+        )
+        app.sync_table(
+            d.select("doc_id", "source", "text"), ["doc_id"], _hll_contrib, t
+        )
+        return t
+
+    # the GLOBAL per-source registers, rolled up from the served
+    # per-doc contribution table
+    regs = (
+        served(spark, sf_dir, "hll", build)
+        .read(spark)
+        .select("source", F.explode("regs").alias("r"))
+        .groupBy("source", F.col("r.j").alias("j"))
+        .agg(F.max("r.rho").alias("M"))
+    )
+    est = hll_estimate(regs, ["source"])
     toks = d.select(
         "source", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
     )
@@ -491,6 +463,26 @@ def q135_hll_sketch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return exact.join(est, "source").select(
         "source", "exact_distinct", "hll_estimate"
+    )
+
+
+@_coco_fn(memo=True)
+def _cm_contrib_rows(df: DataFrame) -> DataFrame:
+    """One row per (doc, row, cell) CM contribution — the exploded twin
+    of _cm_contrib, keyed for the cell-probed storage layout (same-cell
+    token collisions within a doc pre-sum here, so the target pk is
+    unique)."""
+    c = _cm_contrib(df)
+    return (
+        c.select(
+            "__args_fp", "__component_path", "doc_id",
+            F.explode("cells").alias("c"),
+        )
+        .groupBy(
+            "__args_fp", "__component_path", "doc_id",
+            F.col("c.row").alias("row"), F.col("c.cell").alias("cell"),
+        )
+        .agg(F.sum("c.n").cast("long").alias("n"))
     )
 
 
@@ -515,37 +507,6 @@ FROM top t JOIN est e ON t.tok = e.tok
 """,
 )
 def q136_cm_sketch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="cm_sketch_idx_")
-    try:
-        return _q136_probe(spark, sf_dir, root).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@_coco_fn(memo=True)
-def _cm_contrib_rows(df: DataFrame) -> DataFrame:
-    """One row per (doc, row, cell) CM contribution — the exploded twin
-    of _cm_contrib, keyed for the cell-probed storage layout (same-cell
-    token collisions within a doc pre-sum here, so the target pk is
-    unique)."""
-    c = _cm_contrib(df)
-    return (
-        c.select(
-            "__args_fp", "__component_path", "doc_id",
-            F.explode("cells").alias("c"),
-        )
-        .groupBy(
-            "__args_fp", "__component_path", "doc_id",
-            F.col("c.row").alias("row"), F.col("c.cell").alias("cell"),
-        )
-        .agg(F.sum("c.n").cast("long").alias("n"))
-    )
-
-
-def _q136_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Seek-shaped CM point lookup over an engine-synced, CELL-probed
     contribution table (the q155-FTS treatment applied to sketch
     reads): the target is one row per (doc, row, cell) with a
@@ -555,19 +516,22 @@ def _q136_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     MIN. Cell-identical to the full-rollup path (every contribution to
     a probed cell lives in that cell's directories), so the oracle is
     unchanged."""
-    from cocoindex_spark.engine.app import App
     from cocoindex_spark.operators.sketch import cm_probe_cells
     from cocoindex_spark.state.store import _PROBE_COL
 
-    app = App("cm_idx", state_dir=root, spark=spark)
     d = table(spark, sf_dir, "documents")
-    t = app.target(
-        f"{root}/cmidx",
-        ["doc_id", "row", "cell"],
-        "doc_id LONG, row INT, cell BIGINT, n LONG",
-    )
-    t.declare_index("cm", "text", probe_col="cell", probe_buckets=64)
-    app.sync_table(d.select("doc_id", "text"), ["doc_id"], _cm_contrib_rows, t)
+
+    def build(app):
+        t = app.target(
+            f"{app.state.root}/cmidx",
+            ["doc_id", "row", "cell"],
+            "doc_id LONG, row INT, cell BIGINT, n LONG",
+        )
+        t.declare_index("cm", "text", probe_col="cell", probe_buckets=64)
+        app.sync_table(d.select("doc_id", "text"), ["doc_id"], _cm_contrib_rows, t)
+        return t
+
+    t = served(spark, sf_dir, "cm", build)
     toks = d.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"))
     top = (
         toks.groupBy("tok")

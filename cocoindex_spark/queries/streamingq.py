@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cocoindex_spark.queries.registry import register, table
+from cocoindex_spark.queries.registry import register, served, table
+from cocoindex_spark.session import local_frame
 from cocoindex_spark.state.store import _PROBE_COL
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -750,7 +751,7 @@ def sessionize_and_embed(df: DataFrame) -> DataFrame:
 
 def sync_session_index(app, events: DataFrame):
     """Sync the per-session embedding index from the raw event stream;
-    returns (target, stats). Shared by q144 and the audit helper."""
+    returns (target, stats). Shared by q144 and the tests."""
     import os
 
     target = app.target(
@@ -774,12 +775,14 @@ def sync_session_index(app, events: DataFrame):
     return target, stats
 
 
-def _q144_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    from cocoindex_spark.engine.app import App
+@register("q144_session_search_indexed", oracle=_Q142_ORACLE)
+def q144_session_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cocoindex_spark.operators.vector_ops import dot_fixed, sqnorm_fixed
 
-    app = App("session_index", state_dir=root, spark=spark)
-    target, _ = sync_session_index(app, table(spark, sf_dir, "events"))
+    events = table(spark, sf_dir, "events")
+    target = served(
+        spark, sf_dir, "sessions", lambda app: sync_session_index(app, events)[0]
+    )
     # probe row: one PK lookup (bounded collect — a real caller's
     # query session)
     probe_rows = (
@@ -791,14 +794,15 @@ def _q144_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
         .collect()
     )
     if not probe_rows:
-        return spark.createDataFrame([], "user_id LONG, session_id LONG, sim DOUBLE")
+        return local_frame(spark, [], "user_id LONG, session_id LONG, sim DOUBLE")
     qe, qb, qsqn = probe_rows[0]
     # hamming-1 multiprobe: the probe's bucket plus each 1-bit flip — a
     # bounded (SS_BITS+1)-value list; its probe-partition ids statically
     # prune the index scan to the matching __probe directories
     multiprobe = [int(qb) ^ m for m in [0] + [1 << j for j in range(SS_BITS)]]
     pids = target.probe_partitions(spark, multiprobe)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(pb, qe, int(qsqn)) for pb in multiprobe],
         "pb INT, qe ARRAY<FLOAT>, qsqn LONG",
     )
@@ -824,15 +828,3 @@ def _q144_probe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
         .orderBy(F.desc("sim"), F.asc("user_id"), F.asc("session_id"))
         .limit(5)
     )
-
-
-@register("q144_session_search_indexed", oracle=_Q142_ORACLE)
-def q144_session_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="session_index_")
-    try:
-        return _q144_probe(spark, sf_dir, root).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

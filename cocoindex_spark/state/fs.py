@@ -96,8 +96,14 @@ class HadoopFS:
 
     def read_text(self, path: str) -> str | None:
         fs, jvm = self._get()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        if not fs.exists(p):
+        # While write_atomic swaps the pointer, ``path`` is briefly gone
+        # and ``path.tmp`` holds the complete new text; the second look
+        # at ``path`` covers a swap that finishes between the first two.
+        for name in (path, path + ".tmp", path):
+            p = jvm.org.apache.hadoop.fs.Path(name)
+            if fs.exists(p):
+                break
+        else:
             return None
         # Py4J passes byte[] arguments by value — a Java-side
         # stream.read(buf) fills only the JVM copy, so the bytes must be
@@ -110,17 +116,32 @@ class HadoopFS:
             stream.close()
 
     def write_atomic(self, path: str, text: str) -> None:
+        """Hadoop's public rename does not overwrite, so the swap deletes
+        ``path`` before renaming ``path.tmp`` onto it. ``path.tmp`` only
+        ever holds a complete text (it is written as ``path.part``
+        first), so ``read_text`` can fall back to it in between, and the
+        next write finishes a swap that was cut there."""
         fs, jvm = self._get()
+        part = jvm.org.apache.hadoop.fs.Path(path + ".part")
         tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
         dst = jvm.org.apache.hadoop.fs.Path(path)
-        stream = fs.create(tmp, True)
+        stream = fs.create(part, True)
         try:
             stream.write(bytearray(text.encode("utf-8")))
         finally:
             stream.close()
-        if fs.exists(dst):
-            fs.delete(dst, False)
-        fs.rename(tmp, dst)
+        if fs.exists(tmp):
+            if fs.exists(dst):
+                fs.delete(tmp, False)  # a write cut before its swap began
+            else:
+                self._rename(tmp, dst)
+        self._rename(part, tmp)
+        fs.delete(dst, False)
+        self._rename(tmp, dst)
+
+    def _rename(self, src, dst) -> None:
+        if not self._get()[0].rename(src, dst):
+            raise OSError(f"rename {src} -> {dst} failed")
 
     def listdir(self, path: str) -> list[str]:
         fs, jvm = self._get()

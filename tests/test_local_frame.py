@@ -1,7 +1,7 @@
 """Driver-built frames (session.local_frame): the Arrow LocalRelation
 path returns exactly what ``createDataFrame(<python list>)`` returns,
 probe routing runs on the driver with no Spark job, and no module
-outside ``queries/`` builds a frame from Python rows any other way.
+builds a frame from Python rows any other way.
 The same source walk keeps environment reads in ``session.py``."""
 
 from __future__ import annotations
@@ -113,14 +113,11 @@ def test_probe_partitions_of_no_values_touches_no_spark(tmp_state):
     assert target.probe_partitions(None, []) == []  # no session to touch
 
 
-def _offending_lines(exempt, skip_dir, match):
+def _offending_lines(exempt, match):
     """``file:line`` of every AST node under ``cocoindex_spark/`` that
-    ``match`` accepts, outside the ``exempt`` files and the top-level
-    ``skip_dir`` package."""
+    ``match`` accepts, outside the ``exempt`` files."""
     offenders = []
     for dirpath, _dirs, files in os.walk(PKG):
-        if os.path.relpath(dirpath, PKG).split(os.sep)[0] == skip_dir:
-            continue
         for name in files:
             path = os.path.join(dirpath, name)
             if not name.endswith(".py") or os.path.relpath(path, PKG) in exempt:
@@ -137,11 +134,10 @@ def _offending_lines(exempt, skip_dir, match):
 
 def test_no_create_data_frame_outside_helper():
     """Driver rows go through ``local_frame``; an RDD becomes a frame
-    with ``rdd.toDF(schema)``. Only the helper itself and the oracle
-    queries (``queries/``) call ``createDataFrame``."""
+    with ``rdd.toDF(schema)``. Only the helpers in ``session.py`` call
+    ``createDataFrame``."""
     assert _offending_lines(
         {"session.py"},
-        "queries",
         lambda node: isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "createDataFrame",
@@ -158,7 +154,6 @@ def test_no_foreach_partition_in_wire_sinks():
     }
     offenders = _offending_lines(
         set(),
-        None,
         lambda node: isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "foreachPartition",
@@ -173,7 +168,6 @@ def test_no_environment_reads_outside_session():
     names = {"environ", "getenv"}
     assert _offending_lines(
         {"session.py"},
-        None,
         lambda node: (isinstance(node, ast.Attribute) and node.attr in names)
         or (
             isinstance(node, ast.ImportFrom)

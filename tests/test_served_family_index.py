@@ -8,7 +8,9 @@ recipe with per-(qtag, doc) components). Pins:
   imports_df / code_views_multilang_df) for each family member's corpus;
 - blast radius: editing one document re-syncs exactly that document's
   components, and only its qtag rows change;
-- the served read plans contain zero Python eval nodes.
+- the served read plans contain zero Python eval nodes;
+- ``registry.served`` syncs once per (session, sf_dir, tag): a repeat
+  call of any served query runs no sync.
 """
 
 from __future__ import annotations
@@ -185,12 +187,25 @@ def test_extractor_logic_fp_covers_operator_chain():
 
 
 def test_served_family_index_builds_once(spark, monkeypatch):
-    """One build per (session, sf_dir, family): the first call syncs
-    the family's corpus once and records one `SYNC_SECONDS` entry; a
-    repeat call serves the cached target without building again."""
-    from cocoindex_spark.queries import codeq
+    """One build per (session, sf_dir, tag): the first `served` call runs
+    `build` on a fresh `svc_<tag>` App and records one `SYNC_SECONDS`
+    entry; a repeat call returns the cached value without building
+    again. A family index is served through the same cache."""
+    from cocoindex_spark.queries import codeq, registry
 
+    monkeypatch.setattr(registry, "_SERVE_CACHE", {})
+    monkeypatch.setattr(registry, "SYNC_SECONDS", {})
     builds = []
+
+    def build(app):
+        builds.append(app.name)
+        return object()
+
+    sf_dir = "/served-index-test"
+    first = registry.served(spark, sf_dir, "tagx", build)
+    assert registry.served(spark, sf_dir, "tagx", build) is first
+    assert builds == ["svc_tagx"]
+    assert list(registry.SYNC_SECONDS) == [(sf_dir, "tagx")]
 
     def fake_sync(app, family, docs):
         builds.append((app.name, family, docs))
@@ -200,11 +215,50 @@ def test_served_family_index_builds_once(spark, monkeypatch):
     monkeypatch.setitem(
         codeq._FAMILY_SPECS, "famx", (lambda spark, sf_dir: sf_dir,) + (None,) * 5
     )
-    sf_dir = "/served-index-test"
-    first = codeq._served_family_index(spark, sf_dir, "famx")
-    assert codeq._served_family_index(spark, sf_dir, "famx") is first
-    assert builds == [("svc_famx", "famx", sf_dir)]
-    assert (sf_dir, "famx") in codeq.SYNC_SECONDS
+    target = codeq._served_family_index(spark, sf_dir, "famx")
+    assert codeq._served_family_index(spark, sf_dir, "famx") is target
+    assert builds[1:] == [("svc_famx", "famx", sf_dir)]
+    assert (sf_dir, "famx") in registry.SYNC_SECONDS
+
+
+# (query, the serve tag of the index it reads) for the served queries
+# outside the code-view family reads.
+_SERVED_QUERIES = [
+    ("q99_pair_relation_read", "simhash"),
+    ("q135_hll_sketch_read", "hll"),
+    ("q136_cm_sketch_read", "cm"),
+    ("q137_quickstart_topk", "quickstart"),
+    ("q144_session_search_indexed", "sessions"),
+    ("q155_fts_synced_bm25", "fts"),
+    ("q159_usage_index_probe", "usage_code_views"),
+    ("q161_code_views_index_probe", "corpus_code_views"),
+]
+
+
+@pytest.mark.parametrize("name,tag", _SERVED_QUERIES)
+def test_served_query_syncs_once_per_session(spark, monkeypatch, name, tag):
+    """A repeat call of a served query in one session reads the index
+    the first call synced: no `App.sync_table` call, and the tag's one
+    `SYNC_SECONDS` entry is left as it was."""
+    from cocoindex_spark.queries import all_queries
+    from cocoindex_spark.queries.registry import SYNC_SECONDS
+    from tests.conftest import SF_SMOKE
+
+    query = all_queries()[name]
+    query(spark, SF_SMOKE)
+    synced = SYNC_SECONDS[(SF_SMOKE, tag)]
+    calls = []
+    sync_table = App.sync_table
+
+    def counted(self, *args, **kwargs):
+        calls.append(self.name)
+        return sync_table(self, *args, **kwargs)
+
+    monkeypatch.setattr(App, "sync_table", counted)
+    assert query(spark, SF_SMOKE).collect()
+    assert calls == []
+    assert [k for k in SYNC_SECONDS if k[1] == tag] == [(SF_SMOKE, tag)]
+    assert SYNC_SECONDS[(SF_SMOKE, tag)] == synced
 
 
 _CV_ROWS = [

@@ -14,6 +14,7 @@ from cocoindex_spark.queries.registry import table
 from cocoindex_spark.queries.streamingq import (
     SS_BITS,
     q142_session_search,
+    q144_session_search_indexed,
     sync_session_index,
 )
 from tests.conftest import SF_SMOKE
@@ -71,15 +72,13 @@ def test_session_index_incremental_per_user(app, spark):
     assert idx.filter(F.col("user_id") == 2).count() == 2
 
 
-def test_session_index_probe_matches_brute_force(spark, tmp_state):
+def test_session_index_probe_matches_brute_force(spark):
     """The bucket-pruned probe is result-identical to q142's brute
     force at the smoke scale — and the containment argument behind it
     (true top-5 ⊆ the probe's own bucket ⊆ the hamming-1 multiprobe
     set) holds, which is what CORRECTNESS checks at sf0.01 too."""
-    from cocoindex_spark.queries.streamingq import _q144_probe
-
     brute = [tuple(r) for r in q142_session_search(spark, SF_SMOKE).collect()]
-    pruned = [tuple(r) for r in _q144_probe(spark, SF_SMOKE, tmp_state).collect()]
+    pruned = [tuple(r) for r in q144_session_search_indexed(spark, SF_SMOKE).collect()]
     assert pruned == brute
 
 

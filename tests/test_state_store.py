@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql.types import StructType
 
 from cocoindex_spark.state.store import ManagedTable
@@ -85,6 +86,54 @@ def test_hadoop_fs_roundtrip(spark, tmp_state):
     assert fs.total_bytes(root) == len(payload) + 1
     fs.rmtree(os.path.join(root, "v_1"))
     assert fs.listdir(root) == ["_CURRENT"]
+
+
+def test_hadoop_fs_pointer_survives_a_cut_swap(spark, tmp_state, monkeypatch):
+    """A pointer swap cut between deleting the old pointer and renaming
+    the new one in leaves only ``_CURRENT.tmp``: read_text returns the
+    new text there (None would read as an empty table, which the next
+    merge would overwrite with only its own rows), and the next write
+    finishes the swap. A rename that returns false raises."""
+    from cocoindex_spark.state.fs import HadoopFS
+
+    root = os.path.join(tmp_state, "hfs")
+    fs = HadoopFS(f"file://{root}")
+    fs.makedirs(root)
+    ptr = os.path.join(root, "_CURRENT")
+    fs.write_atomic(ptr, "old")
+
+    rename = HadoopFS._rename
+
+    def crash_onto_pointer(self, src, dst):
+        if dst.getName() == "_CURRENT":
+            raise RuntimeError("crash")
+        rename(self, src, dst)
+
+    monkeypatch.setattr(HadoopFS, "_rename", crash_onto_pointer)
+    with pytest.raises(RuntimeError):
+        fs.write_atomic(ptr, "new")
+    assert not os.path.exists(ptr)
+    assert fs.read_text(ptr) == "new"
+
+    monkeypatch.setattr(HadoopFS, "_rename", rename)
+    fs.write_atomic(ptr, "newer")
+    assert fs.read_text(ptr) == "newer"
+    assert fs.listdir(root) == ["_CURRENT"]
+
+    class RenameFails:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def rename(self, src, dst):
+            return False
+
+    fs._fs = RenameFails(fs._fs)
+    with pytest.raises(OSError):
+        fs.write_atomic(ptr, "lost")
+    assert fs.read_text(ptr) == "newer"
 
 
 def test_adaptive_bucket_growth(spark, tmp_state):

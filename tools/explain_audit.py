@@ -791,43 +791,6 @@ def main() -> None:
 
     queries["q76_simhash_wide_pairs"] = _compute_wide_pairs
 
-    # q144 registers the checkpointed probe result (its temp state dir
-    # is cleaned up before return); audit the live probe plan against a
-    # tool-lifetime state dir instead.
-    import tempfile
-
-    from cocoindex_spark.queries.streamingq import _q144_probe
-
-    _q144_root = tempfile.mkdtemp(prefix="audit_sessidx_")
-    queries["q144_session_search_indexed"] = lambda s, d: _q144_probe(s, d, _q144_root)
-
-    # q137 likewise returns a checkpointed result; audit the live
-    # probe plan (partition pruning on the index's __probe dirs).
-    from cocoindex_spark.queries.quickstart import _q137_probe
-
-    _q137_root = tempfile.mkdtemp(prefix="audit_quickstart_")
-    queries["q137_quickstart_topk"] = lambda s, d: _q137_probe(s, d, _q137_root)
-
-    from cocoindex_spark.queries.ftsq import _q155_probe
-
-    _q155_root = tempfile.mkdtemp(prefix="audit_ftsidx_")
-    queries["q155_fts_synced_bm25"] = lambda s, d: _q155_probe(s, d, _q155_root)
-
-    from cocoindex_spark.queries.sketchq import _q136_probe
-
-    _q136_root = tempfile.mkdtemp(prefix="audit_cmidx_")
-    queries["q136_cm_sketch_read"] = lambda s, d: _q136_probe(s, d, _q136_root)
-
-    from cocoindex_spark.queries.codeq import _q159_probe
-
-    _q159_root = tempfile.mkdtemp(prefix="audit_usageidx_")
-    queries["q159_usage_index_probe"] = lambda s, d: _q159_probe(s, d, _q159_root)
-
-    from cocoindex_spark.queries.codeq import _q161_probe
-
-    _q161_root = tempfile.mkdtemp(prefix="audit_cvidx_")
-    queries["q161_code_views_index_probe"] = lambda s, d: _q161_probe(s, d, _q161_root)
-
     failures = 0
     for name, (must, must_not) in CHECKS.items():
         plan = queries[name](spark, sf_dir)._jdf.queryExecution().explainString(

@@ -56,8 +56,9 @@ PROBE_QUERIES = [
     "q162_usage_probe_served",
     "q157_python_swift_elements",
     "q158_multilang_usage_resolution",
-    # r9: the corpus code-views index — sync (extraction + probe-layout
-    # write) dominates; the probe read itself is file-pruned
+    # r9: the corpus code-views index — its served sync (extraction +
+    # probe-layout write) lands in the first iteration, the min is the
+    # file-pruned probe read
     "q161_code_views_index_probe",
     # r11: one member per served FAMILY index (defs/chunks/caps/imports)
     # — the first named query of a family pays that family's one-time
