@@ -34,7 +34,8 @@ invocations and all-noop reconcile; single-item edit ⇒ exactly that
 item recomputed; deleted item ⇒ its target rows deleted.
 
 Every step is a distributed DataFrame op — no driver-side loop over
-items — so the same program runs unchanged on a 1000-executor cluster;
+items, but over a batch the driver already holds (below) — so the same
+program runs unchanged on a 1000-executor cluster;
 state tables shard by key hash and the memo join is a plain shuffle
 (or broadcast when small).
 
@@ -48,6 +49,20 @@ runs on the driver with no Spark job, and no write re-reads the
 reconcile's lineage. Cold builds, ``full_reprocess``, no-op syncs and
 larger change sets keep the distributed path, which a session with the
 threshold at -1 forces for every sync.
+
+Driver-side reconcile inputs: a non-cold sync whose source is already
+on the driver (``session.is_local``: a FileWatcher batch, a ``LiveMap``,
+any ``local_frame``) and whose session broadcasts at all (threshold
+>= 0) also builds the reconcile's inputs there
+(``_SyncRun._local_lookup``). One collect of the keyed projection, which
+runs no job, gives the ``__args_fp`` dedup, a partial batch's scope and
+the memo keys; the memo hits come from the batch's memo buckets only;
+and the reconcile's actions (keys and fingerprints, no payload) are
+pinned on the driver, so their counts and every commit filter of them
+run no job. The transform output stays a cache until the size gate
+above admits it. The same ``reconcile``, ``_desired``, ``_tracked`` and
+commit phases run over these smaller inputs; the ``cheap_fp_cols``
+path and distributed sources keep the distributed plans.
 """
 
 from __future__ import annotations
@@ -71,7 +86,7 @@ from cocoindex_spark.engine.context import (
 )
 from cocoindex_spark.engine.reconcile import reconcile, tracking_updates
 from cocoindex_spark.fingerprint import fp_col, fp_logic, fp_value
-from cocoindex_spark.session import local_frame, to_local
+from cocoindex_spark.session import is_local, local_frame, to_local
 from cocoindex_spark.sinks.table import TableTarget
 from cocoindex_spark.state.store import StateStore
 
@@ -769,11 +784,14 @@ class _SyncRun:
     on every sync and returns at once when an earlier phase left it
     nothing to do. Phases are action boundaries — lazy plan
     construction costs nothing — so a phase's time is the Spark jobs it
-    ran. ``local`` says whether the commit phases run over driver-side
-    frames (``_localize``): then ``plan.actions`` holds only the change
-    rows and ``upsert_rows`` the target's upserts, both LocalRelations.
-    Otherwise ``upsert_rows`` is None and sink_apply builds the upserts
-    as a lineage over the reconcile's caches."""
+    ran. ``local_in`` says whether the reconcile's inputs were built on
+    the driver (``_local_lookup``): then the keyed rows, the misses,
+    the memo hits, a partial batch's scope and ``plan.actions`` are
+    LocalRelations. ``local`` says whether the commit phases run over
+    driver-side frames (``_localize``): then ``plan.actions`` holds only
+    the change rows and ``upsert_rows`` the target's upserts, both
+    LocalRelations. Otherwise ``upsert_rows`` is None and sink_apply
+    builds the upserts as a lineage over the reconcile's caches."""
 
     def __init__(
         self, app: App, source, key_cols, transform, target, *,
@@ -798,7 +816,7 @@ class _SyncRun:
         self.logic_fp = getattr(transform, "logic_fp", None) or fp_logic(transform)
         self.prefix = f"{app.name}/{target.name}"
         self.failed_paths = self.flush_thread = self.flush_err = None
-        self.local = False
+        self.local = self.local_in = False
         self.upsert_rows: DataFrame | None = None
         self._cached: list[DataFrame] = []
 
@@ -827,6 +845,7 @@ class _SyncRun:
         if not self.state.intent.is_empty():
             self._recover_intent()
         self.stats.extra["schema_evolution"] = app._ensure_target_contract(self)
+        self.batch = self.source  # with its tombstones, for _local_lookup
         if self.partial:
             self.scope_paths = self.source.select(
                 app._path_col(self.prefix, self.key_cols).alias("component_path")
@@ -1000,18 +1019,11 @@ class _SyncRun:
     def transform_reconcile(self) -> None:
         """Memo lookup, the user transform over misses only, failure
         isolation, target-state declarations, and the reconcile diff
-        against tracking (§2.5), counted per action in one job."""
-        # Row counts ride as observations INSIDE the cached plans: the
-        # metrics fire during the caches' first (full) materialization —
-        # the reconcile-phase jobs that run anyway — so stats_counts
-        # reads driver-side values instead of launching two more
-        # cache-scan jobs per sync. The first materializing actions
-        # (duplicate-declaration check, plan.counts) are full scans, so
-        # the observed counts are exact.
-        self.obs_keyed = Observation()
-        self.keyed = self._cache(
-            self._keyed().observe(self.obs_keyed, F.count(F.lit(1)).alias("n"))
-        )
+        against tracking (§2.5), counted per action in one job. A
+        non-cold sync of a source already on the driver
+        (``session.is_local``) looks its batch up on the driver
+        (``_local_lookup``) and pins its actions there, so the action
+        counts and every later filter of them run with no job."""
         # A freshly-created state store (first sync of a served index,
         # any new App) provably holds nothing: the pointer files are
         # empty — a driver-side read, no job. Everything is then a memo
@@ -1025,23 +1037,12 @@ class _SyncRun:
             and self.state.tracking.is_empty()
             and self.state.memo.is_empty()
         )
-        # ---- memo lookup join (§3.2: anti-join against _state/memo) ----
-        if not self.full_reprocess and not self.cold_start:
-            hits_keys = self.keyed.join(
-                self.memo_df.select(F.col("args_fp").alias("__args_fp"), "decl_json"),
-                "__args_fp",
-                "inner",
-            )
-            miss_src = self.keyed.join(self.memo_keys, "__args_fp", "left_anti")
-        else:
-            hits_keys = self.keyed.limit(0).withColumn(
-                "decl_json", F.lit(None).cast("string")
-            )
-            miss_src = self.keyed
-        self.obs_miss = Observation()
-        self.miss_src = self._cache(
-            miss_src.observe(self.obs_miss, F.count(F.lit(1)).alias("n"))
+        self.local_in = (
+            not (self.cold_start or self.full_reprocess or self.use_cheap)
+            and self.spark._jconf.autoBroadcastJoinThreshold() >= 0
+            and is_local(self.batch)
         )
+        hits_keys = self._local_lookup() if self.local_in else self._lookup()
         # Run the transform ONLY over misses (always run it so we learn
         # the output schema even when everything hit). The app is the
         # active context provider for the duration: use_context() works
@@ -1083,13 +1084,103 @@ class _SyncRun:
                 )
         tracked = None if self.cold_start else self._tracked()
         self.plan = reconcile(desired, tracked, full_reprocess=self.full_reprocess)
-        self.plan.actions = self._cache(self.plan.actions)
+        # The actions carry keys and fingerprints, never payload columns.
+        pin = to_local if self.local_in else self._cache
+        self.plan.actions = pin(self.plan.actions)
         self.counts = self.plan.counts()
         self.stats.inserts = self.counts["insert"]
         self.stats.updates = self.counts["update"]
         self.stats.deletes = self.counts["delete"]
         self.stats.noops = self.counts["noop"]
         self._localize()
+
+    def _lookup(self) -> DataFrame:
+        """The memo lookup join (§3.2: anti-join against _state/memo):
+        sets the keyed frame and the misses, both cached with their row
+        counts observed, and returns the memo hits."""
+        # Row counts ride as observations INSIDE the cached plans: the
+        # metrics fire during the caches' first (full) materialization —
+        # the reconcile-phase jobs that run anyway — so stats_counts
+        # reads driver-side values instead of launching two more
+        # cache-scan jobs per sync. The first materializing actions
+        # (duplicate-declaration check, plan.counts) are full scans, so
+        # the observed counts are exact.
+        self.obs_keyed = Observation()
+        self.keyed = self._cache(
+            self._keyed().observe(self.obs_keyed, F.count(F.lit(1)).alias("n"))
+        )
+        if not self.full_reprocess and not self.cold_start:
+            hits_keys = self.keyed.join(
+                self.memo_df.select(F.col("args_fp").alias("__args_fp"), "decl_json"),
+                "__args_fp",
+                "inner",
+            )
+            miss_src = self.keyed.join(self.memo_keys, "__args_fp", "left_anti")
+        else:
+            hits_keys = self.keyed.limit(0).withColumn(
+                "decl_json", F.lit(None).cast("string")
+            )
+            miss_src = self.keyed
+        self.obs_miss = Observation()
+        self.miss_src = self._cache(
+            miss_src.observe(self.obs_miss, F.count(F.lit(1)).alias("n"))
+        )
+        return hits_keys
+
+    def _local_lookup(self) -> DataFrame:
+        """The driver-side twin of ``_keyed`` and ``_lookup`` for a batch
+        already on the driver. One collect of the keyed projection,
+        which the optimizer folds onto the LocalRelation (no job), gives
+        the ``__args_fp`` dedup, the partial batch's scope and the memo
+        keys. The memo hits are read from the batch's memo buckets only
+        (discovered on the driver), semi-joined to its keys and
+        collected once. The misses and the hits come back as
+        LocalRelations, with their row counts known on the driver."""
+        spark, logic_fp = self.spark, self.logic_fp
+        self.src_cols = src_cols = list(self.source.columns)
+        tomb = F.lit(False)
+        if self.tombstone_col is not None:
+            tomb = F.coalesce(F.col(self.tombstone_col), F.lit(False))
+        keyed = self.batch.select(
+            *src_cols,
+            fp_col(F.lit(logic_fp), *[F.col(c) for c in src_cols]).alias("__args_fp"),
+            self.app._path_col(self.prefix, self.key_cols).alias("__component_path"),
+            tomb.alias("__tomb"),
+        )
+        rows = keyed.collect()
+        keyed = keyed.drop("__tomb")
+        if self.partial:
+            scope = dict.fromkeys((r["__component_path"],) for r in rows)
+            self.scope_paths = local_frame(spark, scope, "component_path STRING")
+        # equal fingerprints ⇒ fully-identical rows (see _keyed)
+        live: dict[str, tuple] = {}
+        for r in rows:
+            if not r["__tomb"]:
+                live.setdefault(r["__args_fp"], tuple(r)[:-1])
+        hits: dict[str, str] = {}
+        if live and not self.state.memo.is_empty():
+            memo = self.state.memo
+            keys = local_frame(
+                spark, [(logic_fp, fp) for fp in live], "logic_fp STRING, args_fp STRING"
+            )
+            hits = dict(
+                memo.read(spark, memo.touched_buckets(keys))
+                .filter(F.col("logic_fp") == logic_fp)
+                .filter(F.col("decl_json").isNotNull())
+                .join(keys.select("args_fp"), "args_fp", "left_semi")
+                .select("args_fp", "decl_json")
+                .collect()  # bounded: one row per batch row
+            )
+        self.n_keyed = len(live)
+        misses = [row for fp, row in live.items() if fp not in hits]
+        self.n_miss = len(misses)
+        self.miss_src = local_frame(spark, misses, keyed.schema)
+        path_at = keyed.columns.index("__component_path")
+        return local_frame(
+            spark,
+            [(fp, live[fp][path_at], decl) for fp, decl in hits.items()],
+            "__args_fp STRING, __component_path STRING, decl_json STRING",
+        )
 
     def _localize(self) -> None:
         """A small change set becomes driver-side frames, once. The
@@ -1105,7 +1196,9 @@ class _SyncRun:
         changed rows, plus ``miss_out``) within
         ``spark.sql.autoBroadcastJoinThreshold``, the largest relation
         Spark itself broadcasts to every executor. Cold builds,
-        ``full_reprocess`` and no-op syncs keep the distributed path."""
+        ``full_reprocess`` and no-op syncs keep the distributed path.
+        After ``_local_lookup`` the actions already are driver-side, so
+        only the upsert rows are collected here."""
         if self.cold_start or self.full_reprocess or not self.changed:
             return
         n_changed = self.stats.inserts + self.stats.updates + self.stats.deletes
@@ -1205,8 +1298,12 @@ class _SyncRun:
         """Memo hit/miss counts from the observations, then the memo and
         source_fp writes, started on the flush thread."""
         stats = self.stats
-        stats.memo_misses = _observed_n(self.obs_miss, self.miss_src)
-        stats.memo_hits = _observed_n(self.obs_keyed, self.keyed) - stats.memo_misses
+        if self.local_in:
+            stats.memo_misses, n_keyed = self.n_miss, self.n_keyed
+        else:
+            stats.memo_misses = _observed_n(self.obs_miss, self.miss_src)
+            n_keyed = _observed_n(self.obs_keyed, self.keyed)
+        stats.memo_hits = n_keyed - stats.memo_misses
         if self.use_cheap:
             # Cheap-fp replays never reached the loaded set: they are
             # memo hits that skipped content I/O entirely.
@@ -1262,10 +1359,12 @@ class _SyncRun:
         """Memo rows for every miss (even all-noop runs converge their
         memo): one JSON array of result rows per args_fp, plus
         decl_json — the declared (target_path, fp) pairs future replays
-        feed to reconcile without touching the payload array."""
+        feed to reconcile without touching the payload array. A small
+        change set's misses group in one task, with no shuffle."""
         out_cols, target = self.out_cols, self.target
+        miss_out = self.miss_out.coalesce(1) if self.local else self.miss_out
         return (
-            self.miss_out.withColumn("__tp", self.app._path_col(target.name, target.pk))
+            miss_out.withColumn("__tp", self.app._path_col(target.name, target.pk))
             .withColumn("__fp", fp_col(*[F.col(c) for c in out_cols]))
             .groupBy("__args_fp")
             .agg(

@@ -34,6 +34,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cocoindex_spark.session import is_local
+
 ACTION_INSERT = "insert"
 ACTION_UPDATE = "update"
 ACTION_DELETE = "delete"
@@ -53,20 +55,30 @@ class ReconcilePlan:
         the number of insert/update rows belonging to REPLAYED (memo
         hit) components, folded into this same aggregate so callers can
         gate the sink's payload fetch on it without an extra job
-        (normally 0: replays reconcile to noops)."""
-        agg = [F.count(F.lit(1)).alias("count")]
+        (normally 0: replays reconcile to noops). Driver-local actions
+        (``session.is_local``) are counted on the driver, with no job."""
         has_flag = "__is_replay" in self.actions.columns
-        if has_flag:
-            agg.append(
-                F.sum(F.when(F.col("__is_replay"), 1).otherwise(0)).alias("n_replay")
+        replay = F.when(F.col("__is_replay"), 1).otherwise(0) if has_flag else F.lit(0)
+        if is_local(self.actions):
+            rows = self.actions.select("action", replay.alias("r")).collect()
+            agg: dict[str, list[int]] = {}
+            for action, r in rows:
+                c = agg.setdefault(action, [0, 0])
+                c[0] += 1
+                c[1] += r
+            rows = [(a, c, r) for a, (c, r) in agg.items()]
+        else:
+            rows = (
+                self.actions.groupBy("action")
+                .agg(F.count(F.lit(1)), F.sum(replay))
+                .collect()
             )
-        rows = self.actions.groupBy("action").agg(*agg).collect()
         out = {ACTION_INSERT: 0, ACTION_UPDATE: 0, ACTION_DELETE: 0, ACTION_NOOP: 0}
         replay_upserts = 0
-        for r in rows:
-            out[r["action"]] = r["count"]
-            if has_flag and r["action"] in (ACTION_INSERT, ACTION_UPDATE):
-                replay_upserts += int(r["n_replay"] or 0)
+        for action, count, n_replay in rows:
+            out[action] = count
+            if action in (ACTION_INSERT, ACTION_UPDATE):
+                replay_upserts += int(n_replay or 0)
         if has_flag:
             out["__replay_upserts"] = replay_upserts
         return out

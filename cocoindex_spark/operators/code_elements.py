@@ -1038,31 +1038,6 @@ def elements_df(df, text_col: str, language: str):
     )
 
 
-def references_df(df, text_col: str, language: str):
-    """One row per usage reference — columns (ref_name, ref_qualifier,
-    ref_namespace, ref_start)."""
-    from pyspark.sql import functions as F
-
-    schema = (
-        "array<struct<name: string, qualifier: string, namespace: string, "
-        "start: long>>"
-    )
-
-    def run(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [[] if t is None else references(t, language) for t in texts]
-        )
-
-    udf = F.pandas_udf(run, schema)
-    return df.withColumn("__r", F.explode(udf(F.col(text_col)))).select(
-        *df.columns,
-        F.col("__r.name").alias("ref_name"),
-        F.col("__r.qualifier").alias("ref_qualifier"),
-        F.col("__r.namespace").alias("ref_namespace"),
-        F.col("__r.start").alias("ref_start"),
-    )
-
-
 def code_views(text: str, language: str) -> list[dict]:
     """Element declarations AND usage references from ONE extraction
     pass — the document is lexed and definition-walked once, both row

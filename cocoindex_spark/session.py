@@ -27,7 +27,10 @@ round-trips exactly), and :func:`is_local` tells whether a frame's
 optimized plan is one. A small sync's change set goes local once after
 its reconcile; projections and filters of it then stay local, so the
 commit's bucket discovery (``ManagedTable.touched_buckets``) runs on the
-driver.
+driver. Of a frame that is already local, ``collect()`` runs no job
+(the rows come back as Python values), while ``toArrow()`` runs one, so
+:func:`to_local` returns such a frame as it is, and a sync over a local
+source reads its keyed rows with ``collect()``.
 """
 
 from __future__ import annotations
@@ -112,7 +115,10 @@ def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
 
 def to_local(df: DataFrame) -> DataFrame:
     """``df``'s rows as a driver-side ``LocalRelation``: one collect
-    through Arrow, rebuilt under ``df``'s schema."""
+    through Arrow, rebuilt under ``df``'s schema; ``df`` itself when it
+    already is one."""
+    if is_local(df):
+        return df
     return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
@@ -122,14 +128,3 @@ def is_local(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().optimizedPlan()
     return plan.getClass().getSimpleName() == "LocalRelation"
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Register every testdata parquet as a temp view and return the dict."""
-    dfs = {}
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(t)
-            dfs[t] = df
-    return dfs

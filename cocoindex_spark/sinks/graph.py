@@ -71,9 +71,6 @@ class GraphTarget:
         self.edges.delete_keys(dangling.select("src", "dst", "rel").distinct())
         self.nodes.delete_keys(keys)
 
-    def delete_edges(self, keys: DataFrame) -> None:
-        self.edges.delete_keys(keys.select("src", "dst", "rel").distinct())
-
     # -- graph reads ------------------------------------------------------
     def read_nodes(self, spark: SparkSession) -> DataFrame:
         return self.nodes.read(spark)

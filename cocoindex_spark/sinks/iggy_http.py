@@ -196,13 +196,6 @@ class IggyHttpSource:
         self.partitions_count = partitions_count
         self.batch = batch
 
-    def poll_url(self, partition_id: int, offset: int, count: int) -> str:
-        return (
-            f"{self.endpoint}/streams/{self.stream}/topics/{self.topic}"
-            f"/messages?partition_id={partition_id}&kind=offset"
-            f"&value={offset}&count={count}&auto_commit=false"
-        )
-
     def fetch(
         self, spark: SparkSession, offsets: dict[int, int] | None = None
     ) -> DataFrame:

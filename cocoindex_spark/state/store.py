@@ -41,6 +41,9 @@ _POINTER = "_CURRENT"
 _KEEP_UNREFERENCED = 2
 _BUCKET_COL = "__bucket"
 _PROBE_COL = "__probe"
+# Key types whose Python values compare equal exactly when Spark's join
+# matches them (no NaN, no unhashable container).
+_DRIVER_EQ_TYPES = {"string", "bigint", "int", "smallint", "tinyint", "boolean", "date"}
 
 
 class ManagedTable:
@@ -216,12 +219,14 @@ class ManagedTable:
         df: DataFrame,
         n_buckets: int,
         probe: dict | None | str = "current",
+        one_task: bool = False,
     ) -> tuple[str, list[int]]:
         """Write df (bucketed) into a new version dir; returns (version
         name, buckets actually written — empty buckets produce no dir).
         ``probe``: the layout to write under — default "current" (the
         pointer's live layout); pass an explicit dict/None when the
-        caller is atomically changing layouts (set_probe_layout)."""
+        caller is atomically changing layouts (set_probe_layout).
+        ``one_task``: the caller knows ``df`` is small."""
         version_name = f"v_{int(time.time() * 1e6)}_{os.getpid()}"
         out = os.path.join(self.path, version_name)
         if probe == "current":
@@ -233,18 +238,19 @@ class ManagedTable:
                 _PROBE_COL, self.probe_expr(probe["cols"], probe["n"])
             )
             part_cols.append(_PROBE_COL)
-        (
-            bdf.withColumn(_BUCKET_COL, self._bucket_expr(n_buckets))
-            # One task (and one file) per bucket: state tables are
-            # metadata-sized relative to the data they track, so fewer,
-            # fuller files beat 32×n_buckets fragments. (With a probe
-            # layout the task fans its bucket into one file per probe
-            # dir — still one writer per bucket.)
-            .repartition(n_buckets, F.col(_BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(out)
-        )
+        bdf = bdf.withColumn(_BUCKET_COL, self._bucket_expr(n_buckets))
+        # One task (and one file) per bucket: state tables are
+        # metadata-sized relative to the data they track, so fewer,
+        # fuller files beat 32×n_buckets fragments. (With a probe
+        # layout the task fans its bucket into one file per probe dir —
+        # still one writer per bucket.) Driver-local or small rows are
+        # written by ONE task with no shuffle — one job, not two — which
+        # partitionBy still splits into one file per bucket dir.
+        if one_task or is_local(df):
+            bdf = bdf.coalesce(1)
+        else:
+            bdf = bdf.repartition(n_buckets, F.col(_BUCKET_COL))
+        bdf.write.mode("overwrite").partitionBy(*part_cols).parquet(out)
         written = [
             int(d.split("=", 1)[1])
             for d in self.fs.listdir(out)
@@ -271,11 +277,13 @@ class ManagedTable:
         )
         self._gc()
 
-    def _merge_into_buckets(self, touched: list[int], replacement: DataFrame) -> None:
+    def _merge_into_buckets(
+        self, touched: list[int], replacement: DataFrame, one_task: bool = False
+    ) -> None:
         """Swap the touched buckets to a freshly-written version; other
         buckets keep pointing at their current versions."""
         n, mapping = self._meta()
-        version_name, written = self._write_version(replacement, n)
+        version_name, written = self._write_version(replacement, n, one_task=one_task)
         for b in touched:
             mapping.pop(str(b), None)  # bucket emptied unless re-written
         for b in written:
@@ -401,6 +409,15 @@ class ManagedTable:
         # bounded by n_buckets — a constant, never data-sized
         return sorted({r[_BUCKET_COL] for r in ids.collect()})
 
+    def _disjoint(self, a: DataFrame, b: DataFrame) -> bool:
+        """True iff the driver-local frames ``a`` and ``b`` share no key,
+        compared on the driver (no job) when every key type compares in
+        Python as Spark's join does; False otherwise."""
+        if any(self.schema[c].dataType.simpleString() not in _DRIVER_EQ_TYPES for c in self.key_cols):
+            return False
+        keys = [{tuple(r) for r in df.select(self.key_cols).collect()} for df in (a, b)]
+        return not keys[0] & keys[1]
+
     def merge_upsert(self, updates: DataFrame, touched: list[int] | None = None) -> None:
         """Idempotent MERGE of ``updates`` alone (see merge_apply)."""
         self.merge_apply(updates, None, touched=touched)
@@ -433,7 +450,12 @@ class ManagedTable:
         version write) and may read this very table's current version —
         caching pins the pre-swap snapshot. A driver-local channel skips
         the cache: its rows are already on the driver, so its lineage
-        cannot read the table being written."""
+        cannot read the table being written. When both channels are
+        driver-local, the update channel skips its anti-join against
+        the delete channel if the two share no key (checked on the
+        driver), and touched buckets within
+        ``spark.sql.autoBroadcastJoinThreshold`` on disk are rewritten
+        by one task with no shuffle."""
         if updates is None and deletes is None:
             return
         if updates is not None:
@@ -482,13 +504,16 @@ class ManagedTable:
             gone = keys.distinct() if cached and updates is not None else keys
             merged = self.read(spark, touched).join(gone, self.key_cols, "left_anti")
             if updates is not None:
-                live = (
-                    updates
-                    if deletes is None
-                    else updates.join(deletes, self.key_cols, "left_anti")
-                )
+                live = updates
+                if deletes is not None and (cached or not self._disjoint(updates, deletes)):
+                    live = updates.join(deletes, self.key_cols, "left_anti")
                 merged = merged.unionByName(live)
-            self._merge_into_buckets(touched, merged)
+            # Driver-local channels over touched buckets that Spark would
+            # broadcast anyway are rewritten by one task.
+            one_task = not cached and 0 <= sum(
+                self.fs.total_bytes(p) for p in self._bucket_paths(self._pointer(), touched)
+            ) <= spark._jconf.autoBroadcastJoinThreshold()
+            self._merge_into_buckets(touched, merged, one_task=one_task)
         finally:
             for df in cached:
                 df.unpersist()

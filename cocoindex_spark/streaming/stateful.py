@@ -200,25 +200,6 @@ def dedup_stream(
 
 # --- streaming rate-anomaly scoring (the live form of q121) --------------
 
-ANOMALY_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("day", StringType()),
-        StructField("n", LongType()),
-        StructField("dev2", LongType()),
-        StructField("var4", LongType()),
-        StructField("direction", StringType()),
-    ]
-)
-
-_ANOMALY_STATE = StructType(
-    [
-        StructField("d", LongType()),
-        StructField("s", LongType()),
-        StructField("s2", LongType()),
-    ]
-)
-
 
 def make_anomaly_scorer():
     """Per-event-type state = the sufficient statistics (D, S, S2) of
@@ -260,14 +241,3 @@ def make_anomaly_scorer():
 
     return fn
 
-
-def anomaly_stream(buckets: DataFrame) -> DataFrame:
-    """Wire the scorer over a streaming (event_type, day, n) bucket
-    frame."""
-    return buckets.groupBy("event_type").applyInPandasWithState(
-        make_anomaly_scorer(),
-        outputStructType=ANOMALY_SCHEMA,
-        stateStructType=_ANOMALY_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

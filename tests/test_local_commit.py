@@ -18,7 +18,7 @@ import cocoindex_spark.engine.app as app_mod
 from cocoindex_spark.engine.app import App, _SyncRun
 from cocoindex_spark.engine.function import fn
 from cocoindex_spark.session import local_frame
-from cocoindex_spark.state.store import ManagedTable
+from cocoindex_spark.state.store import INTENT_SCHEMA, ManagedTable, StateStore
 from tests.test_local_frame import _jobs_in_group
 
 
@@ -53,8 +53,9 @@ def upcase_doc(df):
 
 def test_small_partial_sync_discovers_buckets_on_driver(spark, tmp_state, monkeypatch):
     """A 3-row partial tombstone sync (an edit, an insert, a delete) into
-    a probe-laid-out table target runs its sink and tracking bucket
-    discovery with no Spark job."""
+    a probe-laid-out table target looks its batch up on the driver, runs
+    its sink and tracking bucket discovery with no Spark job, and stays
+    within its pinned total of Spark jobs."""
     app = App("guard", tmp_state, spark=spark)
     target = app.target(os.path.join(tmp_state, "chunks"), ["doc"], SCHEMA)
     target.declare_index("lsh", "body", probe_col="bucket")
@@ -97,13 +98,49 @@ def test_small_partial_sync_discovers_buckets_on_driver(spark, tmp_state, monkey
     for name in ("sink_apply", "tracking_commit"):
         monkeypatch.setattr(_SyncRun, name, in_phase(name))
 
-    stats = sync([(1, "edited", False), (9, "new doc", False), (2, None, True)])
+    # every job of the sync, the flush thread's included, under one group
+    real_flush = _SyncRun._flush
+
+    def flush(run, *a):
+        spark.sparkContext.setJobGroup("partial-flush", "partial-flush")
+        real_flush(run, *a)
+
+    monkeypatch.setattr(_SyncRun, "_flush", flush)
+    out = []
+    jobs = _jobs_in_group(
+        spark, "partial-sync",
+        lambda: out.append(sync([(1, "edited", False), (9, "new doc", False), (2, None, True)])),
+    )
+    jobs += spark.sparkContext.statusTracker().getJobIdsForGroup("partial-flush")
+    stats = out[0]
     assert (stats.inserts, stats.updates, stats.deletes) == (1, 1, 1)
-    assert runs[0].local
+    assert runs[0].local_in and runs[0].local
+    # 14 when pinned (29 before the batch was looked up on the driver),
+    # the flush thread's included: a job added back anywhere fails here
+    assert len(jobs) <= 14, len(jobs)
     assert {(p, t) for p, t, _ in discovery} == {("sink_apply", "chunks"), ("tracking_commit", "tracking")}
     assert [jobs for _, _, jobs in discovery] == [[]] * len(discovery)
     got = {r.doc: r.body for r in target.read(spark).collect()}
     assert got[1] == "EDITED" and got[9] == "NEW DOC" and 2 not in got and len(got) == 8
+
+
+def test_local_intent_write_is_one_job(spark, tmp_state):
+    """A driver-local overwrite is written by one task with no shuffle:
+    one job (the repartitioned form took two), and partitionBy still
+    leaves one file in each bucket dir."""
+    store = StateStore(os.path.join(tmp_state, "state"))
+    rows = [(f"c/{i}", f"t/{i}") for i in range(15)]
+    keys = local_frame(spark, rows, INTENT_SCHEMA)
+    assert len(_jobs_in_group(spark, "intent-write", lambda: store.intent.overwrite(keys))) == 1
+    assert sorted(tuple(r) for r in store.intent.read(spark).collect()) == sorted(rows)
+    four = ManagedTable(os.path.join(tmp_state, "four"), ["component_path", "target_path"],
+                        INTENT_SCHEMA, n_buckets=4)
+    assert len(_jobs_in_group(spark, "four-write", lambda: four.overwrite(keys))) == 1
+    mapping = four._pointer()
+    assert len(mapping) > 1
+    for path in four._bucket_paths(mapping):
+        assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == 1
+    assert sorted(tuple(r) for r in four.read(spark).collect()) == sorted(rows)
 
 
 # -- local vs distributed commit ----------------------------------------------
@@ -134,15 +171,26 @@ def payload(df):
     )
 
 
+FULL, PARTIAL = "full", "partial"
+# Full syncs name every path; partial batches are (path, text, tombstone)
+# rows synced with ``tombstone_col``.
 STEPS = [
-    ("cold", {"a": "ka:x", "b": "kb:hello", "c": "kc:y", "d": "kd:z"}),
-    ("edit", {"a": "ka:x2", "b": "kb:hello", "c": "kc:y", "d": "kd:z"}),
-    ("rename with preemption", {"a": "ka:x2", "e": "kb:hello", "c": "kc:y", "d": "kd:z"}),
-    ("delete", {"a": "ka:x2", "e": "kb:hello", "d": "kd:z"}),
-    ("crash", {"a": "ka:x2", "e": "kb:hello", "d": "kd:zz"}),
-    ("replay recovery", {"a": "ka:x2", "e": "kb:hello", "d": "kd:zz"}),
-    ("failure", {"a": "ka:x3", "e": "kb:hello", "d": "kd:zz", "f": "kf:bad"}),
-    ("failure cleared", {"a": "ka:x3", "e": "kb:hello", "d": "kd:zz", "f": "kf:fine"}),
+    ("cold", FULL, {"a": "ka:x", "b": "kb:hello", "c": "kc:y", "d": "kd:z"}),
+    ("edit", FULL, {"a": "ka:x2", "b": "kb:hello", "c": "kc:y", "d": "kd:z"}),
+    ("rename with preemption", FULL, {"a": "ka:x2", "e": "kb:hello", "c": "kc:y", "d": "kd:z"}),
+    ("delete", FULL, {"a": "ka:x2", "e": "kb:hello", "d": "kd:z"}),
+    ("crash", FULL, {"a": "ka:x2", "e": "kb:hello", "d": "kd:zz"}),
+    ("replay recovery", FULL, {"a": "ka:x2", "e": "kb:hello", "d": "kd:zz"}),
+    ("failure", FULL, {"a": "ka:x3", "e": "kb:hello", "d": "kd:zz", "f": "kf:bad"}),
+    ("failure cleared", FULL, {"a": "ka:x3", "e": "kb:hello", "d": "kd:zz", "f": "kf:fine"}),
+    ("batch edit, insert and delete", PARTIAL,
+     [("a", "ka:x4", False), ("g", "kg:new", False), ("d", None, True)]),
+    ("batch with two identical rows", PARTIAL,
+     [("h", "kh:twice", False), ("h", "kh:twice", False), ("a", "ka:x4", False)]),
+    ("batch failure", PARTIAL, [("f", "kf:bad again", False), ("g", "kg:newer", False)]),
+    ("batch crash", PARTIAL, [("e", "kb:hello3", False), ("h", None, True)]),
+    ("batch intent recovery", PARTIAL, [("e", "kb:hello3", False), ("h", None, True)]),
+    ("all-tombstone batch", PARTIAL, [("a", None, True), ("f", None, True), ("zz", None, True)]),
 ]
 
 
@@ -158,9 +206,10 @@ def _state(app, spark, target):
     )
 
 
-def _run_steps(session, root, monkeypatch):
-    """Every STEPS sync on ``session``: (per-step stats and state, the
-    per-sync (local, replayed upserts) of _localize)."""
+def _run_steps(session, root, monkeypatch, transform=None, steps=STEPS):
+    """Every ``steps`` sync on ``session``: (per-step stats and state, the
+    per-sync (driver-side reconcile inputs, driver-side commit, replayed
+    upserts) of each run, recorded after _localize)."""
     app = App("eq", os.path.join(root, "state"), spark=session)
     target = app.target(os.path.join(root, "t"), ["k"], PAYLOAD_SCHEMA)
     paths = []
@@ -168,20 +217,26 @@ def _run_steps(session, root, monkeypatch):
 
     def spy(run):
         real(run)
-        paths.append((run.local, run.counts.get("__replay_upserts", 0)))
+        paths.append((run.local_in, run.local, run.counts.get("__replay_upserts", 0)))
 
     out = []
     with monkeypatch.context() as m:
         m.setattr(_SyncRun, "_localize", spy)
-        for name, rows in STEPS:
-            src = local_frame(session, sorted(rows.items()), "path STRING, text STRING")
+        for name, kind, rows in steps:
+            if kind == FULL:
+                src = local_frame(session, sorted(rows.items()), "path STRING, text STRING")
+                tomb = None
+            else:
+                src = local_frame(session, rows, "path STRING, text STRING, tomb BOOLEAN")
+                tomb = "tomb"
 
             def sync():
                 return app.sync_table(
-                    src, ["path"], payload, target, validate_unique=False, error_col="err"
+                    src, ["path"], transform or payload, target,
+                    validate_unique=False, error_col="err", tombstone_col=tomb,
                 )
 
-            if name == "crash":
+            if "crash" in name:
                 def crash(*a, **kw):
                     raise RuntimeError("crash in tracking commit")
 
@@ -198,26 +253,71 @@ def _run_steps(session, root, monkeypatch):
     return out, paths
 
 
+def _distributed(spark, threshold="-1"):
+    session = spark.newSession()
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    session.conf.set("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
+    return session
+
+
 def test_local_and_distributed_commits_agree(spark, tmp_path, monkeypatch):
     """The same sequence (edit, rename with ownership preemption, delete,
     a crash in the tracking commit and its replayed-upsert recovery, a
-    failing component and its recovery) over a payload of array<float>,
-    binary, timestamp, decimal, NULL and NaN leaves identical target,
-    tracking, memo and errors rows and identical SyncStats on the local
-    commit path and on the distributed one."""
-    distributed = spark.newSession()
-    distributed.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    distributed.conf.set("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone"))
+    failing component and its recovery, then partial batches: an edit
+    with an insert and a tombstone, two identical rows, a failure, a
+    crash and its recovery from the intent, and an all-tombstone batch)
+    over a payload of array<float>, binary, timestamp, decimal, NULL and
+    NaN leaves identical target, tracking, memo and errors rows and
+    identical SyncStats whether the reconcile inputs and the commit are
+    driver-side or distributed."""
     local_steps, local_paths = _run_steps(spark, str(tmp_path / "local"), monkeypatch)
-    dist_steps, dist_paths = _run_steps(distributed, str(tmp_path / "dist"), monkeypatch)
+    dist_steps, dist_paths = _run_steps(_distributed(spark), str(tmp_path / "dist"), monkeypatch)
     for got, want in zip(local_steps, dist_steps):
         assert got == want, got[0]
-    # the cold build is distributed on both; every later sync is local on
-    # the default session, and the recovery replayed upserts on both
-    assert [p[0] for p in local_paths] == [False] + [True] * (len(STEPS) - 1)
-    assert [p[0] for p in dist_paths] == [False] * len(STEPS)
-    recovery = [name for name, _ in STEPS].index("replay recovery")
-    assert local_paths[recovery][1] > 0 and dist_paths[recovery][1] > 0
+    # the cold build is distributed on both; every later sync (its
+    # source a LocalRelation) looks its batch up and commits on the
+    # driver on the default session, and the recoveries replayed upserts
+    # on both
+    assert [p[:2] for p in local_paths] == [(False, False)] + [(True, True)] * (len(STEPS) - 1)
+    assert [p[:2] for p in dist_paths] == [(False, False)] * len(STEPS)
+    names = [name for name, _, _ in STEPS]
+    for recovery in ("replay recovery", "batch intent recovery"):
+        i = names.index(recovery)
+        assert local_paths[i][2] > 0 and dist_paths[i][2] > 0, recovery
     # the rename's target row was claimed, not deleted
     name, stats, (target_rows, *_) = local_steps[2]
     assert stats[2:5] == (1, 0, 1) and any(r.startswith("('kb', ") for r in target_rows)
+    # driver-side dedup: the doubled row is one miss and one insert
+    stats = local_steps[names.index("batch with two identical rows")][1]
+    assert stats[:5] == (1, 1, 1, 0, 0)
+    # the all-tombstone batch deletes and looks nothing up
+    stats = local_steps[names.index("all-tombstone batch")][1]
+    assert stats[:6] == (0, 0, 0, 0, 2, 0)
+
+
+@fn(memo=True)
+def fan_out(df):
+    """40 target rows per source row: a small batch whose transform
+    output outgrows a low broadcast threshold."""
+    fan = df.select("*", F.explode(F.sequence(F.lit(0), F.lit(39))).alias("i"))
+    return payload(
+        fan.withColumn("text", F.concat(F.col("i").cast("string"), F.lit("-"), "text"))
+    ).drop("i")
+
+
+FAN_STEPS = [
+    ("cold", FULL, {"a": "x", "b": "y"}),
+    ("batch", PARTIAL, [("a", "x2", False), ("c", "z", False), ("b", None, True)]),
+]
+
+
+def test_fan_out_over_a_local_batch_commits_distributed(spark, tmp_path, monkeypatch):
+    """A local batch whose transform output exceeds the broadcast
+    threshold still looks its batch up on the driver but commits
+    distributed, and leaves the state the distributed path leaves."""
+    low = _distributed(spark, str(2 << 10))
+    got, got_paths = _run_steps(low, str(tmp_path / "low"), monkeypatch, fan_out, FAN_STEPS)
+    want, _ = _run_steps(_distributed(spark), str(tmp_path / "dist"), monkeypatch, fan_out, FAN_STEPS)
+    assert got == want
+    assert [p[:2] for p in got_paths] == [(False, False), (True, False)]
+    assert got[1][1][2:5] == (80, 0, 80)

@@ -220,6 +220,35 @@ def test_merge_apply_combined_upsert_delete(spark, tmp_state):
     assert _rows(t, spark) == {("b", 20), ("c", 3), ("d", 4), ("f", 6)}
 
 
+def test_merge_apply_local_channels(spark, tmp_state):
+    """Driver-local channels take the short merge: a key in both
+    channels still ends deleted (the anti-join runs because they
+    overlap), disjoint channels skip it, and small touched buckets are
+    rewritten in one job with one file per bucket dir."""
+    from cocoindex_spark.session import local_frame
+    from tests.test_local_frame import _jobs_in_group
+
+    t = ManagedTable(os.path.join(tmp_state, "t"), ["k"], _schema(), n_buckets=4)
+    t.merge_upsert(local_frame(spark, [("a", 1), ("b", 2), ("c", 3), ("d", 4)], _schema()))
+
+    def keys(*ks):
+        return local_frame(spark, [(k,) for k in ks], "k STRING")
+
+    ups = local_frame(spark, [("b", 20), ("e", 5), ("x", 9)], _schema())
+    assert not t._disjoint(ups, keys("a", "x"))
+    t.merge_apply(ups, keys("a", "x"))
+    assert _rows(t, spark) == {("b", 20), ("c", 3), ("d", 4), ("e", 5)}
+
+    ups = local_frame(spark, [("c", 30), ("f", 6)], _schema())
+    assert t._disjoint(ups, keys("b"))
+    # one broadcast of the key set for the current-row anti-join, one write
+    jobs = _jobs_in_group(spark, "local-merge", lambda: t.merge_apply(ups, keys("b")))
+    assert len(jobs) == 2
+    assert _rows(t, spark) == {("c", 30), ("d", 4), ("e", 5), ("f", 6)}
+    for path in t._bucket_paths(t._pointer()):
+        assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == 1
+
+
 def test_merge_apply_discovers_buckets_once(spark, tmp_state, monkeypatch):
     """A mixed merge runs one bucket discovery over both channels' keys,
     and none when the caller passes ``touched`` covering them."""
