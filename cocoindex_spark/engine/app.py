@@ -36,8 +36,13 @@ item recomputed; deleted item ⇒ its target rows deleted.
 Every step is a distributed DataFrame op — no driver-side loop over
 items, but over a batch the driver already holds (below) — so the same
 program runs unchanged on a 1000-executor cluster;
-state tables shard by key hash and the memo join is a plain shuffle
-(or broadcast when small).
+state tables shard by a hash of their bucket columns and the memo join
+is a plain shuffle (or broadcast when small). Tracking buckets on
+``component_path`` and a table target on the leading pk columns that
+are also the sync's ``key_cols`` (inferred at each sync, recorded by the
+target's first write), so a sync that changes k components rewrites at
+most k buckets of each; ``SyncStats.extra["buckets_written"]`` counts
+the target, tracking and memo buckets a sync rewrote.
 
 Delta-sized commits: once transform_reconcile has counted a change set
 that fits ``spark.sql.autoBroadcastJoinThreshold`` (the largest
@@ -57,17 +62,22 @@ any ``local_frame``) and whose session broadcasts at all (threshold
 (``_SyncRun._local_lookup``). One collect of the keyed projection, which
 runs no job, gives the ``__args_fp`` dedup, a partial batch's scope and
 the memo keys; the memo hits come from the batch's memo buckets only;
-and the reconcile's actions (keys and fingerprints, no payload) are
-pinned on the driver, so their counts and every commit filter of them
-run no job. The transform output stays a cache until the size gate
-above admits it. The same ``reconcile``, ``_desired``, ``_tracked`` and
-commit phases run over these smaller inputs; the ``cheap_fp_cols``
-path and distributed sources keep the distributed plans.
+a partial batch reads only its components' tracking buckets (bucket ids
+hashed on the driver; a tracking table still hashed on its whole key,
+written before bucket columns existed, is read whole until its next
+full rewrite); and the reconcile's actions (keys and fingerprints, no
+payload) are pinned on the driver, so their counts and every commit
+filter of them run no job. The transform output stays a cache until
+the size gate above admits it. The same ``reconcile``, ``_desired``,
+``_tracked`` and commit phases run over these smaller inputs; the
+``cheap_fp_cols`` path and distributed sources keep the distributed
+plans.
 """
 
 from __future__ import annotations
 
 import copy
+import itertools
 import os
 import threading
 import time
@@ -818,7 +828,14 @@ class _SyncRun:
         self.failed_paths = self.flush_thread = self.flush_err = None
         self.local = self.local_in = False
         self.upsert_rows: DataFrame | None = None
+        self.tracked_buckets: list[int] | None = None  # None: the whole prefix is read
         self._cached: list[DataFrame] = []
+        self.target_table = getattr(target, "_table", None)
+        # the state tables whose rewritten buckets the sync reports
+        self.written_tables = {"tracking": app.state.tracking, "memo": app.state.memo}
+        if self.target_table is not None:
+            self.written_tables["target"] = self.target_table
+        self.pointers_at_start = {k: t._pointer() for k, t in self.written_tables.items()}
 
     def timed(self, phase: str) -> None:
         t = time.perf_counter()
@@ -845,6 +862,16 @@ class _SyncRun:
         if not self.state.intent.is_empty():
             self._recover_intent()
         self.stats.extra["schema_evolution"] = app._ensure_target_contract(self)
+        if self.stats.extra["schema_evolution"] == "destructive":
+            # a memo entry's declared target paths encode the old pk, so
+            # no replay can rebuild the dropped rows: recompute them all
+            self.full_reprocess, self.use_cheap = True, False
+        if self.target_table is not None:
+            # One component's target rows share a bucket: hash the leading
+            # pk columns that are also key columns. A full write of the
+            # table (its first one included) records them.
+            lead = itertools.takewhile(self.key_cols.__contains__, self.target_table.key_cols)
+            self.target_table.bucket_cols = list(lead) or None
         self.batch = self.source  # with its tombstones, for _local_lookup
         if self.partial:
             self.scope_paths = self.source.select(
@@ -1268,7 +1295,14 @@ class _SyncRun:
         return miss_decl.unionByName(hit_decl)
 
     def _tracked(self) -> DataFrame:
-        tracked = self.state.tracking.read(self.spark).filter(
+        """Tracked states under this target's prefix. A driver-side
+        partial batch reads only the tracking buckets of its components
+        when tracking buckets on ``component_path`` (ids hashed on the
+        driver, no job)."""
+        tracking = self.state.tracking
+        if self.local_in and self.partial and tracking.bucket_columns() == ["component_path"]:
+            self.tracked_buckets = tracking.touched_buckets(self.scope_paths)
+        tracked = tracking.read(self.spark, self.tracked_buckets).filter(
             F.col("component_path").startswith(self.prefix + "/")
         )
         if self.partial:
@@ -1575,14 +1609,20 @@ class _SyncRun:
             df.unpersist()
 
     def cleanup(self) -> None:
-        """Adaptive state maintenance: safe here — the sync's scoped
-        bucket ids are all consumed; growth rehashes before the next
-        sync. A grown table is already one fresh version, so compaction
-        (fragment-count / dead-bytes OPTIMIZE, store.py maybe_compact)
-        only runs when growth didn't fire."""
+        """The buckets each state table's sync writes rewrote
+        (``stats.extra["buckets_written"]``: the buckets whose pointer
+        entry changed), then adaptive state maintenance: safe here — the
+        sync's scoped bucket ids are all consumed; growth rehashes before
+        the next sync. A grown table is already one fresh version, so
+        compaction (fragment-count / dead-bytes OPTIMIZE, store.py
+        maybe_compact) only runs when growth didn't fire."""
+        written = {}
+        for name, t in self.written_tables.items():
+            before, after = self.pointers_at_start[name], t._pointer()
+            written[name] = sum(before.get(b) != after.get(b) for b in before.keys() | after.keys())
+        self.stats.extra["buckets_written"] = written
         for t in (self.state.tracking, self.state.memo, self.state.source_fp):
             if not t.maybe_grow(self.spark):
                 t.maybe_compact(self.spark)
-        tgt_tbl = getattr(self.target, "_table", None)
-        if tgt_tbl is not None:
-            tgt_tbl.maybe_compact(self.spark)
+        if self.target_table is not None:
+            self.target_table.maybe_compact(self.spark)

@@ -90,7 +90,10 @@ class TableTarget(Target):
         self._write_meta(meta)
 
     def truncate(self) -> None:
-        """Destructive recreate (pk change): drop all rows."""
+        """Destructive recreate (pk change): drop all rows and the
+        bucket columns inferred for the old pk; the next sync infers
+        them again."""
+        self._table.bucket_cols = None
         self._table.clear()
 
     # -- index metadata (declare_vector_index / declare_fts_index analog)

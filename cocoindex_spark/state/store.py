@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,29 +47,65 @@ _PROBE_COL = "__probe"
 _DRIVER_EQ_TYPES = {"string", "bigint", "int", "smallint", "tinyint", "boolean", "date"}
 
 
+class _Layout(NamedTuple):
+    """A table's live layout, as its pointer records it."""
+
+    n: int  # bucket count
+    buckets: dict[str, str]  # bucket id (str) → version dir name
+    probe: dict | None  # probe layout
+    cols: list[str]  # the key columns the bucket hash covers
+
+
 class ManagedTable:
     """A keyed parquet table with **bucket-scoped** upsert/delete.
 
-    Rows hash-partition into ``n_buckets`` by key; each write rewrites
-    only the buckets containing touched keys into a new immutable
-    version directory, then atomically replaces the single pointer file
-    (bucket → version map, ``os.replace``). A crash mid-write leaves
-    the old pointer live; re-running converges (the reference's
-    roll-forward relaxation, processing_component.mdx:248-253).
+    Rows hash-partition into ``n_buckets`` by their bucket columns; each
+    write rewrites only the buckets containing touched keys into a new
+    immutable version directory, then atomically replaces the single
+    pointer file (bucket → version map, ``os.replace``). A crash
+    mid-write leaves the old pointer live; re-running converges (the
+    reference's roll-forward relaxation, processing_component.mdx:248-253).
 
-    This is the 100 TB shape: an edit touching k keys costs
-    O(k/n_buckets · table) I/O instead of a full-table rewrite, and the
-    bucket column is the natural cluster/shuffle key on a real cluster
-    (same layout works on any HDFS-compatible FS with atomic rename).
+    The bucket columns are a leading subset of the key (``bucket_cols``;
+    None hashes the whole key), so every row of one key, and every key
+    sharing its bucket columns, lands in one bucket: tracking buckets on
+    ``component_path``, so all of one component's rows share a bucket.
+    This is the 100 TB shape: an edit touching k values of the bucket
+    columns (k components, for tracking) costs O(k/n_buckets · table)
+    I/O instead of a full-table rewrite; the bound holds per bucket-column
+    value, not per key, so a table hashed on its whole key pays up to one
+    bucket per changed row. The bucket column is the natural
+    cluster/shuffle key on a real cluster (same layout works on any
+    HDFS-compatible FS with atomic rename).
+
+    The pointer records the columns its data was hashed on. A pointer
+    without them (written before they existed) hashes the whole key. A
+    full rewrite (``overwrite``: a write into an empty table,
+    ``maybe_grow``, ``maybe_compact``, ``set_probe_layout``) writes under
+    the declared columns and publishes them in the same swap as its
+    data; merges keep the live columns. Bucket ids are only meaningful
+    to the table that computed them.
     """
 
-    def __init__(self, path: str, key_cols: list[str], schema: StructType, n_buckets: int = 16):
+    def __init__(
+        self,
+        path: str,
+        key_cols: list[str],
+        schema: StructType,
+        n_buckets: int = 16,
+        bucket_cols: list[str] | None = None,
+    ):
         from cocoindex_spark.state.fs import fs_for
 
+        if bucket_cols is not None and bucket_cols != key_cols[: len(bucket_cols)]:
+            raise ValueError(f"bucket columns {bucket_cols} are not a leading subset of {key_cols}")
         self.path = path
         self.key_cols = key_cols
         self.schema = schema
         self.n_buckets = n_buckets  # initial count; live count is in the pointer
+        # declared bucket columns (None = the whole key); the live ones
+        # are in the pointer
+        self.bucket_cols = bucket_cols
         # Optional PROBE layout (None = PK-hash buckets only). When an
         # index is declared on this table, writes add a second
         # partition-directory level __probe=hash(probe_cols)%n under
@@ -82,54 +119,67 @@ class ManagedTable:
         self.fs.makedirs(path)
 
     # -- pointer plumbing ---------------------------------------------------
-    def _meta3(self) -> tuple[int, dict[str, str], dict | None]:
-        """(live bucket count, bucket(str) → version dir name, live
-        probe layout or None). Both counts persist in the pointer so
-        every reader/writer hashes consistently even after adaptive
-        growth / index declaration; a legacy flat-mapping pointer
-        implies the constructor count. Before any pointer exists the
-        instance's declared probe layout is live (first write adopts
-        it)."""
+    def _layout(self) -> _Layout:
+        """The live layout. Counts, probe layout and bucket columns
+        persist in the pointer so every reader/writer hashes
+        consistently even after adaptive growth, index declaration or a
+        change of bucket columns; a legacy flat-mapping pointer implies
+        the constructor count and the whole key. An empty table (no
+        pointer, or one with no buckets) has no data hashed under any
+        layout, so the declared probe layout and bucket columns are live
+        and its first write adopts them."""
         text = self.fs.read_text(os.path.join(self.path, _POINTER))
         declared = (
             {"cols": self.probe_cols, "n": self.probe_buckets}
             if self.probe_cols
             else None
         )
+        declared_cols = list(self.bucket_cols or self.key_cols)
         if text is None:
-            return self.n_buckets, {}, declared
+            return _Layout(self.n_buckets, {}, declared, declared_cols)
         doc = json.loads(text)
-        if "buckets" in doc:
-            probe = doc.get("probe")
-            if probe is None and not doc["buckets"]:
-                probe = declared  # empty table: adopt the declaration
-            return int(doc.get("n_buckets", self.n_buckets)), doc["buckets"], probe
-        return self.n_buckets, doc, None  # legacy format
+        if "buckets" not in doc:
+            return _Layout(self.n_buckets, doc, None, list(self.key_cols))  # legacy format
+        n = int(doc.get("n_buckets", self.n_buckets))
+        if not doc["buckets"]:
+            return _Layout(n, {}, doc.get("probe") or declared, declared_cols)
+        return _Layout(n, doc["buckets"], doc.get("probe"), doc.get("bucket_cols", list(self.key_cols)))
 
     def _meta(self) -> tuple[int, dict[str, str]]:
-        n, mapping, _ = self._meta3()
-        return n, mapping
+        layout = self._layout()
+        return layout.n, layout.buckets
 
     def _pointer(self) -> dict[str, str]:
-        return self._meta3()[1]
+        return self._layout().buckets
+
+    def bucket_columns(self) -> list[str]:
+        """The key columns the live bucket hash covers — a driver-side
+        pointer read, no job."""
+        return self._layout().cols
 
     def _swap_pointer(
         self,
         mapping: dict[str, str],
         n_buckets: int | None = None,
         probe: dict | None | str = "keep",
+        cols: list[str] | None = None,
     ) -> None:
-        cur_n, _, cur_probe = self._meta3()
+        """Publish ``mapping``, hashed on ``cols`` (default: the live
+        bucket columns). A pointer with no buckets records no bucket
+        columns: an empty table adopts the declared ones."""
+        cur = self._layout()
         doc = {
-            "n_buckets": n_buckets if n_buckets is not None else cur_n,
+            "n_buckets": n_buckets if n_buckets is not None else cur.n,
             "buckets": mapping,
-            "probe": cur_probe if probe == "keep" else probe,
+            "probe": cur.probe if probe == "keep" else probe,
         }
+        if mapping:
+            doc["bucket_cols"] = list(cols or cur.cols)
         self.fs.write_atomic(os.path.join(self.path, _POINTER), json.dumps(doc))
 
-    def _bucket_expr(self, n_buckets: int) -> F.Column:
+    def _bucket_expr(self, n_buckets: int, cols: list[str]) -> F.Column:
         return F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in self.key_cols]),
+            F.xxhash64(*[F.col(c).cast("string") for c in cols]),
             F.lit(n_buckets),
         )
 
@@ -157,7 +207,7 @@ class ManagedTable:
         probe-side plan can compute its target partitions."""
         cols = col_or_cols if isinstance(col_or_cols, (list, tuple)) else [col_or_cols]
         if n is None:
-            _, _, probe = self._meta3()
+            probe = self._layout().probe
             n = probe["n"] if probe else self.probe_buckets
         return F.pmod(
             F.xxhash64(*[F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]),
@@ -187,7 +237,7 @@ class ManagedTable:
         count is O(live version dirs), which maybe_compact bounds.
         ``keep_probe=True`` keeps the ``__probe`` column for probe-side
         plans; engine merge paths read the bare schema."""
-        n, mapping, probe = self._meta3()
+        _, mapping, probe, _ = self._layout()
         paths = self._bucket_paths(mapping, buckets)
         if not paths:
             df = local_frame(spark, [], self.schema)
@@ -218,19 +268,16 @@ class ManagedTable:
         self,
         df: DataFrame,
         n_buckets: int,
-        probe: dict | None | str = "current",
+        probe: dict | None,
+        cols: list[str],
         one_task: bool = False,
     ) -> tuple[str, list[int]]:
-        """Write df (bucketed) into a new version dir; returns (version
-        name, buckets actually written — empty buckets produce no dir).
-        ``probe``: the layout to write under — default "current" (the
-        pointer's live layout); pass an explicit dict/None when the
-        caller is atomically changing layouts (set_probe_layout).
-        ``one_task``: the caller knows ``df`` is small."""
+        """Write df into a new version dir, bucketed on ``cols`` and
+        laid out under ``probe``; returns (version name, buckets
+        actually written — empty buckets produce no dir). ``one_task``:
+        the caller knows ``df`` is small."""
         version_name = f"v_{int(time.time() * 1e6)}_{os.getpid()}"
         out = os.path.join(self.path, version_name)
-        if probe == "current":
-            _, _, probe = self._meta3()
         part_cols = [_BUCKET_COL]
         bdf = df
         if probe:
@@ -238,7 +285,7 @@ class ManagedTable:
                 _PROBE_COL, self.probe_expr(probe["cols"], probe["n"])
             )
             part_cols.append(_PROBE_COL)
-        bdf = bdf.withColumn(_BUCKET_COL, self._bucket_expr(n_buckets))
+        bdf = bdf.withColumn(_BUCKET_COL, self._bucket_expr(n_buckets, cols))
         # One task (and one file) per bucket: state tables are
         # metadata-sized relative to the data they track, so fewer,
         # fuller files beat 32×n_buckets fragments. (With a probe
@@ -266,14 +313,18 @@ class ManagedTable:
     ) -> None:
         """Full-table rewrite into one fresh version + one pointer
         swap. ``probe``: "keep" preserves the live layout; an explicit
-        dict/None rewrites the data under the NEW layout and publishes
-        it in the SAME swap — data and layout change atomically (a
-        crash anywhere leaves the old pointer over old-layout data)."""
-        n = n_buckets if n_buckets is not None else self._meta()[0]
-        write_probe = self._meta3()[2] if probe == "keep" else probe
-        version_name, written = self._write_version(df, n, probe=write_probe)
+        dict/None rewrites the data under the NEW layout. The data is
+        hashed on the declared bucket columns (the live ones when none
+        are declared). Layout and data are published in the SAME swap —
+        they change atomically (a crash anywhere leaves the old pointer
+        over old-layout data)."""
+        cur = self._layout()
+        n = n_buckets if n_buckets is not None else cur.n
+        write_probe = cur.probe if probe == "keep" else probe
+        cols = list(self.bucket_cols or cur.cols)
+        version_name, written = self._write_version(df, n, write_probe, cols)
         self._swap_pointer(
-            {str(b): version_name for b in written}, n_buckets=n, probe=probe
+            {str(b): version_name for b in written}, n_buckets=n, probe=probe, cols=cols
         )
         self._gc()
 
@@ -282,8 +333,8 @@ class ManagedTable:
     ) -> None:
         """Swap the touched buckets to a freshly-written version; other
         buckets keep pointing at their current versions."""
-        n, mapping = self._meta()
-        version_name, written = self._write_version(replacement, n, one_task=one_task)
+        n, mapping, probe, cols = self._layout()
+        version_name, written = self._write_version(replacement, n, probe, cols, one_task=one_task)
         for b in touched:
             mapping.pop(str(b), None)  # bucket emptied unless re-written
         for b in written:
@@ -367,7 +418,7 @@ class ManagedTable:
         this between syncs). Returns True if a rewrite happened."""
         want = {"cols": list(cols), "n": int(n)}
         self.probe_cols, self.probe_buckets = want["cols"], want["n"]
-        cur_n, mapping, cur = self._meta3()
+        cur_n, mapping, cur, _ = self._layout()
         if cur == want:
             return False
         if not mapping:
@@ -385,9 +436,10 @@ class ManagedTable:
 
     def clear(self) -> None:
         """Empty the table with no Spark job: swap the pointer to no
-        buckets (layout kept), then remove every version directory. A
-        crash between the two leaves only unreferenced directories,
-        which no reader sees."""
+        buckets (probe layout kept; the next write adopts the declared
+        bucket columns), then remove every version directory. A crash
+        between the two leaves only unreferenced directories, which no
+        reader sees."""
         self._swap_pointer({})
         for d in self.fs.listdir(self.path):
             if d.startswith("v_"):
@@ -401,9 +453,10 @@ class ManagedTable:
         swap to a version missing their current rows. Driver-local keys
         (a projection or filter of a ``LocalRelation``) are hashed and
         deduplicated on the driver with no Spark job; other keys pay a
-        ``distinct`` (two jobs under AQE)."""
-        n = self._meta()[0]
-        ids = keys.select(self._bucket_expr(n).alias(_BUCKET_COL))
+        ``distinct`` (two jobs under AQE). ``keys`` needs only the live
+        bucket columns (:meth:`bucket_columns`)."""
+        n, _, _, cols = self._layout()
+        ids = keys.select(self._bucket_expr(n, cols).alias(_BUCKET_COL))
         if not is_local(ids):
             ids = ids.distinct()
         # bounded by n_buckets — a constant, never data-sized
@@ -599,8 +652,12 @@ class StateStore:
 
     def __init__(self, root: str):
         self.root = root
+        # tracking and user_state bucket on component_path: one
+        # component's rows share a bucket, so a sync changing k
+        # components rewrites at most k buckets of each
         self.tracking = ManagedTable(
-            os.path.join(root, "tracking"), ["component_path", "target_path"], TRACKING_SCHEMA
+            os.path.join(root, "tracking"), ["component_path", "target_path"], TRACKING_SCHEMA,
+            bucket_cols=["component_path"],
         )
         self.intent = ManagedTable(
             os.path.join(root, "intent"), ["component_path", "target_path"], INTENT_SCHEMA,
@@ -608,7 +665,8 @@ class StateStore:
         )
         self.memo = ManagedTable(os.path.join(root, "memo"), ["logic_fp", "args_fp"], MEMO_SCHEMA)
         self.user_state = ManagedTable(
-            os.path.join(root, "user_state"), ["component_path", "state_key"], USER_STATE_SCHEMA
+            os.path.join(root, "user_state"), ["component_path", "state_key"], USER_STATE_SCHEMA,
+            bucket_cols=["component_path"],
         )
         self.source_fp = ManagedTable(
             os.path.join(root, "source_fp"), ["component_path"], SOURCE_FP_SCHEMA

@@ -7,6 +7,7 @@ distributed path, and the two paths must leave the same state."""
 
 from __future__ import annotations
 
+import json
 import os
 import threading
 
@@ -206,18 +207,20 @@ def _state(app, spark, target):
     )
 
 
-def _run_steps(session, root, monkeypatch, transform=None, steps=STEPS):
+def _run_steps(session, root, monkeypatch, transform=None, steps=STEPS, pk=("k",), schema=PAYLOAD_SCHEMA):
     """Every ``steps`` sync on ``session``: (per-step stats and state, the
     per-sync (driver-side reconcile inputs, driver-side commit, replayed
-    upserts) of each run, recorded after _localize)."""
+    upserts, tracking read scoped to the batch's buckets) of each run,
+    recorded after _localize)."""
     app = App("eq", os.path.join(root, "state"), spark=session)
-    target = app.target(os.path.join(root, "t"), ["k"], PAYLOAD_SCHEMA)
+    target = app.target(os.path.join(root, "t"), list(pk), schema)
     paths = []
     real = _SyncRun._localize
 
     def spy(run):
         real(run)
-        paths.append((run.local_in, run.local, run.counts.get("__replay_upserts", 0)))
+        paths.append((run.local_in, run.local, run.counts.get("__replay_upserts", 0),
+                      run.tracked_buckets is not None))
 
     out = []
     with monkeypatch.context() as m:
@@ -248,7 +251,7 @@ def _run_steps(session, root, monkeypatch, transform=None, steps=STEPS):
             else:
                 s = sync()
                 stats = (s.memo_hits, s.memo_misses, s.inserts, s.updates, s.deletes, s.noops,
-                         {k: v for k, v in s.extra.items() if k != "phase_ms"})
+                         {k: v for k, v in s.extra.items() if k not in ("phase_ms", "buckets_written")})
             out.append((name, stats, _state(app, session, target)))
     return out, paths
 
@@ -280,6 +283,10 @@ def test_local_and_distributed_commits_agree(spark, tmp_path, monkeypatch):
     # on both
     assert [p[:2] for p in local_paths] == [(False, False)] + [(True, True)] * (len(STEPS) - 1)
     assert [p[:2] for p in dist_paths] == [(False, False)] * len(STEPS)
+    # a driver-side partial batch reads only its components' tracking
+    # buckets; a full sync, and every distributed sync, reads them all
+    assert [p[3] for p in local_paths] == [kind == PARTIAL for _, kind, _ in STEPS]
+    assert not any(p[3] for p in dist_paths)
     names = [name for name, _, _ in STEPS]
     for recovery in ("replay recovery", "batch intent recovery"):
         i = names.index(recovery)
@@ -321,3 +328,107 @@ def test_fan_out_over_a_local_batch_commits_distributed(spark, tmp_path, monkeyp
     assert got == want
     assert [p[:2] for p in got_paths] == [(False, False), (True, False)]
     assert got[1][1][2:5] == (80, 0, 80)
+
+
+# -- component-clustered buckets ----------------------------------------------
+
+CHUNK_SCHEMA = "path STRING, chunk_idx INT, word STRING"
+
+
+@fn(memo=True)
+def chunk_words(df):
+    """One target row per word, keyed (path, chunk_idx): a component's
+    rows share their leading pk column with its key."""
+    return df.select(
+        "__args_fp", "__component_path", "path",
+        F.posexplode(F.split("text", " ")).alias("chunk_idx", "word"),
+        F.when(F.col("text").contains("bad"), F.lit("boom")).alias("err"),
+    )
+
+
+def _doc(i, tag="v0"):
+    return " ".join(f"{tag}w{i}_{j}" for j in range(10))
+
+
+def test_partial_batch_rewrites_one_bucket_per_document(spark, tmp_state):
+    """A 5-document partial tombstone batch (two edits, two inserts, a
+    delete) on a (path, chunk_idx) target rewrites at most 5 target
+    buckets and at most 5 tracking buckets, one per document, where a
+    whole-key hash spreads each document's 10 rows over ~10 of the 16."""
+    app = App("clustered", tmp_state, spark=spark)
+    target = app.target(os.path.join(tmp_state, "chunks"), ["path", "chunk_idx"], CHUNK_SCHEMA)
+    docs = {f"d{i:02d}": _doc(i) for i in range(40)}
+    src = local_frame(spark, sorted(docs.items()), "path STRING, text STRING")
+    cold = app.sync_table(src, ["path"], chunk_words, target, error_col="err")
+    assert target._table.bucket_columns() == ["path"]
+    assert app.state.tracking.bucket_columns() == ["component_path"]
+    assert cold.extra["buckets_written"]["target"] == len(target._table._pointer())
+    batch = [("d00", _doc(0, "v1"), False), ("d01", _doc(1, "v1"), False),
+             ("n00", _doc(100), False), ("n01", _doc(101), False), ("d02", None, True)]
+    stats = app.sync_table(
+        local_frame(spark, batch, "path STRING, text STRING, tomb BOOLEAN"),
+        ["path"], chunk_words, target, tombstone_col="tomb", error_col="err",
+    )
+    assert (stats.inserts, stats.updates, stats.deletes) == (20, 20, 10)
+    written = stats.extra["buckets_written"]
+    assert written["target"] <= 5 and written["tracking"] <= 5 and written["memo"] <= 4, written
+    docs.update({"d00": _doc(0, "v1"), "d01": _doc(1, "v1"), "n00": _doc(100), "n01": _doc(101)})
+    del docs["d02"]
+    want = {(p, j, w) for p, text in docs.items() for j, w in enumerate(text.split(" "))}
+    assert {tuple(r) for r in target.read(spark).collect()} == want
+
+
+def _to_whole_key(spark, root):
+    """Rewrite every table under ``root`` as a state root written before
+    bucket columns existed: data hashed on the whole key, a pointer
+    with no bucket columns."""
+    for dirpath, _, files in os.walk(root):
+        if "_CURRENT" not in files or "/v_" in dirpath:
+            continue
+        ptr = os.path.join(dirpath, "_CURRENT")
+        with open(ptr) as f:
+            doc = json.load(f)
+        if not doc.get("buckets"):
+            continue
+        first = os.path.join(dirpath, next(iter(doc["buckets"].values())))
+        schema = spark.read.parquet(first).drop("__bucket", "__probe").schema
+        key = [c for c in ("component_path", "target_path", "logic_fp", "args_fp", "state_key",
+                           "path", "chunk_idx") if c in schema.names]
+        t = ManagedTable(dirpath, key, schema, bucket_cols=key)
+        if doc.get("probe"):
+            t.probe_cols, t.probe_buckets = doc["probe"]["cols"], doc["probe"]["n"]
+        t.overwrite(t.read(spark).localCheckpoint(eager=True))
+        with open(ptr) as f:
+            doc = json.load(f)
+        del doc["bucket_cols"]
+        with open(ptr, "w") as f:
+            json.dump(doc, f)
+
+
+LEGACY_STEPS = [
+    ("cold", FULL, {"a": "x1 x2 x3", "b": "y1 y2", "c": "z1 z2 z3 z4", "d": "w1"}),
+    ("edit", FULL, {"a": "x1 x9", "b": "y1 y2", "c": "z1 z2 z3 z4", "d": "w1"}),
+    ("batch rename", PARTIAL, [("b", None, True), ("e", "y1 y2", False)]),
+    ("batch delete and edit", PARTIAL, [("c", None, True), ("d", "w1 w2", False)]),
+    ("catch-up", FULL, {"a": "x1 x9", "d": "w1 w2", "e": "y1 y2"}),
+]
+
+
+def test_whole_key_state_root_syncs_and_converges(spark, tmp_path, monkeypatch):
+    """A state root whose tables were written before bucket columns
+    existed (whole-key hashes, no bucket columns in the pointers) syncs
+    an edit, a rename, a delete and a catch-up to the same target,
+    tracking and memo rows as a root written clustered from the start,
+    reading its whole-key tracking table whole."""
+    kw = {"transform": chunk_words, "pk": ("path", "chunk_idx"), "schema": CHUNK_SCHEMA}
+    want, _ = _run_steps(spark, str(tmp_path / "new"), monkeypatch, steps=LEGACY_STEPS, **kw)
+    old = str(tmp_path / "old")
+    _run_steps(spark, old, monkeypatch, steps=LEGACY_STEPS[:1], **kw)
+    _to_whole_key(spark, old)
+    tracking = StateStore(os.path.join(old, "state", "eq")).tracking
+    assert tracking.bucket_columns() == ["component_path", "target_path"]
+    got, paths = _run_steps(spark, old, monkeypatch, steps=LEGACY_STEPS[1:], **kw)
+    assert [p[3] for p in paths] == [False] * 4
+    for (name, g_stats, g_state), (_, w_stats, w_state) in zip(got, want[1:]):
+        assert g_stats[:6] == w_stats[:6] and g_state == w_state, name
+    assert got[-1][1][2:5] == (0, 0, 0)

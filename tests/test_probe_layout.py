@@ -160,7 +160,7 @@ def test_relayout_crash_window_reads_old_layout(tbl, spark):
 
     tbl.merge_upsert(_rows(spark, range(60)))
     before = {r.doc_id: r.payload for r in tbl.read(spark).collect()}
-    meta_before = tbl._meta3()
+    meta_before = tbl._layout()
 
     # crash A: before any version file is written
     orig = tbl._write_version
@@ -174,14 +174,14 @@ def test_relayout_crash_window_reads_old_layout(tbl, spark):
     tbl._write_version = orig
     # the reader's view is untouched: same rows, same (old) layout
     assert {r.doc_id: r.payload for r in tbl.read(spark).collect()} == before
-    assert tbl._meta3() == meta_before
+    assert tbl._layout() == meta_before
 
     # crash B: the new-layout version dir is FULLY written, but the
     # process dies before the pointer swap — the exact window the r7
     # advisor flagged. Readers still see the old layout; the orphan
     # version is unreferenced.
-    def boom_late(df, n, probe=None):
-        orig(df, n, probe=probe)
+    def boom_late(*a, **k):
+        orig(*a, **k)
         raise RuntimeError("crash after write, before swap")
 
     tbl._write_version = boom_late
@@ -189,7 +189,7 @@ def test_relayout_crash_window_reads_old_layout(tbl, spark):
         tbl.set_probe_layout(spark, ["bucket"], n=8)
     tbl._write_version = orig
     assert {r.doc_id: r.payload for r in tbl.read(spark).collect()} == before
-    assert tbl._meta3() == meta_before
+    assert tbl._layout() == meta_before
 
     # retry converges: one-time rewrite lands, probe pruning live
     assert tbl.set_probe_layout(spark, ["bucket"], n=8) is True

@@ -331,3 +331,150 @@ def test_clear_empties_table_and_removes_versions(spark, tmp_state):
 
     t.merge_upsert(spark.createDataFrame([("c", 3)], _schema()))
     assert _rows(t, spark) == {("c", 3)}
+
+
+# -- bucket columns -------------------------------------------------------------
+
+
+def _comp_schema():
+    return StructType.fromDDL("c STRING, i BIGINT, v BIGINT")
+
+
+def _comp_rows(spark, comps, v=0):
+    from cocoindex_spark.session import local_frame
+
+    return local_frame(spark, [(c, i, v) for c in comps for i in range(10)], _comp_schema())
+
+
+def _rewritten(before, after):
+    return {b for b in before.keys() | after.keys() if before.get(b) != after.get(b)}
+
+
+def _placed_by_live_hash(t, spark):
+    """True iff every row sits in the bucket the live layout hashes it to."""
+    for b in t._pointer():
+        keys = t.read(spark, [int(b)]).select(t.key_cols)
+        if t.touched_buckets(keys) != [int(b)]:
+            return False
+    return True
+
+
+def _strip_bucket_cols(t):
+    """Rewrite the pointer as written before bucket columns existed."""
+    import json
+
+    ptr = os.path.join(t.path, "_CURRENT")
+    with open(ptr) as f:
+        doc = json.load(f)
+    del doc["bucket_cols"]
+    with open(ptr, "w") as f:
+        json.dump(doc, f)
+
+
+def test_clustered_merge_rewrites_one_bucket_per_component(spark, tmp_state):
+    """A table bucketed on its leading key column rewrites at most k
+    buckets for a merge that touches k components (10 rows each); the
+    same merge on a whole-key table rewrites nearly every bucket."""
+    comps = [f"comp{n}" for n in range(12)]
+    clustered = ManagedTable(os.path.join(tmp_state, "cl"), ["c", "i"], _comp_schema(), bucket_cols=["c"])
+    whole = ManagedTable(os.path.join(tmp_state, "wh"), ["c", "i"], _comp_schema())
+    written = {}
+    for name, t in (("clustered", clustered), ("whole", whole)):
+        t.merge_upsert(_comp_rows(spark, comps))
+        before = t._pointer()
+        t.merge_apply(_comp_rows(spark, comps[:2], v=1), _comp_rows(spark, comps[2:3]).select("c", "i"))
+        written[name] = len(_rewritten(before, t._pointer()))
+        got = {(r.c, r.i, r.v) for r in t.read(spark).collect()}
+        want = {(c, i, 1 if c in comps[:2] else 0) for c in comps if c != comps[2] for i in range(10)}
+        assert got == want, name
+        assert _placed_by_live_hash(t, spark), name
+    assert clustered.bucket_columns() == ["c"] and whole.bucket_columns() == ["c", "i"]
+    assert written["clustered"] <= 3 < written["whole"], written
+    with pytest.raises(ValueError, match="leading subset"):
+        ManagedTable(os.path.join(tmp_state, "bad"), ["c", "i"], _comp_schema(), bucket_cols=["i"])
+
+
+def test_pointer_without_bucket_columns_hashes_the_whole_key(spark, tmp_state):
+    """A pointer written before bucket columns existed reads, and merges
+    keep hashing the whole key, even on a handle that declares bucket
+    columns: the declaration waits for a full rewrite."""
+    path = os.path.join(tmp_state, "t")
+    ManagedTable(path, ["c", "i"], _comp_schema()).merge_upsert(_comp_rows(spark, ["a", "b", "c"]))
+    t = ManagedTable(path, ["c", "i"], _comp_schema(), bucket_cols=["c"])
+    _strip_bucket_cols(t)
+    assert t.bucket_columns() == ["c", "i"]
+    assert len({(r.c, r.i) for r in t.read(spark).collect()}) == 30
+    t.merge_apply(_comp_rows(spark, ["a"], v=5), _comp_rows(spark, ["b"]).select("c", "i"))
+    assert t.bucket_columns() == ["c", "i"]
+    assert _placed_by_live_hash(t, spark)
+    got = {(r.c, r.i, r.v) for r in t.read(spark).collect()}
+    assert got == {("a", i, 5) for i in range(10)} | {("c", i, 0) for i in range(10)}
+
+
+def test_overwrite_adopts_bucket_columns_in_its_swap(spark, tmp_state, monkeypatch):
+    """A full rewrite of a whole-key table publishes the declared bucket
+    columns in the same pointer swap as its data: a copy of the table
+    taken just before that swap still reads the old layout intact, and
+    the table after it is hashed on the new columns."""
+    import shutil
+
+    path = os.path.join(tmp_state, "t")
+    ManagedTable(path, ["c", "i"], _comp_schema()).merge_upsert(_comp_rows(spark, ["a", "b", "c", "d"]))
+    t = ManagedTable(path, ["c", "i"], _comp_schema(), bucket_cols=["c"])
+    _strip_bucket_cols(t)
+    rows = {tuple(r) for r in t.read(spark).collect()}
+    real_swap, copies = ManagedTable._swap_pointer, []
+
+    def swap(table, *a, **kw):
+        copies.append(shutil.copytree(table.path, os.path.join(tmp_state, f"copy{len(copies)}")))
+        return real_swap(table, *a, **kw)
+
+    monkeypatch.setattr(ManagedTable, "_swap_pointer", swap)
+    assert t.maybe_compact(spark, max_versions=0)
+    monkeypatch.undo()
+    assert len(copies) == 1
+    old = ManagedTable(copies[0], ["c", "i"], _comp_schema(), bucket_cols=["c"])
+    assert old.bucket_columns() == ["c", "i"]
+    assert {tuple(r) for r in old.read(spark).collect()} == rows
+    assert _placed_by_live_hash(old, spark)
+    assert t.bucket_columns() == ["c"]
+    assert {tuple(r) for r in t.read(spark).collect()} == rows
+    assert _placed_by_live_hash(t, spark)
+    assert len(t._pointer()) <= 4
+
+
+def test_truncate_drops_bucket_columns(spark, tmp_state):
+    """A sync infers a table target's bucket columns (its leading pk
+    columns that are also key columns) and its first write records
+    them; ``truncate`` (the pk-change path) drops them, and the sync
+    under the new pk infers them again."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from cocoindex_spark.engine.app import App
+    from cocoindex_spark.session import local_frame
+
+    app = App("pk", tmp_state, spark=spark)
+    path = os.path.join(tmp_state, "words")
+    src = local_frame(spark, [("a", "x y z"), ("b", "u v")], "doc STRING, text STRING")
+
+    def words(df):
+        return df.select(
+            "__args_fp", "__component_path", "doc",
+            F.posexplode(F.split("text", " ")).alias("i", "w"),
+        )
+
+    schema = "doc STRING, i INT, w STRING"
+    first = app.target(path, ["doc", "i"], schema)
+    app.sync_table(src, ["doc"], words, first)
+    assert first._table.bucket_columns() == ["doc"]
+    first.truncate()
+    with open(os.path.join(path, "_CURRENT")) as f:
+        assert "bucket_cols" not in json.load(f)
+    assert first._table.bucket_cols is None
+    second = app.target(path, ["i", "doc"], schema)
+    stats = app.sync_table(src, ["doc"], words, second)
+    assert stats.extra["schema_evolution"] == "destructive" and stats.inserts == 5
+    assert second._table.bucket_columns() == ["i", "doc"]
+    assert len(second.read(spark).collect()) == 5
